@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Bench.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -57,26 +57,10 @@ object Bench {
       spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
     }
 
-    // MACHINE-STRETCH ANCHOR: a fixed pure-compute probe (100M xxhash64
-    // + sum, sf-independent, shuffle-free) timed at both ends of the
-    // run. The driver bench has whiplashed 1.2-1.6x round-over-round on
-    // machine load alone (r13: 96.3s driver vs 82.1s idle, same code);
-    // with the anchor in the line, a stretched run is attributable AT
-    // SWEEP TIME — divide totals by C/C_idle instead of guessing from
-    // load averages. Near-idle reference on this machine: ~200-330 ms
-    // at local[32], ~330-370 ms at local[8] (r14 smoke, L0≈2-3; also in
-    // BENCH_IDLE.json notes). First call JITs, second measures.
-    def calibrate(): Long = {
-      import org.apache.spark.sql.functions._
-      val t0 = System.nanoTime()
-      // pmod bounds the summands: a raw sum of 100M xxhash64 longs
-      // overflows under ANSI mode (1e8 × 1e6 stays far below 2^63)
-      spark.range(0L, 100000000L, 1L, cpus.toInt)
-        .select(pmod(xxhash64(col("id")), lit(1000000L)).as("h")).agg(sum(col("h"))).head()
-      math.round((System.nanoTime() - t0) / 1e6).max(1L)
-    }
-    calibrate()
-    val cal0 = calibrate()
+    // machine-stretch anchor at both ends of the run (see calibrate);
+    // the first call JITs, the second measures
+    calibrate(spark, cpus.toInt)
+    val cal0 = calibrate(spark, cpus.toInt)
 
     // PER-QUERY STRETCH PROBE (r17, additions-only): C0/C bracket the
     // whole run, but this host's stretch arrives in minutes-scale
@@ -138,7 +122,7 @@ object Bench {
       // stretch probes ride BETWEEN queries (untimed): per-query CPU
       // probe always, full Spark calibration every 16th query
       cqMs(qi) = cpuProbe()
-      if ((qi + 1) % 16 == 0) cMid += calibrate()
+      if ((qi + 1) % 16 == 0) cMid += calibrate(spark, cpus.toInt)
       name -> t
     }
 
@@ -163,124 +147,12 @@ object Bench {
       Seq("q_rollup_routed_on" -> on, "q_rollup_routed_off" -> off)
     } catch { case _: Throwable => Seq.empty }
 
-    // The driver keeps only the LAST 2000 chars of output and sbt's
-    // epilogue line (~75 chars) lands after ours, so the whole JSON
-    // line must fit in ~1925 chars or its HEAD gets cut and the parse
-    // fails (BENCH_r03: full-precision values pushed the line to
-    // ~2600 and `parsed` came back null). Two decimals keeps ~82
-    // queries near 1860 chars. 1-minute load average records machine
-    // state with the run (concurrent driver jobs have inflated totals
-    // ~2x before).
-    // Locale.ROOT formatting: the f interpolator follows the JVM default
-    // locale, and a decimal-comma locale would emit invalid JSON — the
-    // exact parse failure this block exists to prevent
-    // trailing zeros trimmed ("0.50"→"0.5", "3.00"→"3"): ~1 char/query,
-    // which is what keeps 85+ queries inside the budget
-    def num(v: Double, dp: Int): String = {
-      val s = String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".") else s
-    }
     val total = looped.map(_._2).sum
-    val cal1 = calibrate()
-    // per-query stretch summary for the budget-bound line: median/p90
-    // of the per-query CPU probes, the mid-suite Spark anchors, and
-    // the indices (alphabetical q_ms order) of queries probed at >2×
-    // the run median — the degraded samples a comparison should
-    // discard. cq_hot is capped at 32 indices for line budget;
-    // cq_hot_n carries the TRUE count (a big count = the whole run is
-    // degraded and C0/C/C_mid already tell that story); bench_full.json
-    // below holds the complete cq_ms array.
-    val cqSorted = cqMs.sorted
-    def cqPct(p: Double): Long =
-      if (cqSorted.isEmpty) 0L
-      else cqSorted(math.min((cqSorted.length * p).toInt, cqSorted.length - 1))
-    val cq50 = cqPct(0.5)
-    val cqHot = cqMs.zipWithIndex.filter(_._1 > 2 * cq50).map(_._2)
-    val stretchField =
-      s""""CQ50":$cq50,"CQ90":${cqPct(0.9)},"C_mid":${cMid.mkString("[", ",", "]")},""" +
-        s""""cq_hot_n":${cqHot.length},"cq_hot":${cqHot.take(32).mkString("[", ",", "]")},"""
+    val cal1 = calibrate(spark, cpus.toInt)
+    val stretch = stretchField(cqMs, cMid.toSeq)
     val load = java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val sfName = sfDir.split('/').last // basename: the path prefix is line budget
-    def mkLine(withLoad: Boolean, withPair: Boolean, dp: Int = 2, stripQ: Boolean = false) = {
-      val results = if (withPair) looped ++ routedPair else looped
-      // stripQ: the uniform "q_" key prefix is ~2 chars × 90+ queries of
-      // pure line budget — shedding it keeps 1-decimal per-query
-      // resolution where the alternative is whole seconds
-      val qs = results.map { case (k, v) =>
-        "\"" + (if (stripQ) k.stripPrefix("q_") else k) + "\":" + num(v, dp)
-      }.mkString("{", ",", "}")
-      // "L0"/"L": 1-min load average at run START and END, rounded to
-      // int — ~13 chars total, and the machine-state diagnostic
-      // survives every shedding tier (the r5 line shed the full load
-      // field and left the driver-bench regressions unattributable; the
-      // r7 single end-sample missed a 3x-degraded machine entirely).
-      // ~0 means an idle machine; >= cpus/4 under local[32] has
-      // historically meant 1.5-4x inflated numbers. -1 = load
-      // unavailable on this platform (MXBean contract) — NOT clamped to
-      // 0, which would certify an unknown machine as idle.
-      def li(v: Double) = if (v < 0) -1L else math.round(v)
-      // C0/C: the stretch anchor (ms) at run start/end — see calibrate()
-      val loadField =
-        if (withLoad)
-          s""""L0":${li(load0)},"L":${li(load)},"C0":$cal0,"C":$cal1,""" + stretchField
-        else ""
-      s"""{"metric":"total","value":${num(total, 2)},"unit":"sec",$loadField"queries":$qs,"sf":"$sfName"}"""
-    }
-    // MILLISECOND ARRAY tier: at 123 queries NO keyed dict fits the
-    // 2000-char tail capture at any useful resolution (r11's final
-    // whole-second stripped-key fallback measured >1920 and the head
-    // got clipped — the driver recorded parsed:null and 109 of 123
-    // queries read 0/1s). The array drops the keys entirely: "q_ms" is
-    // integer milliseconds in ALPHABETICAL SparkEntry.queries key
-    // order (exactly the `ordered` loop above; "q_ms_order" names the
-    // convention in-line). 123 ms values ≈ 700 chars, so full
-    // regression-visible resolution survives any suite size this repo
-    // will reach. The full keyed float map is also written to
-    // bench_full.json (below) for direct reading.
-    def mkLineArr(withPair: Boolean) = {
-      def li(v: Double) = if (v < 0) -1L else math.round(v)
-      val arr = looped.map { case (_, v) =>
-        if (v < 0) "-1" else math.round(v * 1000).toString
-      }.mkString("[", ",", "]")
-      val pair = if (withPair && routedPair.nonEmpty)
-        routedPair.map { case (k, v) =>
-          "\"" + k.stripPrefix("q_rollup_") + "_ms\":" + math.round(v * 1000)
-        }.mkString("", ",", ",")
-      else ""
-      // the 10 slowest queries ALSO get a named seconds dict (the
-      // documented "queries" shape) — regressions in the heavies stay
-      // directly readable without decoding the array, ~250 chars
-      val slow = looped.filter(_._2 >= 0).sortBy(-_._2).take(10)
-        .map { case (k, v) => "\"" + k + "\":" + num(v, 2) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${num(total, 2)},"unit":"sec","L0":${li(load0)},"L":${li(load)},""" +
-        s""""C0":$cal0,"C":$cal1,""" + stretchField +
-        s""""queries":$slow,"q_note":"10 slowest; q_ms has all",""" +
-        s""""q_ms_order":"alphabetical SparkEntry.queries keys",$pair"q_ms":$arr,"sf":"$sfName"}"""
-    }
-    // tiered shedding against the driver's 2000-char tail capture (a
-    // clipped line loses EVERYTHING — r11 proved it): prefer the keyed
-    // dict WITH the ms array alongside when the suite is small enough,
-    // then shed the dict (keys are recoverable from q_order), never the
-    // ms array or the L0/L load flags (dropping loads left the r5
-    // driver-bench regressions unattributable). The array-only tier is
-    // ~800 chars at 123 queries, so the getOrElse is unreachable today.
-    // NOTE: no "q_unit" field here — in r8/r9 lines q_unit described
-    // the keyed "queries" dict (e.g. "ds"), and these tiers keep that
-    // dict in SECONDS; the q_ms array's name carries its own unit
-    def withArr(base: String) = {
-      val arr = looped.map { case (_, v) =>
-        if (v < 0) "-1" else math.round(v * 1000).toString
-      }.mkString("[", ",", "]")
-      base.stripSuffix("}") + s""","q_ms":$arr}"""
-    }
-    val line = Seq(
-      withArr(mkLine(true, true)), withArr(mkLine(true, false)),
-      withArr(mkLine(true, false, dp = 1, stripQ = true)),
-      mkLineArr(true), mkLineArr(false))
-      // 1920 = the driver's 2000-char tail capture minus sbt's ~75-char
-      // epilogue (which lands AFTER our line) with a small safety pad
-      .find(_.length <= 1920).getOrElse(mkLineArr(false))
+    val line = resultLine(looped, routedPair, load0, load, cal0, cal1, stretch, sfName)
     // full-precision keyed record for direct reading (the stdout line
     // is budget-bound; this file is not): seconds as floats, keyed by
     // full query name, plus machine-state fields
@@ -289,7 +161,7 @@ object Bench {
         "\"" + k + "\":" + num(v, 4)
       }.mkString("{", ",", "}")
       s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","L0":${num(load0, 2)},"L":${num(load, 2)},"C0":$cal0,"C":$cal1,""" +
-        stretchField + s""""cq_ms":${cqMs.mkString("[", ",", "]")},"queries":$qs,"sf":"$sfName"}"""
+        stretch + s""""cq_ms":${cqMs.mkString("[", ",", "]")},"queries":$qs,"sf":"$sfName"}"""
     }
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
@@ -299,5 +171,102 @@ object Bench {
     if (line.length > 1925)
       Console.err.println(s"[bench] WARNING: JSON line ${line.length} chars — driver tail capture may clip it")
     spark.stop()
+  }
+
+  /** Local cores for the bench and the kept `graft.tools` mains:
+    * `SPARK_GRAFT_CPUS`, default 4. */
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** MACHINE-STRETCH ANCHOR: a fixed pure-compute probe (100M xxhash64
+    * + sum, sf-independent, shuffle-free) in ms. The bench times it at
+    * both ends of the run and every 16 queries; A/B timing brackets its
+    * pairs with it. Host load has swung the bench 1.2-1.6x
+    * round-over-round on identical code, so with the anchor beside a
+    * number a stretched run is attributable at measurement time —
+    * divide totals by C/C_idle instead of guessing from load averages.
+    * Near-idle reference: ~640 ms at local[4] on a 4-core host. The
+    * first call in a JVM JITs; time the second. */
+  private[graft] def calibrate(spark: SparkSession, cpus: Int): Long = {
+    import org.apache.spark.sql.functions._
+    val t0 = System.nanoTime()
+    // pmod bounds the summands: a raw sum of 100M xxhash64 longs
+    // overflows under ANSI mode (1e8 × 1e6 stays far below 2^63)
+    spark.range(0L, 100000000L, 1L, cpus)
+      .select(pmod(xxhash64(col("id")), lit(1000000L)).as("h")).agg(sum(col("h"))).head()
+    math.round((System.nanoTime() - t0) / 1e6).max(1L)
+  }
+
+  // Locale.ROOT formatting: the f interpolator follows the JVM default
+  // locale, and a decimal-comma locale would emit invalid JSON.
+  // Trailing zeros trimmed ("0.50"→"0.5", "3.00"→"3"): ~1 char/query
+  // of line budget.
+  private def num(v: Double, dp: Int): String = {
+    val s = String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
+    if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".") else s
+  }
+
+  /** Per-query stretch summary: median/p90 of the per-query CPU probes
+    * (`cqMs`), the mid-suite Spark anchors, and the indices
+    * (alphabetical q_ms order) of queries probed at >2× the run median
+    * — the degraded samples a comparison should discard. cq_hot is
+    * capped at 32 indices for line budget; cq_hot_n carries the TRUE
+    * count (a big count = the whole run is degraded and C0/C/C_mid
+    * already tell that story); bench_full.json holds the complete
+    * cq_ms array. Ends in a comma: it is spliced before later fields. */
+  private[graft] def stretchField(cqMs: Array[Long], cMid: Seq[Long]): String = {
+    val cqSorted = cqMs.sorted
+    def cqPct(p: Double): Long =
+      if (cqSorted.isEmpty) 0L
+      else cqSorted(math.min((cqSorted.length * p).toInt, cqSorted.length - 1))
+    val cq50 = cqPct(0.5)
+    val cqHot = cqMs.zipWithIndex.filter(_._1 > 2 * cq50).map(_._2)
+    s""""CQ50":$cq50,"CQ90":${cqPct(0.9)},"C_mid":${cMid.mkString("[", ",", "]")},""" +
+      s""""cq_hot_n":${cqHot.length},"cq_hot":${cqHot.take(32).mkString("[", ",", "]")},"""
+  }
+
+  /** The bench's one stdout JSON line.
+    *
+    * Budget: the line's consumer keeps only the LAST 2000 chars of
+    * output and sbt's ~75-char epilogue lands after ours, so it must
+    * stay within ~1920 chars or its HEAD gets cut and the parse fails
+    * (BENCH_r03 and r11 recorded `parsed: null`). No keyed per-query
+    * dict fits that at 141 queries, so `q_ms` is an ARRAY of integer
+    * milliseconds (-1 = failed) in ALPHABETICAL `SparkEntry.queries`
+    * key order (`q_ms_order` names the convention in-line): ~5
+    * chars/query at full regression-visible resolution. The 10 slowest
+    * queries also get a named seconds dict (`queries`) so regressions
+    * in the heavies read directly; bench_full.json holds the full keyed
+    * map. No "q_unit" field: in r8/r9 lines it described the keyed
+    * dict, which stays in seconds; the array's name carries its unit.
+    *
+    * "L0"/"L": 1-min load average at run start/end, rounded to int; -1
+    * = unavailable on this platform (MXBean contract), never clamped to
+    * 0, which would certify an unknown machine as idle. "C0"/"C": the
+    * [[calibrate]] anchor at run start/end. */
+  private[graft] def resultLine(
+      looped: Seq[(String, Double)],
+      routedPair: Seq[(String, Double)],
+      load0: Double,
+      load: Double,
+      cal0: Long,
+      cal1: Long,
+      stretch: String,
+      sfName: String
+  ): String = {
+    def li(v: Double) = if (v < 0) -1L else math.round(v)
+    val total = looped.map(_._2).sum
+    val arr = looped.map { case (_, v) =>
+      if (v < 0) "-1" else math.round(v * 1000).toString
+    }.mkString("[", ",", "]")
+    val pair = routedPair.map { case (k, v) =>
+      "\"" + k.stripPrefix("q_rollup_") + "_ms\":" + math.round(v * 1000) + ","
+    }.mkString
+    val slow = looped.filter(_._2 >= 0).sortBy(-_._2).take(10)
+      .map { case (k, v) => "\"" + k + "\":" + num(v, 2) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${num(total, 2)},"unit":"sec","L0":${li(load0)},"L":${li(load)},""" +
+      s""""C0":$cal0,"C":$cal1,""" + stretch +
+      s""""queries":$slow,"q_note":"10 slowest; q_ms has all",""" +
+      s""""q_ms_order":"alphabetical SparkEntry.queries keys",$pair"q_ms":$arr,"sf":"$sfName"}"""
   }
 }

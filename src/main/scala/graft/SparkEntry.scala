@@ -1706,7 +1706,7 @@ object SparkEntry {
    *    pair's exact cosine — a regression anywhere in the IVF machinery
    *    (assignment expression, join, distinct, verify) turns the row red;
    *  - a PROBE-LIMITED run (probes < numCells — the true scale shape,
-   *    recall measured in DedupSpec/RecallCheck) executes under the same
+   *    recall measured in DedupSpec and SURVEY.md §2.9) executes under the same
    *    gate and its structural guarantee is hashed: probe-limiting can
    *    only LOSE pairs, never invent them (`limited_subset_ok`).
    * Threshold 0.4 (vs q_dedup_embed's 0.5) so the gated pair set is
@@ -1898,7 +1898,7 @@ object SparkEntry {
     val emb = ld(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 8)
     val k = 5
-    // m=16/K=16 from the tools/PqSweep recall matrix: 16 bytes/vector
+    // m=16/K=16 from the PQ recall matrix (SURVEY.md §5): 16 bytes/vector
     // (16x compression at dim 64) at ~0.7 recall@5 with the 4-per-slot
     // re-rank pool, on the no-cluster-structure synthetic hard case
     val codebooks = Ann.pqTrain(s, emb, m = 16, codebookSize = 16)

@@ -536,10 +536,10 @@ object Ann {
         // under-target the training sample proportionally
         val n = if (knownCount >= 0L) knownCount
                 else vecs.filter(col("embedding").isNotNull).count()
-        // ~cellTarget vectors/cell (r13, from the KnnCellSweep curve — full
-        // self-kNN wall at 140k vectors: 106s at 2048/cell, 64s at 1024,
-        // 52.7s at 512, 59.1s at 256 where the cells×dim assignment pass
-        // overtakes; recall@5 = 1.000 at every sizing on the replica+noise
+        // ~cellTarget vectors/cell (r13 cell-size sweep, SURVEY.md
+        // §2.10 q_knn_join — full self-kNN wall at 140k vectors: 106s
+        // at 2048/cell, 64s at 1024, 52.7s at 512, 59.1s at 256 where
+        // the cells×dim assignment pass overtakes; recall@5 = 1.000 at every sizing on the replica+noise
         // corpora — `probes` stays the recall dial)
         val wanted = math.max(16L, n / cellTarget)
         if (numCells <= 0 && wanted > 4096L) {
@@ -733,7 +733,7 @@ object Ann {
    * k-slot insertion heap — the same candidates the former
    * shuffle-hash join + window materialized, WITHOUT materializing
    * them as rows. The join shape paid ~127 ns per candidate in row
-   * plumbing (r14 HierCandCount attribution: 3.74e9 candidates = the
+   * plumbing (r14 attribution, SURVEY.md §7: 3.74e9 candidates = the
    * whole 481 s wall); here a candidate is one primitive-array dot
    * product inside a tight loop, and only ≤k rows per (query, probed
    * cell) ever reach the shuffle that follows.

@@ -428,29 +428,45 @@ object Dedup {
       maxExpansion: Double = 256.0,
       probeFraction: Double = 0.1,
       collapseExact: Boolean = true
+  ): DataFrame =
+    routedNgramPairs(df, idCol, textCol, groupCols, n, threshold, maxExpansion, probeFraction,
+      collapseExact, pinned = None)
+
+  /** A pinned [[ngramJaccardPairs]] route. */
+  private[graft] sealed trait NgramRoute
+  private[graft] object NgramRoute {
+    case object Collapsed extends NgramRoute
+    case object Dense extends NgramRoute
+    case object Prefix extends NgramRoute
+  }
+
+  /**
+   * [[ngramJaccardPairs]] with its route optionally pinned: a pin skips
+   * the sampled route probes. Every route is result-identical (DedupSpec
+   * pins each one against the adaptive result), so a pin can only cost
+   * speed when wrong. What each pin skips: `Collapsed` skips the
+   * dup-fraction probe (the representative pipeline underneath is an
+   * unpinned call, so it stays adaptive); `Prefix` skips all sampled
+   * probes and takes the session's shuffle partitioning (the adaptive
+   * path's volume-sized widening is skipped with the probe that sizes
+   * it); `Dense` skips the dup and prefix-volume probes but KEEPS the
+   * sampled gf aggregate — it feeds heavy-gram salting and volume-sized
+   * partitioning, which are straggler/heap defenses, not routing.
+   */
+  private[graft] def routedNgramPairs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      groupCols: Seq[String],
+      n: Int,
+      threshold: Double,
+      maxExpansion: Double,
+      probeFraction: Double,
+      collapseExact: Boolean,
+      pinned: Option[NgramRoute]
   ): DataFrame = {
     val p = math.min(math.max(probeFraction, 0.001), 1.0)
-    // CONF-PINNED ROUTE (r17): `graft.dedup.ngram.route` ∈
-    // collapsed | dense | prefix skips the sampled route probes for a
-    // pipeline that already knows its corpus shape — a daily run over
-    // a stable corpus re-pays the dup probe, the postings probe and
-    // (when large) the prefix-volume probe every day to rediscover the
-    // same answer. Every route is result-identical (the spec pins
-    // route identity), so the pin can only cost speed when wrong.
-    // What each value skips: `collapsed` skips the dup-fraction probe
-    // (the representative pipeline underneath stays adaptive);
-    // `prefix` skips all sampled probes and takes the session's
-    // shuffle partitioning (set spark.sql.shuffle.partitions for the
-    // corpus — the adaptive path's volume-sized widening is skipped
-    // with the probe that sizes it); `dense` skips the dup and
-    // prefix-volume probes but KEEPS the sampled gf aggregate — it
-    // feeds heavy-gram salting and volume-sized partitioning, which
-    // are straggler/heap defenses, not routing. No route state is
-    // ever cached: unset = adaptive, every run re-probes.
-    val pinnedRoute = df.sparkSession.conf.getOption("graft.dedup.ngram.route")
-    pinnedRoute.foreach(v => require(Set("collapsed", "dense", "prefix").contains(v),
-      s"graft.dedup.ngram.route must be collapsed|dense|prefix, got '$v'"))
-    if (collapseExact && pinnedRoute.contains("collapsed"))
+    if (collapseExact && pinned.contains(NgramRoute.Collapsed))
       return ngramJaccardPairsCollapsed(df, idCol, textCol, groupCols, n, threshold,
         maxExpansion, probeFraction)
     // dup probe (one narrow job over the sampled docs' 8-byte hashes):
@@ -460,7 +476,7 @@ object Dedup {
     // sf0.1 corpus). Both routes are result-identical, so a
     // sampling-noise flip near the 5% bound costs speed, never
     // correctness.
-    if (collapseExact && pinnedRoute.isEmpty) {
+    if (collapseExact && pinned.isEmpty) {
       val sampledDocs = (if (p >= 1.0) df
         else df.filter(pmod(xxhash64(col(idCol), lit(77)), lit(1000)) < lit((p * 1000).toInt)))
         .filter((col(textCol).isNotNull +: groupCols.map(col(_).isNotNull)).reduce(_ && _))
@@ -478,7 +494,7 @@ object Dedup {
     val ex = gramPostings(df, idCol, textCol, groupCols, n)
     // pinned prefix route: no sampled machinery at all — the PPJoin
     // path sizes its own work from the session's shuffle partitioning
-    if (pinnedRoute.contains("prefix"))
+    if (pinned.contains(NgramRoute.Prefix))
       return prefixPairs(df, idCol, textCol, groupCols, n, threshold, numPartitions = None)
     // deterministic doc sample: stable across runs/retries (no RNG state)
     val sampled =
@@ -497,7 +513,7 @@ object Dedup {
       .head()
     // a dense pin forces the else-branch below without the routing
     // probes; the gf aggregate above still ran (salting + sizing)
-    val heavyTailed = pinnedRoute.isEmpty && !probe.isNullAt(0) && {
+    val heavyTailed = pinned.isEmpty && !probe.isNullAt(0) && {
       val expansion = probe.getLong(1).toDouble / probe.getLong(0).toDouble
       expansion > maxExpansion * p || probe.getLong(2) > ((1L << 16) * p).toLong
     }
@@ -549,7 +565,7 @@ object Dedup {
         .head()
       if (r.isNullAt(0)) 0L else (r.getLong(0) / (p * p)).toLong
     }
-    val nearDupDense = pinnedRoute.isEmpty &&
+    val nearDupDense = pinned.isEmpty &&
       estJoinRows > PrefixProbeBound && estPrefixRows * 2 < estJoinRows
     if (heavyTailed || nearDupDense) {
       // VOLUME-SIZED candidate-join partitioning, same discipline as
@@ -624,6 +640,21 @@ object Dedup {
     * ~26M rows); above it a 2× volume advantage routes to prefix. */
   private val PrefixProbeBound: Long = 128L * 1000 * 1000
 
+  /** Document bound under which a banded probe side is force-broadcast,
+    * from BYTES rather than a fixed row count: a document's banded rows
+    * replicate its payload once per band, so `perDocBytes` is fan-out ×
+    * row width. Targets ~1 GiB (comfortably under the 8 GB broadcast
+    * hard limit), floor 4096 docs so even extreme widths still
+    * broadcast a trivial batch. Past it the probe join falls back to
+    * the two-sided shuffle: slower, but it completes. */
+  private[graft] def bandedBroadcastDocs(perDocBytes: Long): Long =
+    math.max(4096L, (1L << 30) / perDocBytes)
+
+  /** [[bandedBroadcastDocs]] for a text-index probe: banded probe rows
+    * are id-only (~24 B, padded to 64) at `bands` rows per document. */
+  private def indexProbeBroadcastDocs(bands: Int): Long =
+    bandedBroadcastDocs(bands.toLong * 64L)
+
   /** Geometric size-band ratio for the PPJoin candidate join: bands of
     * [c^k, c^(k+1)) sizes. Smaller c → shorter per-band probe prefixes
     * (→ 2t/(1+t) in the limit) but more target bands per probe entry;
@@ -658,39 +689,38 @@ object Dedup {
     * DOWN 1e-9 so a floating product landing epsilon above an exact
     * integer can only LENGTHEN the prefix (safe), never shorten it
     * (lossy). */
-  private[graft] def probePrefLen(threshold: Double): Column =
+  private def probePrefLen(threshold: Double): Column =
     (col("sz") - ceil(col("sz").cast("double") * lit(threshold) - lit(1e-9)) + 1).cast("int")
 
   /** Indexing-prefix length for the SMALLER side of a (sz, id)-ordered
     * pair: with szX <= szY the required overlap is >= ⌈2t/(1+t)·szX⌉,
     * so only the first szX - ⌈2t/(1+t)·szX⌉ + 1 tokens can witness a
     * qualifying pair (same fp nudge as [[probePrefLen]]). */
-  private[graft] def idxPrefLen(threshold: Double): Column = {
+  private def idxPrefLen(threshold: Double): Column = {
     val f = 2.0 * threshold / (1.0 + threshold)
     (col("sz") - ceil(col("sz").cast("double") * lit(f) - lit(1e-9)) + 1).cast("int")
   }
 
-  // ---- size-band expressions, ONE definition shared by prefixPairs
-  // and the BandStats measurement tool (a tool measuring a join shape
-  // the library no longer runs is worse than no tool) ----
+  // ---- size-band expressions of prefixPairs (the banding's measured
+  // −27% candidate scan is recorded in SURVEY.md §7, r13) ----
 
   /** Geometric size-band id of a doc size. */
-  private[graft] def ppjBandOf(szc: Column): Column =
+  private def ppjBandOf(szc: Column): Column =
     floor(log(szc.cast("double")) / lit(math.log(PpjBandRatio))).cast("int")
 
   /** Smallest partner size the PPJoin length filter admits (floor, not
     * ceil: an off-by-one DOWN only widens the band range — safe). */
-  private[graft] def ppjXmin(szc: Column, threshold: Double): Column =
+  private def ppjXmin(szc: Column, threshold: Double): Column =
     greatest(floor(szc.cast("double") * lit(threshold)).cast("int"), lit(1))
 
   /** A band's minimum partner size m (the pow() band floor is shaved
     * 0.1% so fp can only LENGTHEN a prefix). */
-  private[graft] def ppjBandMin(band: Column, xmin: Column): Column =
+  private def ppjBandMin(band: Column, xmin: Column): Column =
     greatest(floor(pow(lit(PpjBandRatio), band) * lit(0.999)).cast("int"), xmin, lit(1))
 
   /** Required-overlap α(m, sz) for a probe entry emitted to a band of
     * minimum size m (same fp nudge discipline as the prefix lengths). */
-  private[graft] def ppjAlpha(mK: Column, szc: Column, threshold: Double): Column =
+  private def ppjAlpha(mK: Column, szc: Column, threshold: Double): Column =
     ceil(lit(threshold / (1.0 + threshold)) * (mK + szc).cast("double") - lit(1e-9))
 
   /** Group+gram composite key for heavy-gram detection/salting: the
@@ -1248,10 +1278,11 @@ object Dedup {
    *
    * APPROXIMATE at cell boundaries: a ≥-threshold pair whose members
    * quantize to disjoint probe sets is missed. Recall vs brute force
-   * is measured (RecallCheck at sf0.1, BoundaryRecall past the 2^14
-   * flip, DedupSpec at spec scale) rather than bounded analytically —
-   * the honest trade for sub-quadratic low-threshold dedup; raise
-   * `probes` to buy recall with candidate volume (∝ probes²).
+   * is measured (at sf0.1 and past the 2^14 flip — SURVEY.md §2.9,
+   * q_dedup_embed — and in DedupSpec at spec scale) rather than
+   * bounded analytically — the honest trade for sub-quadratic
+   * low-threshold dedup; raise `probes` to buy recall with candidate
+   * volume (∝ probes²).
    * Measured at sf0.1, t=0.5, 16 cells: probes=2 recall 0.857,
    * probes=3 recall 0.929, probes=4 no further gain — the default is
    * the knee. At the 20k-vector boundary (78 cells): probes=2/3/4
@@ -1812,19 +1843,14 @@ object Dedup {
           size(array_union(col("sh_a"), col("sh_b"))).cast("double")).as("jac"))
   }
 
-  // dev-tool seams (graft.tools.ProfileAdmit): the probe pipeline's
-  // stages exposed for stage-wise wall attribution — no behavior
+  // the probe pipeline's stages, exposed so DedupSpec can pin the
+  // candidate join's plan shapes — no behavior
   private[graft] def profileBanded(df: DataFrame, idCol: String, textCol: String,
       nh: Int, bands: Int, shingleSize: Int): DataFrame =
     bandedFromSigs(minhashSigs(df, idCol, textCol, nh, shingleSize), bands, nh / bands)
   private[graft] def profileCrossCandidates(pb: DataFrame, rb: DataFrame,
       hintProbe: Boolean, broadcastProbe: Boolean = false): DataFrame =
     crossCandidates(pb, rb, None, hintProbe, broadcastProbe)
-  private[graft] def profileBandedFromSigs(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    bandedFromSigs(sigs, bands, rowsPerBand)
-  private[graft] def profileCrossVerify(cands: DataFrame, probe: DataFrame, ref: DataFrame,
-      idCol: String, textCol: String, shingleSize: Int): DataFrame =
-    crossExactVerify(cands, probe, ref, idCol, textCol, shingleSize)
 
   private def bandedFromSigs(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     sigs
@@ -2292,13 +2318,18 @@ object Dedup {
     // anti-join below and — through the survivors' lineage — the
     // append's signature pass; unmaterialized, the whole probe+verify
     // pipeline re-runs per consumer
-    // one scan-only count of the shard (trivial next to the admission)
-    // buys the bounded-broadcast candidate join: the corpus-sized index
-    // side then pays NO exchange per admission — the per-admission cost
-    // that otherwise grows with the corpus (guide §2.4/§3.1; the
-    // StreamingDedup per-trigger discipline applied here)
+    // one scan-only bounded count of the shard (trivial next to the
+    // admission) buys the bounded-broadcast candidate join: the
+    // corpus-sized index side then pays NO exchange per admission — the
+    // per-admission cost that otherwise grows with the corpus (guide
+    // §2.4/§3.1; the StreamingDedup per-trigger discipline applied
+    // here). The count stops at bound + 1: past the bound the decision
+    // is the same at any size, so an oversized shard never pays a full
+    // count. (The meta read is cached; the probe below reuses it.)
+    val bound = indexProbeBroadcastDocs(
+      readTextIndexMeta(probe.sparkSession, indexPath).getAs[Int]("bands"))
     val probeN = graft.core.Jobs.desc(probe.sparkSession, "textindex:admit:probe-count") {
-      probe.count()
+      probe.limit(bound.toInt + 1).count()
     }
     val dupIds = graft.core.Jobs.desc(probe.sparkSession, "textindex:admit:probe") {
       crossJaccardPairsIndexed(
@@ -2368,11 +2399,8 @@ object Dedup {
     // charging it the whole pruning pass was a measured ~0.5 s/probe
     // at sf0.1 for zero dirs skipped
     val willPrune = dirs1.nonEmpty && anySidecar(spark, dirs1)
-    // bounded-probe broadcast (see probeRows): banded probe rows are
-    // id-only (~24 B), so the byte target mirrors StreamingDedup's
-    // bcastRowBound — ~1 GiB of banded rows, floor 4096 docs
-    val bcastProbe = probeRows >= 0L &&
-      probeRows <= math.max(4096L, (1L << 30) / (b.toLong * 64L))
+    // bounded-probe broadcast (see probeRows)
+    val bcastProbe = probeRows >= 0L && probeRows <= indexProbeBroadcastDocs(b)
     // materialized only when the banded probe feeds BOTH the driver key
     // collect and the candidate join; single-consumer probes stay lazy
     val pb0 = bandedFromSigs(minhashSigs(probe, idCol, textCol, nh, shingleSize), b, nh / b)

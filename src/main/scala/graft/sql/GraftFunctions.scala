@@ -179,14 +179,19 @@ object GraftFunctions {
     }
   }
 
-  /** Register the graft function surface. Function registration ONLY — the
-    * TopKPerKey planner strategy is a whole-session re-plan and is installed
-    * explicitly ([[installTopKStrategy]] or GraftExtensions), never as a
-    * side effect of making functions callable. */
+  /** Register the graft function surface, installing only the names the
+    * session's registry does not already hold (idempotent: a repeat call,
+    * or a [[GraftExtensions]] session, keeps what is there and logs no
+    * "replaced a previously registered function" warning). Function
+    * registration ONLY — the TopKPerKey planner strategy is a
+    * whole-session re-plan and is installed explicitly
+    * ([[installTopKStrategy]] or GraftExtensions), never as a side effect
+    * of making functions callable. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 

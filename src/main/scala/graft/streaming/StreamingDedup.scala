@@ -44,6 +44,14 @@ import graft.operators.Dedup
  */
 object StreamingDedup {
 
+  /** Row bound under which an id-only side (batch ids, tombstones,
+    * matched winners) is force-broadcast: ~4M ids. Batches are
+    * trigger-bounded in a configured stream, but a restart backlog can
+    * deliver an arbitrarily large batch, and force-broadcasting it would
+    * fail the trigger and every replay. Past the bound the join falls
+    * back to its shuffled form: slower, but the trigger completes. */
+  private[graft] val BroadcastIdRows: Long = 1L << 22
+
   /** Shared LSH band-explode over minhash signatures — one definition
     * for every streaming variant (run, runKeepBest), so a banding fix
     * cannot silently diverge between them. */
@@ -73,28 +81,19 @@ object StreamingDedup {
         }
     }
 
-  /** Micro-batch DOCUMENT bound under which a banded probe side is
-    * force-broadcast, derived from BYTES rather than a fixed row count:
-    * each document's probe rows replicate the full signature/vector
-    * once per band, so the broadcast size scales with
-    * docs × fanOut × payload width — a fixed row bound that assumed
-    * ~8 KB per document would blow past the 8 GB broadcast hard limit
-    * for wide embeddings with many bands while the row check still
-    * passed. Targets ~1 GiB (comfortably under the limit); ~48 B of
-    * per-row struct/key overhead; floor 4096 docs so even extreme
-    * widths still broadcast a trivial batch. Batches are
-    * trigger-bounded in a configured production stream, but a restart
-    * backlog or an un-throttled source can deliver an arbitrarily
-    * large batch — force-broadcasting THAT would fail the trigger and
-    * every replay of it, permanently wedging the stream. Past the
-    * bound the probe join falls back to the plain two-sided shuffle:
-    * slower, but it completes. The bound probe is a limit+count on the
-    * CACHED batch — one cheap action, never a full count of an
-    * unbounded source. */
-  private def bcastRowBound(fanOut: Int, payloadBytes: Long): Long = {
-    val perDoc = math.max(1, fanOut).toLong * math.max(64L, payloadBytes + 48L)
-    math.max(4096L, (1L << 30) / perDoc)
-  }
+  /** Micro-batch DOCUMENT bound for a force-broadcast banded probe side
+    * ([[Dedup.bandedBroadcastDocs]]): each document's probe rows carry
+    * the full signature/vector once per band plus ~48 B of per-row
+    * struct/key overhead — a fixed row bound that assumed ~8 KB per
+    * document would blow past the 8 GB broadcast hard limit for wide
+    * embeddings with many bands. A restart backlog or an un-throttled
+    * source can deliver an arbitrarily large batch; force-broadcasting
+    * THAT would fail the trigger and every replay of it, permanently
+    * wedging the stream. The bound probe is a limit+count on the CACHED
+    * batch — one cheap action, never a full count of an unbounded
+    * source. */
+  private def bcastRowBound(fanOut: Int, payloadBytes: Long): Long =
+    Dedup.bandedBroadcastDocs(math.max(1, fanOut).toLong * math.max(64L, payloadBytes + 48L))
 
   /** Estimated jaccard between the joined `a.sig`/`b.sig` columns. */
   private def estJaccardExpr(numHashes: Int) =
@@ -705,7 +704,7 @@ object StreamingDedup {
               val idx = s.read.parquet(indexPath)
                 .filter(col("batch_id") =!= batchId)
                 .join(
-                  if (batchN <= (1L << 22)) broadcast(batchDocIds) else batchDocIds,
+                  if (batchN <= BroadcastIdRows) broadcast(batchDocIds) else batchDocIds,
                   Seq("id"), "left_anti")
               // tombstones EXCLUDING this batch's own partition: a
               // replayed batch whose failed attempt already tombstoned
@@ -733,7 +732,7 @@ object StreamingDedup {
                   // the shuffled form early, never broadcast too much.
                   val retiredN = graft.core.DirCache.parquetRowCount(s, retiredPath)
                   idx.join(
-                    if (retiredN <= (1L << 22)) broadcast(retired) else retired,
+                    if (retiredN <= BroadcastIdRows) broadcast(retired) else retired,
                     Seq("id"), "left_anti")
                 } else idx
               // broadcast-probe discipline (run()'s scaladoc): the banded
@@ -785,7 +784,7 @@ object StreamingDedup {
           // rather than failing the trigger)
           val matchedSide = matched0
           val wcat = winners
-            .join(if (batchN <= (1L << 22)) broadcast(matchedSide) else matchedSide,
+            .join(if (batchN <= BroadcastIdRows) broadcast(matchedSide) else matchedSide,
               Seq("id"), "left")
             .withColumn("cat",
               when(col("rep_id").isNull, lit("new"))

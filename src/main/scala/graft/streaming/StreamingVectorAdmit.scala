@@ -166,16 +166,14 @@ object StreamingVectorAdmit {
   ): (DataFrame, String) = {
     val s = batch.sparkSession
     val batchIds = batch.select(col("vec_id").as("item_id")).distinct()
-    // ids-only broadcasts below are batch-bounded in a configured
-    // stream, but a restart backlog can deliver an arbitrarily large
-    // batch — force-broadcasting it would fail the trigger AND every
-    // replay. Past ~4M ids fall back to the shuffled join: slower, but
-    // the trigger completes (the StreamingDedup byte-bound discipline).
-    // The caller's batch count bounds the distinct ids from above, so a
-    // counted caller pays no probe job here.
+    // ids-only broadcasts below fall back to the shuffled join past
+    // StreamingDedup.BroadcastIdRows (a backlog-sized batch must not
+    // fail the trigger). The caller's batch count bounds the distinct
+    // ids from above, so a counted caller pays no probe job here.
+    val bound = StreamingDedup.BroadcastIdRows
     lazy val idsSmall =
-      if (knownRows >= 0L) knownRows <= (1L << 22)
-      else batchIds.limit((1 << 22) + 1).count() <= (1L << 22)
+      if (knownRows >= 0L) knownRows <= bound
+      else batchIds.limit(bound.toInt + 1).count() <= bound
     def maybeBcast(d: DataFrame): DataFrame = if (idsSmall) broadcast(d) else d
     val baseDir = s"$indexPath/assignments"
     val others = Ann.readableVecShardDirs(s, indexPath).filterNot(_.getName == ownShard)

@@ -16,8 +16,9 @@ object DumpPlanFiles {
     val suffix = args(1)
     val sfDir = args(2)
     val names = args.drop(3)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+    val cpus = graft.Bench.cpus
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.maxMetadataStringLength", "500")
       .config("spark.ui.enabled", "false")

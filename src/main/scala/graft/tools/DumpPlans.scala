@@ -13,8 +13,9 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+    val cpus = graft.Bench.cpus
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.maxMetadataStringLength", "500")
       .config("spark.ui.enabled", "false")
@@ -55,7 +56,7 @@ object DumpPlans {
       "q_dedup_cross_bucketed" -> "bucketed admission layout: the candidate stage is MATERIALIZED (one index scan per probe — the dumped plan therefore shows the exact verify over the checkpointed candidates); the candidate join itself reads the bucketed index in place with NO exchange and NO re-sort (one sorted file per bucket + bucketed-scan ordering — DedupSpec walks that join's own plan and asserts both), only the shard's banded rows shuffling into the index's bucketing",
       "q_chunk_tokens" -> "token chunking: one narrow codegen pass (tokenize, per-row start sequence, Generate, slice) — the operator contributes NO exchange (the single Exchange below the Sort is the gate's deterministic orderBy, absent in production use); embarrassingly parallel at any corpus size",
       "q_dedup_cross_delta" -> "base+delta split serving: the bucketed base side joins exchange-free while the delta side is a band join over ONLY the band-plausible delta shard dirs (_bands_bloom sidecar pruning) — candidates union and MATERIALIZE before one shared exact verify (the dumped plan shows the verify over the checkpointed candidates); the probe's one signature pass feeds both joins",
-      "q_contamination_bloom" -> "Bloom-prefiltered contamination: corpus grams screened MAP-SIDE by the codegen'd might_contain (the filter sits directly on the Generate output, below any exchange) — only survivors shuffle into the exact verify join; per-doc denominator is a map-side-combined aggregate; both corpus branches keep the gram pipeline inside the Generate (the CollapseProject×lambda rule, tools/ProfileBloom); eval grams read from cache (InMemoryRelation)",
+      "q_contamination_bloom" -> "Bloom-prefiltered contamination: corpus grams screened MAP-SIDE by the codegen'd might_contain (the filter sits directly on the Generate output, below any exchange) — only survivors shuffle into the exact verify join; per-doc denominator is a map-side-combined aggregate; both corpus branches keep the gram pipeline inside the Generate (the CollapseProject×lambda rule documented in TextAnalysis); eval grams read from cache (InMemoryRelation)",
       "q_domain_cap" -> "per-domain cap: quality computed inline in the projection feeding ONE domain-key exchange, then a single window rank — no joins, no second scan",
       "q_hybrid_retrieval" -> "hybrid RRF: both legs share one postings aggregate; query terms + query-restricted df broadcast in each leg; fusion joins two ≤ k-per-query rowsets — every corpus-sized structure stays in the legs' audited broadcast shapes",
       "q_ann_pq" -> "PQ search: corpus encoded in one narrow codegen'd pass (pq_encode, codebooks as reference object); ADC scoring reads codes + the broadcast per-query tables (m lookups/pair, dimension-independent); raw vectors re-attach only to the rerank-bounded candidate join — the corpus-sized vector column never shuffles",

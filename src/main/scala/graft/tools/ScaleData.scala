@@ -20,17 +20,17 @@ import org.apache.spark.sql.functions._
   * to its original — replicas i>0 get a one-token text suffix
   * (`rep<i>`: the doc stays a NEAR-dup of its original, which is the
   * realistic shape for dedup growth) and a per-replica embedding
-  * offset (+0.003·i per component, as the ScaleStress perturbation
-  * does). Replica 0 is bit-identical to the source, so sf-vs-sf
-  * comparisons share a common core.
+  * offset (+0.003·i per component). Replica 0 is bit-identical to
+  * the source, so sf-vs-sf comparisons share a common core.
   */
 object ScaleData {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(5)
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_sf0.5"
     val srcDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = graft.Bench.cpus
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -17,7 +17,7 @@ object TimeQuery {
       if (args.length > 1 && args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 1) args.drop(1).toSeq
       else Seq("q_agg_sum_min_max")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Bench.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -173,22 +173,15 @@ class DedupSpec extends SparkSpecBase {
     assert(forced == dense)
   }
 
-  test("conf-pinned ngram route skips the probes and is pair-identical on every value") {
+  test("pinned ngram route skips the probes and is pair-identical on every value") {
     val real = spark.read.parquet(s"$sfDir/documents.parquet")
-    def run(): Seq[(Long, Long, Double)] = Dedup
-      .ngramJaccardPairs(real, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35,
-        probeFraction = 1.0)
+    def run(pinned: Option[Dedup.NgramRoute]): Seq[(Long, Long, Double)] = Dedup
+      .routedNgramPairs(real, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35,
+        maxExpansion = 256.0, probeFraction = 1.0, collapseExact = true, pinned)
       .as[(Long, Long, Double)].collect().toSeq.sorted
-    val adaptive = run()
-    val key = "graft.dedup.ngram.route"
-    try {
-      for (route <- Seq("collapsed", "dense", "prefix")) {
-        spark.conf.set(key, route)
-        assert(run() == adaptive, s"pinned route '$route' must match the adaptive result")
-      }
-      spark.conf.set(key, "bogus")
-      intercept[IllegalArgumentException](run())
-    } finally spark.conf.unset(key)
+    val adaptive = run(None)
+    for (route <- Seq(Dedup.NgramRoute.Collapsed, Dedup.NgramRoute.Dense, Dedup.NgramRoute.Prefix))
+      assert(run(Some(route)) == adaptive, s"pinned route $route must match the adaptive result")
   }
 
   test("exact-dup collapse is pair-identical to the raw pipeline on a replica-saturated corpus") {

@@ -106,6 +106,34 @@ class FusionSpec extends SparkSpecBase {
       spark.experimental.extraStrategies.filterNot(_.isInstanceOf[graft.plans.TopKPerKeyStrategy])
   }
 
+  test("register on a GraftExtensions session keeps every injected function as injected") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    spark // force base session init first
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.sql.GraftExtensions().apply(_))
+      .getOrCreate()
+    try {
+      val reg = s2.sessionState.functionRegistry
+      val names = graft.sql.GraftFunctions.builders.map(_._1)
+      val injected = names.map(n => n -> reg.lookupFunction(FunctionIdentifier(n)).get).toMap
+      graft.sql.GraftFunctions.register(s2)
+      graft.sql.GraftFunctions.register(s2)
+      names.foreach { n =>
+        val info = reg.lookupFunction(FunctionIdentifier(n)).get
+        assert(info eq injected(n), s"$n was re-registered")
+        assert(info.getClassName == "graft.functions.expressions", n)
+      }
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
+
   test("salted join returns exactly the plain join's rows and spreads a hot key") {
     val probe = (1L to 1000L).map(i => (if (i <= 900) 1L else i, i)).toDF("k", "payload")
     val build = Seq((1L, "hot"), (950L, "cold")).toDF("k", "name")

@@ -52,7 +52,7 @@ class OperatorSpec extends SparkSpecBase {
     val bruteSet = brute.map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bruteSet intersect limited).size.toDouble / bruteSet.size
     // near-uniform synthetic vectors are PQ's hard case (no cluster
-    // structure to exploit); the tools/PqSweep matrix records how
+    // structure to exploit); the PQ recall matrix in SURVEY.md §5 records how
     // recall climbs with m/K/rerank (0.40 at m=8 -> 0.925 at m=16/K=32/
     // rerank=40). The gate's (m=16, K=16, rerank=4k) sits at ~0.7.
     info(f"PQ recall@5 (m=16, K=16, rerank=20): $recall%.3f")
