@@ -1342,13 +1342,20 @@ object SparkEntry {
    * < 1e-6 at t = 0.5), which the DuckDB oracle recomputes
    * quadratically.
    */
-  private def qDedupCross(s: SparkSession, dir: String): DataFrame = {
+  private def qDedupCross(s: SparkSession, dir: String): DataFrame =
+    crossShardGate(s, dir) { (shard, ref) =>
+      Dedup.crossJaccardPairsIndexed(shard, ensureTextIndex(s, dir), ref, "doc_id", "text")
+    }
+
+  /** The q_dedup_cross* gate shape: the "new shard" (sources src0-2)
+    * probed against the reference corpus (the rest), pairs ordered.
+    * `probe` owns the fixture and the probe call — the only parts the
+    * index-layout gates differ in. */
+  private def crossShardGate(s: SparkSession, dir: String)(
+      probe: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val docs = ld(s, dir, "documents")
-    val newShard = docs.filter(col("source").isin("src0", "src1", "src2"))
-    val refCorpus = docs.filter(!col("source").isin("src0", "src1", "src2"))
-    val idxPath = ensureTextIndex(s, dir)
-    Dedup
-      .crossJaccardPairsIndexed(newShard, idxPath, refCorpus, "doc_id", "text")
+    probe(docs.filter(col("source").isin("src0", "src1", "src2")),
+      docs.filter(!col("source").isin("src0", "src1", "src2")))
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -1377,15 +1384,10 @@ object SparkEntry {
    * session-scoped); the oracle is the same quadratic A×B recompute,
    * so both index layouts must emit the identical exact pair set.
    */
-  private def qDedupCrossBucketed(s: SparkSession, dir: String): DataFrame = {
-    val docs = ld(s, dir, "documents")
-    val newShard = docs.filter(col("source").isin("src0", "src1", "src2"))
-    val refCorpus = docs.filter(!col("source").isin("src0", "src1", "src2"))
-    val tbl = ensureBucketedTextIndex(s, dir)
-    Dedup
-      .crossJaccardPairsBucketedIndexed(newShard, tbl, refCorpus, "doc_id", "text")
-      .orderBy(col("id_a"), col("id_b"))
-  }
+  private def qDedupCrossBucketed(s: SparkSession, dir: String): DataFrame =
+    crossShardGate(s, dir) { (shard, ref) =>
+      Dedup.crossJaccardPairsBucketedIndexed(shard, ensureBucketedTextIndex(s, dir), ref, "doc_id", "text")
+    }
 
   /** Build-once bucketed text index table (q_dedup_cross_bucketed); one
     * build per JVM — the table catalog is session-scoped. Exposed
@@ -1410,15 +1412,11 @@ object SparkEntry {
    * pipeline serve probes while admissions accumulate. Oracle: the
    * same brute-force A×B scan as q_dedup_cross.
    */
-  private def qDedupCrossDelta(s: SparkSession, dir: String): DataFrame = {
-    val docs = ld(s, dir, "documents")
-    val newShard = docs.filter(col("source").isin("src0", "src1", "src2"))
-    val refCorpus = docs.filter(!col("source").isin("src0", "src1", "src2"))
-    val (tbl, delta) = ensureDeltaTextIndex(s, dir)
-    Dedup
-      .crossJaccardPairsBucketedDelta(newShard, tbl, delta, refCorpus, "doc_id", "text")
-      .orderBy(col("id_a"), col("id_b"))
-  }
+  private def qDedupCrossDelta(s: SparkSession, dir: String): DataFrame =
+    crossShardGate(s, dir) { (shard, ref) =>
+      val (tbl, delta) = ensureDeltaTextIndex(s, dir)
+      Dedup.crossJaccardPairsBucketedDelta(shard, tbl, delta, ref, "doc_id", "text")
+    }
 
   /** Build-once base+delta fixture (q_dedup_cross_delta): bucketed base
     * over even-doc_id refs, parquet delta index over odd-doc_id refs —
@@ -1453,15 +1451,10 @@ object SparkEntry {
    * redoes it, because a half-admitted index would silently probe a
    * subset and red the gate undiagnosably.
    */
-  private def qDedupCrossCompacted(s: SparkSession, dir: String): DataFrame = {
-    val docs = ld(s, dir, "documents")
-    val newShard = docs.filter(col("source").isin("src0", "src1", "src2"))
-    val refCorpus = docs.filter(!col("source").isin("src0", "src1", "src2"))
-    val idxPath = ensureCompactedTextIndex(s, dir)
-    Dedup
-      .crossJaccardPairsIndexed(newShard, idxPath, refCorpus, "doc_id", "text")
-      .orderBy(col("id_a"), col("id_b"))
-  }
+  private def qDedupCrossCompacted(s: SparkSession, dir: String): DataFrame =
+    crossShardGate(s, dir) { (shard, ref) =>
+      Dedup.crossJaccardPairsIndexed(shard, ensureCompactedTextIndex(s, dir), ref, "doc_id", "text")
+    }
 
   /**
    * Text-shard ADMISSION under the hash gate — the novelty DECISION of
@@ -1548,15 +1541,10 @@ object SparkEntry {
    * whole build→promote sequence (a half-promoted state would probe a
    * subset).
    */
-  private def qDedupCrossPromoted(s: SparkSession, dir: String): DataFrame = {
-    val docs = ld(s, dir, "documents")
-    val newShard = docs.filter(col("source").isin("src0", "src1", "src2"))
-    val refCorpus = docs.filter(!col("source").isin("src0", "src1", "src2"))
-    val tbl = ensurePromotedTextIndex(s, dir)
-    Dedup
-      .crossJaccardPairsBucketedIndexed(newShard, tbl, refCorpus, "doc_id", "text")
-      .orderBy(col("id_a"), col("id_b"))
-  }
+  private def qDedupCrossPromoted(s: SparkSession, dir: String): DataFrame =
+    crossShardGate(s, dir) { (shard, ref) =>
+      Dedup.crossJaccardPairsBucketedIndexed(shard, ensurePromotedTextIndex(s, dir), ref, "doc_id", "text")
+    }
 
   /** Build-once promoted-table fixture (q_dedup_cross_promoted);
     * exposed through [[setupFixtures]]. */

@@ -113,22 +113,24 @@ object DirCache {
    * (parquet row counts are exact in footers) at zero job cost. Only
    * sound on dirs this engine wrote (all files parquet); file counts
    * stay bounded by the cell/bucket-clustered write discipline.
+   * Hidden names are skipped the way Spark's own listing skips them
+   * (`.x`, and `_x` unless it is a `k=v` partition dir), so sidecars,
+   * markers and an in-flight write's `_temporary` tree never count.
    */
   def parquetRowCount(spark: SparkSession, dir: String): Long = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(root, true)
-    var n = 0L
-    while (it.hasNext) {
-      val st = it.next()
+    def count(d: org.apache.hadoop.fs.Path): Long = fs.listStatus(d).iterator.map { st =>
       val name = st.getPath.getName
-      if (st.isFile && !name.startsWith("_") && !name.startsWith(".")) {
+      if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) 0L
+      else if (st.isDirectory) count(st.getPath)
+      else {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromStatus(st, spark.sparkContext.hadoopConfiguration)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try n += r.getRecordCount finally r.close()
+        try r.getRecordCount finally r.close()
       }
-    }
-    n
+    }.sum
+    count(root)
   }
 }

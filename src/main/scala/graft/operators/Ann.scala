@@ -1308,45 +1308,19 @@ object Ann {
     val bf = graft.core.Jobs.desc(spark, "ann:bloom:agg") {
       ids.stat.bloomFilter("item_id", math.max(1L, n), 0.03)
     }
-    val p = new org.apache.hadoop.fs.Path(dir, IdBloomFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // temp-write + rename: a crash mid-write must leave NO torn sidecar
-    // beside committed data (readFrom on a truncated file throws, which
-    // would fail probes instead of the documented sidecar-less
-    // fall-back-to-exact-scan). The dot-prefixed temp name is invisible
-    // to parquet dir listings; rename is atomic on local/HDFS.
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$IdBloomFile.tmp")
-    val out = fs.create(tmp, true)
-    // 8-byte random nonce AFTER the filter bytes: BloomFilter.readFrom
-    // reads its own length and ignores the tail, while the nonce gives
-    // every write a distinct content fingerprint — readIdBloomBcast's
-    // cache keys on it, so a rebuilt sidecar of identical length inside
-    // one mtime tick can never serve a STALE bloom (whose false
-    // negatives would re-admit held ids as duplicates)
-    try {
-      bf.writeTo(out)
-      val nonce = new Array[Byte](8)
-      new java.security.SecureRandom().nextBytes(nonce)
-      out.write(nonce)
-    } finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"sidecar rename failed: $tmp -> $p")
+    // tear-safe, nonce-fingerprinted write — readIdBloomBcast's cache
+    // keys on the nonce, so a rebuilt sidecar of identical length can
+    // never serve a STALE bloom (whose false negatives would re-admit
+    // held ids as duplicates)
+    graft.core.BloomSidecar.write(spark, dir, IdBloomFile, bf)
   }
 
   /** The sidecar of `dir`, if present (absent on pre-sidecar indexes
     * or after a crash between the data and sidecar writes — callers
     * fall back to the exact id-column scan). */
   private[graft] def readIdBloom(
-      spark: SparkSession, dir: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val p = new org.apache.hadoop.fs.Path(dir, IdBloomFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in)) finally in.close()
-    }
-  }
+      spark: SparkSession, dir: String): Option[org.apache.spark.util.sketch.BloomFilter] =
+    graft.core.BloomSidecar.read(spark, dir, IdBloomFile)
 
   // (appId, sidecar length, content nonce, broadcast handle) per dir —
   // see readIdBloomBcast

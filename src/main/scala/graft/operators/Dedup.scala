@@ -1771,7 +1771,8 @@ object Dedup {
   // |reference|²: at 100 TB the reference side's signatures are computed
   // ONCE (buildTextIndex — the one full narrow scan over the corpus) and
   // every subsequent shard pays only its own signature pass plus a
-  // band-key shuffle join against the persisted index.
+  // band-key join against the persisted index (the shard's band rows
+  // broadcast when it is bounded, so the index side never exchanges).
 
   /** A-vs-B band-collision candidates: (probe id, ref id), id-only.
     * Both sides' banded rows are individually bucket-capped — a
@@ -1874,11 +1875,108 @@ object Dedup {
       missTarget: Double = 1e-6,
       maxBucket: Option[Int] = None
   ): DataFrame = {
-    val (nh, b) = minhashBanding(threshold, missTarget)
-    val pb = bandedFromSigs(minhashSigs(probe, idCol, textCol, nh, shingleSize), b, nh / b)
-    val rb = bandedFromSigs(minhashSigs(ref, idCol, textCol, nh, shingleSize), b, nh / b)
-    crossExactVerify(crossCandidates(pb, rb, maxBucket), probe, ref, idCol, textCol, shingleSize)
+    val geom = TextIndexGeometry.forThreshold(threshold, shingleSize, missTarget)
+    crossExactVerify(
+      crossCandidates(geom.bandDocs(probe, idCol, textCol), geom.bandDocs(ref, idCol, textCol), maxBucket),
+      probe, ref, idCol, textCol, shingleSize)
       .filter(col("jac") >= threshold)
+  }
+
+  // ───────────────────────── persisted text index ─────────────────────────
+  //
+  // One lifecycle. A FLAT index is shard dirs `<path>/sigs/shard=<name>`
+  // of (id, sig) parquet, each with an optional band-key sidecar: the
+  // build writes `__base`, each admission appends one dir, compaction
+  // folds them back into `__base`. A BUCKETED index is a bucketed base
+  // table of pre-banded (id, band, bh) rows plus a flat delta in exactly
+  // that shard-dir layout; promotion folds the delta into the table.
+  // Both share one geometry record, one probe ([[probeTextIndex]]) and
+  // one admission ([[admitTextShard]]).
+
+  /** A text index's banding geometry — the ONE meta row every layout
+    * persists: `<path>/meta` parquet for a flat index or a delta,
+    * `<table>_meta` for a bucketed base table, which alone carries
+    * `num_buckets`. A probe banded differently than its index silently
+    * finds nothing, so every probe, append and maintenance job takes
+    * its hash family from here: the geometry is data, not convention. */
+  private[graft] final case class TextIndexGeometry(
+      numHashes: Int,
+      bands: Int,
+      shingleSize: Int,
+      threshold: Double,
+      missTarget: Double,
+      numBuckets: Option[Int] = None) {
+    def rowsPerBand: Int = numHashes / bands
+    /** What a band key depends on: indexes whose band rows meet in one
+      * candidate join must agree on it. */
+    def banding: (Int, Int, Int) = (numHashes, bands, shingleSize)
+    def sigs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+      minhashSigs(df, idCol, textCol, numHashes, shingleSize)
+    def band(sigs: DataFrame): DataFrame = bandedFromSigs(sigs, bands, rowsPerBand)
+    def bandDocs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+      band(sigs(df, idCol, textCol))
+
+    /** The one meta writer: `<target>_meta` when `numBuckets` is set,
+      * else `<target>/meta`. Seeds the reader's cache, so the admission
+      * that follows a build pays no meta read-back job. */
+    def write(spark: org.apache.spark.sql.SparkSession, target: String): Unit = {
+      import spark.implicits._
+      val row = Seq((numHashes, bands, shingleSize, threshold, missTarget))
+        .toDF("num_hashes", "bands", "shingle_size", "threshold", "miss_target")
+      val w = numBuckets.fold(row)(n => row.withColumn("num_buckets", lit(n)))
+        .coalesce(1).write.mode("overwrite")
+      numBuckets match {
+        case None => w.parquet(s"$target/meta")
+        case Some(_) => w.format("parquet").saveAsTable(s"${target}_meta")
+      }
+      graft.core.DirCache.put(spark, TextIndexGeometry.metaDir(spark, target, numBuckets.isDefined), this)
+    }
+  }
+
+  private[graft] object TextIndexGeometry {
+    /** Threshold-sized geometry ([[minhashBanding]]) for a new index. */
+    def forThreshold(threshold: Double, shingleSize: Int, missTarget: Double): TextIndexGeometry = {
+      val (nh, b) = minhashBanding(threshold, missTarget)
+      TextIndexGeometry(nh, b, shingleSize, threshold, missTarget)
+    }
+
+    /** The meta row's storage dir, the [[graft.core.DirCache]] key (a
+      * saveAsTable overwrite lands fresh part files there, so a rebuilt
+      * table's meta misses like a rewritten parquet dir). */
+    private def metaDir(
+        spark: org.apache.spark.sql.SparkSession, target: String, table: Boolean): String =
+      if (!table) s"$target/meta"
+      else spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(s"${target}_meta"))
+        .location.toString
+
+    private def fromRow(r: org.apache.spark.sql.Row): TextIndexGeometry = TextIndexGeometry(
+      r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"), r.getAs[Int]("shingle_size"),
+      r.getAs[Double]("threshold"), r.getAs[Double]("miss_target"),
+      if (r.schema.fieldNames.contains("num_buckets")) Some(r.getAs[Int]("num_buckets")) else None)
+
+    /** A flat index's geometry, driver-cached by dir fingerprint: every
+      * admission/probe/compaction re-reads this immutable row, and each
+      * uncached read is a full Spark job for ~5 scalars. No meta (the
+      * build writes it LAST) throws the parquet reader's own error. */
+    def read(spark: org.apache.spark.sql.SparkSession, indexPath: String): TextIndexGeometry =
+      graft.core.DirCache.cached(spark, s"$indexPath/meta") {
+        fromRow(spark.read.parquet(s"$indexPath/meta").collect()(0))
+      }
+
+    /** [[read]], or None for a missing or crashed-mid-build index. */
+    def find(spark: org.apache.spark.sql.SparkSession, indexPath: String): Option[TextIndexGeometry] = {
+      val marker = new org.apache.hadoop.fs.Path(s"$indexPath/meta/_SUCCESS")
+      if (marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker))
+        Some(read(spark, indexPath))
+      else None
+    }
+
+    /** A bucketed base table's geometry, cached like [[read]]. */
+    def readTable(spark: org.apache.spark.sql.SparkSession, tableName: String): TextIndexGeometry =
+      graft.core.DirCache.cached(spark, metaDir(spark, tableName, table = true)) {
+        fromRow(spark.table(s"${tableName}_meta").collect()(0))
+      }
   }
 
   /**
@@ -1900,7 +1998,7 @@ object Dedup {
       shingleSize: Int = 3,
       missTarget: Double = 1e-6
   ): Unit = {
-    val (nh, b) = minhashBanding(threshold, missTarget)
+    val geom = TextIndexGeometry.forThreshold(threshold, shingleSize, missTarget)
     val spark = ref.sparkSession
     // A REBUILD must wipe the whole sigs tree, not just __base: stale
     // admitted-shard dirs under a new geometry would be banded with the
@@ -1919,21 +2017,14 @@ object Dedup {
     // complete build, so a crash between the two writes leaves a
     // probe-refusing index, not a silently geometry-less one.
     val baseRows = graft.core.Jobs.desc(spark, "textindex:build:sigs") {
-      graft.core.Jobs.observedWrite(minhashSigs(ref, idCol, textCol, nh, shingleSize)) {
+      graft.core.Jobs.observedWrite(geom.sigs(ref, idCol, textCol)) {
         _.write.mode("overwrite").parquet(s"$path/sigs/shard=__base")
       }
     }
     graft.core.Jobs.desc(spark, "textindex:build:bloom") {
-      writeBandsBloom(spark, s"$path/sigs/shard=__base", b, nh / b, baseRows)
+      writeBandsBloom(spark, s"$path/sigs/shard=__base", geom, baseRows)
     }
-    import spark.implicits._
-    graft.core.Jobs.desc(spark, "textindex:build:meta") {
-      Seq((nh, b, shingleSize, threshold, missTarget))
-        .toDF("num_hashes", "bands", "shingle_size", "threshold", "miss_target")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/meta")
-    }
-    putTextIndexMeta(spark, path, nh, b, shingleSize, threshold, missTarget)
+    graft.core.Jobs.desc(spark, "textindex:build:meta")(geom.write(spark, path))
   }
 
   /** Shard labels the index machinery owns: `__base` (the compacted
@@ -1941,6 +2032,14 @@ object Dedup {
     * see [[compactTextIndex]]). A user shard under one of these names
     * would collide with the swap protocol's recovery logic. */
   private val ReservedShards = Set("__base", "__compacted", "__prev_compacted")
+
+  /** The dir name a shard label lands in. escapePathName: shard labels
+    * are user strings landing in a partition-directory name ('/', '=',
+    * '%' must not change the path structure); Spark's own
+    * partition-write escaping keeps discovery able to read the value
+    * back verbatim. */
+  private[graft] def shardDirName(shard: String): String =
+    "shard=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(shard)
 
   /**
    * Append one shard's signatures to an existing text index
@@ -1953,48 +2052,6 @@ object Dedup {
    * one narrow signature pass over the shard; the base corpus is never
    * rewritten.
    */
-  /** The bucketed index's geometry row from `<table>_meta`, driver-
-    * cached by the table's storage dir fingerprint (saveAsTable
-    * overwrites land fresh part files there, so rebuilds miss) — each
-    * uncached read is a Spark job per probe/admission for ~6 scalars. */
-  private def readBucketedMeta(
-      spark: org.apache.spark.sql.SparkSession, tableName: String): org.apache.spark.sql.Row = {
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(s"${tableName}_meta"))
-      .location.toString
-    graft.core.DirCache.cached(spark, loc) {
-      spark.table(s"${tableName}_meta").collect()(0)
-    }
-  }
-
-  /** Seed [[readTextIndexMeta]]'s cache with the geometry row a build
-    * just wrote (same shape a parquet read returns, schema included) —
-    * the admission that follows a build pays no meta read-back job. */
-  private[graft] def putTextIndexMeta(
-      spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      nh: Int, b: Int, shingleSize: Int, threshold: Double, missTarget: Double): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("num_hashes", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("bands", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("shingle_size", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("threshold", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("miss_target", org.apache.spark.sql.types.DoubleType)))
-    val row: org.apache.spark.sql.Row =
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array(nh, b, shingleSize, threshold, missTarget), schema)
-    graft.core.DirCache.put(spark, s"$indexPath/meta", row)
-  }
-
-  /** The index's one geometry row (num_hashes/bands/shingle/threshold),
-    * driver-cached by dir fingerprint ([[graft.core.DirCache]]): every
-    * admission/probe/compaction re-reads this immutable row, and each
-    * uncached read is a full Spark job for ~5 scalars. */
-  private[graft] def readTextIndexMeta(
-      spark: org.apache.spark.sql.SparkSession, indexPath: String): org.apache.spark.sql.Row =
-    graft.core.DirCache.cached(spark, s"$indexPath/meta") {
-      spark.read.parquet(s"$indexPath/meta").collect()(0)
-    }
-
   def appendToTextIndex(
       docs: DataFrame,
       indexPath: String,
@@ -2005,24 +2062,17 @@ object Dedup {
     require(shard.nonEmpty && !ReservedShards.contains(shard),
       s"shard name must be a non-empty label other than the reserved ${ReservedShards.mkString("/")}, got '$shard'")
     val spark = docs.sparkSession
-    val meta = readTextIndexMeta(spark, indexPath)
-    val nh = meta.getAs[Int]("num_hashes")
-    val shingleSize = meta.getAs[Int]("shingle_size")
-    // escapePathName: shard labels are user strings landing in a
-    // partition-directory name ('/', '=', '%' must not change the path
-    // structure); Spark's own partition-write escaping keeps discovery
-    // able to read the value back verbatim
-    val safe = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(shard)
+    val geom = TextIndexGeometry.read(spark, indexPath)
+    val dir = s"$indexPath/sigs/${shardDirName(shard)}"
     val shardRows = graft.core.Jobs.desc(spark, "textindex:append:sigs") {
-      graft.core.Jobs.observedWrite(minhashSigs(docs, idCol, textCol, nh, shingleSize)) {
-        _.write.mode("overwrite").parquet(s"$indexPath/sigs/shard=$safe")
+      graft.core.Jobs.observedWrite(geom.sigs(docs, idCol, textCol)) {
+        _.write.mode("overwrite").parquet(dir)
       }
     }
     // data first, sidecar second: a crash between the two leaves a
     // bloom-less (fully read, never skipped) shard
     graft.core.Jobs.desc(spark, "textindex:append:bloom") {
-      writeBandsBloom(spark, s"$indexPath/sigs/shard=$safe",
-        meta.getAs[Int]("bands"), nh / meta.getAs[Int]("bands"), shardRows)
+      writeBandsBloom(spark, dir, geom, shardRows)
     }
   }
 
@@ -2063,11 +2113,11 @@ object Dedup {
       missTarget: Double = 1e-6,
       numBuckets: Int = 0
   ): Unit = {
-    val (nh, b) = minhashBanding(threshold, missTarget)
+    val geom = TextIndexGeometry.forThreshold(threshold, shingleSize, missTarget)
     val spark = ref.sparkSession
     // corpus-derived bucket count: one column-pruned count() of the ref
     // — negligible next to the signature pass the build runs anyway
-    val buckets = if (numBuckets > 0) numBuckets else textIndexBuckets(ref.count() * b)
+    val buckets = if (numBuckets > 0) numBuckets else textIndexBuckets(ref.count() * geom.bands)
     // Self-heal the cross-JVM half-state: an in-memory catalog dies
     // with its JVM but the managed-table LOCATION persists, and
     // saveAsTable then fails LOCATION_ALREADY_EXISTS on a table the
@@ -2080,14 +2130,8 @@ object Dedup {
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
     }
-    writeBucketedBanded(
-      bandedFromSigs(minhashSigs(ref, idCol, textCol, nh, shingleSize), b, nh / b),
-      tableName, buckets)
-    import spark.implicits._
-    Seq((nh, b, shingleSize, threshold, missTarget, buckets))
-      .toDF("num_hashes", "bands", "shingle_size", "threshold", "miss_target", "num_buckets")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${tableName}_meta")
+    writeBucketedBanded(geom.bandDocs(ref, idCol, textCol), tableName, buckets)
+    geom.copy(numBuckets = Some(buckets)).write(spark, tableName)
   }
 
   /** The one bucketed-banded-rows writer both the build and the
@@ -2152,20 +2196,10 @@ object Dedup {
       idCol: String,
       textCol: String,
       maxBucket: Option[Int] = None
-  ): DataFrame = {
-    val spark = probe.sparkSession
-    val meta = readBucketedMeta(spark, tableName)
-    val nh = meta.getAs[Int]("num_hashes")
-    val b = meta.getAs[Int]("bands")
-    val shingleSize = meta.getAs[Int]("shingle_size")
-    val threshold = meta.getAs[Double]("threshold")
-    val pb = bandedFromSigs(minhashSigs(probe, idCol, textCol, nh, shingleSize), b, nh / b)
-    val rb = spark.table(tableName)
-    withBucketScanOrdering(spark) {
-      crossExactVerify(crossCandidates(pb, rb, maxBucket, hintProbe = false),
-        probe, ref, idCol, textCol, shingleSize)
-    }.filter(col("jac") >= threshold)
-  }
+  ): DataFrame =
+    probeTextIndex(probe, ref, idCol, textCol,
+      TextIndexGeometry.readTable(probe.sparkSession, tableName),
+      Some(tableName), None, maxBucket, None)
 
   /**
    * Merge a text index's accumulated shard subdirs into the single
@@ -2220,12 +2254,13 @@ object Dedup {
 
   /** [[compactTextIndex]] with a test seam: `afterMerge` runs between
     * the merge swap (step 2) and the snapshot cleanup (step 3) — the
-    * window a concurrent admission must survive. */
+    * window a concurrent admission must survive. Returns the number of
+    * shard dirs folded (0 when there was nothing to fold). */
   private[graft] def compactTextIndexImpl(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       afterMerge: () => Unit
-  ): Unit = {
+  ): Int = {
     val sigsPath = s"$path/sigs"
     val fs = new org.apache.hadoop.fs.Path(sigsPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2252,7 +2287,7 @@ object Dedup {
     // admissions, or a concurrent admission's write still in flight —
     // see [[readableShardDirs]]).
     val snapshot = readableShardDirs(spark, path)
-    if (snapshot.isEmpty) return // pre-shard flat layout or nothing to fold
+    if (snapshot.isEmpty) return 0 // nothing to fold
     val mergedRows = graft.core.Jobs.observedWrite(
       spark.read.parquet(snapshot.map(_.toString).toIndexedSeq: _*)
         .select(col("id"), col("sig"))
@@ -2272,11 +2307,8 @@ object Dedup {
     // rows rode through sigs_compacting, which carries no sidecar, so
     // until this line the new base is bloom-less — read fully, never
     // wrongly skipped
-    val metaRow = readTextIndexMeta(spark, path)
-    writeBandsBloom(spark, s"$sigsPath/shard=__base",
-      metaRow.getAs[Int]("bands"),
-      metaRow.getAs[Int]("num_hashes") / metaRow.getAs[Int]("bands"),
-      mergedRows)
+    writeBandsBloom(spark, s"$sigsPath/shard=__base", TextIndexGeometry.read(spark, path), mergedRows)
+    snapshot.length
   }
 
   /**
@@ -2313,36 +2345,9 @@ object Dedup {
       textCol: String,
       shard: String,
       maxBucket: Option[Int] = None
-  ): DataFrame = {
-    // materialized: the rejected-id set (≤ |shard| ids) feeds BOTH the
-    // anti-join below and — through the survivors' lineage — the
-    // append's signature pass; unmaterialized, the whole probe+verify
-    // pipeline re-runs per consumer
-    // one scan-only bounded count of the shard (trivial next to the
-    // admission) buys the bounded-broadcast candidate join: the
-    // corpus-sized index side then pays NO exchange per admission — the
-    // per-admission cost that otherwise grows with the corpus (guide
-    // §2.4/§3.1; the StreamingDedup per-trigger discipline applied
-    // here). The count stops at bound + 1: past the bound the decision
-    // is the same at any size, so an oversized shard never pays a full
-    // count. (The meta read is cached; the probe below reuses it.)
-    val bound = indexProbeBroadcastDocs(
-      readTextIndexMeta(probe.sparkSession, indexPath).getAs[Int]("bands"))
-    val probeN = graft.core.Jobs.desc(probe.sparkSession, "textindex:admit:probe-count") {
-      probe.limit(bound.toInt + 1).count()
-    }
-    val dupIds = graft.core.Jobs.desc(probe.sparkSession, "textindex:admit:probe") {
-      crossJaccardPairsIndexed(
-        probe, indexPath, ref, idCol, textCol, maxBucket, excludeShard = Some(shard),
-        probeRows = probeN)
-        .select(col("id_a").as("__dup_id")).distinct()
-        .localCheckpoint(true)
-    }
-    val survivors = probe.join(
-      dupIds.hint("shuffle_hash"), col(idCol) === col("__dup_id"), "left_anti")
-    appendToTextIndex(survivors, indexPath, idCol, textCol, shard)
-    survivors
-  }
+  ): DataFrame =
+    admitTextShard(probe, ref, idCol, textCol, shard, maxBucket,
+      TextIndexGeometry.read(probe.sparkSession, indexPath), None, indexPath)
 
   /**
    * Probe a persisted text index ([[buildTextIndex]]): signatures for
@@ -2364,75 +2369,116 @@ object Dedup {
       idCol: String,
       textCol: String,
       maxBucket: Option[Int] = None,
-      excludeShard: Option[String] = None,
-      // caller-counted probe rows (admissions know their shard size):
-      // a bounded probe BROADCASTS its banded rows, so the corpus-sized
-      // index side streams through the candidate join with ZERO
-      // exchange — the one per-admission cost that grew with corpus
-      // size. <0 = unknown → the shuffled-hash form, exactly as before
-      // (every probe-only gate passes nothing and keeps its plan).
-      probeRows: Long = -1L
+      excludeShard: Option[String] = None
+  ): DataFrame =
+    probeTextIndex(probe, ref, idCol, textCol,
+      TextIndexGeometry.read(probe.sparkSession, indexPath),
+      None, Some(indexPath), maxBucket, excludeShard)
+
+  /**
+   * The one text-index probe every layout runs: band the probe once,
+   * join it against an optional bucketed base table (`baseTable`,
+   * bucket-fed merge join — no exchange and no re-sort on the index
+   * side) and an optional shard-dir tree (`shardsPath`: a flat index,
+   * or a bucketed index's delta), then one exact verify against `ref`
+   * and one threshold filter. The split layout thereby returns exactly
+   * what a monolithic index over the same rows would.
+   *
+   * Shard dirs pass two file-level filters before any is opened:
+   * `excludeShard` drops the named shard's own dir (admission replay —
+   * a shard must never self-match), and the band-key sidecar test
+   * ([[pruneShardDirs]]) skips a dir whose bloom rejects every probe
+   * key — it contributes no candidates. A delta is the many-small-
+   * shards regime the sidecars exist for.
+   */
+  private def probeTextIndex(
+      probe: DataFrame,
+      ref: DataFrame,
+      idCol: String,
+      textCol: String,
+      geom: TextIndexGeometry,
+      baseTable: Option[String],
+      shardsPath: Option[String],
+      maxBucket: Option[Int],
+      excludeShard: Option[String]
   ): DataFrame = {
     val spark = probe.sparkSession
-    val meta = readTextIndexMeta(spark, indexPath)
-    val nh = meta.getAs[Int]("num_hashes")
-    val b = meta.getAs[Int]("bands")
-    val shingleSize = meta.getAs[Int]("shingle_size")
-    val threshold = meta.getAs[Double]("threshold")
-    // excludeShard: drop the named shard's own DIR (admitShard replay —
-    // a shard must never self-match): file-level pruning, like the
-    // partition-value filter it replaces. Remaining dirs pass the
-    // band-key sidecar test ([[pruneShardDirs]]) — a dir whose bloom
-    // rejects every probe key contributes no candidates and is never
-    // opened. Pre-shard flat layouts (no shard dirs) read as before.
-    val dirs0 = readableShardDirs(spark, indexPath)
-    val dirs1 = excludeShard match {
-      case Some(sh) =>
-        val dirName = "shard=" +
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(sh)
-        dirs0.filterNot(_.getName == dirName)
-      case None => dirs0
-    }
+    val dirs = shardsPath.fold(Array.empty[org.apache.hadoop.fs.Path])(readableShardDirs(spark, _))
+      .filterNot(d => excludeShard.exists(sh => d.getName == shardDirName(sh)))
     // pruning (and the probe-key collect + extra probe materialization
     // that feed it) pays only where a sidecar exists to consult — a
     // freshly-compacted index is one sidecar-less shard dir, and
     // charging it the whole pruning pass was a measured ~0.5 s/probe
     // at sf0.1 for zero dirs skipped
-    val willPrune = dirs1.nonEmpty && anySidecar(spark, dirs1)
-    // bounded-probe broadcast (see probeRows)
-    val bcastProbe = probeRows >= 0L && probeRows <= indexProbeBroadcastDocs(b)
-    // materialized only when the banded probe feeds BOTH the driver key
-    // collect and the candidate join; single-consumer probes stay lazy
-    val pb0 = bandedFromSigs(minhashSigs(probe, idCol, textCol, nh, shingleSize), b, nh / b)
-    val pb = if (willPrune) pb0.localCheckpoint(true) else pb0
-    def cand(rb: DataFrame): DataFrame =
-      crossCandidates(pb, rb, maxBucket, hintProbe = !bcastProbe, broadcastProbe = bcastProbe)
-    val cands =
-      if (dirs0.isEmpty)
-        cand(bandedFromSigs(spark.read.parquet(s"$indexPath/sigs"), b, nh / b))
-      else {
-        val (readDirs, _) =
-          if (willPrune) pruneShardDirs(spark, dirs1, probeBandKeys(pb))
-          else (dirs1, Array.empty[org.apache.hadoop.fs.Path])
-        if (readDirs.isEmpty) emptyCandidates(probe, ref, idCol)
-        else cand(bandedFromSigs(
-          spark.read.option("basePath", s"$indexPath/sigs")
-            .parquet(readDirs.map(_.toString).toIndexedSeq: _*)
-            .select(col("id"), col("sig")),
-          b, nh / b))
-      }
-    crossExactVerify(cands, probe, ref, idCol, textCol, shingleSize)
-      .filter(col("jac") >= threshold)
+    val willPrune = anySidecar(spark, dirs)
+    // materialized only when the banded probe has several consumers
+    // (base join, shard join, driver key collect) — one probe
+    // signature pass; single-consumer probes stay lazy
+    val pb0 = geom.bandDocs(probe, idCol, textCol)
+    val pb = if (willPrune || (baseTable.isDefined && dirs.nonEmpty)) pb0.localCheckpoint(true) else pb0
+    val readDirs = if (willPrune) pruneShardDirs(spark, dirs, probeBandKeys(pb))._1 else dirs
+    // bounded-probe broadcast: a bounded probe's banded rows broadcast,
+    // so the corpus-sized shard side streams through the candidate join
+    // with ZERO exchange — the per-probe cost that otherwise grows with
+    // the corpus (guide §2.4/§3.1; the StreamingDedup per-trigger
+    // discipline applied here). One scan-only count of the probe, taken
+    // only when shard dirs will be read, stops at bound + 1: past the
+    // bound the decision is the same at any size, so an oversized probe
+    // never pays a full count and falls back to the shuffled-hash join.
+    val bcast = readDirs.nonEmpty && {
+      val bound = indexProbeBroadcastDocs(geom.bands)
+      graft.core.Jobs.desc(spark, "textindex:probe-count") {
+        probe.limit(bound.toInt + 1).count()
+      } <= bound
+    }
+    val baseCands = baseTable.map(t =>
+      crossCandidates(pb, spark.table(t), maxBucket, hintProbe = false))
+    val shardCands =
+      if (readDirs.isEmpty) None
+      else Some(crossCandidates(pb,
+        geom.band(spark.read.option("basePath", s"${shardsPath.get}/sigs")
+          .parquet(readDirs.map(_.toString).toIndexedSeq: _*)
+          .select(col("id"), col("sig"))),
+        maxBucket, hintProbe = !bcast, broadcastProbe = bcast))
+    // no readable dir and no base (every dir pruned, or an empty
+    // index): an optimizer-emptied frame, so nothing is read
+    val cands = (baseCands ++ shardCands).reduceOption(_.unionByName(_).distinct())
+      .getOrElse(pb.select(col("id").as("id_a"), lit(null).cast(ref.schema(idCol).dataType).as("id_b"))
+        .limit(0))
+    def verify = crossExactVerify(cands, probe, ref, idCol, textCol, geom.shingleSize)
+    (if (baseTable.isDefined) withBucketScanOrdering(spark)(verify) else verify)
+      .filter(col("jac") >= geom.threshold)
   }
 
-  /** A correctly-typed empty (id_a, id_b) candidate frame — the
-    * every-dir-pruned fast path's zero-read result. */
-  private def emptyCandidates(probe: DataFrame, ref: DataFrame, idCol: String): DataFrame = {
-    val spark = probe.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id_a", probe.schema(idCol).dataType),
-      org.apache.spark.sql.types.StructField("id_b", ref.schema(idCol).dataType)))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** The one admission every layout runs: [[probeTextIndex]] excluding
+    * the shard's own dir, the rejected ids checkpointed, survivors
+    * anti-joined out of `probe` and appended to the shard-dir tree at
+    * `shardsPath` under `shard`. Returns the survivors. */
+  private def admitTextShard(
+      probe: DataFrame,
+      ref: DataFrame,
+      idCol: String,
+      textCol: String,
+      shard: String,
+      maxBucket: Option[Int],
+      geom: TextIndexGeometry,
+      baseTable: Option[String],
+      shardsPath: String
+  ): DataFrame = {
+    // materialized: the rejected-id set (≤ |shard| ids) feeds BOTH the
+    // anti-join below and — through the survivors' lineage — the
+    // append's signature pass; unmaterialized, the whole probe+verify
+    // pipeline re-runs per consumer
+    val dupIds = graft.core.Jobs.desc(probe.sparkSession, "textindex:admit:probe") {
+      probeTextIndex(probe, ref, idCol, textCol, geom, baseTable, Some(shardsPath),
+        maxBucket, Some(shard))
+        .select(col("id_a").as("__dup_id")).distinct()
+        .localCheckpoint(true)
+    }
+    val survivors = probe.join(
+      dupIds.hint("shuffle_hash"), col(idCol) === col("__dup_id"), "left_anti")
+    appendToTextIndex(survivors, shardsPath, idCol, textCol, shard)
+    survivors
   }
 
   // ─────────────── band-key Bloom sidecars (shard-dir pruning) ───────────────
@@ -2478,41 +2524,20 @@ object Dedup {
     * (read back — shard-scale), using the index geometry. No-op above the
     * key cap (any stale sidecar cannot exist: overwrite wiped the dir). */
   private def writeBandsBloom(
-      spark: org.apache.spark.sql.SparkSession, dir: String, bands: Int, rowsPerBand: Int,
-      knownRows: Long = -1L): Unit = {
-    // cap check: callers that just WROTE the dir pass the count their
-    // write observed (rides the write job — zero extra cost); others
-    // pay one driver-side parquet-footer pass (row counts, no column
-    // decode, no Spark job). Each signature row yields exactly `bands`
-    // band keys, so an over-cap dir is detected without the banding
-    // pass it would skip anyway (a corpus-sized base otherwise paid
-    // ~20 s just to learn it gets no sidecar).
-    val sigRows = if (knownRows >= 0L) knownRows
-                  else graft.core.DirCache.parquetRowCount(spark, dir)
-    val n = sigRows * bands
+      spark: org.apache.spark.sql.SparkSession, dir: String, geom: TextIndexGeometry,
+      sigRows: Long): Unit = {
+    // cap check: every caller just WROTE the dir and passes the count
+    // its write observed (rides the write job — zero extra cost). Each
+    // signature row yields exactly `bands` band keys, so an over-cap
+    // dir is detected without the banding pass it would skip anyway (a
+    // corpus-sized base otherwise paid ~20 s just to learn it gets no
+    // sidecar).
+    val n = sigRows * geom.bands
     if (n == 0L || n > BandsBloomKeyCap) return
-    val banded = bandedFromSigs(spark.read.parquet(dir).select(col("id"), col("sig")),
-      bands, rowsPerBand)
-    val keys = banded.select(bandKeyCol.as("k"))
-    val bf = keys.stat.bloomFilter("k", n, BandsBloomFpp)
-    val p = new org.apache.hadoop.fs.Path(dir, BandsBloomFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // temp-write + rename — the writeIdBloom tear-safety discipline: a
-    // crash mid-write leaves no torn sidecar beside committed data
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$BandsBloomFile.tmp")
-    val out = fs.create(tmp, true)
-    // trailing 8-byte nonce = content fingerprint for the broadcast
-    // cache (the writeIdBloom discipline): a same-length rebuild within
-    // one mtime tick can never serve a stale bloom
-    try {
-      bf.writeTo(out)
-      val nonce = new Array[Byte](8)
-      new java.security.SecureRandom().nextBytes(nonce)
-      out.write(nonce)
-    } finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"sidecar rename failed: $tmp -> $p")
+    val keys = geom.band(spark.read.parquet(dir).select(col("id"), col("sig")))
+      .select(bandKeyCol.as("k"))
+    graft.core.BloomSidecar.write(spark, dir, BandsBloomFile,
+      keys.stat.bloomFilter("k", n, BandsBloomFpp))
   }
 
   /** The probe's distinct band keys, driver-collected — or None when the
@@ -2581,18 +2606,9 @@ object Dedup {
     * probe) reads as None — the dir is then read fully, never skipped. */
   private def readBandsBloom(
       spark: org.apache.spark.sql.SparkSession,
-      dir: org.apache.hadoop.fs.Path): Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val p = new org.apache.hadoop.fs.Path(dir, BandsBloomFile)
-    try {
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-        finally in.close()
-      }
-    } catch { case _: java.io.IOException => None }
-  }
+      dir: org.apache.hadoop.fs.Path): Option[org.apache.spark.util.sketch.BloomFilter] =
+    try graft.core.BloomSidecar.read(spark, dir.toString, BandsBloomFile)
+    catch { case _: java.io.IOException => None }
 
   /** Shard dirs under a parquet text index's `sigs/` that hold at least
     * one COMMITTED data file (empty when the index has no signatures
@@ -2617,38 +2633,22 @@ object Dedup {
       })
   }
 
-  /** Create the delta side-index's meta with the bucketed table's
-    * geometry if absent; if present, require it to MATCH — a delta
-    * banded differently than its base would make base and delta
+  /** Check a delta side-index's geometry against its base table's: a
+    * delta banded differently than its base would make base and delta
     * candidates incomparable and every future promotion silently wrong
-    * (the geometry-is-data rule both index forms already follow). */
-  private def ensureDeltaMeta(
+    * (the geometry-is-data rule both index forms already follow). A
+    * missing delta meta is created from the base's geometry when
+    * `create` (admission); a pure probe never creates it. */
+  private def checkDeltaGeometry(
       spark: org.apache.spark.sql.SparkSession,
       deltaPath: String,
-      tableMeta: org.apache.spark.sql.Row
-  ): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$deltaPath/meta/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val m = readTextIndexMeta(spark, deltaPath)
-      require(
-        m.getAs[Int]("num_hashes") == tableMeta.getAs[Int]("num_hashes") &&
-          m.getAs[Int]("bands") == tableMeta.getAs[Int]("bands") &&
-          m.getAs[Int]("shingle_size") == tableMeta.getAs[Int]("shingle_size"),
+      base: TextIndexGeometry,
+      create: Boolean
+  ): Unit = TextIndexGeometry.find(spark, deltaPath) match {
+    case Some(delta) =>
+      require(delta.banding == base.banding,
         s"delta index at $deltaPath has a different banding geometry than its base table")
-    } else {
-      import spark.implicits._
-      Seq((tableMeta.getAs[Int]("num_hashes"), tableMeta.getAs[Int]("bands"),
-          tableMeta.getAs[Int]("shingle_size"), tableMeta.getAs[Double]("threshold"),
-          tableMeta.getAs[Double]("miss_target")))
-        .toDF("num_hashes", "bands", "shingle_size", "threshold", "miss_target")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$deltaPath/meta")
-      putTextIndexMeta(spark, deltaPath,
-        tableMeta.getAs[Int]("num_hashes"), tableMeta.getAs[Int]("bands"),
-        tableMeta.getAs[Int]("shingle_size"), tableMeta.getAs[Double]("threshold"),
-        tableMeta.getAs[Double]("miss_target"))
-    }
+    case None => if (create) base.copy(numBuckets = None).write(spark, deltaPath)
   }
 
   /**
@@ -2679,16 +2679,9 @@ object Dedup {
       maxBucket: Option[Int] = None
   ): DataFrame = {
     val spark = probe.sparkSession
-    ensureDeltaMeta(spark, deltaPath, readBucketedMeta(spark, tableName))
-    // materialized for the same two-consumer reason as [[admitShard]]
-    val dupIds = crossJaccardPairsBucketedDelta(
-      probe, tableName, deltaPath, ref, idCol, textCol, maxBucket, excludeShard = Some(shard))
-      .select(col("id_a").as("__dup_id")).distinct()
-      .localCheckpoint(true)
-    val survivors = probe.join(
-      dupIds.hint("shuffle_hash"), col(idCol) === col("__dup_id"), "left_anti")
-    appendToTextIndex(survivors, deltaPath, idCol, textCol, shard)
-    survivors
+    val geom = TextIndexGeometry.readTable(spark, tableName)
+    checkDeltaGeometry(spark, deltaPath, geom, create = true)
+    admitTextShard(probe, ref, idCol, textCol, shard, maxBucket, geom, Some(tableName), deltaPath)
   }
 
   /**
@@ -2713,51 +2706,10 @@ object Dedup {
       excludeShard: Option[String] = None
   ): DataFrame = {
     val spark = probe.sparkSession
-    val meta = readBucketedMeta(spark, tableName)
-    val nh = meta.getAs[Int]("num_hashes")
-    val b = meta.getAs[Int]("bands")
-    val shingleSize = meta.getAs[Int]("shingle_size")
-    val threshold = meta.getAs[Double]("threshold")
-    // a pure probe never CREATES delta meta (that is admission's job) —
-    // but when one exists it must match the table's geometry
-    val marker = new org.apache.hadoop.fs.Path(s"$deltaPath/meta/_SUCCESS")
-    if (marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker))
-      ensureDeltaMeta(spark, deltaPath, meta)
-    // materialized: feeds the base join, the delta join, and the
-    // driver key collect — one probe signature pass
-    val pb = bandedFromSigs(minhashSigs(probe, idCol, textCol, nh, shingleSize), b, nh / b)
-      .localCheckpoint(true)
-    val baseCands = crossCandidates(pb, spark.table(tableName), maxBucket, hintProbe = false)
-    // the delta probe mirrors crossJaccardPairsIndexed's own-shard
-    // exclusion and band-key sidecar pruning: the delta IS the
-    // many-small-shards regime the sidecars exist for — an admission
-    // opens only the delta shards that can hold one of its band keys
-    val cands = readableShardDirs(spark, deltaPath) match {
-      case dirs if dirs.isEmpty => baseCands
-      case dirs =>
-        val dirs1 = excludeShard match {
-          case Some(sh) =>
-            val dirName = "shard=" +
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(sh)
-            dirs.filterNot(_.getName == dirName)
-          case None => dirs
-        }
-        val (readDirs, _) =
-          if (anySidecar(spark, dirs1)) pruneShardDirs(spark, dirs1, probeBandKeys(pb))
-          else (dirs1, Array.empty[org.apache.hadoop.fs.Path])
-        if (readDirs.isEmpty) baseCands
-        else baseCands
-          .unionByName(crossCandidates(pb,
-            bandedFromSigs(
-              spark.read.option("basePath", s"$deltaPath/sigs")
-                .parquet(readDirs.map(_.toString).toIndexedSeq: _*)
-                .select(col("id"), col("sig")),
-              b, nh / b), maxBucket))
-          .distinct()
-    }
-    withBucketScanOrdering(spark) {
-      crossExactVerify(cands, probe, ref, idCol, textCol, shingleSize)
-    }.filter(col("jac") >= threshold)
+    val geom = TextIndexGeometry.readTable(spark, tableName)
+    checkDeltaGeometry(spark, deltaPath, geom, create = false)
+    probeTextIndex(probe, ref, idCol, textCol, geom, Some(tableName), Some(deltaPath),
+      maxBucket, excludeShard)
   }
 
   /**
@@ -2796,9 +2748,7 @@ object Dedup {
       deltaPath: String,
       afterStage: () => Unit
   ): Unit = {
-    val meta = readBucketedMeta(spark, tableName)
-    val nh = meta.getAs[Int]("num_hashes")
-    val b = meta.getAs[Int]("bands")
+    val geom = TextIndexGeometry.readTable(spark, tableName)
     val staging = new org.apache.hadoop.fs.Path(s"$deltaPath/promoting")
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // The list of folded shard dirs is PERSISTED beside the staged rows
@@ -2819,9 +2769,8 @@ object Dedup {
       } else {
         val snap = readableShardDirs(spark, deltaPath)
         if (snap.isEmpty) return // nothing to promote
-        val deltaBanded = bandedFromSigs(
-          spark.read.parquet(snap.map(_.toString).toIndexedSeq: _*).select(col("id"), col("sig")),
-          b, nh / b)
+        val deltaBanded = geom.band(
+          spark.read.parquet(snap.map(_.toString).toIndexedSeq: _*).select(col("id"), col("sig")))
         spark.table(tableName).unionByName(deltaBanded)
           // a replayed-but-unpromoted shard can carry rows a previous
           // crash-window already merged; identical banded rows collapse
@@ -2838,12 +2787,7 @@ object Dedup {
     // row counts — the dir was just written): one fewer corpus-read job
     val buckets = textIndexBuckets(graft.core.DirCache.parquetRowCount(spark, staging.toString))
     writeBucketedBanded(merged, tableName, buckets)
-    import spark.implicits._
-    Seq((nh, b, meta.getAs[Int]("shingle_size"), meta.getAs[Double]("threshold"),
-        meta.getAs[Double]("miss_target"), buckets))
-      .toDF("num_hashes", "bands", "shingle_size", "threshold", "miss_target", "num_buckets")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${tableName}_meta")
+    geom.copy(numBuckets = Some(buckets)).write(spark, tableName)
     snapshot.foreach(p => fs.delete(p, true))
     fs.delete(staging, true)
   }

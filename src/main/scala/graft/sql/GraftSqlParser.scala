@@ -553,22 +553,15 @@ case class ShowTextIndexCommand(indexPath: String) extends LeafRunnableCommand {
     // so sigs-without-meta is a crashed build) → empty inventory, not a
     // PATH_NOT_FOUND stack trace: the admin plane degrades gracefully
     // like SHOW INDEX DRIFT's missing-index sentinel.
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexPath/meta/_SUCCESS")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaPath)) return Seq.empty
-    val meta = graft.operators.Dedup.readTextIndexMeta(spark, indexPath)
-    val sigs = spark.read.parquet(s"$indexPath/sigs")
-    // pre-shard (flat) layout: the whole index is one unnamed base shard
-    val byShard =
-      (if (sigs.columns.contains("shard")) sigs.select(col("shard"))
-       else sigs.select(lit("__base").as("shard")))
-        .groupBy(col("shard")).agg(count(lit(1)).as("n"))
-        .orderBy(col("shard"))
-        .collect()
-    byShard.toSeq.map { r =>
-      Row(indexPath, r.getString(0), r.getLong(1),
-        meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"),
-        meta.getAs[Int]("shingle_size"), meta.getAs[Double]("threshold"))
+    graft.operators.Dedup.TextIndexGeometry.find(spark, indexPath) match {
+      case None => Seq.empty
+      case Some(geom) =>
+        spark.read.parquet(s"$indexPath/sigs")
+          .groupBy(col("shard")).agg(count(lit(1)).as("n"))
+          .orderBy(col("shard"))
+          .collect().toSeq
+          .map(r => Row(indexPath, r.getString(0), r.getLong(1),
+            geom.numHashes, geom.bands, geom.shingleSize, geom.threshold))
     }
   }
 }
@@ -577,20 +570,18 @@ case class ShowTextIndexCommand(indexPath: String) extends LeafRunnableCommand {
   * back into the single `shard=__base` partition
   * ([[graft.operators.Dedup.compactTextIndex]] — restartable
   * rename-swap, see its scaladoc for the crash-window argument).
-  * Reports the shard count folded and the surviving signature rows,
-  * so a scheduled maintenance statement leaves an auditable line. */
+  * Reports the shard dirs folded and the surviving signature rows
+  * (from parquet footers — no Spark job), so a scheduled maintenance
+  * statement leaves an auditable line. */
 case class CompactTextIndexCommand(indexPath: String) extends LeafRunnableCommand {
   import GraftSqlParser.attr
   override val output: Seq[Attribute] = Seq(
     attr("index", StringType), attr("shards_compacted", LongType), attr("n_sigs", LongType))
   override def run(spark: SparkSession): Seq[Row] = {
     GraftAuth.check(spark, GraftAuth.PathTable(indexPath), GraftAuth.Write)
-    import org.apache.spark.sql.functions.col
-    val sigs = spark.read.parquet(s"$indexPath/sigs")
-    val before =
-      if (sigs.columns.contains("shard")) sigs.select(col("shard")).distinct().count() else 1L
-    graft.operators.Dedup.compactTextIndex(spark, indexPath)
-    Seq(Row(indexPath, before, spark.read.parquet(s"$indexPath/sigs").count()))
+    val folded = graft.operators.Dedup.compactTextIndexImpl(spark, indexPath, () => ())
+    Seq(Row(indexPath, folded.toLong,
+      graft.core.DirCache.parquetRowCount(spark, s"$indexPath/sigs")))
   }
 }
 
@@ -620,8 +611,8 @@ case class AdmitShardCommand(
     val probe = spark.table(probeTable)
     val ref = spark.table(refTable)
     graft.operators.Dedup.admitShard(probe, indexPath, ref, idCol, textCol, shard)
-    val safe = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(shard)
-    val admitted = spark.read.parquet(s"$indexPath/sigs/shard=$safe").count()
+    val admitted = spark.read.parquet(
+      s"$indexPath/sigs/${graft.operators.Dedup.shardDirName(shard)}").count()
     Seq(Row(indexPath, shard, admitted, probe.count() - admitted))
   }
 }
@@ -653,8 +644,8 @@ case class AdmitShardBucketedCommand(
     val ref = spark.table(refTable)
     graft.operators.Dedup.admitShardBucketed(
       probe, tableName, deltaPath, ref, idCol, textCol, shard)
-    val safe = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(shard)
-    val admitted = spark.read.parquet(s"$deltaPath/sigs/shard=$safe").count()
+    val admitted = spark.read.parquet(
+      s"$deltaPath/sigs/${graft.operators.Dedup.shardDirName(shard)}").count()
     Seq(Row(tableName, deltaPath, shard, admitted, probe.count() - admitted))
   }
 }
@@ -676,7 +667,8 @@ case class PromoteTextIndexDeltaCommand(
     GraftAuth.check(spark, GraftAuth.Table(Some(tableName)), GraftAuth.Write)
     val before = graft.operators.Dedup.readableShardDirs(spark, deltaPath).length.toLong
     graft.operators.Dedup.promoteTextIndexDelta(spark, tableName, deltaPath)
-    val buckets = spark.table(s"${tableName}_meta").collect()(0).getAs[Int]("num_buckets").toLong
+    val buckets = graft.operators.Dedup.TextIndexGeometry.readTable(spark, tableName)
+      .numBuckets.fold(0L)(_.toLong)
     Seq(Row(tableName, deltaPath, before, spark.table(tableName).count(), buckets))
   }
 }

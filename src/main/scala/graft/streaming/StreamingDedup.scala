@@ -25,17 +25,18 @@ import graft.operators.Dedup
  * 100 TB corpus cannot absorb. The batch (and its banded explosion)
  * is micro-batch-bounded by the trigger, hence broadcastable by
  * construction; the per-trigger index SCAN itself is the price of the
- * flat shard layout and amortizes by batching (the bucketed BATCH
- * index + base+delta serving is the scan-pruned shape for
- * latency-critical probes).
+ * flat shard layout and amortizes by batching (a bucketed index's base
+ * is the scan-pruned shape for latency-critical probes).
  *
- * The text index is the SAME layout the batch side builds and probes
- * ([[graft.operators.Dedup.buildTextIndex]]): `<indexPath>/meta` pins
- * the banding geometry, `<indexPath>/sigs/shard=stream_<batchId>`
- * holds each micro-batch's signatures. One format, both writers —
- * a corpus ingested through this stream is directly probe-able with
- * [[graft.operators.Dedup.crossJaccardPairsIndexed]], inventoried by
- * `SHOW TEXT INDEX`, and compactable with
+ * [[run]] writes a FLAT text index of the one text-index lifecycle
+ * (see `Dedup`'s persisted text index): `<indexPath>/meta` holds the
+ * geometry record ([[graft.operators.Dedup.TextIndexGeometry]]) and
+ * each micro-batch adds one shard dir,
+ * `<indexPath>/sigs/shard=stream_<batchId>`. Those are the shard dirs
+ * the batch side appends, and a bucketed index's delta has the same
+ * layout. So a corpus ingested through this stream is directly
+ * probe-able with [[graft.operators.Dedup.crossJaccardPairsIndexed]],
+ * inventoried by `SHOW TEXT INDEX`, and compactable with
  * [[graft.operators.Dedup.compactTextIndex]]; conversely the stream
  * can extend an index `buildTextIndex` created (its geometry then
  * comes from the meta, not this method's parameters). Batch-vs-batch
@@ -132,17 +133,14 @@ object StreamingDedup {
           // signatures banded differently than the index silently match
           // nothing, so — exactly as in appendToTextIndex — the geometry
           // is data. The method's numHashes/bands/threshold parameters
-          // only ever CREATE a fresh index's meta.
-          val haveMeta = fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/meta/_SUCCESS"))
-          val (nh, b, shingle, thr) =
-            if (haveMeta) {
-              val m = Dedup.readTextIndexMeta(s, indexPath)
-              (m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"),
-                m.getAs[Int]("shingle_size"), m.getAs[Double]("threshold"))
-            } else (numHashes, bands, shingleSize, threshold)
-          val rowsPerBand = nh / b
-          def banded(sigs: DataFrame): DataFrame = bandedSigs(sigs, b, rowsPerBand)
-          val sigs = Dedup.minhashSigs(batch, "doc_id", "text", nh, shingle).cache()
+          // only ever CREATE a fresh index's meta, which records the
+          // implied at-threshold miss probability (1 - t^r)^b so it
+          // matches the batch builder's exactly.
+          val existing = Dedup.TextIndexGeometry.find(s, indexPath)
+          val geom = existing.getOrElse(Dedup.TextIndexGeometry(numHashes, bands, shingleSize, threshold,
+            math.pow(1.0 - math.pow(threshold, (numHashes / bands).toDouble), bands.toDouble)))
+          def banded(sigs: DataFrame): DataFrame = bandedSigs(sigs, geom.bands, geom.rowsPerBand)
+          val sigs = geom.sigs(batch, "doc_id", "text").cache()
           // ONE count (materializing the cache) is both the empty-batch
           // guard (the separate isEmpty probe job is gone) and the
           // broadcast-bound decision below
@@ -181,12 +179,12 @@ object StreamingDedup {
             a.as("a").join(b.as("b"),
               col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && idCond)
               .select(col("a.id").as("new_id"), col("b.id").as("existing_id"),
-                estJaccardExpr(nh).as("est_jaccard"))
+                estJaccardExpr(geom.numHashes).as("est_jaccard"))
           val inBatch = cand(probe, probe, col("a.id") > col("b.id"))
           // oversized-batch fallback: see bcastRowBound (covers the id
           // anti-join's broadcast too — same driving row count); banded
           // text rows carry the nh-int signature per band
-          val batchSmall = batchN <= bcastRowBound(b, 4L * nh)
+          val batchSmall = batchN <= bcastRowBound(geom.bands, 4L * geom.numHashes)
           // own-shard partition filter, ON TOP of the id anti-join: the
           // sigs-write below overwrites shard=stream_<batchId> while this
           // frame's scan runs in a PARALLEL driver thread (Jobs.par). On a
@@ -210,7 +208,7 @@ object StreamingDedup {
                 col("a.id") =!= col("b.id"))
             else inBatch.limit(0)
           val matches = inBatch.unionByName(viaIndex)
-            .filter(col("est_jaccard") >= thr)
+            .filter(col("est_jaccard") >= geom.threshold)
             .distinct()
           // Idempotent per micro-batch: foreachBatch replays a batch after a
           // failure, so blind appends would double both the matches and the
@@ -230,18 +228,8 @@ object StreamingDedup {
             })
           // meta LAST, and only when creating the index (first non-empty
           // batch): its presence certifies a complete, probe-able index —
-          // the same written-last crash marker buildTextIndex uses. The
-          // implied at-threshold miss probability (1 - t^r)^b is recorded
-          // so the meta schema matches the batch builder's exactly.
-          if (!haveMeta) {
-            import s.implicits._
-            val miss = math.pow(1.0 - math.pow(thr, rowsPerBand.toDouble), b.toDouble)
-            Seq((nh, b, shingle, thr, miss))
-              .toDF("num_hashes", "bands", "shingle_size", "threshold", "miss_target")
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$indexPath/meta")
-            Dedup.putTextIndexMeta(s, indexPath, nh, b, shingle, thr, miss)
-          }
+          // the same written-last crash marker buildTextIndex uses
+          if (existing.isEmpty) geom.write(s, indexPath)
           sigs.unpersist()
           }
         }
@@ -642,7 +630,10 @@ object StreamingDedup {
               val best = scala.collection.mutable.HashMap.empty[Long, Best]
               docs.foreach { d =>
                 val id = d.getLong(0)
-                val sc = if (d.isNullAt(1)) None else Some(d.getDouble(1))
+                // -0.0 folds into 0.0: SQL compares them equal (so
+                // dedupKeepBest ties them to the min id), Double.compare
+                // would not
+                val sc = if (d.isNullAt(1)) None else Some(d.getDouble(1) + 0.0)
                 val root = find(id)
                 best.get(root) match {
                   case None => best(root) = Best(sc, id)

@@ -549,7 +549,7 @@ class DedupSpec extends SparkSpecBase {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val probe = docs.filter(col("source").isin("src0", "src1", "src2"))
     val ref = docs.filter(!col("source").isin("src0", "src1", "src2"))
-    val path = "/tmp/graft_xidx_" + System.nanoTime()
+    val path = tempDir("xidx")
     // build at a NON-default threshold: the probe call takes no threshold
     // argument, so agreement with the direct t=0.35 run proves the probe
     // read its banding geometry and threshold from the persisted meta
@@ -595,7 +595,7 @@ class DedupSpec extends SparkSpecBase {
       (20L, "a wholly novel document describing columnar shuffle compression tradeoffs in detail"), // near-dup of ADMITTED 11
       (21L, "unrelated fresh text on watermark semantics for late arriving stream events")
     ).toDF("doc_id", "text")
-    val path = "/tmp/graft_xadmit_" + System.nanoTime()
+    val path = tempDir("xadmit")
     Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
     val survivorsB = Dedup.admitShard(shardB, path, base, "doc_id", "text", "b")
     assert(survivorsB.select("doc_id").as[Long].collect().toSet == Set(11L))
@@ -614,7 +614,7 @@ class DedupSpec extends SparkSpecBase {
       (10L, "the quick brown fox jumps over the lazy dog near the river bank tonight"), // dup of base
       (11L, "a wholly novel document describing columnar shuffle compression tradeoffs in depth")
     ).toDF("doc_id", "text")
-    val path = "/tmp/graft_xreplay_" + System.nanoTime()
+    val path = tempDir("xreplay")
     Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
     val first = Dedup.admitShard(shard, path, base, "doc_id", "text", "s1")
       .select("doc_id").as[Long].collect().toSet
@@ -643,7 +643,7 @@ class DedupSpec extends SparkSpecBase {
       .toDF("doc_id", "text")
     val s3 = Seq((30L, "maritime chronometer calibration drifts with ambient temperature and spring fatigue"))
       .toDF("doc_id", "text")
-    val path = "/tmp/graft_xsidecar_" + System.nanoTime()
+    val path = tempDir("xsidecar")
     Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
     Dedup.appendToTextIndex(s1, path, "doc_id", "text", "s1")
     Dedup.appendToTextIndex(s2, path, "doc_id", "text", "s2")
@@ -695,7 +695,7 @@ class DedupSpec extends SparkSpecBase {
     val s1 = Seq(
       (10L, "a wholly novel document describing columnar shuffle compression tradeoffs in depth"))
       .toDF("doc_id", "text")
-    val path = "/tmp/graft_xcompact_" + System.nanoTime()
+    val path = tempDir("xcompact")
     Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
     Dedup.admitShard(s1, path, base, "doc_id", "text", "s1")
     val refAll = base.unionByName(s1)
@@ -718,7 +718,7 @@ class DedupSpec extends SparkSpecBase {
     val base = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"))
       .toDF("doc_id", "text")
-    val path = "/tmp/graft_xcrash_" + System.nanoTime()
+    val path = tempDir("xcrash")
     Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
     // simulate the crash window: base rows ALSO present under a stale
     // shard dir (merged but not yet deleted)
@@ -747,7 +747,7 @@ class DedupSpec extends SparkSpecBase {
     val s2 = Seq(
       (30L, "an unrelated late arriving note on watermark semantics for streaming joins"))
       .toDF("doc_id", "text")
-    val path = "/tmp/graft_xconcur_" + System.nanoTime()
+    val path = tempDir("xconcur")
     Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
     Dedup.admitShard(s1, path, base, "doc_id", "text", "s1")
     // the race the snapshot exists for: an admission lands between the
@@ -783,7 +783,7 @@ class DedupSpec extends SparkSpecBase {
     val s1 = Seq(
       (10L, "a wholly novel document describing columnar shuffle compression tradeoffs in depth"))
       .toDF("doc_id", "text")
-    val path = "/tmp/graft_xswapcrash_" + System.nanoTime()
+    val path = tempDir("xswapcrash")
     Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
     Dedup.admitShard(s1, path, base, "doc_id", "text", "s1")
     // simulate a crash right after step 2 (merge renamed into the index,
@@ -817,7 +817,7 @@ class DedupSpec extends SparkSpecBase {
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (2L, "completely different content about spark catalyst optimizer and tungsten"))
       .toDF("doc_id", "text")
-    val path = "/tmp/graft_xsolecopy_" + System.nanoTime()
+    val path = tempDir("xsolecopy")
     Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
     // simulate a crash between step 3 (old dirs deleted) and step 4 (final
     // rename): the whole index lives under shard=__compacted only
@@ -941,6 +941,59 @@ class DedupSpec extends SparkSpecBase {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
+  test("a bounded probe-only indexed probe streams the index side with no exchange") {
+    // the probe decides the broadcast itself (a bounded count of the
+    // probe), so a plain probe — no admission, no caller-known size —
+    // gets the zero-index-exchange candidate join
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val probe = docs.filter(col("source").isin("src0", "src1", "src2"))
+    val ref = docs.filter(!col("source").isin("src0", "src1", "src2"))
+    val path = tempDir("xbcast")
+    Dedup.buildTextIndex(ref, "doc_id", "text", path, threshold = 0.5)
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // plain tree for the ancestry walk; no automatic broadcast, so any
+    // broadcast seen is the probe's own decision
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.listenerManager.register(listener)
+    val got =
+      try Dedup.crossJaccardPairsIndexed(probe, path, ref, "doc_id", "text")
+        .as[(Long, Long, Double)].collect().toSet
+      finally {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
+      }
+    val want = Dedup.crossJaccardPairs(probe, ref, "doc_id", "text", threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(got == want && got.nonEmpty)
+    def indexScanIn(p: SparkPlan): Boolean = p.exists {
+      case sc: FileSourceScanExec => sc.relation.location.rootPaths.exists(_.toString.contains(path))
+      case _ => false
+    }
+    def candJoins: Seq[BroadcastHashJoinExec] = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .flatMap(_.collect { case j: BroadcastHashJoinExec if indexScanIn(j) => j })
+    // listener events arrive asynchronously
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (candJoins.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    spark.listenerManager.unregister(listener)
+    val join = candJoins.headOption.getOrElse(fail(
+      s"no broadcast candidate join over the index scan in:\n${plans.toArray.mkString("\n").take(4000)}"))
+    val streamed = if (join.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildLeft)
+      join.right else join.left
+    assert(indexScanIn(streamed), s"the index must be the streamed side:\n${join.toString.take(3000)}")
+    assert(!streamed.exists { case _: ShuffleExchangeExec => true; case _ => false },
+      s"the index side must stream with no exchange:\n${streamed.toString.take(3000)}")
+  }
+
   test("textIndexBuckets scales with corpus and floors for parallelism") {
     assert(Dedup.textIndexBuckets(0L) == 8) // empty corpus: floor wins
     assert(Dedup.textIndexBuckets(125L * 1000) == 8) // sf0.1-scale
@@ -962,7 +1015,7 @@ class DedupSpec extends SparkSpecBase {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"/tmp/graft_warehouse/$t"))
     }
     Dedup.buildTextIndexBucketed(base, "doc_id", "text", tbl, threshold = 0.5)
-    (tbl, "/tmp/graft_xdelta_" + tag + "_" + System.nanoTime(), base)
+    (tbl, tempDir("xdelta_" + tag), base)
   }
   private val novelX =
     "a wholly novel document describing columnar shuffle compression tradeoffs in depth"
@@ -1084,7 +1137,7 @@ class DedupSpec extends SparkSpecBase {
     val shard = Seq(
       (10L, "a wholly novel document describing columnar shuffle compression tradeoffs in depth"))
       .toDF("doc_id", "text")
-    val path = "/tmp/graft_xrebuild_" + System.nanoTime()
+    val path = tempDir("xrebuild")
     Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
     Dedup.admitShard(shard, path, base, "doc_id", "text", "old_shard")
     // rebuild at a DIFFERENT threshold: stale old_shard signatures under
@@ -1097,7 +1150,7 @@ class DedupSpec extends SparkSpecBase {
 
   test("appendToTextIndex rejects the reserved __base shard and empty names") {
     val base = Seq((1L, "some base corpus text about anything at all")).toDF("doc_id", "text")
-    val path = "/tmp/graft_xguard_" + System.nanoTime()
+    val path = tempDir("xguard")
     Dedup.buildTextIndex(base, "doc_id", "text", path)
     Seq("__base", "__compacted", "__prev_compacted", "").foreach { bad =>
       intercept[IllegalArgumentException] {

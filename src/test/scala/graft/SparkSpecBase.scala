@@ -8,9 +8,21 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A fresh, existing dir for one spec's on-disk state, under this
+    * JVM's temp root — which is deleted when the test JVM exits, so
+    * spec output never outlives the run. */
+  def tempDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(SparkSpecBase.tempRoot, tag + "_").toString
 }
 
 object SparkSpecBase {
+  private lazy val tempRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_spec_")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession
       .builder()

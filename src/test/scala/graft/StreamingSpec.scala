@@ -723,6 +723,24 @@ class StreamingSpec extends SparkSpecBase {
     assert(d == Set((false, 20L)), s"the demotion decision must survive the replay: $d")
   }
 
+  test("driver-resolved keep-best picks dedupKeepBest's winner when scores are -0.0 and 0.0") {
+    // one cluster (identical texts) whose scores are equal under SQL
+    // comparison but not under Double.compare: the min-id tie-break
+    // must pick the winner on both paths
+    val base = tempDir("skb_signed_zero")
+    val text = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val batch = Seq((1L, text, -0.0), (2L, text, 0.0)).toDF("doc_id", "text", "q")
+    graft.streaming.StreamingDedup.keepBestBatch(
+      batch, 0L, col("q"), s"$base/index", s"$base/decisions")
+    val kept = spark.read.parquet(s"$base/decisions").filter(col("kept"))
+      .select(col("doc_id")).as[Long].collect().toSet
+    val want = graft.operators.Dedup
+      .dedupKeepBest(batch, "doc_id", col("q"), Seq((1L, 2L)).toDF("id_a", "id_b"))
+      .filter(col("keep")).select(col("doc_id")).as[Long].collect().toSet
+    assert(want == Set(1L), s"dedupKeepBest ties -0.0 with 0.0 and keeps the min id: $want")
+    assert(kept == want, s"driver-resolved winner $kept differs from dedupKeepBest's $want")
+  }
+
   test("streaming contamination screens micro-batches against the static eval gram set") {
     implicit val sqlCtx = spark.sqlContext
     val base = "/tmp/graft_scontam_" + System.nanoTime()
