@@ -1026,7 +1026,7 @@ object Ann {
     * fingerprint (see [[loadIvfCentroids]] — same per-trigger re-read
     * shape on the PQ admission/search paths). */
   def loadPqCodebooks(spark: SparkSession, path: String): Array[Array[Array[Float]]] =
-    cachedByDir(spark, s"$path/codebooks") {
+    graft.core.DirCache.cached(spark, s"$path/codebooks") {
       val rows = spark.read.parquet(s"$path/codebooks")
         .orderBy(col("sub"), col("code"))
         .collect()
@@ -1092,7 +1092,7 @@ object Ann {
       case None => base
       case Some(delta) =>
         val unioned = base.unionByName(delta.filter(cellFilter))
-        if (needsIdentityCollapse(spark, path)) unioned.dropDuplicates(Seq("item_id"))
+        if (graft.core.ShardStore.folding(spark, path)) unioned.dropDuplicates(Seq("item_id"))
         else unioned
     }
     adcRerank(codes, qdf, kk, rerank, corpus, k,
@@ -1186,7 +1186,7 @@ object Ann {
     else graft.core.Jobs.desc(spark, "ann:drift") {
       val cents = loadIvfCentroids(spark, path)
       // p95 cached like the centroids: one number re-read per trigger
-      val p95 = cachedByDir(spark, statsPath.toString) {
+      val p95 = graft.core.DirCache.cached(spark, statsPath.toString) {
         java.lang.Double.valueOf(
           spark.read.parquet(statsPath.toString).head().getDouble(0))
       }.doubleValue()
@@ -1227,28 +1227,22 @@ object Ann {
    * discovered partition column so the probed-cell filter still prunes
    * at file level. Returns None when no committed shard holds data.
    *
-   * `needsIdentityCollapse`: an item can sit in base AND delta only
-   * inside [[promoteIvfDelta]]'s crash window (base rewritten, folded
-   * shards not yet deleted) — whose durable marker is the staged
-   * `promoting` dir, deleted last. The caller collapses identity only
-   * while that marker exists: the steady delta state (the normal daily
-   * shape) stays shuffle-free. Shard-name uniqueness is the admission
-   * contract ([[appendToIvfIndex]]); a re-used name is not insured here.
+   * An item can sit in base AND delta only inside [[promoteIvfDelta]]'s
+   * crash window, so callers collapse identity only while
+   * [[graft.core.ShardStore.folding]] holds: the steady delta state (the
+   * normal daily shape) stays shuffle-free. Shard-name uniqueness is the
+   * admission contract ([[appendToIvfIndex]]); a re-used name is not
+   * insured here.
    */
   private[graft] def deltaSide(
       spark: SparkSession, path: String, deltaDir: String, cols: Seq[String]
   ): Option[DataFrame] = {
-    val dirs = readableShardDirsUnder(spark, s"$path/$deltaDir")
+    val dirs = graft.core.ShardStore.committed(spark, s"$path/$deltaDir")
     if (dirs.isEmpty) None
     else Some(
       spark.read.option("basePath", s"$path/$deltaDir")
         .parquet(dirs.map(_.toString).toIndexedSeq: _*)
         .select(cols.map(col): _*))
-  }
-
-  private def needsIdentityCollapse(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/promoting")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Rebuild preamble shared by [[buildIvfIndex]] / [[buildIvfPqIndex]]:
@@ -1262,7 +1256,7 @@ object Ann {
   private def wipeAdmissionState(spark: SparkSession, path: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("stats", "centroids", "assignments_delta", "codes_delta", "promoting")
+    Seq("stats", "centroids", "assignments_delta", "codes_delta", graft.core.ShardStore.Marker)
       .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(root, d), true))
   }
 
@@ -1291,11 +1285,8 @@ object Ann {
       spark: SparkSession, dir: String, knownRows: Long = -1L): Unit = {
     // an admitted EMPTY batch commits _SUCCESS with zero data files —
     // such a dir cannot infer a schema (and is excluded from probes by
-    // readableShardDirsUnder's same guard), so it gets no sidecar
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val rfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!rfs.listStatus(root).exists(st => st.isDirectory && st.getPath.getName.startsWith("cell=")))
-      return
+    // the same predicate), so it gets no sidecar
+    if (!graft.core.ShardStore.isCommitted(spark, dir)) return
     // sizing count: callers that just WROTE the dir pass the count
     // their write observed (an Observation rides the write job — zero
     // extra cost); anyone else pays one driver-side footer pass (exact
@@ -1381,60 +1372,34 @@ object Ann {
     }
   }
 
-  /** Driver-cached load of a small metadata dir, keyed by the dir's
-    * file fingerprint — see [[graft.core.DirCache]] (the shared home of
-    * the mechanism; the text-index meta reads use the same one). */
-  private def cachedByDir[T <: AnyRef](spark: SparkSession, dir: String)(load: => T): T =
-    graft.core.DirCache.cached(spark, dir)(load)
-
   /** The stored centroid table of [[buildIvfIndex]], cell-ordered.
     * Cached per dir fingerprint: admission/drift/search re-load it per
     * trigger, and the table is bounded (≤ ~1500 coarse cells). */
   def loadIvfCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
-    cachedByDir(spark, s"$path/centroids") {
+    graft.core.DirCache.cached(spark, s"$path/centroids") {
       spark.read.parquet(s"$path/centroids")
         .orderBy(col("cell"))
         .collect()
         .map(_.getSeq[Float](1).toArray)
     }
 
-  /** Delta shard dirs of a persisted IVF index that hold committed
-    * data (the `_SUCCESS` marker certifies a complete shard write; a
-    * crashed append leaves no marker and its replay overwrites the
-    * dir). Mirrors the text index's shard inventory discipline. */
+  /** Committed delta shard dirs of a persisted IVF index (see
+    * [[graft.core.ShardStore]]): a crashed append leaves no `_SUCCESS`
+    * and its replay overwrites the dir. */
   private[graft] def readableVecShardDirs(
       spark: SparkSession, path: String
   ): Array[org.apache.hadoop.fs.Path] =
-    readableShardDirsUnder(spark, s"$path/${deltaDirName(spark, path)}")
+    graft.core.ShardStore.committed(spark, s"$path/${vecDirs(spark, path)._2}")
 
-  /** The delta tree of the index at `path`: `codes_delta` for an
-    * IVF-PQ index (codebooks present — the index rows are codes),
-    * `assignments_delta` for a plain IVF index. One name resolution
-    * shared by admission, promotion, search, and the SQL surface, so
-    * the two index families expose ONE lifecycle. */
-  private[graft] def deltaDirName(spark: SparkSession, path: String): String = {
+  /** The (base, delta) dirs of the index at `path`: `codes`/`codes_delta`
+    * for an IVF-PQ index (codebooks present — the index rows are codes),
+    * `assignments`/`assignments_delta` for a plain IVF index. One
+    * resolution shared by admission, promotion, search, and the SQL
+    * surface, so the two index families expose ONE lifecycle. */
+  private[graft] def vecDirs(spark: SparkSession, path: String): (String, String) = {
     val cb = new org.apache.hadoop.fs.Path(s"$path/codebooks/_SUCCESS")
     val fs = cb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(cb)) "codes_delta" else "assignments_delta"
-  }
-
-  private[graft] def readableShardDirsUnder(
-      spark: SparkSession, deltaRoot: String
-  ): Array[org.apache.hadoop.fs.Path] = {
-    val delta = new org.apache.hadoop.fs.Path(deltaRoot)
-    val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(delta)) Array.empty
-    else fs.listStatus(delta).map(_.getPath)
-      .filter(_.getName.startsWith("shard="))
-      // the marker alone is not enough: an admitted EMPTY batch commits
-      // _SUCCESS with zero data files (no cell= dirs), and a read of
-      // such a shard cannot infer a schema — same guard as the text
-      // index's readableShardDirs, one level up (data lives under the
-      // cell partition dirs here)
-      .filter { p =>
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) &&
-          fs.listStatus(p).exists(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      }
+    if (fs.exists(cb)) ("codes", "codes_delta") else ("assignments", "assignments_delta")
   }
 
   /**
@@ -1445,7 +1410,7 @@ object Ann {
    * assignment pass over the NEW vectors only. Each shard's rows land
    * cell-partitioned under `assignments_delta/shard=<name>` (or, for
    * an IVF-PQ index, encoded with the existing codebooks under
-   * `codes_delta/shard=<name>` — see [[deltaDirName]]; both families,
+   * `codes_delta/shard=<name>` — see [[vecDirs]]; both families,
    * one lifecycle) — its own dir, overwritten on replay, so a re-run
    * failed admission converges instead of double-carrying items. The
    * base rows are never rewritten; search unions base + delta under
@@ -1470,7 +1435,8 @@ object Ann {
     // loadIvfCentroids throws on a geometry-less index (no centroids
     // dir): an append must never invent its own quantizer
     val cents = loadIvfCentroids(spark, path)
-    val safe = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(shard)
+    val (_, deltaDir) = vecDirs(spark, path)
+    val dir = s"$path/$deltaDir/${graft.core.ShardStore.dirName(shard)}"
     // CELL-keyed rebalance instead of spread()'s round-robin exchange
     // (same single-shuffle cost): a partitionBy("cell") write fans each
     // task out across every cell it holds, so a round-robin layout
@@ -1490,30 +1456,17 @@ object Ann {
     // same one-narrow-pass discipline; code quality for drifted data
     // degrades ADC ordering only, and the exact re-rank stage is what
     // rules accuracy — the drift probe still owns the rebuild decision)
-    if (deltaDirName(spark, path) == "codes_delta") {
-      val codebooks = loadPqCodebooks(spark, path)
-      val n = graft.core.Jobs.desc(spark, "ann:append:encode+write") {
-        graft.core.Jobs.observedWrite(assigned
+    val (step, rows) =
+      if (deltaDir == "codes_delta") {
+        val codebooks = loadPqCodebooks(spark, path)
+        ("ann:append:encode+write", assigned
           .withColumn("codes", pqEncodeBc(col("item_vec"), bcastCentroids3(spark, codebooks)))
-          .select(col("item_id"), col("codes"), col("cell"))) {
-          _.write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$path/codes_delta/shard=$safe")
-        }
-      }
-      graft.core.Jobs.desc(spark, "ann:append:bloom") {
-        writeIdBloom(spark, s"$path/codes_delta/shard=$safe", n)
-      }
-    } else {
-      val n = graft.core.Jobs.desc(spark, "ann:append:assign+write") {
-        graft.core.Jobs.observedWrite(assigned) {
-          _.write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$path/assignments_delta/shard=$safe")
-        }
-      }
-      graft.core.Jobs.desc(spark, "ann:append:bloom") {
-        writeIdBloom(spark, s"$path/assignments_delta/shard=$safe", n)
-      }
+          .select(col("item_id"), col("codes"), col("cell")))
+      } else ("ann:append:assign+write", assigned)
+    val n = graft.core.Jobs.desc(spark, step) {
+      graft.core.Jobs.observedWrite(rows)(_.write.mode("overwrite").partitionBy("cell").parquet(dir))
     }
+    graft.core.Jobs.desc(spark, "ann:append:bloom")(writeIdBloom(spark, dir, n))
   }
 
   /**
@@ -1545,104 +1498,71 @@ object Ann {
 
   /**
    * Fold accumulated delta shards into the base assignments — the
-   * vector twin of [[graft.operators.Dedup.promoteTextIndexDelta]],
-   * same staged-merge discipline: merged rows land OUTSIDE both
-   * structures (`<path>/promoting`), the folded-shard list is
-   * persisted beside them (written last — its presence certifies a
-   * complete stage), and cleanup deletes ONLY the dirs the list names,
-   * so a shard admitted mid-promotion survives for the next cycle.
-   * Promotion never re-assigns a vector: the delta rows already carry
-   * their cells, so the cost is one shuffle-free union rewrite of the
-   * assignment rows, not a corpus re-quantization.
-   *
-   * Restartable from every crash window: before the list exists a
-   * re-run re-stages (overwrite); after it exists a re-run resumes —
-   * re-overwrites the base from the stage (idempotent), deletes the
-   * listed shard dirs, drops the stage. The window between the base
-   * overwrite and the shard deletion can double-carry an item in base
-   * AND delta; [[searchIvfIndex]]'s delta branch collapses candidate
-   * identity, so search stays exact through it. The base overwrite
-   * itself is the maintenance window (same contract as the text
-   * index's table rebuild): a search racing the rewrite can see a
-   * partial base — schedule promotion off the query path.
+   * vector twin of [[graft.operators.Dedup.promoteTextIndexDelta]], on
+   * the same [[graft.core.ShardStore.fold]] protocol (home `<path>`,
+   * tree `<path>/<delta dir>`). Promotion never re-assigns a vector:
+   * the delta rows already carry their cells, so the cost is one
+   * shuffle-free union rewrite of the assignment rows, not a corpus
+   * re-quantization. Inside the fold's double-carry window,
+   * [[searchIvfIndex]]'s delta branch collapses candidate identity, so
+   * search stays exact. The base overwrite itself is the maintenance
+   * window (same contract as the text index's table rebuild): a search
+   * racing the rewrite can see a partial base — schedule promotion off
+   * the query path.
    */
   def promoteIvfDelta(spark: SparkSession, path: String): Unit =
     promoteIvfDeltaImpl(spark, path, () => ())
 
   /** [[promoteIvfDelta]] with a test seam: `afterStage` runs between
     * the staged-merge write and the base rewrite + snapshot cleanup —
-    * the window a concurrent admission must survive. */
+    * the window a concurrent admission must survive. Returns the
+    * number of shards folded. */
   private[graft] def promoteIvfDeltaImpl(
-      spark: SparkSession, path: String, afterStage: () => Unit): Unit = {
-    // family dispatch (see [[deltaDirName]]): the PQ index promotes
-    // codes rows into `codes`, the plain index assignment rows into
-    // `assignments` — one protocol, two row shapes
-    val (baseDir, deltaDir, dataCols) =
-      if (deltaDirName(spark, path) == "codes_delta")
-        ("codes", "codes_delta", Seq(col("item_id"), col("codes"), col("cell")))
-      else
-        ("assignments", "assignments_delta", Seq(col("item_id"), col("item_vec"), col("cell")))
-    val staging = new org.apache.hadoop.fs.Path(s"$path/promoting")
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val foldedList = new org.apache.hadoop.fs.Path(s"$path/promoting/__folded_shards")
-    val snapshot: Array[org.apache.hadoop.fs.Path] =
-      if (fs.exists(foldedList)) {
-        // resume: stage is complete — fold exactly the dirs it named
-        // (re-listing would delete shards admitted after the crash
-        // without their rows ever being staged)
-        val in = fs.open(foldedList)
-        val names =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toArray
-          finally in.close()
-        names.map(n => new org.apache.hadoop.fs.Path(s"$path/$deltaDir/$n"))
-      } else {
-        val snap = readableVecShardDirs(spark, path)
-        if (snap.isEmpty) return // nothing to promote
-        // explicit committed dirs with basePath: multiple shard roots
-        // without it are "conflicting directory structures" to
-        // partition inference (each root IS a partition dir); with it,
-        // shard and cell are both discovered and dataCols drops shard
-        val deltaRows = spark.read.option("basePath", s"$path/$deltaDir")
-          .parquet(snap.map(_.toString).toIndexedSeq: _*)
-        graft.core.Jobs.desc(spark, "ann:promote:stage") {
-          spark.read.parquet(s"$path/$baseDir")
-            .unionByName(deltaRows.select(dataCols: _*))
-            // a prior crash window may have merged rows whose shard dir
-            // survived; items are identity-keyed, duplicates collapse
-            .dropDuplicates(Seq("item_id"))
-            // FLAT staging (r17): the stage is transient scratch that
-            // only the base-rewrite (and a crash resume) reads fully —
-            // a partitionBy("cell") here fanned every dedup task across
-            // every cell it held, O(tasks × cells) staging files at
-            // corpus scale for a dir that is deleted minutes later.
-            // Written flat, `cell` stays a data column (same rows) and
-            // the stage holds one file per task.
-            .write.mode("overwrite").parquet(staging.toString)
+      spark: SparkSession, path: String, afterStage: () => Unit): Int = {
+    // family dispatch: the PQ index promotes codes rows into `codes`,
+    // the plain index assignment rows into `assignments` — one
+    // protocol, two row shapes
+    val (baseDir, deltaDir) = vecDirs(spark, path)
+    val dataCols = Seq("item_id", if (baseDir == "codes") "codes" else "item_vec", "cell").map(col)
+    graft.core.ShardStore.fold(spark, path, Seq(s"$path/$deltaDir"), afterStage) { (stage, snap) =>
+      // explicit committed dirs with basePath: multiple shard roots
+      // without it are "conflicting directory structures" to
+      // partition inference (each root IS a partition dir); with it,
+      // shard and cell are both discovered and dataCols drops shard
+      val deltaRows = spark.read.option("basePath", s"$path/$deltaDir")
+        .parquet(snap.map(_.toString).toIndexedSeq: _*)
+      graft.core.Jobs.desc(spark, "ann:promote:stage") {
+        spark.read.parquet(s"$path/$baseDir")
+          .unionByName(deltaRows.select(dataCols: _*))
+          // a prior crash window may have merged rows whose shard dir
+          // survived; items are identity-keyed, duplicates collapse
+          .dropDuplicates(Seq("item_id"))
+          // FLAT staging (r17): the stage is transient scratch that
+          // only the base-rewrite (and a crash resume) reads fully —
+          // a partitionBy("cell") here fanned every dedup task across
+          // every cell it held, O(tasks × cells) staging files at
+          // corpus scale for a dir that is deleted minutes later.
+          // Written flat, `cell` stays a data column (same rows) and
+          // the stage holds one file per task.
+          .write.mode("overwrite").parquet(stage)
+      }
+    } { stage =>
+      val baseRows = graft.core.Jobs.desc(spark, "ann:promote:base-rewrite") {
+        // the rewrite IS the compaction opportunity: cell-cluster the
+        // lasting base layout (~1 file per cell, hot cells split at the
+        // advisory size — see buildIvfIndex)
+        graft.core.Jobs.observedWrite(spark.read.parquet(stage).hint("rebalance", col("cell"))) {
+          _.write.mode("overwrite").partitionBy("cell").parquet(s"$path/$baseDir")
         }
-        val out = fs.create(foldedList, true)
-        try out.write(snap.map(_.getName).mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        snap
       }
-    afterStage()
-    val baseRows = graft.core.Jobs.desc(spark, "ann:promote:base-rewrite") {
-      // the rewrite IS the compaction opportunity: cell-cluster the
-      // lasting base layout (~1 file per cell, hot cells split at the
-      // advisory size — see buildIvfIndex)
-      graft.core.Jobs.observedWrite(
-        spark.read.parquet(staging.toString).hint("rebalance", col("cell"))) {
-        _.write.mode("overwrite").partitionBy("cell").parquet(s"$path/$baseDir")
+      // the base overwrite wiped the old sidecar with the old data; the
+      // fresh one must cover the folded ids before the shard dirs (and
+      // their own sidecars) disappear — a crash in between leaves a
+      // sidecar-less base, which probes fall back to scanning exactly
+      graft.core.Jobs.desc(spark, "ann:promote:bloom") {
+        writeIdBloom(spark, s"$path/$baseDir", baseRows)
       }
     }
-    // the base overwrite wiped the old sidecar with the old data; the
-    // fresh one must cover the folded ids before the shard dirs (and
-    // their own sidecars) disappear — a crash in between leaves a
-    // sidecar-less base, which probes fall back to scanning exactly
-    graft.core.Jobs.desc(spark, "ann:promote:bloom") {
-      writeIdBloom(spark, s"$path/$baseDir", baseRows)
-    }
-    snapshot.foreach(p => fs.delete(p, true))
-    fs.delete(staging, true)
   }
 
   /**
@@ -1686,7 +1606,7 @@ object Ann {
         // identity collapse only while a crashed promotion's staged
         // state survives (see deltaSide) — the steady delta state
         // pays no extra shuffle
-        if (needsIdentityCollapse(spark, path)) unioned.dropDuplicates(Seq("item_id"))
+        if (graft.core.ShardStore.folding(spark, path)) unioned.dropDuplicates(Seq("item_id"))
         else unioned
     }
     val cands = stored

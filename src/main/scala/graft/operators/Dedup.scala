@@ -2033,14 +2033,6 @@ object Dedup {
     * would collide with the swap protocol's recovery logic. */
   private val ReservedShards = Set("__base", "__compacted", "__prev_compacted")
 
-  /** The dir name a shard label lands in. escapePathName: shard labels
-    * are user strings landing in a partition-directory name ('/', '=',
-    * '%' must not change the path structure); Spark's own
-    * partition-write escaping keeps discovery able to read the value
-    * back verbatim. */
-  private[graft] def shardDirName(shard: String): String =
-    "shard=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(shard)
-
   /**
    * Append one shard's signatures to an existing text index
    * ([[buildTextIndex]] layout). The banding geometry comes from the
@@ -2063,7 +2055,7 @@ object Dedup {
       s"shard name must be a non-empty label other than the reserved ${ReservedShards.mkString("/")}, got '$shard'")
     val spark = docs.sparkSession
     val geom = TextIndexGeometry.read(spark, indexPath)
-    val dir = s"$indexPath/sigs/${shardDirName(shard)}"
+    val dir = s"$indexPath/sigs/${graft.core.ShardStore.dirName(shard)}"
     val shardRows = graft.core.Jobs.desc(spark, "textindex:append:sigs") {
       graft.core.Jobs.observedWrite(geom.sigs(docs, idCol, textCol)) {
         _.write.mode("overwrite").parquet(dir)
@@ -2226,6 +2218,11 @@ object Dedup {
    *     that already live in `__compacted`);
    *  4. rename `shard=__compacted` → `shard=__base`.
    *
+   * Unlike the staged [[graft.core.ShardStore.fold]] the other indexes
+   * run, the merged base enters the serve tree by one rename, so a
+   * concurrent probe never reads a partially rewritten base; the
+   * snapshot is the same committed-shard listing.
+   *
    * A crash in any window leaves a complete, correct index, and
    * re-running `compactTextIndex` converges (step 1 rereads whatever
    * shard dirs remain, `dropDuplicates` collapses crash duplicates).
@@ -2283,9 +2280,8 @@ object Dedup {
     // only dirs in the snapshot are folded into __compacted, so only
     // dirs in the snapshot may be deleted (each delete removes rows
     // that provably live in __compacted). Shards admitted after this
-    // line are untouched, as are data-less dirs (zero-novel-docs
-    // admissions, or a concurrent admission's write still in flight —
-    // see [[readableShardDirs]]).
+    // line are untouched, as are uncommitted dirs (a concurrent
+    // admission's write still in flight — see [[graft.core.ShardStore]]).
     val snapshot = readableShardDirs(spark, path)
     if (snapshot.isEmpty) return 0 // nothing to fold
     val mergedRows = graft.core.Jobs.observedWrite(
@@ -2404,7 +2400,7 @@ object Dedup {
   ): DataFrame = {
     val spark = probe.sparkSession
     val dirs = shardsPath.fold(Array.empty[org.apache.hadoop.fs.Path])(readableShardDirs(spark, _))
-      .filterNot(d => excludeShard.exists(sh => d.getName == shardDirName(sh)))
+      .filterNot(d => excludeShard.exists(sh => d.getName == graft.core.ShardStore.dirName(sh)))
     // pruning (and the probe-key collect + extra probe materialization
     // that feed it) pays only where a sidecar exists to consult — a
     // freshly-compacted index is one sidecar-less shard dir, and
@@ -2610,28 +2606,13 @@ object Dedup {
     try graft.core.BloomSidecar.read(spark, dir.toString, BandsBloomFile)
     catch { case _: java.io.IOException => None }
 
-  /** Shard dirs under a parquet text index's `sigs/` that hold at least
-    * one COMMITTED data file (empty when the index has no signatures
-    * yet). A shard admitted with zero novel docs leaves an empty dir —
-    * reading it via an explicit path list would fail schema inference,
-    * and deleting a data-less dir could race a concurrent admission
-    * whose write is still inside `_temporary` — so maintenance jobs
-    * read AND delete only dirs this filter returns; empty dirs are
-    * harmless to probes (partition discovery contributes no rows) and
-    * fold once they hold data. */
+  /** The committed shard dirs under a parquet text index's `sigs/`
+    * (see [[graft.core.ShardStore]]): probes and maintenance read, and
+    * maintenance deletes, only these. */
   private[graft] def readableShardDirs(
       spark: org.apache.spark.sql.SparkSession, indexPath: String
-  ): Array[org.apache.hadoop.fs.Path] = {
-    val sigs = new org.apache.hadoop.fs.Path(s"$indexPath/sigs")
-    val fs = sigs.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sigs)) Array.empty
-    else fs.listStatus(sigs).map(_.getPath)
-      .filter(_.getName.startsWith("shard="))
-      .filter(p => fs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      })
-  }
+  ): Array[org.apache.hadoop.fs.Path] =
+    graft.core.ShardStore.committed(spark, s"$indexPath/sigs")
 
   /** Check a delta side-index's geometry against its base table's: a
     * delta banded differently than its base would make base and delta
@@ -2722,16 +2703,12 @@ object Dedup {
    * count lands in `<table>_meta.num_buckets`). Never a corpus text
    * scan: at 100 TB the cost is one shuffle of 20-byte banded rows.
    *
-   * Restartable and safe under concurrent admission, by the
-   * [[compactTextIndex]] discipline: the merged rows are staged OUTSIDE
-   * both structures (`<deltaPath>/promoting`), only the delta shard
-   * dirs present in one snapshot listing (taken when the merge begins)
-   * are folded and later deleted — a shard admitted mid-promotion
-   * survives for the next cycle — and a leftover complete staging dir
-   * makes a re-run rebuild the table from it instead of re-merging
-   * (crash between table rebuild and delta reset re-runs to the same
-   * state; `mode(overwrite)` on the staged write makes the merge
-   * itself re-runnable).
+   * Restartable and safe under concurrent admission: it runs the
+   * [[graft.core.ShardStore.fold]] protocol with home `deltaPath` and
+   * tree `<deltaPath>/sigs` — a shard admitted mid-promotion survives
+   * for the next cycle. Duplicated rows inside the fold's window only
+   * duplicate band-join candidates, which the probe's `distinct()`
+   * collapses.
    */
   def promoteTextIndexDelta(
       spark: org.apache.spark.sql.SparkSession,
@@ -2741,54 +2718,29 @@ object Dedup {
 
   /** [[promoteTextIndexDelta]] with a test seam: `afterStage` runs
     * between the staged-merge write and the table rebuild + snapshot
-    * cleanup — the window a concurrent admission must survive. */
+    * cleanup — the window a concurrent admission must survive. Returns
+    * the number of shards folded. */
   private[graft] def promoteTextIndexDeltaImpl(
       spark: org.apache.spark.sql.SparkSession,
       tableName: String,
       deltaPath: String,
       afterStage: () => Unit
-  ): Unit = {
+  ): Int = {
     val geom = TextIndexGeometry.readTable(spark, tableName)
-    val staging = new org.apache.hadoop.fs.Path(s"$deltaPath/promoting")
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // The list of folded shard dirs is PERSISTED beside the staged rows
-    // (written last, so its presence certifies a complete stage) and
-    // the cleanup deletes ONLY dirs it names: a restart may find NEW
-    // shards admitted after the original stage, and re-listing at
-    // restart would delete them without their rows ever being staged.
-    // The staged-write overwrite wipes the list with the rows, so the
-    // two can never disagree.
-    val foldedList = new org.apache.hadoop.fs.Path(s"$deltaPath/promoting/__folded_shards")
-    val snapshot: Array[org.apache.hadoop.fs.Path] =
-      if (fs.exists(foldedList)) {
-        val in = fs.open(foldedList)
-        val names =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toArray
-          finally in.close()
-        names.map(n => new org.apache.hadoop.fs.Path(s"$deltaPath/sigs/$n"))
-      } else {
-        val snap = readableShardDirs(spark, deltaPath)
-        if (snap.isEmpty) return // nothing to promote
-        val deltaBanded = geom.band(
-          spark.read.parquet(snap.map(_.toString).toIndexedSeq: _*).select(col("id"), col("sig")))
-        spark.table(tableName).unionByName(deltaBanded)
-          // a replayed-but-unpromoted shard can carry rows a previous
-          // crash-window already merged; identical banded rows collapse
-          .dropDuplicates(Seq("id", "band", "bh"))
-          .write.mode("overwrite").parquet(staging.toString)
-        val out = fs.create(foldedList, true)
-        try out.write(snap.map(_.getName).mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        snap
-      }
-    afterStage()
-    val merged = spark.read.parquet(staging.toString)
-    // bucket sizing from the staging dir's parquet footers (driver-side
-    // row counts — the dir was just written): one fewer corpus-read job
-    val buckets = textIndexBuckets(graft.core.DirCache.parquetRowCount(spark, staging.toString))
-    writeBucketedBanded(merged, tableName, buckets)
-    geom.copy(numBuckets = Some(buckets)).write(spark, tableName)
-    snapshot.foreach(p => fs.delete(p, true))
-    fs.delete(staging, true)
+    graft.core.ShardStore.fold(spark, deltaPath, Seq(s"$deltaPath/sigs"), afterStage) { (stage, snap) =>
+      val deltaBanded = geom.band(
+        spark.read.parquet(snap.map(_.toString).toIndexedSeq: _*).select(col("id"), col("sig")))
+      spark.table(tableName).unionByName(deltaBanded)
+        // a replayed-but-unpromoted shard can carry rows a previous
+        // crash-window already merged; identical banded rows collapse
+        .dropDuplicates(Seq("id", "band", "bh"))
+        .write.mode("overwrite").parquet(stage)
+    } { stage =>
+      // bucket sizing from the staging dir's parquet footers (driver-side
+      // row counts — the dir was just written): one fewer corpus-read job
+      val buckets = textIndexBuckets(graft.core.DirCache.parquetRowCount(spark, stage))
+      writeBucketedBanded(spark.read.parquet(stage), tableName, buckets)
+      geom.copy(numBuckets = Some(buckets)).write(spark, tableName)
+    }
   }
 }

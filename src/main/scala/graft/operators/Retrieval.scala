@@ -262,7 +262,8 @@ object Retrieval {
   // indexes (Ann.appendToIvfIndex…): rebuild rarely, admit new shards
   // cheaply, promote/compact as maintenance.
   //
-  // Layout under <path>:
+  // Layout under <path> (shard dirs named by graft.core.ShardStore;
+  // `shard=__base` holds the built and compacted corpus):
   //   postings/shard=<name>/  per-shard (doc_id, term, tf, len) rows
   //   stats/shard=<name>/     ONE row (n_docs, total_len) per shard —
   //                           BM25's corpus constants are additive over
@@ -273,11 +274,14 @@ object Retrieval {
   //                           pays disappears at serve time)
   //   meta/                   written LAST at build — its presence
   //                           certifies a complete base build
-  //   promoting/              compaction's staged state + crash marker
+  //   promoting/              compaction's staged postings/ + stats/
+  //                           and fold list; its presence is the crash
+  //                           marker (graft.core.ShardStore.fold)
   //
-  // Shard commit order: postings first, stats last — a stats/_SUCCESS
-  // certifies the whole shard, so a crashed append (postings written,
-  // stats not) is invisible to serving and its replay overwrites both.
+  // Shard commit order: postings first, stats last — a committed
+  // stats/shard=<name> certifies the whole shard, so a crashed append
+  // (postings written, stats not) is invisible to serving and to
+  // compaction, and its replay overwrites both.
   // Admission contract: a doc_id lives in exactly ONE shard
   // ([[admitDocs]] screens novelty) — BM25, unlike the dedup index,
   // does NOT tolerate duplicated rows (df/N/tf would shift), so
@@ -285,8 +289,7 @@ object Retrieval {
   // marker exists, never in the steady state.
   // ==================================================================
 
-  private def escapeShard(shard: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(shard)
+  private val BaseShard = graft.core.ShardStore.dirName("__base")
 
   private def fsOf(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
@@ -309,11 +312,11 @@ object Retrieval {
     val spark = docs.sparkSession
     import spark.implicits._
     val fs = fsOf(spark, path)
-    Seq("meta", "stats", "postings", "promoting")
+    Seq("meta", "stats", "postings", graft.core.ShardStore.Marker)
       .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
     val tf = tokenPostings(docs, idCol, textCol)
-    tf.write.mode("overwrite").parquet(s"$path/postings/shard=__base")
-    shardStats(tf).coalesce(1).write.mode("overwrite").parquet(s"$path/stats/shard=__base")
+    tf.write.mode("overwrite").parquet(s"$path/postings/$BaseShard")
+    shardStats(tf).coalesce(1).write.mode("overwrite").parquet(s"$path/stats/$BaseShard")
     Seq(("letters_digits_lower", 1)).toDF("tokenizer", "format")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
@@ -332,84 +335,42 @@ object Retrieval {
       shard: String): Unit = {
     require(shard.nonEmpty && shard != "__base",
       s"shard name must be a non-empty label other than the reserved __base, got '$shard'")
-    val safe = escapeShard(shard)
+    val dir = graft.core.ShardStore.dirName(shard)
     val tf = tokenPostings(docs, idCol, textCol)
-    tf.write.mode("overwrite").parquet(s"$indexPath/postings/shard=$safe")
-    shardStats(tf).coalesce(1).write.mode("overwrite")
-      .parquet(s"$indexPath/stats/shard=$safe")
+    tf.write.mode("overwrite").parquet(s"$indexPath/postings/$dir")
+    shardStats(tf).coalesce(1).write.mode("overwrite").parquet(s"$indexPath/stats/$dir")
   }
 
-  /** Shard names servable right now: stats committed (written last ⇒
-    * postings complete). A crashed append leaves postings without
+  /** Shard dir names servable right now: stats committed (written last
+    * ⇒ postings complete). A crashed append leaves postings without
     * stats and is excluded from BOTH trees, keeping constants and
     * postings consistent with each other. */
-  private def servableShards(spark: SparkSession, path: String): Array[String] = {
-    val statsRoot = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val fs = statsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(statsRoot)) Array.empty
-    else fs.listStatus(statsRoot).map(_.getPath)
-      .filter(_.getName.startsWith("shard="))
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      .map(_.getName.stripPrefix("shard="))
-  }
-
-  /** The compaction crash marker: while `promoting/` exists the serve
-    * tree may be mid-mutation, so reads switch to the crash-window
-    * protocol (see [[postingsSources]]) and derive stats from the
-    * collapsed postings — exact, one extra shuffle, paid ONLY in that
-    * window (the [[graft.operators.Ann]] deltaSide discipline). */
-  private def compacting(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/promoting")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** True iff `dir` holds at least one real data file (not a marker). */
-  private def hasDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      val f = st.getPath.getName
-      st.isFile && !f.startsWith("_") && !f.startsWith(".")
-    }
-
-  /** The compaction fold snapshot, present iff the staged merge is
-    * durable: `promoting/folded` is written AFTER the staged postings
-    * and stats, so its existence certifies both. */
-  private def stagedFold(spark: SparkSession, path: String): Option[Array[String]] = {
-    val fs = fsOf(spark, path)
-    val f = new org.apache.hadoop.fs.Path(s"$path/promoting/folded")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toArray)
-      finally in.close()
-    }
-  }
+  private def servableShards(spark: SparkSession, path: String): Array[String] =
+    graft.core.ShardStore.committed(spark, s"$path/stats").map(_.getName)
 
   /**
    * The readable postings sources a scan honoring `excludeShard` reads,
-   * crash-window aware. Steady state: every committed shard dir that
-   * holds data files. While the compaction's durable fold snapshot
-   * exists, shards in the snapshot — INCLUDING a possibly
-   * half-overwritten `shard=__base` — are served from the staged
-   * `promoting/postings` copy (durable before the serve tree mutates),
-   * and only shards admitted after the snapshot read from their own
-   * dirs: a crash anywhere in steps 2-3 can therefore never lose or
-   * double-serve the base corpus.
+   * crash-window aware. Steady state: every servable shard whose
+   * postings dir is committed. While a compaction's fold list exists,
+   * the folded shards and `shard=__base` — possibly half-overwritten —
+   * are served from the staged `promoting/postings` copy (durable
+   * before the serve tree mutates), and only shards admitted after the
+   * snapshot read from their own dirs: a crash anywhere after the stage
+   * can therefore never lose or double-serve the base corpus.
    */
   private def postingsSources(
       spark: SparkSession, indexPath: String,
       excludeShard: Option[String]): Seq[String] = {
-    val fs = fsOf(spark, indexPath)
-    val excluded = excludeShard.map(escapeShard)
+    val excluded = excludeShard.map(graft.core.ShardStore.dirName)
     val names = servableShards(spark, indexPath).filterNot(n => excluded.contains(n))
     def readable(ns: Array[String]): Seq[String] = ns.toIndexedSeq
-      .map(n => s"$indexPath/postings/shard=$n")
-      .filter(d => hasDataFiles(fs, new org.apache.hadoop.fs.Path(d)))
-    stagedFold(spark, indexPath) match {
+      .map(n => s"$indexPath/postings/$n")
+      .filter(graft.core.ShardStore.isCommitted(spark, _))
+    graft.core.ShardStore.foldList(spark, indexPath) match {
       case Some(folded) =>
-        val staged = s"$indexPath/promoting/postings"
-        (if (hasDataFiles(fs, new org.apache.hadoop.fs.Path(staged))) Seq(staged) else Nil) ++
-          readable(names.filterNot(folded.toSet))
+        val staged = s"$indexPath/${graft.core.ShardStore.Marker}/postings"
+        (if (graft.core.ShardStore.isCommitted(spark, staged)) Seq(staged) else Nil) ++
+          readable(names.filterNot(n => n == BaseShard || folded(n)))
       case None => readable(names)
     }
   }
@@ -427,7 +388,8 @@ object Retrieval {
       spark: SparkSession, indexPath: String, srcs: Seq[String]): DataFrame = {
     val tf = spark.read.parquet(srcs: _*)
       .select(col("doc_id"), col("term"), col("tf"), col("len"))
-    if (compacting(spark, indexPath)) tf.dropDuplicates(Seq("doc_id", "term")) else tf
+    if (graft.core.ShardStore.folding(spark, indexPath)) tf.dropDuplicates(Seq("doc_id", "term"))
+    else tf
   }
 
   /**
@@ -453,7 +415,7 @@ object Retrieval {
     * in exactly that window). */
   private def statsFromIndex(
       spark: SparkSession, indexPath: String, tf: DataFrame): DataFrame =
-    if (compacting(spark, indexPath))
+    if (graft.core.ShardStore.folding(spark, indexPath))
       tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
         .agg(
           count(lit(1)).cast("double").as("n_docs"),
@@ -461,7 +423,7 @@ object Retrieval {
     else {
       val names = servableShards(spark, indexPath)
       spark.read.option("basePath", s"$indexPath/stats")
-        .parquet(names.map(n => s"$indexPath/stats/shard=$n").toIndexedSeq: _*)
+        .parquet(names.map(n => s"$indexPath/stats/$n").toIndexedSeq: _*)
         .agg(
           coalesce(sum(col("n_docs")), lit(0L)).cast("double").as("n_docs"),
           coalesce(sum(col("total_len")), lit(0L)).cast("double").as("tot_len"))
@@ -535,59 +497,44 @@ object Retrieval {
   /**
    * [[compactPostingsIndex]] with a test seam: `afterStage` runs after
    * the staged merge is durable but before the serve tree mutates —
-   * the window crash specs inject into.
+   * the window crash specs inject into. Returns the number of shards
+   * folded.
    *
-   * Protocol (the [[graft.operators.Ann]] promoteIvfDelta discipline):
-   * 1. snapshot the committed shard set; merge their postings
-   *    (collapsing (doc_id, term) identity — a PRIOR attempt's crash
-   *    window leaves folded rows twice) and the derived base stats
-   *    into `promoting/` — OUT of the serve tree; persist the folded
-   *    shard list so a retry folds the same set (shards admitted
-   *    between attempts are neither folded nor deleted);
-   * 2. overwrite `shard=__base` (postings, then stats) from the staged
-   *    copy;
-   * 3. delete the folded shard dirs (both trees), then the `promoting/`
-   *    marker LAST — every crash between 1's fold-list write and here
-   *    leaves the marker + snapshot, and readers then serve the folded
-   *    shards from the STAGED copy itself (never the mutating
-   *    `shard=__base` dir — see [[postingsSources]]), collapse identity
-   *    and re-derive stats, so serving stays EXACT through the whole
-   *    window, including a crash mid-way through step 2's overwrite.
+   * Runs the [[graft.core.ShardStore.fold]] protocol with home `<path>`
+   * and trees `stats/` (listed: committed last) and `postings/`; the
+   * in-tree `shard=__base` is the base, never folded. The stage merges
+   * the base and the snapshot's postings (collapsing (doc_id, term)
+   * identity — a PRIOR attempt's crash window leaves folded rows
+   * twice) into `promoting/postings` and derives `promoting/stats` from
+   * it; install overwrites `shard=__base` (postings, then stats). Every
+   * crash after the stage leaves the marker and the fold list, and
+   * readers then serve the folded shards from the STAGED copy itself
+   * (never the mutating `shard=__base` dir — see [[postingsSources]]),
+   * collapse identity and re-derive stats, so serving stays EXACT
+   * through the whole window, including a crash mid-way through the
+   * base overwrite.
    */
   private[graft] def compactPostingsIndexImpl(
-      spark: SparkSession, path: String, afterStage: () => Unit): Unit = {
-    val fs = fsOf(spark, path)
-    val promoting = new org.apache.hadoop.fs.Path(s"$path/promoting")
-    val foldedList = new org.apache.hadoop.fs.Path(s"$path/promoting/folded")
-    val stagedPost = s"$path/promoting/postings"
-    val stagedStats = s"$path/promoting/stats"
-    val snapshot: Array[String] =
-      stagedFold(spark, path).getOrElse {
-        val snap = servableShards(spark, path)
-        if (snap.length <= 1) return // nothing to fold
-        val merged = postingsFromIndex(spark, path)
-          .dropDuplicates(Seq("doc_id", "term"))
-        merged.write.mode("overwrite").parquet(stagedPost)
-        // stats derived from the STAGED copy (read back — one narrow
-        // agg over what __base will hold, immune to plan re-derivation)
-        shardStats(spark.read.parquet(stagedPost))
-          .coalesce(1).write.mode("overwrite").parquet(stagedStats)
-        val out = fs.create(foldedList, true)
-        try out.write(snap.mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        snap
-      }
-    afterStage()
-    spark.read.parquet(stagedPost)
-      .write.mode("overwrite").parquet(s"$path/postings/shard=__base")
-    spark.read.parquet(stagedStats)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats/shard=__base")
-    snapshot.filterNot(_ == "__base").foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/postings/shard=$n"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/stats/shard=$n"), true)
+      spark: SparkSession, path: String, afterStage: () => Unit): Int =
+    graft.core.ShardStore.fold(spark, path, Seq(s"$path/stats", s"$path/postings"), afterStage,
+      keep = Set(BaseShard)) { (stage, snap) =>
+      val srcs = (BaseShard +: snap.map(_.getName)).map(n => s"$path/postings/$n")
+        .filter(graft.core.ShardStore.isCommitted(spark, _))
+      require(srcs.nonEmpty, s"postings index at $path holds no readable shard data")
+      spark.read.parquet(srcs.toIndexedSeq: _*)
+        .select(col("doc_id"), col("term"), col("tf"), col("len"))
+        .dropDuplicates(Seq("doc_id", "term"))
+        .write.mode("overwrite").parquet(s"$stage/postings")
+      // stats derived from the STAGED copy (read back — one narrow
+      // agg over what __base will hold, immune to plan re-derivation)
+      shardStats(spark.read.parquet(s"$stage/postings"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/stats")
+    } { stage =>
+      spark.read.parquet(s"$stage/postings")
+        .write.mode("overwrite").parquet(s"$path/postings/$BaseShard")
+      spark.read.parquet(s"$stage/stats")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/stats/$BaseShard")
     }
-    fs.delete(promoting, true)
-  }
 
   def hybridTopK(
       spark: SparkSession,

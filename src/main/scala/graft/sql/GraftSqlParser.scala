@@ -612,7 +612,7 @@ case class AdmitShardCommand(
     val ref = spark.table(refTable)
     graft.operators.Dedup.admitShard(probe, indexPath, ref, idCol, textCol, shard)
     val admitted = spark.read.parquet(
-      s"$indexPath/sigs/${graft.operators.Dedup.shardDirName(shard)}").count()
+      s"$indexPath/sigs/${graft.core.ShardStore.dirName(shard)}").count()
     Seq(Row(indexPath, shard, admitted, probe.count() - admitted))
   }
 }
@@ -645,7 +645,7 @@ case class AdmitShardBucketedCommand(
     graft.operators.Dedup.admitShardBucketed(
       probe, tableName, deltaPath, ref, idCol, textCol, shard)
     val admitted = spark.read.parquet(
-      s"$deltaPath/sigs/${graft.operators.Dedup.shardDirName(shard)}").count()
+      s"$deltaPath/sigs/${graft.core.ShardStore.dirName(shard)}").count()
     Seq(Row(tableName, deltaPath, shard, admitted, probe.count() - admitted))
   }
 }
@@ -665,11 +665,10 @@ case class PromoteTextIndexDeltaCommand(
     attr("shards_promoted", LongType), attr("n_rows", LongType), attr("num_buckets", LongType))
   override def run(spark: SparkSession): Seq[Row] = {
     GraftAuth.check(spark, GraftAuth.Table(Some(tableName)), GraftAuth.Write)
-    val before = graft.operators.Dedup.readableShardDirs(spark, deltaPath).length.toLong
-    graft.operators.Dedup.promoteTextIndexDelta(spark, tableName, deltaPath)
+    val folded = graft.operators.Dedup.promoteTextIndexDeltaImpl(spark, tableName, deltaPath, () => ())
     val buckets = graft.operators.Dedup.TextIndexGeometry.readTable(spark, tableName)
       .numBuckets.fold(0L)(_.toLong)
-    Seq(Row(tableName, deltaPath, before, spark.table(tableName).count(), buckets))
+    Seq(Row(tableName, deltaPath, folded.toLong, spark.table(tableName).count(), buckets))
   }
 }
 
@@ -699,9 +698,7 @@ case class ShowVectorIndexCommand(indexPath: String) extends LeafRunnableCommand
     }
     // family-aware (one statement for both index families, like SHOW
     // INDEX DRIFT): a PQ index's rows live under `codes`
-    val baseDir =
-      if (graft.operators.Ann.deltaDirName(spark, indexPath) == "codes_delta") "codes"
-      else "assignments"
+    val (baseDir, _) = graft.operators.Ann.vecDirs(spark, indexPath)
     val basePath = new org.apache.hadoop.fs.Path(s"$indexPath/$baseDir/_SUCCESS")
     val base =
       if (!fs.exists(basePath)) Seq.empty
@@ -716,9 +713,7 @@ case class ShowVectorIndexCommand(indexPath: String) extends LeafRunnableCommand
         // un-escape the partition-dir encoding so the inventory names
         // round-trip with what ADMIT VECTORS reported ('day 1', not
         // 'day%201')
-        Row(indexPath,
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(
-            p.getName.stripPrefix("shard=")), n, c)
+        Row(indexPath, graft.core.ShardStore.label(p), n, c)
       }
     base ++ shards
   }
@@ -745,14 +740,12 @@ case class AdmitVectorsCommand(
     GraftAuth.check(spark, GraftAuth.PathTable(indexPath), GraftAuth.Write)
     val vecs = spark.table(probeTable)
     val drift = graft.operators.Ann.admitVectorsMeasured(vecs, indexPath, shard)
-    val safe = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(shard)
-    val deltaDir = graft.operators.Ann.deltaDirName(spark, indexPath)
+    val (_, deltaDir) = graft.operators.Ann.vecDirs(spark, indexPath)
     // an EMPTY admitted batch commits a data-less shard dir — count it
     // as zero instead of crashing schema inference on a fileless read
-    val shardDir = s"$indexPath/$deltaDir/shard=$safe"
+    val shardDir = s"$indexPath/$deltaDir/${graft.core.ShardStore.dirName(shard)}"
     val admitted =
-      if (graft.operators.Ann.readableShardDirsUnder(spark, s"$indexPath/$deltaDir")
-          .exists(_.getName == s"shard=$safe")) spark.read.parquet(shardDir).count()
+      if (graft.core.ShardStore.isCommitted(spark, shardDir)) spark.read.parquet(shardDir).count()
       else 0L
     Seq(Row(indexPath, shard, admitted, drift))
   }
@@ -769,12 +762,9 @@ case class PromoteVectorIndexDeltaCommand(indexPath: String) extends LeafRunnabl
     attr("index", StringType), attr("shards_promoted", LongType), attr("n_vectors", LongType))
   override def run(spark: SparkSession): Seq[Row] = {
     GraftAuth.check(spark, GraftAuth.PathTable(indexPath), GraftAuth.Write)
-    val before = graft.operators.Ann.readableVecShardDirs(spark, indexPath).length.toLong
-    graft.operators.Ann.promoteIvfDelta(spark, indexPath)
-    val baseDir =
-      if (graft.operators.Ann.deltaDirName(spark, indexPath) == "codes_delta") "codes"
-      else "assignments"
-    Seq(Row(indexPath, before, spark.read.parquet(s"$indexPath/$baseDir").count()))
+    val folded = graft.operators.Ann.promoteIvfDeltaImpl(spark, indexPath, () => ())
+    val (baseDir, _) = graft.operators.Ann.vecDirs(spark, indexPath)
+    Seq(Row(indexPath, folded.toLong, spark.read.parquet(s"$indexPath/$baseDir").count()))
   }
 }
 

@@ -61,27 +61,6 @@ object StreamingDedup {
       .select(col("id"), col("sig"), explode(F.lshBandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
       .select(col("id"), col("sig"), col("bk.band"), col("bk.bh"))
 
-  /** At least one `prefix`-named partition dir under `dir` holding a
-    * DATA file. A directory alone is NOT an index: a crash inside the
-    * very first batch's shard write leaves a file-less partition dir
-    * (the committer's `_temporary` at most), and a replay that trusted
-    * it would attempt a zero-data-file parquet read and die on schema
-    * inference — on EVERY replay, permanently poisoning the stream.
-    * File-less dirs beside readable ones stay harmless (partition
-    * discovery contributes no rows) — the [[graft.operators.Dedup
-    * .readableShardDirs]] discipline applied to the streaming
-    * presence checks. */
-  private def hasReadablePartition(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, prefix: String): Boolean =
-    fs.exists(dir) && fs.listStatus(dir).exists { d =>
-      d.isDirectory && d.getPath.getName.startsWith(prefix) &&
-        fs.listStatus(d.getPath).exists { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-    }
-
   /** Micro-batch DOCUMENT bound for a force-broadcast banded probe side
     * ([[Dedup.bandedBroadcastDocs]]): each document's probe rows carry
     * the full signature/vector once per band plus ~48 B of per-row
@@ -121,13 +100,6 @@ object StreamingDedup {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         locally {
           val s = batch.sparkSession
-          // Hadoop FS, not java.nio: the index is written through Spark,
-          // so on a cluster whose default FS is HDFS/S3 a local-POSIX
-          // Files.exists() is ALWAYS false — the index-presence checks
-          // would silently never flip and no cross-batch duplicate
-          // would ever be found
-          val fs = new org.apache.hadoop.fs.Path(indexPath)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
           // Geometry from the index meta when it exists (batch-built
           // index being extended, or any batch after the stream's first):
           // signatures banded differently than the index silently match
@@ -148,8 +120,7 @@ object StreamingDedup {
           if (batchN == 0L) sigs.unpersist() else {
           val probe = banded(sigs)
           val sigsDir = s"$indexPath/sigs"
-          val haveIndex =
-            hasReadablePartition(fs, new org.apache.hadoop.fs.Path(sigsDir), "shard=")
+          val haveIndex = graft.core.ShardStore.anyCommitted(s, sigsDir, "shard=")
           // existing index + this batch. Index rows are tagged: a new
           // document must match an indexed duplicate REGARDLESS of id
           // order (ids carry no arrival-order guarantee — requiring
@@ -411,11 +382,7 @@ object StreamingDedup {
           // index presence = at least one batch_id partition WITH data
           // (the _centroids dir written above must not read as an
           // index, nor may a crashed first batch's file-less dir)
-          val haveIndex = {
-            val p = new org.apache.hadoop.fs.Path(indexPath)
-            val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            hasReadablePartition(fs, p, "batch_id=")
-          }
+          val haveIndex = graft.core.ShardStore.anyCommitted(s, indexPath, "batch_id=")
           // index rows match in either id direction; id ordering only
           // dedups within-batch pairs, and index copies of this batch's
           // ids are excluded (replay convergence — see run() above)
@@ -552,11 +519,8 @@ object StreamingDedup {
     val retiredPath = indexPath + "_retired"
     locally {
           val s = batch.sparkSession
-          def haveParts(path: String): Boolean = {
-            val p = new org.apache.hadoop.fs.Path(path)
-            val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            hasReadablePartition(fs, p, "batch_id=")
-          }
+          def haveParts(path: String): Boolean =
+            graft.core.ShardStore.anyCommitted(s, path, "batch_id=")
           // NaN scores normalize to NULL here once — every comparison
           // below (batch-local and vs-index) then shares the batch
           // operator's discipline (NULL loses to any real score)

@@ -96,7 +96,7 @@ object StreamingVectorAdmit {
         rebuildFromStage(s, indexPath, rebuildCells) // crashed rebuild: resume
       else fs.delete(stage, true) // completed rebuild, crashed cleanup: never resurrect
     }
-    require(Ann.deltaDirName(s, indexPath) == "assignments_delta",
+    require(Ann.vecDirs(s, indexPath)._2 == "assignments_delta",
       "streaming admission targets the plain IVF family (a PQ index's rows are codes; " +
         "its rebuild needs the raw source and stays a batch-side action)")
     val (novel, _) = graft.core.Jobs.desc(s, "vecadmit:resolve-novel") {

@@ -88,7 +88,7 @@ class AdminSqlSpec extends SparkSpecBase {
       // SHOW INDEX DRIFT: the ivfDriftFraction probe as an admin
       // statement — low against in-distribution vectors, ~1.0 against a
       // shifted batch or a missing index
-      val idxPath = "/tmp/graft_adminsql_ivf"
+      val idxPath = tempDir("adminsql_ivf")
       val embPath = s"$sfDir/embeddings.parquet"
       val fs2 = org.apache.hadoop.fs.FileSystem.get(s2.sparkContext.hadoopConfiguration)
       fs2.delete(new org.apache.hadoop.fs.Path(idxPath), true)
@@ -110,7 +110,7 @@ class AdminSqlSpec extends SparkSpecBase {
       // the IVF-PQ index writes the SAME stats/centroids contract, so
       // the drift statement works on it unchanged — the ops surface is
       // one statement for both index families
-      val pqPath = "/tmp/graft_adminsql_ivfpq"
+      val pqPath = tempDir("adminsql_ivfpq")
       fs2.delete(new org.apache.hadoop.fs.Path(pqPath), true)
       graft.operators.Ann.buildIvfPqIndex(s2, s2.read.parquet(embPath), pqPath,
         numCells = 16, m = 16, codebookSize = 16)
@@ -122,7 +122,7 @@ class AdminSqlSpec extends SparkSpecBase {
       // SHOW VECTOR INDEX inventories base + shards, PROMOTE VECTOR
       // INDEX DELTA folds — the statement surface of the text-index
       // lifecycle, mirrored for the vector index
-      val vIdx = "/tmp/graft_adminsql_vecadmit"
+      val vIdx = tempDir("adminsql_vecadmit")
       fs2.delete(new org.apache.hadoop.fs.Path(vIdx), true)
       val embAll = s2.read.parquet(embPath)
       graft.operators.Ann.buildIvfIndex(
@@ -148,7 +148,7 @@ class AdminSqlSpec extends SparkSpecBase {
 
       // the SAME statements drive the IVF-PQ family (codes layout):
       // family dispatch is resolved from the index, not the grammar
-      val vIdxPq = "/tmp/graft_adminsql_pqadmit"
+      val vIdxPq = tempDir("adminsql_pqadmit")
       fs2.delete(new org.apache.hadoop.fs.Path(vIdxPq), true)
       graft.operators.Ann.buildIvfPqIndex(
         s2, embAll.filter(col("vec_id") % 2 === 0), vIdxPq, numCells = 16, m = 16, codebookSize = 16)
@@ -172,7 +172,7 @@ class AdminSqlSpec extends SparkSpecBase {
 
       // SHOW TEXT INDEX: shard inventory + banding geometry of the
       // cross-corpus dedup index, one row per shard after an admission
-      val txtIdx = "/tmp/graft_adminsql_txt_" + System.nanoTime()
+      val txtIdx = tempDir("adminsql_txt")
       import s2.implicits._
       val baseDocs = Seq(
         (1L, "the quick brown fox jumps over the lazy dog near the river bank today"))
@@ -224,7 +224,7 @@ class AdminSqlSpec extends SparkSpecBase {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"/tmp/graft_warehouse/$t"))
       }
       graft.operators.Dedup.buildTextIndexBucketed(baseDocs, "doc_id", "text", btbl, threshold = 0.5)
-      val bDelta = "/tmp/graft_adminsql_delta_" + System.nanoTime()
+      val bDelta = tempDir("adminsql_delta")
       shardDocs.createOrReplaceTempView("adminsql_b1") // novel doc 10
       val badm = s2.sql(s"ADMIT SHARD 'b1' FROM adminsql_b1 INTO TABLE $btbl " +
         s"DELTA '$bDelta' USING adminsql_ref").head()

@@ -1119,6 +1119,59 @@ class DedupSpec extends SparkSpecBase {
       == Seq(1L, 2L, 10L))
   }
 
+  test("PROMOTE TEXT INDEX DELTA after a crashed stage reports only the shards it folds") {
+    val (tbl, delta, base) = bucketedBaseFixture("sqlcount")
+    val s1 = Seq((10L, novelX)).toDF("doc_id", "text")
+    Dedup.admitShardBucketed(s1, tbl, delta, base, "doc_id", "text", "s1")
+    intercept[RuntimeException] {
+      Dedup.promoteTextIndexDeltaImpl(spark, tbl, delta, () => throw new RuntimeException("boom"))
+    }
+    // admitted after the crash: committed, but not in the persisted fold list
+    val post = Seq(
+      (50L, "yet another distinct piece about adaptive query execution plan stages"))
+      .toDF("doc_id", "text")
+    Dedup.admitShardBucketed(post, tbl, delta, base.unionByName(s1), "doc_id", "text", "post")
+    val row = new graft.sql.GraftSqlParser(spark, spark.sessionState.sqlParser)
+      .parsePlan(s"PROMOTE TEXT INDEX DELTA '$delta' INTO TABLE $tbl")
+      .asInstanceOf[org.apache.spark.sql.execution.command.RunnableCommand].run(spark).head
+    assert(row.getLong(2) == 1L, s"the restart folds s1 only: $row")
+    assert(Dedup.readableShardDirs(spark, delta).map(_.getName).toSeq == Seq("shard=post"))
+  }
+
+  test("an in-commit text shard (data, no _SUCCESS) is neither probed, folded nor deleted") {
+    val base = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank today"))
+      .toDF("doc_id", "text")
+    val late = Seq((10L, novelX)).toDF("doc_id", "text")
+    val path = tempDir("xinflight")
+    Dedup.buildTextIndex(base, "doc_id", "text", path, threshold = 0.5)
+    // hand-build the in-commit state: a data file but no _SUCCESS yet
+    val built = tempDir("xinflight_src")
+    Dedup.buildTextIndex(late, "doc_id", "text", built, threshold = 0.5)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val inflight = new org.apache.hadoop.fs.Path(s"$path/sigs/shard=inflight")
+    fs.mkdirs(inflight)
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$built/sigs/shard=__base")).map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .foreach(p => org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new org.apache.hadoop.fs.Path(inflight, p.getName),
+        false, spark.sparkContext.hadoopConfiguration))
+    val ref = base.unionByName(late)
+    val probe = Seq((20L, dupOfX)).toDF("doc_id", "text")
+    def pairs() = Dedup.crossJaccardPairsIndexed(probe, path, ref, "doc_id", "text")
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs().isEmpty, "a probe must not read an uncommitted shard")
+    assert(Dedup.compactTextIndexImpl(spark, path, () => ()) == 1, "only __base folds")
+    assert(fs.exists(inflight), "compaction must not delete an uncommitted shard")
+    assert(pairs().isEmpty)
+    // once the job commits, the next compaction folds it
+    fs.create(new org.apache.hadoop.fs.Path(inflight, "_SUCCESS")).close()
+    assert(pairs() == Set((20L, 10L)))
+    assert(Dedup.compactTextIndexImpl(spark, path, () => ()) == 2)
+    assert(!fs.exists(inflight))
+    assert(spark.read.parquet(s"$path/sigs").select("id").as[Long].collect().sorted.toSeq == Seq(1L, 10L))
+  }
+
   test("a delta banded differently than its base table is refused") {
     val (tbl, delta, base) = bucketedBaseFixture("geom")
     // pre-create the delta as a standalone index at a DIFFERENT threshold

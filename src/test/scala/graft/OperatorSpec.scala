@@ -66,7 +66,7 @@ class OperatorSpec extends SparkSpecBase {
   test("persisted IVF index: search equals the in-memory path and reads only probed cells") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 4)
-    val path = "/tmp/graft_ivf_index_spec"
+    val path = tempDir("graft_ivf_index_spec")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Ann.buildIvfIndex(spark, emb, path, numCells = 16, lloydIters = 5)
@@ -104,7 +104,7 @@ class OperatorSpec extends SparkSpecBase {
     val base = emb.filter(col("vec_id") % 2 === 0)
     val day1 = emb.filter(col("vec_id") % 2 === 1)
     val queries = emb.filter(col("vec_id") < 4)
-    val path = "/tmp/graft_ivf_admit_spec"
+    val path = tempDir("graft_ivf_admit_spec")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Ann.buildIvfIndex(spark, base, path, numCells = 16, lloydIters = 5)
@@ -153,7 +153,7 @@ class OperatorSpec extends SparkSpecBase {
     val day1 = emb.filter(col("vec_id") % 3 === 1)
     val day2 = emb.filter(col("vec_id") % 3 === 2)
     val queries = emb.filter(col("vec_id") < 4)
-    val path = "/tmp/graft_ivf_promote_crash_spec"
+    val path = tempDir("graft_ivf_promote_crash_spec")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Ann.buildIvfIndex(spark, base, path, numCells = 16, lloydIters = 5)
@@ -200,12 +200,29 @@ class OperatorSpec extends SparkSpecBase {
     assert(exhaustive() == brute, "promotion collapses a double-carried overlap for good")
   }
 
+  test("PROMOTE VECTOR INDEX DELTA after a crashed stage reports only the shards it folds") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val path = tempDir("ivf_promote_sql_count")
+    Ann.buildIvfIndex(spark, emb.filter(col("vec_id") % 3 === 0), path, numCells = 16, lloydIters = 5)
+    Ann.appendToIvfIndex(emb.filter(col("vec_id") % 3 === 1), path, "day1")
+    intercept[RuntimeException] {
+      Ann.promoteIvfDeltaImpl(spark, path, () => throw new RuntimeException("boom"))
+    }
+    // admitted after the crash: committed, but not in the persisted fold list
+    Ann.appendToIvfIndex(emb.filter(col("vec_id") % 3 === 2), path, "day2")
+    val row = new graft.sql.GraftSqlParser(spark, spark.sessionState.sqlParser)
+      .parsePlan(s"PROMOTE VECTOR INDEX DELTA '$path'")
+      .asInstanceOf[org.apache.spark.sql.execution.command.RunnableCommand].run(spark).head
+    assert(row.getLong(1) == 1L, s"the restart folds day1 only: $row")
+    assert(Ann.readableVecShardDirs(spark, path).map(_.getName).toSeq == Seq("shard=day2"))
+  }
+
   test("IVF admission edges: empty batch, uncommitted shard files, rebuild wipes stale delta") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
     val day1 = emb.filter(col("vec_id") % 2 === 1)
     val queries = emb.filter(col("vec_id") < 4)
-    val path = "/tmp/graft_ivf_admit_edge_spec"
+    val path = tempDir("graft_ivf_admit_edge_spec")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Ann.buildIvfIndex(spark, base, path, numCells = 16, lloydIters = 5)
@@ -255,14 +272,14 @@ class OperatorSpec extends SparkSpecBase {
     val base = emb.filter(col("vec_id") % 2 === 0)
     val day1 = emb.filter(col("vec_id") % 2 === 1)
     val queries = emb.filter(col("vec_id") < 4)
-    val path = "/tmp/graft_pq_admit_spec"
+    val path = tempDir("graft_pq_admit_spec")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Ann.buildIvfPqIndex(spark, base, path, numCells = 16, m = 16, codebookSize = 16)
 
     // family dispatch: the append lands CODES under codes_delta
     Ann.appendToIvfIndex(day1, path, "day1")
-    assert(Ann.deltaDirName(spark, path) == "codes_delta")
+    assert(Ann.vecDirs(spark, path) == (("codes", "codes_delta")))
     val shardRows = spark.read.parquet(s"$path/codes_delta/shard=day1")
     assert(shardRows.count() == day1.count())
     assert(shardRows.columns.toSet == Set("item_id", "codes", "cell"),
@@ -288,7 +305,7 @@ class OperatorSpec extends SparkSpecBase {
   test("persisted IVF-PQ index: codes-only scan prunes to probed cells; exhaustive equals brute") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 4)
-    val path = "/tmp/graft_ivfpq_index_spec"
+    val path = tempDir("graft_ivfpq_index_spec")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Ann.buildIvfPqIndex(spark, emb, path, numCells = 16, m = 16, codebookSize = 16)
@@ -517,7 +534,7 @@ class OperatorSpec extends SparkSpecBase {
 
   test("persisted IVF index: drift probe stays low in-distribution, triggers re-train when shifted") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val path = "/tmp/graft_ivf_drift_spec"
+    val path = tempDir("graft_ivf_drift_spec")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Ann.buildIvfIndex(spark, emb, path, numCells = 16, lloydIters = 5)

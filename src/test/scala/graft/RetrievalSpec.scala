@@ -39,7 +39,7 @@ class RetrievalSpec extends SparkSpecBase {
   test("BM25 over a persisted postings table equals the ad-hoc form row for row") {
     // the build-once index discipline: tokenPostings persisted to
     // parquet, then ranked from storage — no re-tokenize, same result
-    val path = "/tmp/graft_bm25_postings_" + System.nanoTime()
+    val path = tempDir("bm25_postings") + "/postings"
     Retrieval.tokenPostings(docs, "doc_id", "text").write.parquet(path)
     val fromIndex = Retrieval.bm25TopKFromPostings(spark, spark.read.parquet(path))
       .orderBy("query_id", "rank").collect().toSeq
@@ -59,7 +59,7 @@ class RetrievalSpec extends SparkSpecBase {
 
   test("postings lifecycle: admit screens novelty; compaction crash window serves exactly, " +
       "including a crash half-way through the __base overwrite") {
-    val path = "/tmp/graft_postings_lc_" + System.nanoTime()
+    val path = tempDir("postings_lc")
     val base = docs.select("doc_id", "text").filter(col("doc_id") % 2 === 0)
     // 40 novel odd docs + 10 re-admissions of already-indexed base docs
     val shard = docs.select("doc_id", "text")
@@ -101,7 +101,7 @@ class RetrievalSpec extends SparkSpecBase {
   }
 
   test("admitDocs into an empty base treats every doc as novel and replays convergently") {
-    val path = "/tmp/graft_postings_eb_" + System.nanoTime()
+    val path = tempDir("postings_eb")
     val empty = docs.select("doc_id", "text").filter(lit(false))
     Retrieval.buildPostingsIndex(empty, "doc_id", "text", path)
     val shard = docs.select("doc_id", "text").filter(col("doc_id") < 50)
@@ -115,7 +115,7 @@ class RetrievalSpec extends SparkSpecBase {
   }
 
   test("admitDocs collapses duplicated input rows so tf and stats agree") {
-    val path = "/tmp/graft_postings_dup_" + System.nanoTime()
+    val path = tempDir("postings_dup")
     val base = docs.select("doc_id", "text").filter(col("doc_id") >= 100)
     Retrieval.buildPostingsIndex(base, "doc_id", "text", path)
     val fresh = docs.select("doc_id", "text").filter(col("doc_id") < 10)
