@@ -2,41 +2,62 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.ResolvedInlineTable
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, CurrentDate, CurrentTimeZone, CurrentTimestampLike, CurrentUser, Expression, LocalTimestamp, SubqueryExpression, UnsafeProjection, UserDefinedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult, Filter, LocalRelation, LogicalPlan, OneRowRelation, Project}
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /**
  * Deterministic query-RESULT cache — the Spark-native re-expression of
  * the reference's cache layer (yupana-cache CacheFactory.scala with
- * its Caffeine/Ehcache/Ignite backends): the reference caches hot
- * lookups inside the TSDB process; graft caches whole query results as
- * parquet, keyed on **(plan fingerprint, data version)**, because in a
- * Spark deployment the expensive artifact is the job, not the lookup,
- * and dashboard-style repeated queries are the single most common OLAP
- * usage pattern.
+ * its Caffeine/Ehcache/Ignite backends). Dashboards re-issue the same
+ * panel statements, and in a Spark deployment the expensive artifact
+ * is the job, not the lookup. Two tiers share ONE plan identity:
  *
- * Key design:
- *  - `fingerprint(df)` hashes the CANONICALIZED analyzed plan —
- *    expression ids are normalized, so two structurally-identical
- *    queries built in different sessions fingerprint identically,
- *    while any change to filters/columns/literals/source paths changes
- *    the key. Analysis is deterministic (no cost-based choices), which
- *    optimized/physical plans would not guarantee.
- *  - `dataKey` is the caller's data-version fingerprint (length +
- *    file count + max-mtime of the source dir — the SparkEntry.dataKey
- *    discipline). Any rewrite of the source data (an UPSERT version
- *    append, a rollup refresh, a regeneration) changes it, so stale
- *    entries become UNREACHABLE by construction; explicit
- *    [[invalidateData]]/[[invalidateAll]] reclaim them (wired to the
- *    upsert/rollup maintenance verbs and the SQL statement surface).
+ * `fingerprint(df)` hashes the CANONICALIZED analyzed plan (expression
+ * ids normalized, so two structurally-identical queries built in
+ * different sessions fingerprint identically) plus what
+ * canonicalization drops: each file relation's catalog identifier and
+ * root paths, and the rows of each inline or local relation. Any change
+ * to filters, columns, literals, tables, paths or inline data changes
+ * the key. Analysis is deterministic (no cost-based choices), which
+ * optimized/physical plans would not guarantee.
  *
- * Layout: `<cacheDir>/data=<dataKey>/plan=<fingerprint>/` holds the
- * parquet result; parquet's own `_SUCCESS` is the completeness marker,
- * so a crashed populate is re-populated, never served. A hit reads the
- * parquet back — zero recompute of the plan, zero source reads. At
- * 100 TB that is the difference between a dashboard refresh costing a
- * corpus scan and costing a bounded-result read; entries are
- * version-addressed, so a serving tier can hold them on fast storage.
+ * Parquet tier (opt-in, survives the process): [[through]]/[[lookup]]
+ * keep results under `<cacheDir>/data=<dataKey>/plan=<fingerprint>/`.
+ * `dataKey` is the caller's data-version fingerprint ([[dataVersion]],
+ * the SparkEntry.dataKey discipline): any rewrite of the source data
+ * changes it, so stale entries become UNREACHABLE by construction, and
+ * [[invalidateData]]/[[invalidateAll]]/[[vacuum]] reclaim them.
+ * Parquet's own `_SUCCESS` is the completeness marker, so a crashed
+ * populate is re-populated, never served.
+ *
+ * In-memory tier (always on, one JVM, consulted by the pg-wire
+ * frontend for every query it runs): [[serve]] answers a statement
+ * from rows an earlier execution streamed. A hit needs all four parts
+ * of the key to match:
+ *  1. the fingerprint above;
+ *  2. the session's runtime `spark.sql.*` conf entries;
+ *  3. the bound principal (`graft.sql.user`);
+ *  4. the input version: (path, length, mtime) of every file that the
+ *     OPTIMIZED plan's file relations would scan in this execution —
+ *     after rollup routing and partition pruning, listed through the
+ *     same FileIndex an uncached run reads.
+ * A hit therefore returns exactly what re-executing the same plan over
+ * the same input files would. Never stored or served (bypassed):
+ * commands; plans with a non-deterministic, current-time/date or
+ * current-user expression; plans with a user-defined function; plans
+ * with any leaf that is not a file relation, a LocalRelation or
+ * OneRowRelation (JDBC, `range()`, cached relations, V2 sources). A
+ * miss streams exactly as uncached, retains rows only while the
+ * rendered result stays within [[EntryMaxBytes]], and publishes only
+ * after the result has fully streamed; the tier holds at most
+ * [[TierMaxBytes]], evicting least-recently-used entries.
  */
 object ResultCache {
 
@@ -81,18 +102,40 @@ object ResultCache {
     s"${java.lang.Long.toHexString(len)}_${java.lang.Long.toHexString(cnt)}_${java.lang.Long.toHexString(h)}"
   }
 
-  /** Canonical-plan fingerprint (hex SHA-256, 16 bytes worth).
-    * Rendered with maxFields = Int.MaxValue: the default treeString
-    * truncates expression lists at spark.sql.maxToStringFields (25),
-    * and two queries differing only past the truncation point would
-    * collide — and silently serve each other's results. */
-  def fingerprint(df: DataFrame): String = {
-    val canon = df.queryExecution.analyzed.canonicalized
-      .treeString(true, false, Int.MaxValue, false)
+  /** Plan fingerprint (hex SHA-256, 16 bytes worth) — see the object
+    * doc for what it covers. Rendered with maxFields = Int.MaxValue:
+    * the default treeString truncates expression lists at
+    * spark.sql.maxToStringFields (25), and two queries differing only
+    * past the truncation point would collide — and silently serve each
+    * other's results. */
+  def fingerprint(df: DataFrame): String = fingerprintOf(df.queryExecution.analyzed)
+
+  private def fingerprintOf(analyzed: LogicalPlan): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(canon.getBytes(StandardCharsets.UTF_8))
-      .take(16).map(b => f"$b%02x").mkString
+    def put(s: String): Unit = md.update(s.getBytes(StandardCharsets.UTF_8))
+    put(analyzed.canonicalized.treeString(true, false, Int.MaxValue, false))
+    // canonicalization drops a relation's table identity and prints no
+    // inline rows: fold both back in, in plan order
+    analyzed.foreachWithSubqueries {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation =>
+          put("\u0000table:" + l.catalogTable.map(_.identifier.unquotedString).getOrElse(""))
+          fs.location.rootPaths.map(_.toString).sorted.foreach(p => put("\u0000root:" + p))
+        case _ => ()
+      }
+      case lr: LocalRelation =>
+        put("\u0000local")
+        val toBytes = UnsafeProjection.create(lr.schema)
+        lr.data.foreach { r => md.update(toBytes(r).getBytes); put("\u0000") }
+      case t: ResolvedInlineTable =>
+        put("\u0000inline")
+        t.rows.foreach(r => put(r.map(_.canonicalized.toString).mkString("\u0000", ",", "")))
+      case _ => ()
+    }
+    hex16(md.digest())
   }
+
+  private def hex16(digest: Array[Byte]): String = digest.take(16).map(b => f"$b%02x").mkString
 
   private def entryDir(cacheDir: String, fp: String, dataKey: String): String =
     s"$cacheDir/data=$dataKey/plan=$fp"
@@ -405,5 +448,168 @@ object ResultCache {
     }
     rows.toDF("data_key", "plan_fp", "bytes", "files")
       .orderBy("data_key", "plan_fp")
+  }
+
+  // ---- in-memory tier -----------------------------------------------
+
+  /** Rendered result bytes one in-memory entry may hold (1 MiB): a
+    * larger result streams on uncached. */
+  val EntryMaxBytes: Long = 1L << 20
+
+  /** Bytes the whole in-memory tier may hold (64 MiB), LRU-evicted. */
+  val TierMaxBytes: Long = 64L << 20
+
+  private final case class TierKey(plan: String, conf: String, user: String, inputs: String)
+
+  /** Stored rows and the bytes they count against the bounds: the
+    * rendered result plus the key. */
+  private final class Stored(val rows: IndexedSeq[Row], val bytes: Long)
+
+  // access-ordered, so iteration runs least-recently-used first; every
+  // access holds its monitor, which also guards `tierBytes`
+  private val tier = new java.util.LinkedHashMap[TierKey, Stored](16, 0.75f, true)
+  private var tierBytes = 0L
+  private val hits = new java.util.concurrent.atomic.AtomicLong
+  private val misses = new java.util.concurrent.atomic.AtomicLong
+  private val bypassed = new java.util.concurrent.atomic.AtomicLong
+
+  /** The in-memory tier's size and its lookup counters since start —
+    * the backing of `SHOW RESULT CACHE` without a directory. */
+  final case class TierStats(entries: Long, bytes: Long, hits: Long, misses: Long, bypassed: Long)
+
+  def tierStats: TierStats = tier.synchronized {
+    TierStats(tier.size.toLong, tierBytes, hits.get, misses.get, bypassed.get)
+  }
+
+  /** One statement's rows under the in-memory tier: the stored rows on
+    * a hit, the live execution otherwise. The caller reports each row
+    * it sent, with its rendered size, through [[retain]], and calls
+    * [[complete]] once `rows` is exhausted; an error or cancel before
+    * that publishes nothing. */
+  final class Served private[ResultCache] (val rows: Iterator[Row], key: Option[TierKey]) {
+    private var kept: ArrayBuffer[Row] = key.map(_ => ArrayBuffer.empty[Row]).orNull
+    private var bytes = key.fold(0L)(k => k.productIterator.map(_.toString.length.toLong).sum)
+
+    def retain(row: Row, renderedBytes: Int): Unit =
+      if (kept != null) {
+        bytes += renderedBytes
+        if (bytes > EntryMaxBytes) kept = null // past the entry bound: stop retaining
+        else kept += row
+      }
+
+    def complete(): Unit =
+      if (kept != null) {
+        publish(key.get, new Stored(kept.toIndexedSeq, bytes))
+        kept = null
+      }
+  }
+
+  /** Rows of `df` through the in-memory tier (see the object doc). */
+  def serve(df: DataFrame): Served = {
+    import scala.jdk.CollectionConverters._
+    def run = df.toLocalIterator().asScala
+    tierKey(df) match {
+      case None =>
+        bypassed.incrementAndGet()
+        new Served(run, None)
+      case Some(k) =>
+        tier.synchronized(Option(tier.get(k))) match {
+          case Some(s) =>
+            hits.incrementAndGet()
+            new Served(s.rows.iterator, None)
+          case None =>
+            misses.incrementAndGet()
+            new Served(run, Some(k))
+        }
+    }
+  }
+
+  private def publish(k: TierKey, s: Stored): Unit = tier.synchronized {
+    Option(tier.put(k, s)).foreach(old => tierBytes -= old.bytes)
+    tierBytes += s.bytes
+    val lru = tier.values.iterator
+    while (tierBytes > TierMaxBytes && lru.hasNext) {
+      tierBytes -= lru.next().bytes
+      lru.remove()
+    }
+  }
+
+  private def sha(s: String): String =
+    hex16(java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes(StandardCharsets.UTF_8)))
+
+  /** The tier key of `df`, or None when the plan bypasses the tier. A
+    * key that cannot be computed (say, a listing error) bypasses too:
+    * the execution then meets the same condition and reports it. */
+  private def tierKey(df: DataFrame): Option[TierKey] =
+    try {
+      val qe = df.queryExecution
+      val analyzed = qe.analyzed
+      if (analyzed.isStreaming || !repeatable(analyzed)) None
+      else scannedFiles(qe.optimizedPlan).map { files =>
+        val s = df.sparkSession
+        val conf = s.sessionState.conf.getAllConfs.toSeq.filter(_._1.startsWith("spark.sql.")).sorted
+        TierKey(
+          fingerprintOf(analyzed),
+          sha(conf.map { case (k, v) => s"$k=$v" }.mkString("\u0000")),
+          s.conf.getOption(graft.sql.GraftAuth.UserConfKey).getOrElse(""),
+          sha(files.sorted.map { case (p, l, m) => s"$p\u0000$l\u0000$m" }.mkString("\u0000")))
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** No command node, and no expression that can answer differently
+    * on re-execution over the same inputs: non-deterministic,
+    * current-time/date/user, or user-defined. */
+  private def repeatable(plan: LogicalPlan): Boolean = {
+    def volatile(e: Expression): Boolean =
+      !e.deterministic || e.containsPattern(CURRENT_LIKE) || (e match {
+        case _: UserDefinedExpression | _: CurrentTimestampLike | _: CurrentDate | _: LocalTimestamp |
+            _: CurrentTimeZone | _: CurrentUser => true
+        case _ => false
+      })
+    var ok = true
+    plan.foreachWithSubqueries { p =>
+      if (p.isInstanceOf[Command] || p.isInstanceOf[CommandResult] || p.expressions.exists(_.exists(volatile)))
+        ok = false
+    }
+    ok
+  }
+
+  /** (path, length, mtime) of every file the optimized plan's file
+    * relations would scan, or None when some leaf is not a file
+    * relation, LocalRelation or OneRowRelation. A relation's listing
+    * takes the partition conjuncts directly above it, as the scan's
+    * own listing does; a conjunct it cannot attribute only widens the
+    * listing, so the version always covers every file read. */
+  private def scannedFiles(plan: LogicalPlan): Option[Seq[(String, Long, Long)]] = {
+    val files = ArrayBuffer.empty[(String, Long, Long)]
+    var ok = true
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    def walk(p: LogicalPlan, conds: Seq[Expression]): Unit = if (ok) {
+      p.expressions.foreach(_.foreach {
+        case sq: SubqueryExpression => walk(sq.plan, Nil)
+        case _ => ()
+      })
+      p match {
+        case Filter(c, child) => walk(child, conds ++ conjuncts(c))
+        case Project(_, child) => walk(child, conds)
+        case l: LogicalRelation if !l.isStreaming && l.relation.isInstanceOf[HadoopFsRelation] =>
+          val fs = l.relation.asInstanceOf[HadoopFsRelation]
+          val partCols = AttributeSet(l.output.filter(a => fs.partitionSchema.fieldNames.contains(a.name)))
+          val partFilters = conds.filter(c =>
+            c.references.nonEmpty && c.references.subsetOf(partCols) && !SubqueryExpression.hasSubquery(c))
+          fs.location.listFiles(partFilters, Nil).foreach(_.files.foreach { f =>
+            files += ((f.getPath.toString, f.fileStatus.getLen, f.fileStatus.getModificationTime))
+          })
+        case lr: LocalRelation if !lr.isStreaming => ()
+        case _: OneRowRelation => ()
+        case leaf if leaf.children.isEmpty => ok = false
+        case other => other.children.foreach(walk(_, Nil))
+      }
+    }
+    walk(plan, Nil)
+    if (ok) Some(files.toSeq) else None
   }
 }

@@ -237,6 +237,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => SketchFusionRule)
     ext.injectOptimizerRule(session => RollupRewriteRule(session))
+    // after the operator-optimization fixed point (so rollup routing has
+    // already matched its shapes), before the scan push-down batch
+    ext.injectPreCBORule(session => graft.sources.TsBucketPruning(session))
     ext.injectPlannerStrategy(spark => graft.plans.TopKPerKeyStrategy(spark))
     // reference admin SQL statements (SHOW/DELETE QUERY METRICS, KILL
     // QUERY, SHOW UPDATES_INTERVALS); everything else delegates to

@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, S
  *   ADMIT SHARD '<name>' FROM <table> INTO TABLE <bucketed-table> DELTA '<delta-path>' USING <ref-table> [ON (<id-col>, <text-col>)]
  *   PROMOTE TEXT INDEX DELTA '<delta-path>' INTO TABLE <bucketed-table>
  *   SHOW VECTOR INDEX FOR '<index-path>'
- *   SHOW RESULT CACHE '<cache-dir>'
+ *   SHOW RESULT CACHE ['<cache-dir>']
  *   INVALIDATE RESULT CACHE '<cache-dir>' [DATA '<data-key>']
  *   VACUUM RESULT CACHE '<cache-dir>' [OLDER THAN <n> SECONDS|MINUTES|HOURS|DAYS]
  *   GRANT READ|WRITE ON TABLE <table> | ON PATH '<path>' TO USER '<name>'
@@ -128,6 +128,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface) extends P
       case PromoteDeltaRe(delta, table) => PromoteTextIndexDeltaCommand(table, delta)
       case ShowVectorIndexRe(index) => ShowVectorIndexCommand(index)
       case ShowResultCacheRe(dir) => ShowResultCacheCommand(dir)
+      case ShowResultTierRe() => ShowResultTierCommand()
       case InvalidateResultCacheRe(dir, key) => InvalidateResultCacheCommand(dir, Option(key))
       case VacuumResultCacheRe(dir, n, unit) =>
         VacuumResultCacheCommand(dir, Option(n).map { num =>
@@ -246,6 +247,8 @@ object GraftSqlParser {
     """(?is)SHOW\s+VECTOR\s+INDEX\s+FOR\s+'([^']+)'\s*;?""".r
   private val ShowResultCacheRe =
     """(?is)SHOW\s+RESULT\s+CACHE\s+'([^']+)'\s*;?""".r
+  private val ShowResultTierRe =
+    """(?is)SHOW\s+RESULT\s+CACHE\s*;?""".r
   private val InvalidateResultCacheRe =
     """(?is)INVALIDATE\s+RESULT\s+CACHE\s+'([^']+)'(?:\s+DATA\s+'([^']+)')?\s*;?""".r
   private val VacuumResultCacheRe =
@@ -1423,6 +1426,21 @@ case class ShowResultCacheCommand(cacheDir: String) extends LeafRunnableCommand 
   override def run(spark: SparkSession): Seq[Row] = {
     GraftAuth.check(spark, GraftAuth.Metadata, GraftAuth.Read)
     graft.core.ResultCache.inventory(spark, cacheDir).collect().toSeq
+  }
+}
+
+/** SHOW RESULT CACHE (no directory) — the in-memory result tier as
+  * one row: entries, bytes, hits, misses, bypassed
+  * ([[graft.core.ResultCache.tierStats]], counted since JVM start). */
+case class ShowResultTierCommand() extends LeafRunnableCommand {
+  import GraftSqlParser.attr
+  override val output: Seq[Attribute] = Seq(
+    attr("entries", LongType), attr("bytes", LongType), attr("hits", LongType),
+    attr("misses", LongType), attr("bypassed", LongType))
+  override def run(spark: SparkSession): Seq[Row] = {
+    GraftAuth.check(spark, GraftAuth.Metadata, GraftAuth.Read)
+    val t = graft.core.ResultCache.tierStats
+    Seq(Row(t.entries, t.bytes, t.hits, t.misses, t.bypassed))
   }
 }
 

@@ -379,7 +379,12 @@ case class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // dim-only filters and grain-aligned time-range bounds carry over;
       // anything else blocks the route
       def mapCond(c: Expression): Option[Expression] = c match {
-        case And(l, r) => for (nl <- mapCond(l); nr <- mapCond(r)) yield And(nl, nr)
+        case And(l, r) =>
+          for (nl <- mapCond(l); nr <- mapCond(r)) yield
+            if (nl == Literal.TrueLiteral) nr else if (nr == Literal.TrueLiteral) nl else And(nl, nr)
+        // a derived ts_bucket bound is implied by the time conjuncts it
+        // came from, which carry over on their own
+        case _: graft.sources.TsBucketBound => Some(Literal.TrueLiteral)
         // inferred null guard: null-ts rows land in the null rollup_time group
         case IsNotNull(a: AttributeReference) if isFactTime(a) => Some(IsNotNull(rollupTime))
         case GreaterThanOrEqual(a: AttributeReference, l: Literal) if isFactTime(a) && grainAligned(l) =>
@@ -398,7 +403,8 @@ case class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
       if (newGroups.exists(_.isEmpty) || newAggs.exists(_.isEmpty) || newConds.exists(_.isEmpty)) None
       else {
-        val child = newConds.map(_.get).foldRight(rollupPlan)((c, p) => Filter(c, p))
+        val child = newConds.map(_.get).filterNot(_ == Literal.TrueLiteral)
+          .foldRight(rollupPlan)((c, p) => Filter(c, p))
         val rewritten = Aggregate(newGroups.map(_.get), newAggs.map(_.get), child)
         // the rewrite must be plug-compatible: same names and types
         if (rewritten.schema == agg.schema) Some(rewritten) else None

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.TsLayout
+
 /**
  * Online ingest + streaming aggregation — the reference's
  * yupana-spark/ETLFunctions.scala (DStream[DataPoint] →
@@ -75,7 +77,8 @@ object Ingest {
    * Re-marking a bucket dirty on replay is harmless (the rollup
    * recomputes dirty buckets from the full layout state).
    * Readers use [[graft.sources.TsLayout.read]]-style access ignoring
-   * the bookkeeping columns.
+   * the bookkeeping columns; a layout this stream started carries the
+   * TsLayout marker, so time filters prune its buckets.
    */
   def streamToLayout(
       events: DataFrame,
@@ -87,19 +90,25 @@ object Ingest {
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val root = new org.apache.hadoop.fs.Path(path)
+        val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+        // only a layout this stream started may be marked for pruning
+        val wasEmpty = !fs.exists(root) ||
+          fs.listStatus(root).forall(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
         val bucketed = batch
-          .withColumn("ts_bucket", date_format(col(table.timeColumn), "yyyy-MM"))
+          .withColumn(TsLayout.BucketColumn, TsLayout.bucketExpr(table))
           .withColumn("batch_id", lit(batchId))
         bucketed
-          .repartition(col("ts_bucket"))
+          .repartition(col(TsLayout.BucketColumn))
           .sortWithinPartitions(table.dimensionNames.map(col): _*)
           .write
           .mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ts_bucket", "batch_id")
+          .partitionBy(TsLayout.BucketColumn, "batch_id")
           .parquet(path)
+        TsLayout.markAppend(batch.sparkSession, path, table.timeColumn, wasEmpty)
         graft.sources.Changelog.markDirty(
-          batch, date_format(col(table.timeColumn), "yyyy-MM"), changelogDir)
+          batch, TsLayout.bucketExpr(table), changelogDir)
         ()
       }
       .start()

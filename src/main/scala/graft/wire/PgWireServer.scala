@@ -6,11 +6,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicBoolean
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{ DataFrame, Row, SparkSession }
 import org.apache.spark.sql.types._
 
+import graft.core.ResultCache
 import graft.sql.{ GraftAuth, UserRegistry }
 
 /**
@@ -22,10 +21,20 @@ import graft.sql.{ GraftAuth, UserRegistry }
  * clients and BI tools can run yupana SQL. Graft's Spark-first
  * equivalent is this class: a zero-dependency JDK-socket server
  * (thread per connection — the pg wire is a CONTROL-plane surface;
- * per-connection state is one forked SparkSession, and result rows
- * stream through `toLocalIterator` so the driver never materializes
- * a result set) that speaks enough of the v3 protocol for real
- * clients — psql included, proven live in PgWireSpec:
+ * per-connection state is one forked SparkSession) that speaks enough
+ * of the v3 protocol for real clients — psql included, proven live in
+ * PgWireSpec. Every query it runs goes through the in-memory result
+ * tier ([[graft.core.ResultCache.serve]]): a repeated dashboard
+ * statement over unchanged inputs streams its stored rows with zero
+ * Spark jobs. A miss streams rows through `toLocalIterator` one
+ * partition at a time, exactly as uncached, and the driver retains
+ * them only while the rendered result stays within
+ * `ResultCache.EntryMaxBytes` — past that bound retention stops and
+ * the result streams on unretained; it is published only once it has
+ * fully streamed without error or cancel. Both the simple 'Q' path and
+ * the extended Bind/Execute path use the tier, and a row-limited
+ * Execute over a hit suspends and resumes like any portal. The
+ * protocol surface:
  *
  *  - startup: SSLRequest/GSSENCRequest answered 'N' (plaintext, like
  *    the reference's `case SSLRequest => No`), StartupMessage(3.0)
@@ -380,7 +389,7 @@ object PgWireServer {
   private case class Parsed(sql: String, rewritten: String, paramOids: IndexedSeq[Int], ordinals: Set[Int])
   private case class Portal(parsed: Parsed, args: Map[String, Any], resFmts: IndexedSeq[Int]) {
     var df: DataFrame = _
-    var it: Iterator[Row] = _
+    var served: ResultCache.Served = _
     var sent: Long = 0L
     def fmtOf(col: Int): Int =
       if (resFmts.isEmpty) 0 else if (resFmts.length == 1) resFmts.head else resFmts(col)
@@ -402,12 +411,14 @@ object PgWireServer {
     private var errorState = false // extended-protocol: skip until Sync
 
     // ---- frame helpers ------------------------------------------------
-    private def send(tag: Char)(body: DataOutputStream => Unit): Unit = {
+    /** Write one frame; returns its body size. */
+    private def send(tag: Char)(body: DataOutputStream => Unit): Int = {
       val buf = new ByteArrayOutputStream(64)
       body(new DataOutputStream(buf))
       out.writeByte(tag)
       out.writeInt(4 + buf.size())
       buf.writeTo(out)
+      buf.size()
     }
 
     private def cstr(o: DataOutputStream, s: String): Unit = { o.write(s.getBytes(UTF_8)); o.writeByte(0) }
@@ -611,7 +622,9 @@ object PgWireServer {
               send('C')(cstr(_, commandTag(stmt, 0)))
             } else {
               sendRowDescription(schema)
-              val n = streamRows(df.toLocalIterator().asScala, schema, 0L)
+              val served = ResultCache.serve(df)
+              val n = streamRows(served, schema, 0L)
+              served.complete()
               send('C')(cstr(_, commandTag(stmt, n)))
             }
           } catch {
@@ -641,15 +654,16 @@ object PgWireServer {
 
     /** Stream up to `limit` rows (0 = all) as DataRows — text or, per
       * column where the portal requested it, pg binary; returns the
-      * count written. One row crosses the frontend at a time —
-      * `toLocalIterator` keeps driver memory bounded by a partition. */
+      * count written. One row crosses the frontend at a time, and each
+      * is offered to the tier with its rendered size. */
     private def streamRows(
-        it: Iterator[Row], schema: StructType, limit: Long,
+        served: ResultCache.Served, schema: StructType, limit: Long,
         fmtOf: Int => Int = _ => 0): Long = {
+      val it = served.rows
       var n = 0L
       while (it.hasNext && (limit == 0L || n < limit)) {
         val row = it.next()
-        send('D') { o =>
+        val size = send('D') { o =>
           o.writeShort(schema.length)
           var i = 0
           while (i < schema.length) {
@@ -662,6 +676,7 @@ object PgWireServer {
             i += 1
           }
         }
+        served.retain(row, size)
         n += 1
       }
       n
@@ -788,11 +803,14 @@ object PgWireServer {
           df.collect()
           send('C')(cstr(_, commandTag(p.parsed.sql, 0)))
         } else {
-          if (p.it == null) p.it = df.toLocalIterator().asScala
-          val n = streamRows(p.it, schema, limit.toLong, p.fmtOf)
+          if (p.served == null) p.served = ResultCache.serve(df)
+          val n = streamRows(p.served, schema, limit.toLong, p.fmtOf)
           p.sent += n
-          if (limit > 0 && p.it.hasNext) send('s')(_ => ()) // PortalSuspended
-          else send('C')(cstr(_, commandTag(p.parsed.sql, p.sent)))
+          if (limit > 0 && p.served.rows.hasNext) send('s')(_ => ()) // PortalSuspended
+          else {
+            p.served.complete()
+            send('C')(cstr(_, commandTag(p.parsed.sql, p.sent)))
+          }
         }
       } catch {
         case e: Throwable =>

@@ -4,10 +4,10 @@ import java.io.{ BufferedInputStream, BufferedOutputStream, ByteArrayOutputStrea
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.scheduler.{ SparkListener, SparkListenerJobStart }
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.ResultCache
 import graft.wire.PgWireServer
 
 /**
@@ -17,8 +17,11 @@ import graft.wire.PgWireServer
  * protocol client (this file's [[PgWireSpec.PgClient]] — every frame
  * asserted) and the real thing: /usr/bin/psql (libpq), when present,
  * runs SELECTs, graft admin statements, and auth denials end-to-end.
+ * The in-memory result tier the frontend consults is proven here too:
+ * hits run zero Spark jobs, and every key part and bypass rule misses
+ * when it must.
  */
-class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PgWireSpec extends SparkSpecBase {
   import PgWireSpec._
 
   private var owner: SparkSession = _
@@ -45,9 +48,11 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     server = new PgWireServer(owner)
     server.start()
     port = server.getPort
+    owner.sparkContext.addSparkListener(Jobs)
   }
 
   override def afterAll(): Unit = {
+    if (owner != null) owner.sparkContext.removeSparkListener(Jobs)
     if (server != null) server.stop()
     graft.sql.UserRegistry.clear()
     SparkSession.setActiveSession(SparkSpecBase.session)
@@ -167,7 +172,7 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("per-statement authorization binds the WIRE principal; sessions are isolated") {
-    val dir = "/tmp/graft_pgwire_upsert_" + System.nanoTime()
+    val dir = s"${tempDir("pgwire_upsert")}/table"
     val gt = graft.schema.GTable(
       "pg_wire_m", timeColumn = "ts",
       dimensions = Seq(graft.schema.GDimension("dim", org.apache.spark.sql.types.StringType)),
@@ -457,7 +462,7 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     // deployment that binds graft.sql.userStore.path at runtime
     // authenticates wire logins against that store, not the in-memory
     // slot
-    val store = "/tmp/graft_pgwire_store_" + System.nanoTime()
+    val store = s"${tempDir("pgwire_store")}/users"
     try {
       owner.conf.set(graft.sql.UserRegistry.StorePathKey, store)
       owner.sql("CREATE USER 'pg_store_user' WITH PASSWORD = 'st0re' WITH ROLE = 'READ_ONLY'")
@@ -478,6 +483,228 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.sql.UserRegistry.clear()
       owner.sql("CREATE USER 'pg_admin' WITH PASSWORD = 'pg-s3cret' WITH ROLE = 'ADMIN'")
       owner.sql("CREATE USER 'pg_reader' WITH PASSWORD = 'r3ad' WITH ROLE = 'READ_ONLY'")
+    }
+  }
+
+  // ---- the in-memory result tier ------------------------------------
+
+  /** Counts Spark jobs. The listener bus is asynchronous, so
+    * [[jobsDuring]] drains it by waiting for a marker job of its own. */
+  private object Jobs extends SparkListener {
+    val counted = new java.util.concurrent.atomic.AtomicLong
+    val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
+        case d: String if d.startsWith("pgwire-spec-marker-") => markers.add(d); ()
+        case _ => counted.incrementAndGet(); ()
+      }
+  }
+
+  private def drainJobs(): Unit = {
+    val tag = "pgwire-spec-marker-" + java.util.UUID.randomUUID()
+    val sc = owner.sparkContext
+    sc.setJobDescription(tag)
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.setJobDescription(null)
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (!Jobs.markers.contains(tag)) {
+      assert(System.nanoTime() < deadline, "the listener bus did not drain")
+      Thread.sleep(10)
+    }
+  }
+
+  /** Spark jobs started while `body` ran, on any thread. */
+  private def jobsDuring(body: => Unit): Long = {
+    drainJobs()
+    val before = Jobs.counted.get
+    body
+    drainJobs()
+    Jobs.counted.get - before
+  }
+
+  /** A catalog table `name` (x = 0 until rows, k = x % 7) over its own
+    * parquet dir, which is returned; dropped after `body`. */
+  private def withFileTable(name: String, rows: Long)(body: String => Unit): Unit = {
+    val dir = s"${tempDir(name)}/t"
+    owner.range(rows).selectExpr("id AS x", "id % 7 AS k").write.parquet(dir)
+    owner.sql(s"CREATE TABLE $name USING parquet LOCATION '$dir'")
+    try body(dir)
+    finally { owner.sql(s"DROP TABLE IF EXISTS $name"); () }
+  }
+
+  private def admin(body: PgClient => Unit): Unit = {
+    val c = new PgClient(port)
+    try { c.login("pg_admin", "pg-s3cret"); body(c) }
+    finally c.close()
+  }
+
+  private def tier = ResultCache.tierStats
+
+  test("result tier: a repeated SELECT streams identical rows and tag with zero Spark jobs") {
+    withFileTable("pgwire_tier_repeat", 1000) { _ =>
+      admin { c =>
+        val q = "SELECT k, count(*) AS n, sum(x) AS s FROM pgwire_tier_repeat GROUP BY k ORDER BY k"
+        val t0 = tier
+        var first: SimpleResult = null
+        assert(jobsDuring { first = c.simpleQuery(q) } > 0, "the first execution runs Spark")
+        assert(first.errors.isEmpty && first.rows.length == 7 && first.complete == Seq("SELECT 7"))
+        var again: SimpleResult = null
+        val jobs = jobsDuring { again = c.simpleQuery(q) }
+        assert(again == first, "a hit returns the same fields, rows and tag")
+        assert(jobs == 0, s"a hit must run no Spark job, ran $jobs")
+        val t1 = tier
+        assert(t1.misses == t0.misses + 1 && t1.hits == t0.hits + 1 && t1.entries == t0.entries + 1,
+          s"$t0 -> $t1")
+
+        // SHOW RESULT CACHE without a directory reports the tier, over the wire
+        val show = c.simpleQuery("SHOW RESULT CACHE")
+        assert(show.fields.map(_._1) == Seq("entries", "bytes", "hits", "misses", "bypassed"))
+        assert(show.fields.map(_._2).forall(_ == 20), "int8 counters")
+        val row = show.rows.head.map(_.toLong)
+        assert(row(0) == t1.entries && row(1) == t1.bytes && row(2) == t1.hits && row(3) == t1.misses)
+      }
+    }
+  }
+
+  test("result tier: SHOW RESULT CACHE needs Metadata read permission") {
+    owner.sql("CREATE USER 'pg_off' WITH PASSWORD = 'off' WITH ROLE = 'DISABLED'")
+    try {
+      val reader = new PgClient(port)
+      try {
+        reader.login("pg_reader", "r3ad")
+        val show = reader.simpleQuery("SHOW RESULT CACHE")
+        assert(show.errors.isEmpty && show.rows.length == 1, s"READ_ONLY reads metadata: ${show.errors}")
+      } finally reader.close()
+      val off = new PgClient(port)
+      try {
+        off.login("pg_off", "off")
+        val denied = off.simpleQuery("SHOW RESULT CACHE")
+        assert(denied.errors.exists(_.contains("User pg_off doesn't have enough permissions")),
+          s"DISABLED holds no metadata read: ${denied.errors}")
+      } finally off.close()
+    } finally { owner.sql("DROP USER 'pg_off'"); () }
+  }
+
+  test("result tier: appended input files and a refresh force a miss that returns the new rows") {
+    withFileTable("pgwire_tier_input", 100) { dir =>
+      admin { c =>
+        val q = "SELECT count(*) AS n, sum(x) AS s FROM pgwire_tier_input"
+        assert(c.simpleQuery(q).rows == Seq(Seq("100", "4950")))
+        val t0 = tier
+        assert(c.simpleQuery(q).rows == Seq(Seq("100", "4950")))
+        assert(tier.hits == t0.hits + 1, "unchanged inputs hit")
+        owner.range(100, 150).selectExpr("id AS x", "id % 7 AS k").write.mode("append").parquet(dir)
+        assert(c.simpleQuery("REFRESH TABLE pgwire_tier_input").errors.isEmpty)
+        val t1 = tier
+        assert(c.simpleQuery(q).rows == Seq(Seq("150", "11175")), "the new rows are read")
+        val t2 = tier
+        assert(t2.misses == t1.misses + 1 && t2.hits == t1.hits, s"$t1 -> $t2")
+      }
+    }
+  }
+
+  test("result tier: rand() and current_timestamp() statements are never served from the tier") {
+    withFileTable("pgwire_tier_volatile", 50) { _ =>
+      admin { c =>
+        val t0 = tier
+        val q = "SELECT x, rand() AS r FROM pgwire_tier_volatile ORDER BY x"
+        val (a, b) = (c.simpleQuery(q), c.simpleQuery(q))
+        assert(a.errors.isEmpty && a.rows != b.rows, s"each rand() statement re-executes: ${a.errors}")
+        val now = "SELECT max(x) AS m, current_timestamp() AS t FROM pgwire_tier_volatile"
+        c.simpleQuery(now); c.simpleQuery(now)
+        val t1 = tier
+        assert(t1.bypassed == t0.bypassed + 4 && t1.hits == t0.hits && t1.misses == t0.misses &&
+          t1.entries == t0.entries, s"$t0 -> $t1")
+      }
+    }
+  }
+
+  test("result tier: SET spark.sql.session.timeZone between identical statements forces a miss") {
+    withFileTable("pgwire_tier_conf", 24) { _ =>
+      admin { c =>
+        val q = "SELECT min(x) AS lo, max(x) AS hi FROM pgwire_tier_conf"
+        val first = c.simpleQuery(q)
+        val t0 = tier
+        c.simpleQuery("SET spark.sql.session.timeZone=America/New_York")
+        assert(c.simpleQuery(q).rows == first.rows)
+        val t1 = tier
+        assert(t1.misses == t0.misses + 1 && t1.hits == t0.hits, s"a changed conf must miss: $t0 -> $t1")
+        c.simpleQuery("SET spark.sql.session.timeZone=UTC")
+        assert(c.simpleQuery(q).rows == first.rows)
+        assert(tier.hits == t1.hits + 1, "the original conf hits its entry again")
+      }
+    }
+  }
+
+  test("result tier: a result past the entry bound streams whole and is not retained") {
+    withFileTable("pgwire_tier_big", 200000) { _ =>
+      admin { c =>
+        val q = "SELECT x, x * 2 AS d FROM pgwire_tier_big"
+        val t0 = tier
+        val r = c.simpleQuery(q)
+        assert(r.rows.length == 200000 && r.complete == Seq("SELECT 200000"))
+        val t1 = tier
+        assert(t1.entries == t0.entries && t1.bytes == t0.bytes && t1.misses == t0.misses + 1,
+          s"a ${ResultCache.EntryMaxBytes}-byte entry bound must not retain 200k rows: $t0 -> $t1")
+        val again = c.simpleQuery(q)
+        assert(again.rows.toSet == r.rows.toSet && tier.hits == t1.hits, "the repeat runs again")
+      }
+    }
+  }
+
+  test("result tier: a cancelled statement publishes nothing") {
+    withFileTable("pgwire_tier_slow", 100000) { _ =>
+      val c = new PgClient(port)
+      try {
+        c.login("pg_admin", "pg-s3cret")
+        val (pid, secret) = c.backendKey
+        val t0 = tier
+        c.sendSimpleNoWait(
+          "SELECT sum(xxhash64(a.x, b.x)) AS s FROM pgwire_tier_slow a CROSS JOIN pgwire_tier_slow b")
+        Thread.sleep(1500)
+        val cs = new java.net.Socket("127.0.0.1", port)
+        try {
+          val o = new java.io.DataOutputStream(cs.getOutputStream)
+          o.writeInt(16); o.writeInt(80877102); o.writeInt(pid); o.writeInt(secret)
+          o.flush()
+        } finally cs.close()
+        var frame = c.read()
+        var sawError = false
+        while (frame._1 != 'Z') {
+          if (frame._1 == 'E') sawError = true
+          frame = c.read()
+        }
+        assert(sawError, "the cancelled statement must surface an ErrorResponse")
+        val t1 = tier
+        assert(t1.misses == t0.misses + 1, "the statement was eligible for the tier")
+        assert(t1.entries == t0.entries && t1.bytes == t0.bytes, s"nothing is published: $t0 -> $t1")
+      } finally c.close()
+    }
+  }
+
+  test("result tier: a row-limited Execute over a hit suspends and resumes with identical rows") {
+    withFileTable("pgwire_tier_portal", 5) { _ =>
+      admin { c =>
+        val q = "SELECT x FROM pgwire_tier_portal ORDER BY x"
+        // the simple-query path populates; the extended path hits the same entry
+        assert(c.simpleQuery(q).rows == (0 until 5).map(i => Seq(i.toString)))
+        val t0 = tier
+        val jobs = jobsDuring {
+          c.sendParse("s", q, Seq.empty)
+          c.sendBindText("p", "s", Seq.empty)
+          c.sendExecute("p", 3)
+          c.sendExecute("p", 3)
+          c.sendSync()
+          c.expect('1'); c.expect('2')
+          assert((0 until 3).map(_ => dataRow(c.expect('D'))) == Seq(Seq("0"), Seq("1"), Seq("2")))
+          assert(c.expect('s') != null, "PortalSuspended after 3 of 5 rows")
+          assert((3 until 5).map(_ => dataRow(c.expect('D'))) == Seq(Seq("3"), Seq("4")))
+          assert(cstringOf(c.expect('C')) == "SELECT 5")
+          c.expect('Z')
+        }
+        assert(jobs == 0, s"the portal over a hit must run no Spark job, ran $jobs")
+        assert(tier.hits == t0.hits + 1)
+      }
     }
   }
 
@@ -521,7 +748,7 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (rc, _, errS) = psql("pg_admin", "wrong", "SELECT 1")
     assert(rc != 0 && errS.contains("Invalid user or password"), s"stderr: $errS")
 
-    val dir = "/tmp/graft_pgwire_psql_" + System.nanoTime()
+    val dir = s"${tempDir("pgwire_psql")}/table"
     val gt = graft.schema.GTable(
       "pg_psql_m", timeColumn = "ts",
       dimensions = Seq(graft.schema.GDimension("dim", org.apache.spark.sql.types.StringType)),

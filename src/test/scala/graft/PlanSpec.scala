@@ -164,12 +164,50 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("TsLayout time-range read prunes partitions") {
-    val path = "/tmp/graft_spec_layout/events"
-    val events = SparkEntry.queries("q_stream_ingest")(spark, sfDir) // writes + reads the layout
-    events.count() // materialize the layout
-    val df = spark.read.parquet(s"/tmp/graft_layout/_root_testdata_sf0_001/events")
-      .filter(col("ts_bucket") === "2024-01")
-    val scan = df.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") && scan.contains("ts_bucket"), scan.take(2000))
+    val path = s"${tempDir("ts_layout")}/events"
+    // one event every 7 hours through 2024: 12 monthly buckets
+    val src = spark.range(0, 1255)
+      .select(
+        col("id").as("event_id"),
+        timestamp_seconds(lit(1704067200L) + col("id") * 25200L).as("ts"),
+        (col("id") % 17).as("user_id"),
+        concat(lit("t"), (col("id") % 3).cast("string")).as("event_type"),
+        (col("id") % 101).cast("double").as("value"))
+    graft.sources.TsLayout.write(src, graft.schema.TestSchema.events, path)
+
+    def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      helper.collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+      }.sum
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val windows = Seq(
+      ("2024-03-01 00:00:00", "2024-05-01 00:00:00", 2L), // month-aligned: exactly 03, 04
+      ("2024-03-10 00:00:00", "2024-05-20 00:00:00", 3L)) // mid-month: 03, 04, 05
+    windows.foreach { case (lo, hi, months) =>
+      val cond = col("ts") >= to_timestamp(lit(lo)) && col("ts") < to_timestamp(lit(hi))
+      val pruned = graft.sources.TsLayout.read(spark, path).filter(cond).orderBy("event_id")
+      val plan = pruned.queryExecution.executedPlan.toString
+      assert("PartitionFilters: \\[[^\\]]*ts_bucket".r.findFirstIn(plan).isDefined,
+        s"a ts range must reach the scan as a ts_bucket partition filter:\n${plan.take(3000)}")
+      assert(filesRead(pruned) == months, s"[$lo, $hi) must read one file per month in the window")
+      assert(rows(pruned) == rows(src.filter(cond).orderBy("event_id")),
+        "pruned rows must equal the unpruned source's")
+    }
+
+    // a layout without the marker behaves as before: no derived bound
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val markers = fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith("_graft"))
+    assert(markers.nonEmpty, "TsLayout.write must leave its layout marker at the root")
+    markers.foreach(fs.delete(_, false))
+    val plain = graft.sources.TsLayout.read(spark, path)
+      .filter(col("ts") >= to_timestamp(lit("2024-03-01 00:00:00")))
+    assert("PartitionFilters: \\[[^\\]]*ts_bucket".r
+      .findFirstIn(plain.queryExecution.executedPlan.toString).isEmpty,
+      "an unmarked layout must not get derived bucket bounds")
+    assert(filesRead(plain) == 12L)
   }
 }

@@ -14,7 +14,7 @@ import graft.sql.{GraftFunctions, RollupRoute, RollupRoutes}
  */
 class RollupRoutingSpec extends SparkSpecBase {
 
-  private val base = "/tmp/graft_routing_spec"
+  private lazy val base = tempDir("routing_spec")
   private lazy val factPath = s"$base/fact"
   private lazy val rollPath = s"$base/events_by_day"
 

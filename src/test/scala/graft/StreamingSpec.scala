@@ -797,6 +797,13 @@ class StreamingSpec extends SparkSpecBase {
 
     val fact = spark.read.parquet(s"$base/fact")
     assert(fact.count() == 3)
+    // the stream started this layout, so it carries the TsLayout marker:
+    // a ts range prunes ts_bucket partitions
+    val feb = graft.sources.TsLayout.read(spark, s"$base/fact")
+      .filter(col("ts") >= to_timestamp(lit("2024-02-01 00:00:00")))
+    assert(feb.count() == 2)
+    assert("PartitionFilters: \\[[^\\]]*ts_bucket".r.findFirstIn(feb.queryExecution.executedPlan.toString).isDefined,
+      feb.queryExecution.executedPlan.toString.take(2000))
     // both micro-batches marked their touched buckets dirty
     val dirty = Changelog.dirtyBuckets(spark, s"$base/cl").map(_._1).toSet
     assert(dirty == Set("2024-01", "2024-02"))
