@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import graft.functions.F
 
 /**
@@ -17,12 +18,15 @@ import graft.functions.F
  */
 object Dedup {
 
-  /** Driver-side ordering matching Spark's `min()` for the id types the
-    * small-graph union-find accepts (numeric, string, date/time —
-    * anything Comparable). Keeps the collected path's canonical choice
-    * identical to the distributed star contraction's. */
+  /** Driver-side ordering matching Spark's `min()`/`max()` for the id
+    * and score types the small-graph union-find accepts (numeric,
+    * string, date/time — anything Comparable). Keeps the collected
+    * path's canonical and keep-best choices identical to the
+    * distributed path's; like SQL, it ties -0.0 with 0.0. */
   private object CanonicalOrdering extends Ordering[Any] {
     def compare(a: Any, b: Any): Int = (a, b) match {
+      case (x: java.lang.Double, y: java.lang.Double) => if (x == y) 0 else java.lang.Double.compare(x, y)
+      case (x: java.lang.Float, y: java.lang.Float)   => if (x == y) 0 else java.lang.Float.compare(x, y)
       case (x: java.lang.Long, y: java.lang.Long)       => java.lang.Long.compare(x, y)
       case (x: java.lang.Integer, y: java.lang.Integer) => java.lang.Integer.compare(x, y)
       case (x: String, y: String)                       => x.compareTo(y)
@@ -111,9 +115,7 @@ object Dedup {
     // candidate generation joins (id, band, bandhash) ONLY — the band
     // join and pair dedup never ship the 64-long signatures; signatures
     // re-attach to the (far smaller) distinct candidate set afterwards.
-    val banded = sigs
-      .select(col("id"), explode(F.lshBandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("id"), col("bk.band"), col("bk.bh"))
+    val banded = bandedFromSigs(sigs, bands, rowsPerBand)
     val a = banded.as("a")
     val b = banded.as("b").hint("shuffle_hash")
     val cand = a
@@ -238,11 +240,7 @@ object Dedup {
       numHashes: Int, bands: Int, shingleSize: Int,
       maxBucket: Option[Int] = None): DataFrame = {
     val sigs = minhashSigs(df, idCol, textCol, numHashes, shingleSize)
-    val banded = capBuckets(
-      sigs
-        .select(col("id"), explode(F.lshBandKeys(col("sig"), bands, numHashes / bands)).as("bk"))
-        .select(col("id"), col("bk.band"), col("bk.bh")),
-      maxBucket)
+    val banded = capBuckets(bandedFromSigs(sigs, bands, numHashes / bands), maxBucket)
     banded.as("a")
       .join(banded.as("b").hint("shuffle_hash"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && col("a.id") < col("b.id"))
@@ -1486,6 +1484,13 @@ object Dedup {
       .filter(col("cos") >= threshold)
   }
 
+  /** Edge bound of a driver-solved pair graph ([[PairGraph]], read by
+    * [[connectedComponents]] and [[dedupKeepBest]]). */
+  private[graft] val SmallGraphEdges: Long = 1L << 20
+
+  /** Round cap of the distributed star contraction. */
+  private val StarRounds = 25
+
   /**
    * Connected components over a near-dup pair list: (id, component_min).
    * Alternating large-star/small-star (Kiveris et al., "Connected
@@ -1495,67 +1500,145 @@ object Dedup {
    * neighbors), and the round count is logarithmic in component size,
    * not linear in chain length like naive label propagation.
    * `localCheckpoint` truncates the iterative lineage so plans stay
-   * flat. Input: (id_a, id_b) pairs (any extra columns ignored);
-   * output: one row per node appearing in any pair.
+   * flat. A small graph is solved on the driver ([[PairGraph]]). Input:
+   * (id_a, id_b) pairs (any extra columns ignored); output: one row per
+   * node appearing in any pair.
    */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25, smallGraphEdges: Long = 1L << 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    new PairGraph(pairs, SmallGraphEdges).components
+
+  /**
+   * A near-dup pair graph ((id_a, id_b); extra columns ignored) as
+   * [[connectedComponents]] and [[dedupKeepBest]] solve it. `bound` is
+   * [[SmallGraphEdges]]; specs pass 0 to force the distributed side.
+   *
+   * ONE materialization serves the small-graph probe, the contraction
+   * loop's starting edges and keep-best's distributed fallback: the
+   * upstream pair pipeline is usually the operator's most expensive
+   * stage (an IVF candidate join at 140k vectors measures ~38s), and
+   * before this checkpoint a large graph executed it TWICE — once for
+   * the probe's limit+collect, once for the loop's own first
+   * materialization (measured 210-273s → the pipeline-once shape at
+   * the 70× corpus). The checkpoint is lazy: the probe's collect
+   * materializes it, and the local checkpoint completes any partition
+   * the collect's limit left unread, so the pipeline still runs once.
+   *
+   * Adaptive small-graph path (the AQE-broadcast-join pattern): a
+   * near-dup edge list that fits comfortably on the driver is solved
+   * with one union-find pass instead of O(log n) iterative shuffle
+   * rounds — at gate scale the star-contraction loop is pure
+   * fixed-cost Spark-job overhead (~2s for a few hundred edges). The
+   * bound check collects AT MOST bound+1 edges FROM THE CHECKPOINT;
+   * past the bound the distributed contraction runs unchanged, so a
+   * 100 TB corpus whose duplicate graph is genuinely huge never ships
+   * its edges to the driver.
+   */
+  private[graft] final class PairGraph(pairs: DataFrame, bound: Long) {
     // ids keep their native type: star contraction only needs an
     // ordering (min/</>), which every orderable Spark type has — a
     // cast would silently NULL string/UUID ids and drop every edge
-    // ONE materialization serves the small-graph probe AND the
-    // contraction loop's starting edges: the upstream pair pipeline is
-    // usually the operator's most expensive stage (an IVF candidate
-    // join at 140k vectors measures ~38s), and before this checkpoint
-    // a large graph executed it TWICE — once for the probe's
-    // limit+collect, once for the loop's own first materialization
-    // (measured 210-273s → the pipeline-once shape at the 70× corpus).
-    // A small graph pays only its own ≤-bound edge storage.
-    val init = pairs
+    private val idType = pairs.schema("id_a").dataType
+    private val edges = pairs
       .select(col("id_a").as("u"), col("id_b").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .localCheckpoint(true)
+      .localCheckpoint(false)
 
-    // Adaptive small-graph path (the AQE-broadcast-join pattern): a
-    // near-dup edge list that fits comfortably on the driver is solved
-    // with one union-find pass instead of O(log n) iterative shuffle
-    // rounds — at gate scale the star-contraction loop is pure
-    // fixed-cost Spark-job overhead (~2s for a few hundred edges). The
-    // bound check collects AT MOST bound+1 edges FROM THE CHECKPOINT
-    // (a cheap scan — the pair pipeline already ran exactly once,
-    // above); past the bound the distributed contraction below runs
-    // unchanged, so a 100 TB corpus whose duplicate graph is genuinely
-    // huge never ships its edges to the driver.
-    lazy val probe =
-      if (smallGraphEdges > 0 && smallGraphEdges < Int.MaxValue)
-        init.limit(smallGraphEdges.toInt + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (smallGraphEdges > 0 && smallGraphEdges < Int.MaxValue && probe.length <= smallGraphEdges) {
-      val spark = pairs.sparkSession
-      val rows = probe
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      val ord = CanonicalOrdering
-      rows.foreach { r =>
-        val (ru, rv) = (find(r.get(0)), find(r.get(1)))
-        if (ru != rv) {
-          // union by id order so every root is its component minimum
-          if (ord.lt(ru, rv)) parent(rv) = ru else parent(ru) = rv
+    /** Every member's component minimum, when the graph has at most
+      * `bound` edges. */
+    private val roots: Option[scala.collection.Map[Any, Any]] =
+      if (bound <= 0 || bound >= Int.MaxValue) None
+      else {
+        val rows = edges.limit(bound.toInt + 1).collect()
+        if (rows.length > bound) None
+        else {
+          val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+          def find(x: Any): Any = {
+            var r = x
+            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+            var c = x
+            while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+            r
+          }
+          rows.foreach { r =>
+            val (ru, rv) = (find(r.get(0)), find(r.get(1)))
+            // union by id order so every root is its component minimum
+            if (ru != rv) { if (CanonicalOrdering.lt(ru, rv)) parent(rv) = ru else parent(ru) = rv }
+          }
+          val members = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).toSet
+          Some(members.iterator.map(m => m -> find(m)).toMap)
         }
       }
-      val members = (rows.iterator.map(_.get(0)) ++ rows.iterator.map(_.get(1))).toSet
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", pairs.schema("id_a").dataType),
-        org.apache.spark.sql.types.StructField("component", pairs.schema("id_a").dataType)))
-      val out = members.toSeq.map(m => org.apache.spark.sql.Row(m, find(m)))
-      return spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+
+    /** (id, component) for every node in a pair. */
+    def components: DataFrame = roots match {
+      case Some(r) =>
+        val spark = pairs.sparkSession
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id", idType),
+          org.apache.spark.sql.types.StructField("component", idType)))
+        val out = r.toSeq.map { case (m, c) => org.apache.spark.sql.Row(m, c) }
+        spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+      case None => starContraction(edges)
     }
 
+    /** [[dedupKeepBest]] over this graph. */
+    def keepBest(df: DataFrame, idCol: String, scoreCol: Column): DataFrame = {
+      val scored = df.select(
+        col(idCol),
+        when(!isnan(scoreCol.cast("double")), scoreCol).as("__score"))
+      val clustered = roots match {
+        case Some(r) =>
+          // winners from the members' scores only, gathered through a
+          // map-side semi-join on the broadcast member ids: the member set
+          // is bounded by the edge count, so the frame is never collected
+          val clusterOf = lookup(col(idCol), r)
+          val scores = scored.filter(clusterOf.isNotNull)
+            .select(col(idCol).cast(idType), col("__score")).collect()
+          // per cluster: the best non-NULL score (NULL loses to any real
+          // score), then the min id among its holders — keepBestOf's
+          // policy, with scores compared as SQL compares them
+          val best = scala.collection.mutable.HashMap.empty[Any, (Any, Any)]
+          scores.foreach { row =>
+            val (id, sc) = (row.get(0), row.get(1))
+            val root = r(id)
+            val beats = best.get(root).forall { case (bs, bid) =>
+              val cmp = (sc, bs) match {
+                case (null, null) => 0
+                case (null, _) => -1
+                case (_, null) => 1
+                case _ => CanonicalOrdering.compare(sc, bs)
+              }
+              cmp > 0 || (cmp == 0 && CanonicalOrdering.lt(id, bid))
+            }
+            if (beats) best(root) = (sc, id)
+          }
+          val winnerOf = best.map { case (root, (_, id)) => root -> id }
+          scored
+            .select(col(idCol), coalesce(clusterOf, col(idCol)).as("cluster_id"), col("__score"))
+            .withColumn("keep_id", coalesce(lookup(col("cluster_id"), winnerOf), col(idCol)))
+        case None => keepBestOf(scored, idCol, starContraction(edges))
+      }
+      clustered.select(
+        col(idCol),
+        col("cluster_id"),
+        col("keep_id"),
+        (col(idCol) === col("keep_id")).as("keep"),
+        col("__score").as("score"))
+    }
+
+    /** `key`'s value in `m` (ids of the graph's type), NULL when absent. */
+    private def lookup(key: Column, m: scala.collection.Map[Any, Any]): Column = {
+      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(idType)
+      val table = new java.util.HashMap[Any, Any](m.size * 2)
+      m.foreach { case (k, v) => table.put(toCatalyst(k), toCatalyst(v)) }
+      ExpressionUtils.column(graft.functions.expressions.BroadcastLookup(
+        ExpressionUtils.expression(key.cast(idType)), pairs.sparkSession.sparkContext.broadcast(table), idType))
+    }
+  }
+
+  /** The distributed side of [[PairGraph.components]] over the
+    * checkpointed (u, v) edges `init`. */
+  private def starContraction(init: DataFrame): DataFrame = {
     // sym() precondition: `e` is duplicate-free and direction-normalized
     // (input pairs have id_a < id_b; every star round emits high→low
     // edges then distincts), so union-with-reverse cannot create
@@ -1598,11 +1681,11 @@ object Dedup {
       (r.getLong(0), r.getDecimal(1).toString)
     }
 
-    var edges = init // already checkpointed above
+    var edges = init // already checkpointed
     var prevSig = sig(edges)
     var converged = false
     var iter = 0
-    while (iter < maxIter && !converged) {
+    while (iter < StarRounds && !converged) {
       val next = smallStar(largeStar(edges)).localCheckpoint(true)
       val nextSig = sig(next)
       converged = nextSig == prevSig
@@ -1627,8 +1710,11 @@ object Dedup {
    * list into an actually-deduplicated corpus (`keep = id ==
    * canonical_id`).
    */
-  def dedupClusters(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val comp = connectedComponents(pairs)
+  def dedupClusters(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    canonical(df, idCol, connectedComponents(pairs))
+
+  private def canonical(df: DataFrame, idCol: String, components: DataFrame): DataFrame = {
+    val comp = components
       .select(col("id").as(idCol), col("component").as("canonical_id"))
     df.select(col(idCol))
       .join(comp, Seq(idCol), "left")
@@ -1652,7 +1738,8 @@ object Dedup {
    * the best-score members — Spark's max_by has no tie-break
    * contract) — fixed-width shuffle keys, map-side combined, no
    * window sort. Docs in no pair form singleton clusters and keep
-   * themselves.
+   * themselves. A small graph resolves clusters AND winners on the
+   * driver ([[PairGraph]]) under the same policy.
    *
    * NaN scores are normalized to NULL before ranking: Spark's max()
    * orders NaN ABOVE every number (the semanticDedup trap), so a
@@ -1665,11 +1752,12 @@ object Dedup {
       idCol: String,
       scoreCol: Column,
       pairs: DataFrame
-  ): DataFrame = {
-    val scored = df.select(
-      col(idCol),
-      when(!isnan(scoreCol.cast("double")), scoreCol).as("__score"))
-    val clustered = dedupClusters(scored, idCol, pairs)
+  ): DataFrame = new PairGraph(pairs, SmallGraphEdges).keepBest(df, idCol, scoreCol)
+
+  /** The distributed side of [[PairGraph.keepBest]]: (idCol, cluster_id,
+    * keep_id, __score) from `scored` (idCol, __score) and `components`. */
+  private def keepBestOf(scored: DataFrame, idCol: String, components: DataFrame): DataFrame = {
+    val clustered = canonical(scored, idCol, components)
       .withColumnRenamed("canonical_id", "cluster_id")
       .join(scored, Seq(idCol))
     // Spark's max_by has no tie-break contract and a nondeterministic
@@ -1686,14 +1774,7 @@ object Dedup {
       .filter(col("__score") <=> col("__best_score"))
       .groupBy(col("cluster_id"))
       .agg(min(col(idCol)).as("keep_id"))
-    clustered
-      .join(keep, Seq("cluster_id"))
-      .select(
-        col(idCol),
-        col("cluster_id"),
-        col("keep_id"),
-        (col(idCol) === col("keep_id")).as("keep"),
-        col("__score").as("score"))
+    clustered.join(keep, Seq("cluster_id"))
   }
 
   /**
@@ -1853,10 +1934,15 @@ object Dedup {
       hintProbe: Boolean, broadcastProbe: Boolean = false): DataFrame =
     crossCandidates(pb, rb, None, hintProbe, broadcastProbe)
 
-  private def bandedFromSigs(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+  /** The LSH band-explode of (id, sig) rows: one (id, carry…, band, bh)
+    * row per band. */
+  private[graft] def bandedFromSigs(sigs: DataFrame, bands: Int, rowsPerBand: Int,
+      carry: Seq[String] = Nil): DataFrame = {
+    val kept = col("id") +: carry.map(col)
     sigs
-      .select(col("id"), explode(F.lshBandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("id"), col("bk.band"), col("bk.bh"))
+      .select(kept :+ explode(F.lshBandKeys(col("sig"), bands, rowsPerBand)).as("bk"): _*)
+      .select(kept ++ Seq(col("bk.band"), col("bk.bh")): _*)
+  }
 
   /**
    * Cross-corpus near-duplicate pairs: every (probe doc, reference doc)
@@ -1912,7 +1998,8 @@ object Dedup {
     def banding: (Int, Int, Int) = (numHashes, bands, shingleSize)
     def sigs(df: DataFrame, idCol: String, textCol: String): DataFrame =
       minhashSigs(df, idCol, textCol, numHashes, shingleSize)
-    def band(sigs: DataFrame): DataFrame = bandedFromSigs(sigs, bands, rowsPerBand)
+    def band(sigs: DataFrame, carry: Seq[String] = Nil): DataFrame =
+      bandedFromSigs(sigs, bands, rowsPerBand, carry)
     def bandDocs(df: DataFrame, idCol: String, textCol: String): DataFrame =
       band(sigs(df, idCol, textCol))
 

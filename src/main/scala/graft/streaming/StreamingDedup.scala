@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.functions.F
+import org.apache.spark.sql.types.StructType
+import graft.core.{Jobs, ShardStore}
 import graft.operators.Dedup
 
 /**
@@ -17,16 +18,48 @@ import graft.operators.Dedup
  *  3. emit (new_id, existing_id, est_jaccard) matches to the sink;
  *  4. append the batch's signatures to the index.
  *
- * Index-probe shuffle discipline (all variants — run, runEmbeddings,
- * runKeepBest): the banded BATCH side is broadcast and the
- * corpus-sized index SCANS through it, so the index pays zero
- * exchange and zero sort per trigger — a plain two-sided band join
- * would re-shuffle the whole index every batch, the one cost shape a
- * 100 TB corpus cannot absorb. The batch (and its banded explosion)
- * is micro-batch-bounded by the trigger, hence broadcastable by
- * construction; the per-trigger index SCAN itself is the price of the
- * flat shard layout and amortizes by batching (a bucketed index's base
- * is the scan-pruned shape for latency-critical probes).
+ * Trigger discipline — one core ([[trigger]] and [[Batch]]) for every
+ * variant (run, runEmbeddings, and runKeepBest's rep probe):
+ *  - ONE count of the cached batch rows (`<label>:batch-count`) is both
+ *    the empty-batch guard (an empty batch writes nothing) and the
+ *    input of every broadcast bound below.
+ *  - Within-batch pairs come from a batch-sized self-join in id order,
+ *    so each pair appears once.
+ *  - The index probe BROADCASTS the keyed batch and the corpus-sized
+ *    index SCANS through it: zero exchange and zero sort on the index
+ *    side per trigger. A plain two-sided band join would re-shuffle the
+ *    whole index every batch — the one cost shape a 100 TB corpus
+ *    cannot absorb. The per-trigger index SCAN itself is the price of
+ *    the flat shard layout and amortizes by batching (a bucketed
+ *    index's base is the scan-pruned shape for latency-critical probes).
+ *  - Broadcast bounds: a restart backlog or an un-throttled source can
+ *    deliver an arbitrarily large batch, and force-broadcasting THAT
+ *    would fail the trigger and every replay of it, permanently wedging
+ *    the stream. Past [[bcastRowBound]] (keyed batch rows) or
+ *    [[BroadcastIdRows]] (id-only sides) a join falls back to its
+ *    shuffled form: slower, but the trigger completes.
+ *  - Index rows match in either id direction: ids carry no
+ *    arrival-order guarantee, and requiring a.id > b.id would silently
+ *    drop a pair whenever the new id happens to be smaller. Index copies
+ *    of the batch's own ids are anti-joined out, so a replayed or
+ *    re-sent batch (even under a new batchId) never matches its own
+ *    earlier copies, and the in-batch and index candidate sets are
+ *    disjoint — their union needs no cross-set dedup.
+ *  - Own-partition filter, on top of the id anti-join: the sinks
+ *    overwrite this batch's own partition while the probe's scan runs
+ *    in a parallel driver thread, so on a replay the overwrite would
+ *    delete the prior attempt's files under the scan
+ *    (FileNotFoundException on every replay, wedging the stream).
+ *    Partition pruning drops those files at planning time; the rows it
+ *    removes are a subset of what the anti-join removes, so results are
+ *    unchanged.
+ *  - Sinks are partition overwrites (`batch_id=<id>`,
+ *    `shard=stream_<id>`): foreachBatch replays a batch after a
+ *    failure, blind appends would double the matches and the index
+ *    (and duplicated index rows multiply all future match output), and
+ *    partition discovery on read reassembles the full set. Independent
+ *    sinks run overlapped on driver threads ([[graft.core.Jobs.par]])
+ *    under `<label>:<sink>-write` job labels.
  *
  * [[run]] writes a FLAT text index of the one text-index lifecycle
  * (see `Dedup`'s persisted text index): `<indexPath>/meta` holds the
@@ -39,39 +72,20 @@ import graft.operators.Dedup
  * inventoried by `SHOW TEXT INDEX`, and compactable with
  * [[graft.operators.Dedup.compactTextIndex]]; conversely the stream
  * can extend an index `buildTextIndex` created (its geometry then
- * comes from the meta, not this method's parameters). Batch-vs-batch
- * duplicates inside one micro-batch are caught by including the batch
- * itself in the probe (id ordering dedups).
+ * comes from the meta, not this method's parameters).
  */
 object StreamingDedup {
 
   /** Row bound under which an id-only side (batch ids, tombstones,
-    * matched winners) is force-broadcast: ~4M ids. Batches are
-    * trigger-bounded in a configured stream, but a restart backlog can
-    * deliver an arbitrarily large batch, and force-broadcasting it would
-    * fail the trigger and every replay. Past the bound the join falls
-    * back to its shuffled form: slower, but the trigger completes. */
+    * matched winners) is force-broadcast: ~4M ids. */
   private[graft] val BroadcastIdRows: Long = 1L << 22
 
-  /** Shared LSH band-explode over minhash signatures — one definition
-    * for every streaming variant (run, runKeepBest), so a banding fix
-    * cannot silently diverge between them. */
-  private def bandedSigs(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    sigs
-      .select(col("id"), col("sig"), explode(F.lshBandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("id"), col("sig"), col("bk.band"), col("bk.bh"))
-
-  /** Micro-batch DOCUMENT bound for a force-broadcast banded probe side
+  /** Micro-batch DOCUMENT bound for a force-broadcast keyed probe side
     * ([[Dedup.bandedBroadcastDocs]]): each document's probe rows carry
     * the full signature/vector once per band plus ~48 B of per-row
     * struct/key overhead — a fixed row bound that assumed ~8 KB per
     * document would blow past the 8 GB broadcast hard limit for wide
-    * embeddings with many bands. A restart backlog or an un-throttled
-    * source can deliver an arbitrarily large batch; force-broadcasting
-    * THAT would fail the trigger and every replay of it, permanently
-    * wedging the stream. The bound probe is a limit+count on the CACHED
-    * batch — one cheap action, never a full count of an unbounded
-    * source. */
+    * embeddings with many bands. */
   private def bcastRowBound(fanOut: Int, payloadBytes: Long): Long =
     Dedup.bandedBroadcastDocs(math.max(1, fanOut).toLong * math.max(64L, payloadBytes + 48L))
 
@@ -81,6 +95,87 @@ object StreamingDedup {
       zip_with(col("a.sig"), col("b.sig"), (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), _ + _
     ).cast("double") / lit(numHashes.toDouble)
+
+  /** `onBatch` on every micro-batch of `input`. */
+  private def start(input: DataFrame, checkpoint: String)(
+      onBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .outputMode("append")
+      .trigger(Trigger.ProcessingTime(0L))
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => onBatch(batch, batchId) }
+      .start()
+
+  /** One trigger: `rows` (the batch's rows, ids in `idCol`) cached and
+    * counted once, then, for a non-empty batch, the `sinks` it builds
+    * run overlapped under `<label>:<sink>-write` labels. Every frame
+    * cached through the [[Batch]] is released afterwards. Returns
+    * whether the batch was non-empty. */
+  private def trigger(label: String, batchId: Long, rows: DataFrame, idCol: String = "id")(
+      sinks: Batch => Seq[(String, () => Unit)]): Boolean = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(d: DataFrame): DataFrame = { held += d; d.cache() }
+    try {
+      val cached = hold(rows)
+      val n = Jobs.desc(rows.sparkSession, s"$label:batch-count")(cached.count())
+      n > 0 && {
+        Jobs.par(rows.sparkSession)(sinks(new Batch(cached, idCol, n, hold))
+          .map { case (sink, write) => s"$label:$sink-write" -> write }: _*)
+        true
+      }
+    } finally held.foreach(_.unpersist())
+  }
+
+  /** A non-empty micro-batch inside [[trigger]]: its cached `rows`,
+    * their count `n`, and `cache`, which caches a frame until the
+    * trigger's sinks have run. */
+  private final class Batch(val rows: DataFrame, idCol: String, val n: Long,
+      val cache: DataFrame => DataFrame) {
+    def s: SparkSession = rows.sparkSession
+
+    /** Rows of the committed index under `dir` outside this trigger's
+      * own partition `own` (the `key=value` dir its sink overwrites);
+      * None before the index's first commit. A `schema` known from the
+      * rows this trigger writes spares the read its schema-inference
+      * job. Cast: an all-numeric shard set would infer a numeric
+      * partition column, and comparing THAT to a string silently nulls
+      * the predicate. */
+    def committed(dir: String, own: String, schema: Option[StructType] = None): Option[DataFrame] = {
+      val Array(key, value) = own.split("=", 2)
+      if (!ShardStore.anyCommitted(s, dir, key + "=")) None
+      else Some(schema.fold(s.read)(s.read.schema).parquet(dir).filter(col(key).cast("string") =!= value))
+    }
+
+    /** [[committed]] minus index copies of this batch's ids, the id side
+      * broadcast when `idsSmall`. */
+    def index(dir: String, own: String, idsSmall: Boolean,
+        schema: Option[StructType] = None): Option[DataFrame] = {
+      val ids = rows.select(col(idCol).as("id"))
+      committed(dir, own, schema).map(_.join(if (idsSmall) broadcast(ids) else ids, Seq("id"), "left_anti"))
+    }
+
+    /** Matches of `probe` ((id, payload) rows) keyed by `key` into
+      * (id, payload, band, bh): against itself in id order when
+      * `inBatch`, and against `index` in either id direction with the
+      * keyed probe broadcast when `small`; `sim` (over `a.*`/`b.*`) at
+      * least `threshold`, distinct. Columns: (new_id, existing_id,
+      * `simName`). */
+    def matches(probe: DataFrame, index: Option[DataFrame], key: DataFrame => DataFrame,
+        simName: String, sim: Column, threshold: Double, small: Boolean,
+        inBatch: Boolean = true): DataFrame = {
+      def cand(a: DataFrame, b: DataFrame, idCond: Column): DataFrame =
+        a.as("a").join(b.as("b"),
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && idCond)
+          .select(col("a.id").as("new_id"), col("b.id").as("existing_id"), sim.as(simName))
+      val keyed = key(probe)
+      val inBatchPairs = if (inBatch) Seq(cand(keyed, keyed, col("a.id") > col("b.id"))) else Nil
+      val viaIndex = index.map(i =>
+        cand(if (small) broadcast(keyed) else keyed, key(i), col("a.id") =!= col("b.id")))
+      (inBatchPairs ++ viaIndex).reduce(_ unionByName _)
+        .filter(col(simName) >= threshold)
+        .distinct()
+    }
+  }
 
   def run(
       spark: SparkSession,
@@ -92,122 +187,41 @@ object StreamingDedup {
       threshold: Double = 0.5,
       shingleSize: Int = 3,
       checkpoint: String = "/tmp/graft_streaming_dedup_ckpt"
-  ): StreamingQuery = {
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        locally {
-          val s = batch.sparkSession
-          // Geometry from the index meta when it exists (batch-built
-          // index being extended, or any batch after the stream's first):
-          // signatures banded differently than the index silently match
-          // nothing, so — exactly as in appendToTextIndex — the geometry
-          // is data. The method's numHashes/bands/threshold parameters
-          // only ever CREATE a fresh index's meta, which records the
-          // implied at-threshold miss probability (1 - t^r)^b so it
-          // matches the batch builder's exactly.
-          val existing = Dedup.TextIndexGeometry.find(s, indexPath)
-          val geom = existing.getOrElse(Dedup.TextIndexGeometry(numHashes, bands, shingleSize, threshold,
-            math.pow(1.0 - math.pow(threshold, (numHashes / bands).toDouble), bands.toDouble)))
-          def banded(sigs: DataFrame): DataFrame = bandedSigs(sigs, geom.bands, geom.rowsPerBand)
-          val sigs = geom.sigs(batch, "doc_id", "text").cache()
-          // ONE count (materializing the cache) is both the empty-batch
-          // guard (the separate isEmpty probe job is gone) and the
-          // broadcast-bound decision below
-          val batchN = graft.core.Jobs.desc(s, "streamdedup:batch-count")(sigs.count())
-          if (batchN == 0L) sigs.unpersist() else {
-          val probe = banded(sigs)
-          val sigsDir = s"$indexPath/sigs"
-          val haveIndex = graft.core.ShardStore.anyCommitted(s, sigsDir, "shard=")
-          // existing index + this batch. Index rows are tagged: a new
-          // document must match an indexed duplicate REGARDLESS of id
-          // order (ids carry no arrival-order guarantee — requiring
-          // a.id > b.id would silently drop the pair whenever the new
-          // id happens to be smaller). The ordering constraint applies
-          // only WITHIN the batch, where both directions of a pair are
-          // present and one must be canonical. Index copies of ids that
-          // are IN this batch are excluded (broadcast anti-join on the
-          // small batch id set): a replayed or re-sent batch otherwise
-          // matches its members against their own index copies in BOTH
-          // directions, and the replayed matches partition would not
-          // converge to the clean run's content. (The anti-join subsumes
-          // an own-shard partition filter: it also covers a re-SENT batch
-          // arriving under a new batchId.)
-          val batchIds = sigs.select(col("id"))
-          // The index-probe join BROADCASTS the banded batch and streams
-          // the index scan through it: the corpus-sized index side pays
-          // ZERO exchange per batch (a plain two-sided band join would
-          // re-shuffle the whole index every trigger — the one shape
-          // that cannot survive a 100 TB corpus). The batch is
-          // micro-batch-bounded by the trigger, so its banded rows are
-          // broadcastable by construction; within-batch pairs come from
-          // a separate batch-sized self-join. The two candidate sets
-          // are disjoint (index copies of this batch's ids are
-          // anti-joined out), so the union needs no cross-set dedup.
-          def cand(a: DataFrame, b: DataFrame, idCond: Column): DataFrame =
-            a.as("a").join(b.as("b"),
-              col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && idCond)
-              .select(col("a.id").as("new_id"), col("b.id").as("existing_id"),
-                estJaccardExpr(geom.numHashes).as("est_jaccard"))
-          val inBatch = cand(probe, probe, col("a.id") > col("b.id"))
-          // oversized-batch fallback: see bcastRowBound (covers the id
-          // anti-join's broadcast too — same driving row count); banded
-          // text rows carry the nh-int signature per band
-          val batchSmall = batchN <= bcastRowBound(geom.bands, 4L * geom.numHashes)
-          // own-shard partition filter, ON TOP of the id anti-join: the
-          // sigs-write below overwrites shard=stream_<batchId> while this
-          // frame's scan runs in a PARALLEL driver thread (Jobs.par). On a
-          // replayed batch the prior attempt's files are in the listed
-          // file set, and the overwrite's delete would fail the scan
-          // mid-flight (FileNotFoundException — on every replay, wedging
-          // the stream). Partition pruning drops those files from the
-          // scan at planning time; the rows it removes are a subset of
-          // what the anti-join removes (same ids), so results are
-          // unchanged. Cast: an all-numeric shard set would infer a
-          // numeric partition column, and comparing THAT to a string
-          // silently nulls the predicate.
-          val viaIndex =
-            if (haveIndex)
-              cand(if (batchSmall) broadcast(probe) else probe,
-                banded(s.read.parquet(sigsDir)
-                  .filter(col("shard").cast("string") =!= s"stream_$batchId")
-                  .select(col("id"), col("sig"))
-                  .join(if (batchSmall) broadcast(batchIds) else batchIds,
-                    Seq("id"), "left_anti")),
-                col("a.id") =!= col("b.id"))
-            else inBatch.limit(0)
-          val matches = inBatch.unionByName(viaIndex)
-            .filter(col("est_jaccard") >= geom.threshold)
-            .distinct()
-          // Idempotent per micro-batch: foreachBatch replays a batch after a
-          // failure, so blind appends would double both the matches and the
-          // signature index (and duplicated index rows multiply all future
-          // match output). Writing each batch to its own shard/partition
-          // with overwrite makes replays converge; partition discovery on
-          // read reassembles the full index/matches set.
-          // independent sinks (matches ← probe joins, sigs ← the cached
-          // signature frame): overlapped driver threads — guide §2.6
-          graft.core.Jobs.par(s)(
-            "streamdedup:matches-write" -> { () =>
-              matches.write.mode("overwrite").parquet(s"$matchesPath/batch_id=$batchId")
-            },
-            "streamdedup:sigs-write" -> { () =>
-              sigs.select(col("id"), col("sig"))
-                .write.mode("overwrite").parquet(s"$sigsDir/shard=stream_$batchId")
-            })
-          // meta LAST, and only when creating the index (first non-empty
-          // batch): its presence certifies a complete, probe-able index —
-          // the same written-last crash marker buildTextIndex uses
-          if (existing.isEmpty) geom.write(s, indexPath)
-          sigs.unpersist()
-          }
-        }
-        ()
+  ): StreamingQuery =
+    start(docs, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      // Geometry from the index meta when it exists (batch-built
+      // index being extended, or any batch after the stream's first):
+      // signatures banded differently than the index silently match
+      // nothing, so — exactly as in appendToTextIndex — the geometry
+      // is data. The method's numHashes/bands/threshold parameters
+      // only ever CREATE a fresh index's meta, which records the
+      // implied at-threshold miss probability (1 - t^r)^b so it
+      // matches the batch builder's exactly.
+      val existing = Dedup.TextIndexGeometry.find(s, indexPath)
+      val geom = existing.getOrElse(Dedup.TextIndexGeometry(numHashes, bands, shingleSize, threshold,
+        math.pow(1.0 - math.pow(threshold, (numHashes / bands).toDouble), bands.toDouble)))
+      val sigsDir = s"$indexPath/sigs"
+      val own = s"shard=stream_$batchId"
+      val nonEmpty = trigger("streamdedup", batchId, geom.sigs(batch, "doc_id", "text")) { b =>
+        // banded text rows carry the nh-int signature per band
+        val small = b.n <= bcastRowBound(geom.bands, 4L * geom.numHashes)
+        val matches = b.matches(b.rows,
+          b.index(sigsDir, own, small).map(_.select(col("id"), col("sig"))),
+          geom.band(_, Seq("sig")), "est_jaccard", estJaccardExpr(geom.numHashes), geom.threshold, small)
+        Seq(
+          "matches" -> { () =>
+            matches.write.mode("overwrite").parquet(s"$matchesPath/batch_id=$batchId")
+          },
+          "sigs" -> { () =>
+            b.rows.select(col("id"), col("sig")).write.mode("overwrite").parquet(s"$sigsDir/$own")
+          })
       }
-      .start()
-  }
+      // meta LAST, and only when creating the index (first non-empty
+      // batch): its presence certifies a complete, probe-able index —
+      // the same written-last crash marker buildTextIndex uses
+      if (nonEmpty && existing.isEmpty) geom.write(s, indexPath)
+    }
 
   /**
    * Streaming semantic dedup: screen NEW embeddings against the
@@ -349,102 +363,46 @@ object StreamingDedup {
 
     // measured vector width, cached across this stream's triggers
     var dimSeen = -1
-    vecs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        locally {
-          val s = batch.sparkSession
-          graft.sql.GraftFunctions.register(s)
-          // hyperplane bits are the BAND-mode signature only — the cell
-          // mode keys by quantizer cell and never reads them, so the
-          // low-threshold index stores (id, vec) without paying a
-          // planes×dim pass per row. Consequence: an index is keyed by
-          // the mode (threshold regime) that wrote it.
-          val sigs = {
-            val base = batch.select(col("vec_id").as("id"), col("embedding").as("vec"))
-            (if (lowThreshold) base
-             else base.withColumn("bits", call_function("graft_hyperplane_bits", col("vec"), lit(planes1))))
-              .cache()
-          }
-          // ONE count (materializing the cache) is both the empty-batch
-          // guard (the isEmpty probe job is gone — and an empty first
-          // batch can no longer reach the quantizer trainer) and the
-          // broadcast-bound row count below
-          val batchN = graft.core.Jobs.desc(s, "vecdedup:batch-count")(sigs.count())
-          if (batchN == 0L) sigs.unpersist() else {
-          val cents: Array[Array[Float]] =
-            if (lowThreshold) loadOrTrainCentroids(s, batch) else Array.empty
-          def keyed(d: DataFrame): DataFrame =
-            if (lowThreshold) cellKeyed(d, cents) else banded(d)
-          val probe = keyed(sigs)
-          // index presence = at least one batch_id partition WITH data
-          // (the _centroids dir written above must not read as an
-          // index, nor may a crashed first batch's file-less dir)
-          val haveIndex = graft.core.ShardStore.anyCommitted(s, indexPath, "batch_id=")
-          // index rows match in either id direction; id ordering only
-          // dedups within-batch pairs, and index copies of this batch's
-          // ids are excluded (replay convergence — see run() above)
-          val batchIds = sigs.select(col("id"))
-          // broadcast-probe discipline (see run() above): the
-          // corpus-sized index streams through the broadcast banded/
-          // cell-keyed batch with ZERO exchange per trigger; in-batch
-          // pairs come from a batch-sized self-join, and the two sets
-          // are disjoint (index copies of batch ids anti-joined out)
-          def cand(a: DataFrame, b: DataFrame, idCond: Column): DataFrame =
-            a.as("a").join(b.as("b"),
-              col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && idCond)
-              .select(col("a.id").as("new_id"), col("b.id").as("existing_id"),
-                call_function("graft_cosine", col("a.vec"), col("b.vec")).as("cos"))
-          val inBatch = cand(probe, probe, col("a.id") > col("b.id"))
-          // oversized-batch fallback: see bcastRowBound. The banded rows
-          // carry the FULL vector per band/cell, so the bound scales with
-          // the measured vector width (one cheap head() on the cached
-          // batch), not an assumed one — a 1024-dim corpus broadcasts
-          // ~16× fewer docs than a 64-dim one instead of failing at the
-          // same row count
-          // vector width measured ONCE per stream (constant for a
-          // corpus): a per-trigger head() job bought nothing after the
-          // first batch
-          val dim = {
-            if (dimSeen < 0) dimSeen = sigs.select(size(col("vec")).as("d")).head().getInt(0)
-            dimSeen
-          }
-          val fanOut = if (lowThreshold) ivfProbes else bands1
-          val batchSmall = batchN <= bcastRowBound(fanOut, 4L * dim)
-          // own-partition filter on top of the id anti-join: the parallel
-          // sigs-write overwrites batch_id=<batchId> while this scan runs
-          // (run()'s replay-race discipline — prunes the prior attempt's
-          // files from the scan; removed rows are a subset of the
-          // anti-joined ids, so results are unchanged)
-          val viaIndex =
-            if (haveIndex)
-              cand(if (batchSmall) broadcast(probe) else probe,
-                keyed(s.read.parquet(indexPath)
-                  .filter(col("batch_id") =!= batchId)
-                  .join(if (batchSmall) broadcast(batchIds) else batchIds,
-                    Seq("id"), "left_anti")),
-                col("a.id") =!= col("b.id"))
-            else inBatch.limit(0)
-          val matches = inBatch.unionByName(viaIndex)
-            .filter(col("cos") >= threshold)
-            .distinct()
-          // replay-safe: see the batch_id-partition note in run() above.
-          // independent sinks overlapped (guide §2.6)
-          graft.core.Jobs.par(s)(
-            "vecdedup:matches-write" -> { () =>
-              matches.write.mode("overwrite").parquet(s"$matchesPath/batch_id=$batchId")
-            },
-            "vecdedup:sigs-write" -> { () =>
-              sigs.write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
-            })
-          sigs.unpersist()
-          }
-        }
-        ()
+    start(vecs, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.sql.GraftFunctions.register(s)
+      // hyperplane bits are the BAND-mode signature only — the cell
+      // mode keys by quantizer cell and never reads them, so the
+      // low-threshold index stores (id, vec) without paying a
+      // planes×dim pass per row. Consequence: an index is keyed by
+      // the mode (threshold regime) that wrote it.
+      val base = batch.select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val rows =
+        if (lowThreshold) base
+        else base.withColumn("bits", call_function("graft_hyperplane_bits", col("vec"), lit(planes1)))
+      val own = s"batch_id=$batchId"
+      // the count runs first, so an empty first batch never reaches the
+      // quantizer trainer
+      trigger("vecdedup", batchId, rows) { b =>
+        val cents: Array[Array[Float]] =
+          if (lowThreshold) loadOrTrainCentroids(s, batch) else Array.empty
+        def keyed(d: DataFrame): DataFrame =
+          if (lowThreshold) cellKeyed(d, cents) else banded(d)
+        // the keyed rows carry the FULL vector per band/cell, so the
+        // broadcast bound scales with the measured vector width — a
+        // 1024-dim corpus broadcasts ~16× fewer docs than a 64-dim one
+        // instead of failing at the same row count. Measured ONCE per
+        // stream (constant for a corpus): a per-trigger head() job
+        // bought nothing after the first batch.
+        if (dimSeen < 0) dimSeen = b.rows.select(size(col("vec")).as("d")).head().getInt(0)
+        val small = b.n <= bcastRowBound(if (lowThreshold) ivfProbes else bands1, 4L * dimSeen)
+        val matches = b.matches(b.rows, b.index(indexPath, own, small), keyed, "cos",
+          call_function("graft_cosine", col("a.vec"), col("b.vec")), threshold, small)
+        Seq(
+          "matches" -> { () =>
+            matches.write.mode("overwrite").parquet(s"$matchesPath/batch_id=$batchId")
+          },
+          "sigs" -> { () =>
+            b.rows.write.mode("overwrite").parquet(s"$indexPath/$own")
+          })
       }
-      .start()
+      ()
+    }
   }
 
   /**
@@ -489,15 +447,9 @@ object StreamingDedup {
       threshold: Double = 0.5,
       checkpoint: String = "/tmp/graft_streaming_keepbest_ckpt"
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        keepBestBatch(batch, batchId, score, indexPath, decisionsPath,
-          numHashes, bands, threshold)
-      }
-      .start()
+    start(docs, checkpoint) { (batch, batchId) =>
+      keepBestBatch(batch, batchId, score, indexPath, decisionsPath, numHashes, bands, threshold)
+    }
 
   /** One [[runKeepBest]] micro-batch — extracted so the replay path
     * (same batchId twice, with the first attempt's partial writes on
@@ -512,278 +464,138 @@ object StreamingDedup {
       bands: Int = 16,
       threshold: Double = 0.5
   ): Unit = {
-    val rowsPerBand = numHashes / bands
-    def banded(sigs: DataFrame): DataFrame = bandedSigs(sigs, bands, rowsPerBand)
-    def estJaccard = estJaccardExpr(numHashes)
+    def banded(sigs: DataFrame): DataFrame =
+      Dedup.bandedFromSigs(sigs, bands, numHashes / bands, Seq("sig"))
+    val estJaccard = estJaccardExpr(numHashes)
     // tombstone log lives beside the index (sibling dir, same FS)
     val retiredPath = indexPath + "_retired"
-    locally {
-          val s = batch.sparkSession
-          def haveParts(path: String): Boolean =
-            graft.core.ShardStore.anyCommitted(s, path, "batch_id=")
-          // NaN scores normalize to NULL here once — every comparison
-          // below (batch-local and vs-index) then shares the batch
-          // operator's discipline (NULL loses to any real score)
-          val scored = batch
-            .withColumn("__score", when(!isnan(score.cast("double")), score.cast("double")))
-            .cache()
-          // ONE batch-size count (materializes the cache it reads) serves
-          // every broadcast-bound decision below: the batch-ids anti-join
-          // bound directly, and the winner bound conservatively (winners
-          // ⊆ batch, so batch small ⇒ winners small) — replacing two
-          // limit-probe jobs per trigger
-          val batchN = graft.core.Jobs.desc(s, "keepbest:batch-count")(scored.count())
-          // the count doubles as the empty-batch guard — the separate
-          // isEmpty probe job this trigger used to pay is gone
-          if (batchN == 0L) { scored.unpersist(); return }
-          // __score rides the signature pass (one narrow map) instead of
-          // a post-hoc join back onto `scored` — one less exchange per
-          // trigger; batch ids are unique per the stream contract, so the
-          // old 1:1 join attached exactly this column
-          val sigs = Dedup.minhashSigsKeep(scored, "doc_id", "text", numHashes, 3,
-            Seq("__score")).cache()
-          val probe = banded(sigs)
+    val own = s"batch_id=$batchId"
+    // NaN scores normalize to NULL here once — every comparison
+    // below (batch-local and vs-index) then shares the batch
+    // operator's discipline (NULL loses to any real score)
+    val scored = batch
+      .withColumn("__score", when(!isnan(score.cast("double")), score.cast("double")))
+    trigger("keepbest", batchId, scored, "doc_id") { b =>
+      val s = b.s
+      // __score rides the signature pass (one narrow map) instead of
+      // a post-hoc join back onto `scored` — one less exchange per
+      // trigger; batch ids are unique per the stream contract
+      val sigs = b.cache(Dedup.minhashSigsKeep(b.rows, "doc_id", "text", numHashes, 3, Seq("__score")))
 
-          // 1. batch-local clusters → keep-best winners
-          val batchPairs = probe.as("a")
-            .join(probe.as("b"),
-              col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-                col("a.id") < col("b.id"))
-            .select(col("a.id").as("id_a"), col("b.id").as("id_b"), estJaccard.as("ej"))
-            .filter(col("ej") >= threshold)
-            .select(col("id_a"), col("id_b"))
-            .distinct()
-          // Batch-local keep-best, DRIVER-RESOLVED for bounded batches
-          // (r17): the distributed dedupKeepBest already collects the
-          // edge list to the driver (connectedComponents' small-graph
-          // path) and then pays cluster-join + two aggregations + two
-          // joins of Spark stages per trigger to pick winners for a
-          // micro-batch-bounded doc set. With the batch count in hand,
-          // collect (doc_id, score) too — same pass the cache holds —
-          // and resolve clusters AND winners in one driver union-find,
-          // exactly the small-graph discipline. Past the bound (restart
-          // backlog, collision storm) the distributed operator runs
-          // unchanged, so an unbounded batch never ships to the driver.
-          // Policy is byte-identical to dedupKeepBest: union by min id,
-          // best = max non-NULL score, NULL loses to any real score,
-          // min-id tie-break, all-NULL clusters keep min id, singletons
-          // keep themselves.
-          val localBound = 1L << 20
-          val local = graft.core.Jobs.desc(s, "keepbest:local-cc") {
-            val edges =
-              if (batchN <= localBound)
-                batchPairs.limit(localBound.toInt + 1).collect()
-              else Array.empty[org.apache.spark.sql.Row]
-            if (batchN <= localBound && edges.length <= localBound) {
-              val docs = scored.select(col("doc_id"), col("__score")).collect()
-              val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-              def find(x: Long): Long = {
-                var r = x
-                while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-                var c = x
-                while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-                r
-              }
-              edges.foreach { e =>
-                val (ru, rv) = (find(e.getLong(0)), find(e.getLong(1)))
-                if (ru != rv) { if (ru < rv) parent(rv) = ru else parent(ru) = rv }
-              }
-              // per cluster: best non-NULL score (None when all NULL),
-              // then min id among members whose score null-safe-equals it
-              case class Best(var score: Option[Double], var id: Long)
-              val best = scala.collection.mutable.HashMap.empty[Long, Best]
-              docs.foreach { d =>
-                val id = d.getLong(0)
-                // -0.0 folds into 0.0: SQL compares them equal (so
-                // dedupKeepBest ties them to the min id), Double.compare
-                // would not
-                val sc = if (d.isNullAt(1)) None else Some(d.getDouble(1) + 0.0)
-                val root = find(id)
-                best.get(root) match {
-                  case None => best(root) = Best(sc, id)
-                  case Some(b) =>
-                    val cmp = (sc, b.score) match {
-                      case (Some(a2), Some(b2)) => java.lang.Double.compare(a2, b2)
-                      case (Some(_), None) => 1
-                      case (None, Some(_)) => -1
-                      case (None, None) => 0
-                    }
-                    if (cmp > 0 || (cmp == 0 && id < b.id)) { b.score = sc; b.id = id }
-                }
-              }
-              val schema = org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("keep_id", org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("keep", org.apache.spark.sql.types.BooleanType, nullable = false),
-                org.apache.spark.sql.types.StructField("score", org.apache.spark.sql.types.DoubleType, nullable = true)))
-              val rows = docs.map { d =>
-                val id = d.getLong(0)
-                val keepId = best(find(id)).id
-                org.apache.spark.sql.Row(
-                  id, keepId, id == keepId,
-                  if (d.isNullAt(1)) null else java.lang.Double.valueOf(d.getDouble(1)))
-              }
-              s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
-            } else
-              Dedup.dedupKeepBest(
-                scored.select(col("doc_id"), col("__score")), "doc_id", col("__score"), batchPairs)
-                .cache()
+      // 1. batch-local clusters → keep-best winners: the batch operator
+      // itself, which resolves a bounded pair graph on the driver (one
+      // checkpoint of the pairs, at most bound + 1 edges collected) and
+      // runs distributed past the bound
+      val batchPairs = b.matches(sigs, None, banded, "ej", estJaccard, threshold, small = false)
+        .select(col("existing_id").as("id_a"), col("new_id").as("id_b"))
+      val local = Jobs.desc(s, "keepbest:local-cc")(Dedup.dedupKeepBest(
+        b.rows.select(col("doc_id"), col("__score")), "doc_id", col("__score"), batchPairs))
+      val winners = local.filter(col("keep"))
+        .select(col("doc_id").as("id"), col("score").as("new_score"))
+        .join(sigs.select(col("id"), col("sig")), Seq("id"))
+      val losers = local.filter(!col("keep"))
+        .select(col("doc_id"), col("keep_id"), col("score"))
+
+      // 2. winners probe the ACTIVE rep index (index minus tombstones),
+      // producing each winner's best-matching rep (or nothing); the
+      // batch-ids anti-join is an id-only side. Only this method writes
+      // the index and the tombstone log, so their data schemas are the
+      // schemas of this batch's own sink rows.
+      val repRow = sigs.select(col("id"), col("sig"), col("__score")).schema
+      val matched = b.index(indexPath, own, b.n <= BroadcastIdRows, Some(repRow)) match {
+        case None => winners.limit(0)
+          .select(col("id"), lit(0L).as("rep_id"), lit(0.0).as("rep_score"))
+        case Some(idx) =>
+          // tombstones EXCLUDING this batch's own partition: a
+          // replayed batch whose failed attempt already tombstoned
+          // a rep would otherwise see that rep as inactive, not
+          // re-match it, and then overwrite the tombstone partition
+          // with an empty one — resurrecting the demoted rep beside
+          // its replacement (two active reps for one cluster).
+          // The log is CUMULATIVE (one id per replaced rep, forever),
+          // so its broadcast is bounded too; the durable fix past
+          // ~4M ids is folding tombstones into the index (compaction).
+          val active = b.committed(retiredPath, own, Some(StructType(Seq(repRow("id"))))).fold(idx) { retired =>
+            // tombstone-log size from parquet FOOTERS (driver-side,
+            // no job). It includes this batch's own partition on a
+            // replay — a conservative overcount that can only fall
+            // back to the shuffled form early.
+            val retiredN = graft.core.DirCache.parquetRowCount(s, retiredPath)
+            val ids = retired.select(col("id"))
+            idx.join(if (retiredN <= BroadcastIdRows) broadcast(ids) else ids, Seq("id"), "left_anti")
           }
-          val winners = local.filter(col("keep"))
-            .select(col("doc_id").as("id"), col("score").as("new_score"))
-            .join(sigs.select(col("id"), col("sig")), Seq("id"))
-          val losers = local.filter(!col("keep"))
-            .select(col("doc_id"), col("keep_id"), col("score"))
+          // winner rows carry the nh-int signature per band
+          val winSmall = b.n <= bcastRowBound(bands, 4L * numHashes)
+          val m = b.matches(winners.select(col("id"), col("sig")), Some(active.select(col("id"), col("sig"))),
+            banded, "ej", estJaccard, threshold, winSmall, inBatch = false)
+          // best-matching rep per winner: max similarity, min-id tie
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("new_id")).orderBy(col("ej").desc, col("existing_id").asc)
+          // the matched set is winner-bounded — broadcast it so the
+          // rep_score attach streams the index instead of shuffling it
+          val best = m.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+            .select(col("new_id").as("id"), col("existing_id").as("rep_id"))
+          (if (winSmall) broadcast(best) else best)
+            .join(active.select(col("id").as("rep_id"), col("__score").as("rep_score")),
+              Seq("rep_id"))
+            .select(col("id"), col("rep_id"), col("rep_score"))
+      }
+      // 3. ONE decision pass (r17 fuse): each winner left-joins its
+      // best-matching rep and resolves to a category — `new` (no
+      // active rep matched), `replace` (beats its rep), `lose`. All
+      // three sinks below are filters/projections of this single
+      // cached frame. The previous shape re-derived unmatched/
+      // replacing/losing as an anti-join plus two filters over a
+      // cached `matched`, unioned three join subtrees per decision
+      // consumer, and re-joined sigs for the replacing reps —
+      // ~100 AQE stage-jobs per trigger, the round-16 profile's
+      // biggest remaining count. Semantics are unchanged: matched
+      // ids are winner-unique (row_number == 1 upstream), so the
+      // left join preserves the winner multiset; rep ids are never
+      // NULL, so `rep_id IS NULL` is exactly the old anti-join; a
+      // NULL-vs-NULL score comparison still loses (the old
+      // !coalesce(beats, false) branch).
+      val beats = (col("rep_score").isNull && col("new_score").isNotNull) ||
+        col("new_score") > col("rep_score")
+      // matched ⊆ winners ⊆ batch: the batch count bounds the
+      // broadcast (backlog-sized batches fall back to a shuffled join
+      // rather than failing the trigger)
+      val wcat = b.cache(winners
+        .join(if (b.n <= BroadcastIdRows) broadcast(matched) else matched, Seq("id"), "left")
+        .withColumn("cat",
+          when(col("rep_id").isNull, lit("new"))
+            .when(beats, lit("replace"))
+            .otherwise(lit("lose"))))
 
-          // 2. winners probe the ACTIVE rep index (index minus tombstones),
-          // producing each winner's best-matching rep (or nothing).
-          val matched0 =
-            if (!haveParts(indexPath)) winners.limit(0)
-              .select(col("id"), lit(0L).as("rep_id"), lit(0.0).as("rep_score"))
-            else {
-              // minus tombstones, minus index copies of THIS batch's ids
-              // (a replayed batch must not self-match the copies its
-              // failed attempt already indexed — run()'s discipline)
-              // ids-only broadcast — bigger bound than the banded-sig
-              // sides (8B/row); falls back to the shuffled anti-join on
-              // a backlog-sized batch instead of failing the trigger
-              val batchDocIds = scored.select(col("doc_id").as("id"))
-              // own-partition filter on top of the id anti-join: the
-              // parallel index-write overwrites batch_id=<batchId> while
-              // the decisions/retired sinks materialize this lineage
-              // (run()'s replay-race discipline — prunes the prior
-              // attempt's files from the scan; removed rows are a subset
-              // of the anti-joined ids, so results are unchanged; the
-              // retired read below is already pruned by its own
-              // batch_id =!= filter)
-              val idx = s.read.parquet(indexPath)
-                .filter(col("batch_id") =!= batchId)
-                .join(
-                  if (batchN <= BroadcastIdRows) broadcast(batchDocIds) else batchDocIds,
-                  Seq("id"), "left_anti")
-              // tombstones EXCLUDING this batch's own partition: a
-              // replayed batch whose failed attempt already tombstoned
-              // a rep would otherwise see that rep as inactive, not
-              // re-match it, and then overwrite the tombstone partition
-              // with an empty one — resurrecting the demoted rep beside
-              // its replacement (two active reps for one cluster)
-              // tombstone ids ride broadcast (a shuffled anti-join would
-              // re-exchange the corpus-sized index per batch) — but the
-              // log is CUMULATIVE (one id per replaced rep, forever), so
-              // a long-running high-churn stream could outgrow the
-              // broadcast limit and wedge every subsequent trigger.
-              // Past ~4M ids the anti-join falls back to the shuffled
-              // form: the index re-exchanges (slow) but the trigger
-              // completes; the durable fix at that size is folding
-              // tombstones into the index (compaction).
-              val active =
-                if (haveParts(retiredPath)) {
-                  val retired = s.read.parquet(retiredPath)
-                    .filter(col("batch_id") =!= batchId).select(col("id"))
-                  // tombstone-log size from parquet FOOTERS (driver-side,
-                  // no job; one id row per retired rep). The count
-                  // includes this batch's own partition on a replay —
-                  // a conservative overcount that can only fall back to
-                  // the shuffled form early, never broadcast too much.
-                  val retiredN = graft.core.DirCache.parquetRowCount(s, retiredPath)
-                  idx.join(
-                    if (retiredN <= BroadcastIdRows) broadcast(retired) else retired,
-                    Seq("id"), "left_anti")
-                } else idx
-              // broadcast-probe discipline (run()'s scaladoc): the banded
-              // batch winners broadcast, the corpus-sized rep index
-              // streams through with ZERO exchange per trigger
-              // (oversized-batch fallback: see bcastRowBound; winner rows
-              // carry the nh-int signature per band)
-              val winSmall = batchN <= bcastRowBound(bands, 4L * numHashes)
-              def maybeBcast(d: DataFrame): DataFrame =
-                if (winSmall) broadcast(d) else d
-              val m = maybeBcast(banded(winners.select(col("id"), col("sig")))).as("a")
-                .join(banded(active.select(col("id"), col("sig"))).as("b"),
-                  col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
-                .select(col("a.id").as("id"), col("b.id").as("rep_id"), estJaccard.as("ej"))
-                .filter(col("ej") >= threshold)
-                .distinct()
-              // best-matching rep per winner: max similarity, min-id tie
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(col("id")).orderBy(col("ej").desc, col("rep_id").asc)
-              // the matched set is winner-bounded — broadcast it so the
-              // rep_score attach streams the index instead of shuffling it
-              // (new_score re-attaches via the wcat left join below, so
-              // the old winners re-join here is gone)
-              maybeBcast(
-                m.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1))
-                .join(active.select(col("id").as("rep_id"), col("__score").as("rep_score")),
-                  Seq("rep_id"))
-                .select(col("id"), col("rep_id"), col("rep_score"))
-            }
-          // 3. ONE decision pass (r17 fuse): each winner left-joins its
-          // best-matching rep and resolves to a category — `new` (no
-          // active rep matched), `replace` (beats its rep), `lose`. All
-          // three sinks below are filters/projections of this single
-          // cached frame. The previous shape re-derived unmatched/
-          // replacing/losing as an anti-join plus two filters over a
-          // cached `matched`, unioned three join subtrees per decision
-          // consumer, and re-joined sigs for the replacing reps —
-          // ~100 AQE stage-jobs per trigger, the round-16 profile's
-          // biggest remaining count. Semantics are unchanged: matched
-          // ids are winner-unique (row_number == 1 upstream), so the
-          // left join preserves the winner multiset; rep ids are never
-          // NULL, so `rep_id IS NULL` is exactly the old anti-join; a
-          // NULL-vs-NULL score comparison still loses (the old
-          // !coalesce(beats, false) branch).
-          val beats = (col("rep_score").isNull && col("new_score").isNotNull) ||
-            col("new_score") > col("rep_score")
-          // matched ⊆ winners ⊆ batch: the batch count bounds the
-          // broadcast (backlog-sized batches fall back to a shuffled join
-          // rather than failing the trigger)
-          val matchedSide = matched0
-          val wcat = winners
-            .join(if (batchN <= BroadcastIdRows) broadcast(matchedSide) else matchedSide,
-              Seq("id"), "left")
-            .withColumn("cat",
-              when(col("rep_id").isNull, lit("new"))
-                .when(beats, lit("replace"))
-                .otherwise(lit("lose")))
-            .cache()
-
-          // sinks — all batch_id-partitioned overwrites, all filters of wcat
-          val newReps = wcat.filter(col("cat") =!= "lose")
-            .select(col("id"), col("sig"), col("new_score").as("__score"))
-          val winnerDecisions = wcat.select(
-            col("id").as("doc_id"),
-            (col("cat") =!= "lose").as("kept"),
-            when(col("cat") === "lose", col("rep_id")).otherwise(col("id")).as("rep_id"),
-            col("new_score").as("score"))
-          val demotions = wcat.filter(col("cat") === "replace")
-            .select(col("rep_id").as("doc_id"), lit(false).as("kept"),
-              col("id").as("rep_id"), col("rep_score").as("score"))
-          val loserDecisions = losers
-            .join(wcat.select(
-              col("id").as("keep_id"),
-              when(col("cat") === "lose", col("rep_id")).otherwise(col("id")).as("rep_id")),
-              Seq("keep_id"))
-            .select(col("doc_id"), lit(false).as("kept"), col("rep_id"), col("score"))
-          // the three sinks share no lineage beyond cached frames —
-          // overlapped driver threads back-fill each other's stage
-          // tails instead of paying three sequential job latencies
-          graft.core.Jobs.par(s)(
-            "keepbest:decisions-write" -> { () =>
-              winnerDecisions.unionByName(demotions).unionByName(loserDecisions)
-                .write.mode("overwrite").parquet(s"$decisionsPath/batch_id=$batchId")
-            },
-            "keepbest:retired-write" -> { () =>
-              wcat.filter(col("cat") === "replace").select(col("rep_id").as("id"))
-                .write.mode("overwrite").parquet(s"$retiredPath/batch_id=$batchId")
-            },
-            "keepbest:index-write" -> { () =>
-              newReps.write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
-            })
-          wcat.unpersist()
-          local.unpersist()
-          sigs.unpersist()
-          scored.unpersist()
-          ()
+      // sinks — all batch_id-partitioned overwrites, all filters of wcat
+      val newReps = wcat.filter(col("cat") =!= "lose")
+        .select(col("id"), col("sig"), col("new_score").as("__score"))
+      val winnerDecisions = wcat.select(
+        col("id").as("doc_id"),
+        (col("cat") =!= "lose").as("kept"),
+        when(col("cat") === "lose", col("rep_id")).otherwise(col("id")).as("rep_id"),
+        col("new_score").as("score"))
+      val demotions = wcat.filter(col("cat") === "replace")
+        .select(col("rep_id").as("doc_id"), lit(false).as("kept"),
+          col("id").as("rep_id"), col("rep_score").as("score"))
+      val loserDecisions = losers
+        .join(wcat.select(
+          col("id").as("keep_id"),
+          when(col("cat") === "lose", col("rep_id")).otherwise(col("id")).as("rep_id")),
+          Seq("keep_id"))
+        .select(col("doc_id"), lit(false).as("kept"), col("rep_id"), col("score"))
+      Seq(
+        "decisions" -> { () =>
+          winnerDecisions.unionByName(demotions).unionByName(loserDecisions)
+            .write.mode("overwrite").parquet(s"$decisionsPath/batch_id=$batchId")
+        },
+        "retired" -> { () =>
+          wcat.filter(col("cat") === "replace").select(col("rep_id").as("id"))
+            .write.mode("overwrite").parquet(s"$retiredPath/$own")
+        },
+        "index" -> { () =>
+          newReps.write.mode("overwrite").parquet(s"$indexPath/$own")
+        })
     }
   }
 }

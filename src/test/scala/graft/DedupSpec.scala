@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
 import graft.operators.Dedup
 import graft.functions.F
 
@@ -1210,5 +1212,53 @@ class DedupSpec extends SparkSpecBase {
         Dedup.appendToTextIndex(base, path, "doc_id", "text", bad)
       }
     }
+  }
+
+  // ───────────── both sides of the small-graph bound ─────────────
+
+  private def pairGraphRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.mkString("(", ",", ")")).sorted
+
+  // The driver union-find and the distributed star contraction
+  // (Dedup.SmallGraphEdges at its default and at 0) return the same rows,
+  // for connected components and for keep-best.
+  test("driver-solved and distributed pair graphs return identical components and keep-best rows") {
+    // signed zeros weighted up: a cluster whose best score is -0.0 and
+    // 0.0 is the tie the two paths once broke differently
+    val score = Gen.frequency[Option[Double]](1 -> None, 1 -> Some(Double.NaN),
+      3 -> Some(-0.0), 3 -> Some(0.0), 1 -> Some(1.0), 1 -> Some(2.0))
+    val cases = for {
+      strings <- Gen.oneOf(false, true)
+      n <- Gen.choose(2, 7)
+      // node 9 is in pairs but not among the docs: its cluster's min id
+      // may be absent from the frame
+      edges <- Gen.listOf(Gen.zip(Gen.oneOf((0 until n) :+ 9), Gen.choose(0, n - 1))).map(_.take(8))
+      scores <- Gen.listOfN(n + 2, score)
+    } yield (strings, n, edges, scores)
+    val prop = Prop.forAllNoShrink(cases) { case (strings, n, edges, scores) =>
+      def id(i: Int): String = f"d$i%02d"
+      val norm = edges.filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+      val docRows = scores.zipWithIndex.map { case (sc, i) => (i, sc) }
+      val (pairs, docs) =
+        if (strings)
+          (norm.map { case (a, b) => (id(a), id(b)) }.toDF("id_a", "id_b"),
+            docRows.map { case (i, sc) => (id(i), sc) }.toDF("doc_id", "q"))
+        else
+          (norm.map { case (a, b) => (a.toLong, b.toLong) }.toDF("id_a", "id_b"),
+            docRows.map { case (i, sc) => (i.toLong, sc) }.toDF("doc_id", "q"))
+      val distributed = new Dedup.PairGraph(pairs, 0L)
+      val components = pairGraphRows(Dedup.connectedComponents(pairs))
+      val keepBest = pairGraphRows(Dedup.dedupKeepBest(docs, "doc_id", col("q"), pairs))
+      (components == pairGraphRows(distributed.components)) :|
+        s"components differ on $norm ($n nodes, string ids: $strings)" &&
+        (keepBest == pairGraphRows(distributed.keepBest(docs, "doc_id", col("q")))) :|
+        s"keep-best differs on $norm with scores $scores (string ids: $strings)"
+    }
+    // a fixed seed: the suite's Spark jobs (and so every later RDD id)
+    // are the same on every run
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(25).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261018L)), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 }

@@ -4,7 +4,6 @@ import java.io.{ BufferedInputStream, BufferedOutputStream, ByteArrayOutputStrea
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.scheduler.{ SparkListener, SparkListenerJobStart }
 import org.apache.spark.sql.SparkSession
 
 import graft.core.ResultCache
@@ -27,6 +26,7 @@ class PgWireSpec extends SparkSpecBase {
   private var owner: SparkSession = _
   private var server: PgWireServer = _
   private var port: Int = 0
+  private var jobs: JobCounter = _
 
   override def beforeAll(): Unit = {
     // force the shared spec session first so this suite composes with
@@ -48,11 +48,12 @@ class PgWireSpec extends SparkSpecBase {
     server = new PgWireServer(owner)
     server.start()
     port = server.getPort
-    owner.sparkContext.addSparkListener(Jobs)
+    jobs = new JobCounter(owner.sparkContext)
+    owner.sparkContext.addSparkListener(jobs)
   }
 
   override def afterAll(): Unit = {
-    if (owner != null) owner.sparkContext.removeSparkListener(Jobs)
+    if (jobs != null) owner.sparkContext.removeSparkListener(jobs)
     if (server != null) server.stop()
     graft.sql.UserRegistry.clear()
     SparkSession.setActiveSession(SparkSpecBase.session)
@@ -488,39 +489,8 @@ class PgWireSpec extends SparkSpecBase {
 
   // ---- the in-memory result tier ------------------------------------
 
-  /** Counts Spark jobs. The listener bus is asynchronous, so
-    * [[jobsDuring]] drains it by waiting for a marker job of its own. */
-  private object Jobs extends SparkListener {
-    val counted = new java.util.concurrent.atomic.AtomicLong
-    val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
-        case d: String if d.startsWith("pgwire-spec-marker-") => markers.add(d); ()
-        case _ => counted.incrementAndGet(); ()
-      }
-  }
-
-  private def drainJobs(): Unit = {
-    val tag = "pgwire-spec-marker-" + java.util.UUID.randomUUID()
-    val sc = owner.sparkContext
-    sc.setJobDescription(tag)
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.setJobDescription(null)
-    val deadline = System.nanoTime() + 60L * 1000000000L
-    while (!Jobs.markers.contains(tag)) {
-      assert(System.nanoTime() < deadline, "the listener bus did not drain")
-      Thread.sleep(10)
-    }
-  }
-
   /** Spark jobs started while `body` ran, on any thread. */
-  private def jobsDuring(body: => Unit): Long = {
-    drainJobs()
-    val before = Jobs.counted.get
-    body
-    drainJobs()
-    Jobs.counted.get - before
-  }
+  private def jobsDuring(body: => Unit): Long = jobs.during(body)
 
   /** A catalog table `name` (x = 0 until rows, k = x % 7) over its own
     * parquet dir, which is returned; dropped after `body`. */

@@ -203,7 +203,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("TsLayout is readable as a file stream (continuous ingest tailing the table)") {
     import org.apache.spark.sql.functions._
-    val layout = "/tmp/graft_stream_layout/events"
+    val layout = tempDir("stream_layout_tail") + "/events"
     val events = graft.sources.EventTime.normalizeTs(
       spark.read.parquet(s"$sfDir/events.parquet"))
     graft.sources.TsLayout.write(events, graft.schema.TestSchema.events, layout)
@@ -222,7 +222,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("incremental streaming dedup finds near-dups across micro-batches via the persisted index") {
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_sdedup_" + System.nanoTime()
+    val base = tempDir("sdedup")
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamingDedup.run(
       spark,
@@ -276,7 +276,7 @@ class StreamingSpec extends SparkSpecBase {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.listenerManager.register(listener)
-    val base = "/tmp/graft_sdedup_plan_" + System.nanoTime()
+    val base = tempDir("sdedup_plan")
     try {
       val stream = MemoryStream[(Long, String)]
       val q = graft.streaming.StreamingDedup.run(
@@ -328,7 +328,7 @@ class StreamingSpec extends SparkSpecBase {
     // a zero-data-file parquet dir and die on schema inference at
     // every replay — the stream could never progress
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_sdedup_crash_" + System.nanoTime()
+    val base = tempDir("sdedup_crash")
     val ghost = new org.apache.hadoop.fs.Path(s"$base/index/sigs/shard=stream_0/_temporary")
     ghost.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(ghost)
     val stream = MemoryStream[(Long, String)]
@@ -356,7 +356,7 @@ class StreamingSpec extends SparkSpecBase {
     // the SAME index artifact the batch side builds — batch probe, admin
     // inventory, and compaction all run on it with no conversion
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_sdedup_unified_" + System.nanoTime()
+    val base = tempDir("sdedup_unified")
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamingDedup.run(
       spark,
@@ -407,7 +407,7 @@ class StreamingSpec extends SparkSpecBase {
     // stream is started with DIFFERENT (default) parameters — matches
     // can only be found if the stream banded with the meta's geometry
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_sdedup_extend_" + System.nanoTime()
+    val base = tempDir("sdedup_extend")
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (2L, "completely different content about spark catalyst optimizer and tungsten"))
@@ -439,7 +439,7 @@ class StreamingSpec extends SparkSpecBase {
     // directions — the within-batch ordering stays the only source of
     // same-batch pairs (index copies of batch ids are anti-joined away)
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_sdedup_resend_" + System.nanoTime()
+    val base = tempDir("sdedup_resend")
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamingDedup.run(
       spark,
@@ -468,7 +468,7 @@ class StreamingSpec extends SparkSpecBase {
     // SMALLER than its already-indexed duplicate's id must still match
     // (an a.id > b.id join against the index would silently drop it)
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_sdedup_idorder_" + System.nanoTime()
+    val base = tempDir("sdedup_idorder")
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamingDedup.run(
       spark,
@@ -488,7 +488,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(matches == Set((5L, 100L)), s"smaller-id arrival must match the index: $matches")
 
     // same property for the embeddings path
-    val ebase = "/tmp/graft_ssem_idorder_" + System.nanoTime()
+    val ebase = tempDir("ssem_idorder")
     val estream = MemoryStream[(Long, Array[Float])]
     val eq = graft.streaming.StreamingDedup.runEmbeddings(
       spark,
@@ -510,7 +510,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("streaming semantic dedup screens new embeddings against the persisted vector index") {
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_ssemdedup_" + System.nanoTime()
+    val base = tempDir("ssemdedup")
     val stream = MemoryStream[(Long, Array[Float])]
     val q = graft.streaming.StreamingDedup.runEmbeddings(
       spark,
@@ -545,7 +545,7 @@ class StreamingSpec extends SparkSpecBase {
     // IVF quantizer (trained once on the first batch) and still find
     // cross-batch and within-batch duplicates via cell-local probes
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_ssem_lowt_" + System.nanoTime()
+    val base = tempDir("ssem_lowt")
     val stream = MemoryStream[(Long, Array[Float])]
     val q = graft.streaming.StreamingDedup.runEmbeddings(
       spark,
@@ -580,7 +580,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("streaming semantic dedup re-trains its quantizer when a batch drifts") {
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_ssem_drift_" + System.nanoTime()
+    val base = tempDir("ssem_drift")
     val stream = MemoryStream[(Long, Array[Float])]
     val q = graft.streaming.StreamingDedup.runEmbeddings(
       spark,
@@ -630,7 +630,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("streaming keep-best: a higher-quality late arrival replaces the indexed representative") {
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_skeepbest_" + System.nanoTime()
+    val base = tempDir("skeepbest")
     val stream = MemoryStream[(Long, String, Double)]
     val q = graft.streaming.StreamingDedup.runKeepBest(
       spark,
@@ -694,7 +694,7 @@ class StreamingSpec extends SparkSpecBase {
     // partition would hide the demoted rep from the probe, index the
     // winner as a fresh rep, and then overwrite the tombstone partition
     // with an empty one — leaving BOTH reps active.
-    val base = "/tmp/graft_skb_replay_" + System.nanoTime()
+    val base = tempDir("skb_replay")
     val textA = "the quick brown fox jumps over the lazy dog near the river bank today"
     def activeReps(): Set[Long] = {
       val idx = spark.read.parquet(s"$base/index").select(col("id"))
@@ -743,7 +743,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("streaming contamination screens micro-batches against the static eval gram set") {
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_scontam_" + System.nanoTime()
+    val base = tempDir("scontam")
     val eval = graft.streaming.StreamingContamination.evalGramSet(
       Seq((100L, "alpha beta gamma delta epsilon zeta eta theta")).toDF("doc_id", "text"),
       "doc_id", "text", n = 5)
@@ -779,7 +779,7 @@ class StreamingSpec extends SparkSpecBase {
     import graft.schema.TestSchema
     import graft.sources.{Changelog, Rollup}
     import graft.functions.F
-    val base = "/tmp/graft_stream_layout"
+    val base = tempDir("stream_layout")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(base), true)
 
@@ -824,7 +824,7 @@ class StreamingSpec extends SparkSpecBase {
   test("log-structured streaming upsert: latest version wins, compaction preserves state") {
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.Upsert
-    val base = "/tmp/graft_upsert_log"
+    val base = tempDir("upsert_log")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(base), true)
 
@@ -960,7 +960,7 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Ann
     import graft.streaming.StreamingVectorAdmit
-    val base = "/tmp/graft_svecadmit_" + System.nanoTime()
+    val base = tempDir("svecadmit")
     val idx = s"$base/index"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -1037,7 +1037,7 @@ class StreamingSpec extends SparkSpecBase {
   test("vector-admission novelty probe is sidecar-sized: clean batches read no index data") {
     import graft.operators.Ann
     import graft.streaming.StreamingVectorAdmit
-    val base = "/tmp/graft_svecadmit_bloom_" + System.nanoTime()
+    val base = tempDir("svecadmit_bloom")
     val idx = s"$base/index"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -1108,7 +1108,7 @@ class StreamingSpec extends SparkSpecBase {
   test("streaming vector admission: per-id novelty on mixed batches; crash-marker recovery") {
     import graft.operators.Ann
     import graft.streaming.StreamingVectorAdmit
-    val base = "/tmp/graft_svecadmit_edge_" + System.nanoTime()
+    val base = tempDir("svecadmit_edge")
     val idx = s"$base/index"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -1206,7 +1206,7 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamingAnomaly
     import graft.operators.Funnel
-    val base = "/tmp/graft_sanomaly_" + System.nanoTime()
+    val base = tempDir("sanomaly")
     val stream = MemoryStream[(Timestamp, String)]
     val events = stream.toDS().toDF("ts", "event_type")
     val q = StreamingAnomaly.run(
@@ -1258,4 +1258,70 @@ class StreamingSpec extends SparkSpecBase {
     // event_id falls through to the metric map; user_id to the 0 default
     assert(r == Seq((42L, Timestamp.valueOf("2024-01-01 00:00:01"), 0L, "click", 1.0)))
   }
+
+  // ───────────── Spark jobs per streaming-dedup trigger ─────────────
+
+  // Pins the Spark jobs one streaming-dedup trigger runs: a bounded
+  // keep-best micro-batch (driver-resolved clusters) and one
+  // `StreamingDedup.run` trigger that probes an existing index. The
+  // bounds are the counts measured before keep-best moved into
+  // `Dedup.dedupKeepBest`; a trigger may get cheaper, never dearer.
+  // Keep-best's overlapped sinks read one cached frame, and a sink that
+  // plans before another has loaded it runs its own cache jobs, so that
+  // trigger's count varies by 3 between runs (28 or 31 before the move);
+  // the bound is the lower count.
+  private val pinText = "the quick brown fox jumps over the lazy dog near the river bank today"
+
+  private def jobsIn(body: => Unit): (Long, Seq[String]) = {
+    val c = new JobCounter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(c)
+    try c.jobsAndLabels(body) finally spark.sparkContext.removeSparkListener(c)
+  }
+
+  private def tally(labels: Seq[String]): String =
+    labels.map(_.replace('\n', ' ')).groupBy(identity).map { case (l, n) => s"$l×${n.size}" }.mkString(", ")
+
+  test("one bounded keep-best trigger runs no more jobs than before the resolver moved") {
+    val base = tempDir("keepbest_jobs")
+    def trigger(id: Long, rows: (Long, String, Double)*): Unit =
+      graft.streaming.StreamingDedup.keepBestBatch(rows.toDF("doc_id", "text", "q"), id, col("q"),
+        s"$base/index", s"$base/decisions")
+    trigger(0L, (10L, pinText, 0.4), (11L, pinText + " indeed", 0.6),
+      (12L, "completely different text about gardens and walls and towers", 0.5))
+    trigger(1L, (20L, pinText + " again", 0.9))
+    // probes an index with tombstones; one in-batch cluster, one loser
+    // to the indexed rep, one fresh doc
+    val (jobs, labels) = jobsIn {
+      trigger(2L, (30L, pinText + " truly", 0.7),
+        (31L, "an unrelated sentence about lighthouses and their keepers at night", 0.2),
+        (32L, "an unrelated sentence about lighthouses and their keepers at night too", 0.3),
+        (33L, "a fresh document on tide tables and harbour charts", 0.1))
+    }
+    info(s"keep-best trigger jobs: $jobs, labels: ${tally(labels)}")
+    assert(jobs <= KeepBestTriggerJobs, s"keep-best trigger ran $jobs jobs, pinned ≤ $KeepBestTriggerJobs")
+  }
+
+  test("one StreamingDedup.run trigger over an existing index keeps its job count and labels") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = tempDir("sdedup_jobs")
+    val stream = MemoryStream[(Long, String)]
+    val q = graft.streaming.StreamingDedup.run(spark, stream.toDF().toDF("doc_id", "text"),
+      indexPath = s"$base/index", matchesPath = s"$base/matches",
+      threshold = 0.5, checkpoint = s"$base/ckpt")
+    try {
+      stream.addData((1L, pinText), (2L, "completely different content about catalyst optimizer internals"))
+      q.processAllAvailable()
+      val (jobs, labels) = jobsIn {
+        stream.addData((3L, pinText + " again"), (4L, "yet another unrelated piece on columnar storage"))
+        q.processAllAvailable()
+      }
+      info(s"run trigger jobs: $jobs, labels: ${tally(labels)}")
+      assert(jobs <= RunTriggerJobs, s"run trigger ran $jobs jobs, pinned ≤ $RunTriggerJobs")
+      assert(labels.filter(_.startsWith("streamdedup:")).toSet ==
+        Set("streamdedup:batch-count", "streamdedup:matches-write", "streamdedup:sigs-write"))
+    } finally q.stop()
+  }
+
+  private val KeepBestTriggerJobs = 28L
+  private val RunTriggerJobs = 11L
 }
