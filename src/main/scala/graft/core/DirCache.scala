@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrameReader, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /**
  * Driver-side cache of small per-directory loads (index meta rows,
@@ -66,7 +67,12 @@ object DirCache {
    * a documented contract at several call sites): it falls through to
    * the uncached load.
    */
-  def cached[T <: AnyRef](spark: SparkSession, dir: String)(load: => T): T = {
+  def cached[T <: AnyRef](spark: SparkSession, dir: String)(load: => T): T =
+    cachedAs(spark, dir, dir)(load)
+
+  /** [[cached]] under `key`: a second value kept for the same dir (its
+    * footer schema beside a loader's rows) must not share its entry. */
+  private def cachedAs[T <: AnyRef](spark: SparkSession, dir: String, key: String)(load: => T): T = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fp =
@@ -75,15 +81,15 @@ object DirCache {
         case _: java.io.FileNotFoundException =>
           // deleted dir: drop any stale entry instead of leaving it to
           // age out — keeps the map honest under dir-churning workloads
-          cache.synchronized { cache.remove(dir); () }
+          cache.synchronized { cache.remove(key); () }
           return load
       }
     val appId = spark.sparkContext.applicationId
-    val cur = get(dir)
+    val cur = get(key)
     if (cur != null && cur._1 == appId && cur._2 == fp) cur._3.asInstanceOf[T]
     else {
       val v = load
-      putEntry(dir, (appId, fp, v))
+      putEntry(key, (appId, fp, v))
       v
     }
   }
@@ -121,16 +127,61 @@ object DirCache {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def count(d: org.apache.hadoop.fs.Path): Long = fs.listStatus(d).iterator.map { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) 0L
+      if (hidden(st.getPath.getName)) 0L
       else if (st.isDirectory) count(st.getPath)
-      else {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
+      else footer(spark, st)(_.getRecordCount)
     }.sum
     count(root)
+  }
+
+  /** Names Spark's own listing skips: `.x`, and `_x` unless it is a
+    * `k=v` partition dir. */
+  private def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+
+  private def footer[T](spark: SparkSession, st: org.apache.hadoop.fs.FileStatus)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromStatus(st, spark.sparkContext.hadoopConfiguration)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try f(r) finally r.close()
+  }
+
+  /**
+   * The data schema of a parquet dir this engine wrote, from ONE footer
+   * read on the driver — the schema Spark's own inference would return
+   * (it too reads one footer when schemas are not merged, and prefers
+   * the Spark schema the writer stored there), without its Spark job.
+   * Partition columns are not in a footer: a read given this schema
+   * still discovers them from the `k=v` dirs. Cached by dir
+   * fingerprint. None when the dir holds no data file yet or the footer
+   * carries no Spark schema; the caller then lets Spark infer.
+   */
+  def parquetSchema(spark: SparkSession, dir: String): Option[StructType] =
+    cachedAs(spark, dir, dir + "/#schema") {
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def firstFile(d: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.FileStatus] =
+        fs.listStatus(d).sortBy(_.getPath.getName).iterator
+          .filterNot(st => hidden(st.getPath.getName))
+          .flatMap(st => if (st.isDirectory) firstFile(st.getPath) else Some(st))
+          .nextOption()
+      try firstFile(root).flatMap { st =>
+        footer(spark, st)(r => Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")))
+      }.map(json => nullable(DataType.fromJson(json)).asInstanceOf[StructType])
+      catch { case _: java.io.FileNotFoundException => None }
+    }
+
+  /** `spark.read` carrying [[parquetSchema]] of `dir` when it is known. */
+  def reader(spark: SparkSession, dir: String): DataFrameReader =
+    parquetSchema(spark, dir).fold(spark.read)(spark.read.schema)
+
+  /** Spark reads every parquet column as nullable. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 }

@@ -1180,9 +1180,31 @@ object Ann {
    */
   def ivfDriftFraction(spark: SparkSession, path: String, newVecs: DataFrame): Double = {
     graft.sql.GraftFunctions.register(spark)
+    driftBasis(spark, path).fold(1.0) { case (cents, p95) =>
+      graft.core.Jobs.desc(spark, "ann:drift")(overP95Fraction(newVecs, "embedding", cents, p95))
+    }
+  }
+
+  /** [[ivfDriftFraction]] of vectors held on the driver (NULL vectors
+    * skipped, as `avg` skips them): the same kernel and the same SQL
+    * comparison, so the same fraction, with no job. */
+  private[graft] def ivfDriftFractionLocal(
+      spark: SparkSession, path: String, newVecs: Seq[Array[Float]]): Double =
+    driftBasis(spark, path).fold(1.0) { case (cents, p95) =>
+      val ds = newVecs.filter(_ != null).map(v =>
+        graft.functions.expressions.VectorOps.nearestDist2(
+          org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v), cents))
+      if (ds.isEmpty) 0.0
+      else ds.count(d => org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(d, p95) > 0)
+        .toDouble / ds.length
+    }
+
+  /** The stored centroids and train-time p95, both driver-cached; None
+    * for an index without stats. */
+  private def driftBasis(spark: SparkSession, path: String): Option[(Array[Array[Float]], Double)] = {
     val statsPath = new org.apache.hadoop.fs.Path(s"$path/stats")
     val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(statsPath)) 1.0
+    if (!fs.exists(statsPath)) None
     else graft.core.Jobs.desc(spark, "ann:drift") {
       val cents = loadIvfCentroids(spark, path)
       // p95 cached like the centroids: one number re-read per trigger
@@ -1190,7 +1212,7 @@ object Ann {
         java.lang.Double.valueOf(
           spark.read.parquet(statsPath.toString).head().getDouble(0))
       }.doubleValue()
-      overP95Fraction(newVecs, "embedding", cents, p95)
+      Some((cents, p95))
     }
   }
 
@@ -1240,7 +1262,7 @@ object Ann {
     val dirs = graft.core.ShardStore.committed(spark, s"$path/$deltaDir")
     if (dirs.isEmpty) None
     else Some(
-      spark.read.option("basePath", s"$path/$deltaDir")
+      graft.core.DirCache.reader(spark, s"$path/$deltaDir").option("basePath", s"$path/$deltaDir")
         .parquet(dirs.map(_.toString).toIndexedSeq: _*)
         .select(cols.map(col): _*))
   }
@@ -1265,6 +1287,7 @@ object Ann {
   /** Sidecar filename inside a written assignments/codes/shard dir —
     * the underscore keeps it invisible to parquet directory reads. */
   private[graft] val IdBloomFile = "_ids_bloom"
+  private val IdBloomFpp = 0.03
 
   /**
    * Write the id Bloom sidecar for the rows just written under `dir`
@@ -1295,9 +1318,9 @@ object Ann {
     // irreducible work.
     val n = if (knownRows >= 0L) knownRows
             else graft.core.DirCache.parquetRowCount(spark, dir)
-    val ids = spark.read.parquet(dir).select(col("item_id"))
+    val ids = graft.core.DirCache.reader(spark, dir).parquet(dir).select(col("item_id"))
     val bf = graft.core.Jobs.desc(spark, "ann:bloom:agg") {
-      ids.stat.bloomFilter("item_id", math.max(1L, n), 0.03)
+      ids.stat.bloomFilter("item_id", math.max(1L, n), IdBloomFpp)
     }
     // tear-safe, nonce-fingerprinted write — readIdBloomBcast's cache
     // keys on the nonce, so a rebuilt sidecar of identical length can
@@ -1428,6 +1451,21 @@ object Ann {
       newVecs: DataFrame,
       path: String,
       shard: String
+  ): Unit = appendToIvfIndex(newVecs, path, shard, None)
+
+  /** [[appendToIvfIndex]]; with `heldIds` (the non-NULL ids of
+    * `newVecs`), `newVecs` is a driver-local frame of rows the caller
+    * holds: the assignment folds into it on the driver, its rows are
+    * sorted by cell so that each of the local scan's contiguous slices
+    * writes a few cells (about one file per cell, as the rebalance
+    * gives), and the id sidecar is built from `heldIds` with the
+    * read-back aggregation's own `BloomFilter.create(n, fpp)` and
+    * `putLong`. The shard's only job is its write. */
+  private[graft] def appendToIvfIndex(
+      newVecs: DataFrame,
+      path: String,
+      shard: String,
+      heldIds: Option[Seq[Long]]
   ): Unit = {
     require(shard.nonEmpty, "shard name must be non-empty")
     val spark = newVecs.sparkSession
@@ -1448,9 +1486,15 @@ object Ann {
     // instead of handing it to one straggler task. The assignment
     // expression still evaluates map-side (before the exchange), in
     // the source's own parallelism.
-    val assigned = newVecs.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
+    val cells = newVecs.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
       .withColumn("cell", nearestCentroidBc(col("item_vec"), bcastCentroids(spark, cents)))
-      .hint("rebalance", col("cell"))
+    val assigned =
+      if (heldIds.isEmpty) cells.hint("rebalance", col("cell"))
+      else {
+        import scala.jdk.CollectionConverters._
+        val sorted = cells.collect().sortBy(r => if (r.isNullAt(2)) -1 else r.getInt(2))
+        spark.createDataFrame(sorted.toSeq.asJava, cells.schema)
+      }
     // family dispatch: an IVF-PQ index stores CODES, so its delta does
     // too — the new batch is encoded with the EXISTING codebooks (the
     // same one-narrow-pass discipline; code quality for drifted data
@@ -1466,7 +1510,15 @@ object Ann {
     val n = graft.core.Jobs.desc(spark, step) {
       graft.core.Jobs.observedWrite(rows)(_.write.mode("overwrite").partitionBy("cell").parquet(dir))
     }
-    graft.core.Jobs.desc(spark, "ann:append:bloom")(writeIdBloom(spark, dir, n))
+    graft.core.Jobs.desc(spark, "ann:append:bloom")(heldIds match {
+      // no row, no data file: no sidecar (writeIdBloom's committed check)
+      case Some(ids) => if (n > 0L) {
+        val bf = org.apache.spark.util.sketch.BloomFilter.create(n, IdBloomFpp)
+        ids.foreach(bf.putLong)
+        graft.core.BloomSidecar.write(spark, dir, IdBloomFile, bf)
+      }
+      case None => writeIdBloom(spark, dir, n)
+    })
   }
 
   /**
@@ -1529,10 +1581,11 @@ object Ann {
       // without it are "conflicting directory structures" to
       // partition inference (each root IS a partition dir); with it,
       // shard and cell are both discovered and dataCols drops shard
-      val deltaRows = spark.read.option("basePath", s"$path/$deltaDir")
+      val deltaRows = graft.core.DirCache.reader(spark, s"$path/$deltaDir")
+        .option("basePath", s"$path/$deltaDir")
         .parquet(snap.map(_.toString).toIndexedSeq: _*)
       graft.core.Jobs.desc(spark, "ann:promote:stage") {
-        spark.read.parquet(s"$path/$baseDir")
+        graft.core.DirCache.reader(spark, s"$path/$baseDir").parquet(s"$path/$baseDir")
           .unionByName(deltaRows.select(dataCols: _*))
           // a prior crash window may have merged rows whose shard dir
           // survived; items are identity-keyed, duplicates collapse
@@ -1551,7 +1604,8 @@ object Ann {
         // the rewrite IS the compaction opportunity: cell-cluster the
         // lasting base layout (~1 file per cell, hot cells split at the
         // advisory size — see buildIvfIndex)
-        graft.core.Jobs.observedWrite(spark.read.parquet(stage).hint("rebalance", col("cell"))) {
+        graft.core.Jobs.observedWrite(
+            graft.core.DirCache.reader(spark, stage).parquet(stage).hint("rebalance", col("cell"))) {
           _.write.mode("overwrite").partitionBy("cell").parquet(s"$path/$baseDir")
         }
       }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import graft.functions.F
 
 /**
@@ -78,17 +77,19 @@ object Dedup {
   /** [[minhashSigs]] carrying `keep` columns of `df` through the
     * signature pass — a caller that needs (sig, score) pays the narrow
     * map only, not a post-hoc self-join to re-attach its own columns
-    * (one exchange per streaming trigger in keep-best). */
+    * (one exchange per streaming trigger in keep-best). Without
+    * `spread` the pass runs in `df`'s own partitioning (a bounded batch
+    * that is collected next gains nothing from a round-robin shuffle). */
   private[graft] def minhashSigsKeep(
       df: DataFrame, idCol: String, textCol: String, numHashes: Int, shingleSize: Int,
-      keep: Seq[String]): DataFrame = {
+      keep: Seq[String], spread: Boolean = true): DataFrame = {
     // One narrow pass via the fused TextMinHash expression (tokenize →
     // shingle-hash → k minima, no intermediate strings). Earlier shapes
     // measured at sf0.1: nested transform 70s+, explode + 64
     // partial-agg mins 11s, HOF shingles + native minhash ~10s cold
     // (interpreter warm-up dominates), fused ~1s.
     graft.sql.GraftFunctions.register(df.sparkSession)
-    Ann.spread(df).select(
+    (if (spread) Ann.spread(df) else df).select(
       col(idCol).as("id") +:
         call_function("graft_text_minhash", col(textCol), lit(shingleSize), lit(numHashes)).as("sig") +:
         keep.map(col): _*
@@ -1631,8 +1632,7 @@ object Dedup {
       val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(idType)
       val table = new java.util.HashMap[Any, Any](m.size * 2)
       m.foreach { case (k, v) => table.put(toCatalyst(k), toCatalyst(v)) }
-      ExpressionUtils.column(graft.functions.expressions.BroadcastLookup(
-        ExpressionUtils.expression(key.cast(idType)), pairs.sparkSession.sparkContext.broadcast(table), idType))
+      graft.functions.expressions.BroadcastLookup.column(pairs.sparkSession, key.cast(idType), table, idType)
     }
   }
 
@@ -1996,8 +1996,8 @@ object Dedup {
     /** What a band key depends on: indexes whose band rows meet in one
       * candidate join must agree on it. */
     def banding: (Int, Int, Int) = (numHashes, bands, shingleSize)
-    def sigs(df: DataFrame, idCol: String, textCol: String): DataFrame =
-      minhashSigs(df, idCol, textCol, numHashes, shingleSize)
+    def sigs(df: DataFrame, idCol: String, textCol: String, spread: Boolean = true): DataFrame =
+      minhashSigsKeep(df, idCol, textCol, numHashes, shingleSize, Nil, spread)
     def band(sigs: DataFrame, carry: Seq[String] = Nil): DataFrame =
       bandedFromSigs(sigs, bands, rowsPerBand, carry)
     def bandDocs(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -2371,14 +2371,16 @@ object Dedup {
     // admission's write still in flight — see [[graft.core.ShardStore]]).
     val snapshot = readableShardDirs(spark, path)
     if (snapshot.isEmpty) return 0 // nothing to fold
-    val mergedRows = graft.core.Jobs.observedWrite(
-      spark.read.parquet(snapshot.map(_.toString).toIndexedSeq: _*)
-        .select(col("id"), col("sig"))
-        // collapse exact-duplicate rows: a crash in a previous run's
-        // step-2..3 window leaves migrated signatures twice (__compacted +
-        // stale shard dir); the re-run merges them back to one row
-        .dropDuplicates(Seq("id", "sig"))) {
-      _.write.mode("overwrite").parquet(compacting.toString)
+    val mergedRows = graft.core.Jobs.desc(spark, "textindex:compact:merge") {
+      graft.core.Jobs.observedWrite(
+        graft.core.DirCache.reader(spark, sigsPath).parquet(snapshot.map(_.toString).toIndexedSeq: _*)
+          .select(col("id"), col("sig"))
+          // collapse exact-duplicate rows: a crash in a previous run's
+          // step-2..3 window leaves migrated signatures twice (__compacted +
+          // stale shard dir); the re-run merges them back to one row
+          .dropDuplicates(Seq("id", "sig"))) {
+        _.write.mode("overwrite").parquet(compacting.toString)
+      }
     }
     if (!fs.rename(compacting, compacted))
       throw new java.io.IOException(s"compaction swap failed: rename $compacting -> $compacted")
@@ -2390,7 +2392,9 @@ object Dedup {
     // rows rode through sigs_compacting, which carries no sidecar, so
     // until this line the new base is bloom-less — read fully, never
     // wrongly skipped
-    writeBandsBloom(spark, s"$sigsPath/shard=__base", TextIndexGeometry.read(spark, path), mergedRows)
+    graft.core.Jobs.desc(spark, "textindex:compact:bloom") {
+      writeBandsBloom(spark, s"$sigsPath/shard=__base", TextIndexGeometry.read(spark, path), mergedRows)
+    }
     snapshot.length
   }
 
@@ -2617,7 +2621,7 @@ object Dedup {
     // sidecar).
     val n = sigRows * geom.bands
     if (n == 0L || n > BandsBloomKeyCap) return
-    val keys = geom.band(spark.read.parquet(dir).select(col("id"), col("sig")))
+    val keys = geom.band(graft.core.DirCache.reader(spark, dir).parquet(dir).select(col("id"), col("sig")))
       .select(bandKeyCol.as("k"))
     graft.core.BloomSidecar.write(spark, dir, BandsBloomFile,
       keys.stat.bloomFilter("k", n, BandsBloomFpp))

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape (100 TB): the key adds ~12 integer ops per row in the
  * projection; the one exchange is the range partition by zkey that any
- * sorted write pays (sample-based bounds, AQE-compatible), then
- * sortWithinPartitions feeds parquet row-group stats. Nothing is
- * collected or broadcast.
+ * sorted write pays (bounds from one approximate-quantile pass), then
+ * sortWithinPartitions feeds parquet row-group stats. Only the
+ * `numFiles - 1` bounds are collected.
  */
 object ZOrder {
 
@@ -98,15 +98,34 @@ object ZOrder {
    * within each, drop the key, write parquet. Each output file is a
    * tight box in BOTH dimensions — its parquet min/max stats admit
    * skipping for predicates on either column.
+   *
+   * The range bounds are z-key quantiles (`approxQuantile`, rank error
+   * under 1/64 of a file), and each row goes to the partition of its
+   * range through an identity partitioner, one file per range. So the
+   * layout is a function of the data: `repartitionByRange` would sample
+   * with a seed taken from the input RDD's id, and the same rows would
+   * land in different files depending on how many RDDs the process had
+   * created before.
    */
   def write(
       df: DataFrame, aCol: String, bCol: String, path: String,
-      numFiles: Int, bits: Int = MaxBits): Unit =
-    df.withColumn("__zkey", zkey(col(aCol), col(bCol), bits))
-      .repartitionByRange(numFiles, col("__zkey"))
+      numFiles: Int, bits: Int = MaxBits): Unit = {
+    val keyed = df.withColumn("__zkey", zkey(col(aCol), col(bCol), bits))
+    val bounds = keyed.stat
+      .approxQuantile("__zkey", (1 until numFiles).map(_.toDouble / numFiles).toArray, 1.0 / (64 * numFiles))
+      .distinct.sorted
+    // range i holds keys in (bounds(i - 1), bounds(i)]; NULL keys go first
+    val range = coalesce(bounds.foldLeft(lit(0))((n, b) => n + (col("__zkey") > b).cast("int")), lit(0))
+    val ranged = keyed.withColumn("__range", range)
+    val at = ranged.schema.fieldIndex("__range")
+    // a HashPartitioner over Int keys 0 until numFiles is the identity
+    val rows = ranged.rdd.keyBy(_.getInt(at))
+      .partitionBy(new org.apache.spark.HashPartitioner(numFiles)).values
+    df.sparkSession.createDataFrame(rows, ranged.schema)
       .sortWithinPartitions(col("__zkey"))
-      .drop("__zkey")
+      .drop("__zkey", "__range")
       .write.mode("overwrite").parquet(path)
+  }
 
   /** Per-file (min, max) boxes of the given columns — the skippability
     * surface a reader's min/max pruning sees. One narrow scan. */

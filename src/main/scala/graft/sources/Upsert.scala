@@ -75,7 +75,9 @@ object Upsert {
     * verbatim, so within-batch duplicates are the caller's data
     * arriving, not a bug to reject). */
   def readLatest(spark: org.apache.spark.sql.SparkSession, path: String, keys: Seq[String]): DataFrame = {
-    val log = spark.read.parquet(path)
+    // schema from one footer: only this store writes the log, so the
+    // (re)created view runs no schema-inference job
+    val log = graft.core.DirCache.reader(spark, path).parquet(path)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__seq").desc, rowTieBreak(log, Set("__seq")).asc)
     log
@@ -100,9 +102,11 @@ object Upsert {
    * key it shares with older versions.
    */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String, keys: Seq[String]): Unit = {
-    val log = spark.read.parquet(path)
+    val log = graft.core.DirCache.reader(spark, path).parquet(path)
     // partition-column inference reads __seq back as int
-    val maxSeq = log.agg(max(col("__seq"))).head().get(0).asInstanceOf[Number].longValue()
+    val maxSeq = graft.core.Jobs.desc(spark, "upsert:compact:max-seq") {
+      log.agg(max(col("__seq"))).head().get(0).asInstanceOf[Number].longValue()
+    }
     val merged = {
       // same deterministic tie-break as readLatest: compaction must
       // materialize exactly the row readLatest would have returned
@@ -113,13 +117,16 @@ object Upsert {
         .filter(col("__rn") === 1)
         .drop("__seq", "__rn")
     }
-    merged
-      .localCheckpoint(true) // materialize before overwriting a path we read from
-      .withColumn("__seq", lit(maxSeq))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__seq")
-      .parquet(path)
+    // materialize before overwriting a path we read from
+    val staged = graft.core.Jobs.desc(spark, "upsert:compact:merge")(merged.localCheckpoint(true))
+    graft.core.Jobs.desc(spark, "upsert:compact:write") {
+      staged
+        .withColumn("__seq", lit(maxSeq))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__seq")
+        .parquet(path)
+    }
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listStatus(new org.apache.hadoop.fs.Path(path))
     it.foreach { st =>

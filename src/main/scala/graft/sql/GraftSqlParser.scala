@@ -767,7 +767,8 @@ case class PromoteVectorIndexDeltaCommand(indexPath: String) extends LeafRunnabl
     GraftAuth.check(spark, GraftAuth.PathTable(indexPath), GraftAuth.Write)
     val folded = graft.operators.Ann.promoteIvfDeltaImpl(spark, indexPath, () => ())
     val (baseDir, _) = graft.operators.Ann.vecDirs(spark, indexPath)
-    Seq(Row(indexPath, folded.toLong, spark.read.parquet(s"$indexPath/$baseDir").count()))
+    // the base row count from its footers: no schema-inference or count job
+    Seq(Row(indexPath, folded.toLong, graft.core.DirCache.parquetRowCount(spark, s"$indexPath/$baseDir")))
   }
 }
 
@@ -1618,20 +1619,32 @@ case class UpsertCommand(table: String, cols: Seq[String], valuesSql: String)
       if (canonCols.contains(c)) org.apache.spark.sql.functions.col(c).cast(typed).as(c)
       else org.apache.spark.sql.functions.lit(null).cast(typed).as(c)
     }
-    // within-batch put semantics must be deterministic: all rows of one
-    // statement share a version, and readLatest's tie-break within a
-    // version is arbitrary — so keep only the LAST occurrence of each
-    // key (VALUES order), the same winner sequential puts would leave
-    import org.apache.spark.sql.functions.{col => fcol, monotonically_increasing_id, row_number}
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(entry.keys.map(fcol): _*)
-      .orderBy(fcol("__ord").desc)
-    val batch = named.select(full: _*)
-      .withColumn("__ord", monotonically_increasing_id())
-      .withColumn("__rn", row_number().over(w))
-      .filter(fcol("__rn") === 1)
-      .drop("__ord", "__rn")
-    val n = batch.count()
+    // The VALUES rows are a literal local relation, so the casts are a
+    // projection the optimizer evaluates on the driver and this collect
+    // runs no job. Within-batch put semantics must be deterministic:
+    // all rows of one statement share a version, and readLatest's
+    // tie-break within a version is arbitrary — so keep only the LAST
+    // occurrence of each key (VALUES order), the same winner sequential
+    // puts would leave. Keys compare as SQL groups them: -0.0 and 0.0
+    // are one key, as are all NaNs (by their canonical bits: boxed NaNs
+    // are never `==`).
+    val typed = named.select(full: _*)
+    val keyAt = entry.keys.map(typed.schema.fieldIndex)
+    def sqlKey(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+      case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+      case b: Array[Byte] => b.toSeq
+      case other => other
+    }
+    val lastOfKey = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Row]
+    typed.collect().foreach { r =>
+      val k = keyAt.map(i => sqlKey(r.get(i)))
+      lastOfKey.remove(k)
+      lastOfKey(k) = r
+    }
+    import scala.jdk.CollectionConverters._
+    val batch = spark.createDataFrame(lastOfKey.values.toSeq.asJava, typed.schema)
+    val n = lastOfKey.size.toLong
     // result-cache hook (reference cache layer invalidates on put): the
     // PRE-append data version is captured here — entries keyed on it
     // become stale the moment the new version lands, and if a cache
@@ -1647,7 +1660,7 @@ case class UpsertCommand(table: String, cols: Seq[String], valuesSql: String)
     // the cross-process single-writer contract
     val seq = UpsertTables.lockFor(table).synchronized {
       val s = UpsertTables.nextSeq(spark, entry.logPath)
-      graft.sources.Upsert.appendVersion(batch, entry.logPath, s)
+      graft.core.Jobs.desc(spark, "upsert:append")(graft.sources.Upsert.appendVersion(batch, entry.logPath, s))
       s
     }
     UpsertTables.refreshView(spark, table)

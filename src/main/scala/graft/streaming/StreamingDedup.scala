@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
-import graft.core.{Jobs, ShardStore}
+import org.apache.spark.sql.types.{BooleanType, StructType}
+import graft.core.{DirCache, Jobs, ShardStore}
+import graft.functions.F
+import graft.functions.expressions.{BroadcastBandProbe, BroadcastLookup}
 import graft.operators.Dedup
 
 /**
@@ -20,11 +23,18 @@ import graft.operators.Dedup
  *
  * Trigger discipline — one core ([[trigger]] and [[Batch]]) for every
  * variant (run, runEmbeddings, and runKeepBest's rep probe):
- *  - ONE count of the cached batch rows (`<label>:batch-count`) is both
- *    the empty-batch guard (an empty batch writes nothing) and the
- *    input of every broadcast bound below.
- *  - Within-batch pairs come from a batch-sized self-join in id order,
- *    so each pair appears once.
+ *  - ONE job sizes the batch (`<label>:batch-count`) and is the
+ *    empty-batch guard (an empty batch writes nothing). For run and
+ *    runEmbeddings it is a `limit(bound + 1)` collect at the keyed
+ *    probe's broadcast bound: a batch within it takes the DRIVER PATH —
+ *    its rows become a driver-local frame, and the keyed rows ship once
+ *    as a broadcast bh → rows map that the batch's own rows and the
+ *    index scan look up, so a trigger runs the collect, the matches
+ *    exchange and write, and the signature write, with no join job.
+ *    Past the bound (and always for keep-best) the batch is cached and
+ *    counted once, and the joins below run.
+ *  - Within-batch pairs pair each batch row with the batch rows sharing
+ *    a band key, in id order, so each pair appears once.
  *  - The index probe BROADCASTS the keyed batch and the corpus-sized
  *    index SCANS through it: zero exchange and zero sort on the index
  *    side per trigger. A plain two-sided band join would re-shuffle the
@@ -86,7 +96,7 @@ object StreamingDedup {
     * struct/key overhead — a fixed row bound that assumed ~8 KB per
     * document would blow past the 8 GB broadcast hard limit for wide
     * embeddings with many bands. */
-  private def bcastRowBound(fanOut: Int, payloadBytes: Long): Long =
+  private[streaming] def bcastRowBound(fanOut: Int, payloadBytes: Long): Long =
     Dedup.bandedBroadcastDocs(math.max(1, fanOut).toLong * math.max(64L, payloadBytes + 48L))
 
   /** Estimated jaccard between the joined `a.sig`/`b.sig` columns. */
@@ -106,72 +116,125 @@ object StreamingDedup {
       .foreachBatch { (batch: DataFrame, batchId: Long) => onBatch(batch, batchId) }
       .start()
 
-  /** One trigger: `rows` (the batch's rows, ids in `idCol`) cached and
-    * counted once, then, for a non-empty batch, the `sinks` it builds
-    * run overlapped under `<label>:<sink>-write` labels. Every frame
-    * cached through the [[Batch]] is released afterwards. Returns
-    * whether the batch was non-empty. */
-  private def trigger(label: String, batchId: Long, rows: DataFrame, idCol: String = "id")(
-      sinks: Batch => Seq[(String, () => Unit)]): Boolean = {
+  /** One trigger: a non-empty batch's `sinks` run overlapped under
+    * `<label>:<sink>-write` labels; returns whether the batch was
+    * non-empty. With `local` = (frame, bound), ONE `limit(bound + 1)`
+    * collect of that frame — the batch's rows (ids in `idCol`) plus
+    * their band keys in a `__keys` column — is the empty guard, the
+    * count and the path choice: a batch of at most `bound` rows runs its
+    * sinks over a driver-local frame of the collected rows. Otherwise
+    * `rows` is cached and counted once, and every frame cached through
+    * the [[Batch]] is released afterwards. */
+  private def trigger(label: String, batchId: Long, rows: DataFrame, idCol: String = "id",
+      local: Option[(DataFrame, Long)] = None)(sinks: Batch => Seq[(String, () => Unit)]): Boolean = {
+    val s = rows.sparkSession
     val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def hold(d: DataFrame): DataFrame = { held += d; d.cache() }
-    try {
-      val cached = hold(rows)
-      val n = Jobs.desc(rows.sparkSession, s"$label:batch-count")(cached.count())
-      n > 0 && {
-        Jobs.par(rows.sparkSession)(sinks(new Batch(cached, idCol, n, hold))
-          .map { case (sink, write) => s"$label:$sink-write" -> write }: _*)
-        true
-      }
+    def write(b: Batch): Boolean = {
+      Jobs.par(s)(sinks(b).map { case (sink, w) => s"$label:$sink-write" -> w }: _*)
+      true
+    }
+    val collected = local.map { case (frame, bound) =>
+      val r = Jobs.desc(s, s"$label:batch-count")(frame.limit(math.min(bound, Int.MaxValue - 1L).toInt + 1).collect())
+      (r, frame.schema, bound)
+    }
+    try collected match {
+      case Some((r, _, _)) if r.isEmpty => false
+      case Some((r, schema, bound)) if r.length <= bound =>
+        import scala.jdk.CollectionConverters._
+        val at = schema.fieldIndex("__keys")
+        val data = r.map(x => Row.fromSeq(x.toSeq.patch(at, Nil, 1)))
+        val keys = r.map(_.getSeq[Row](at).map(k => (k.getInt(0), k.getLong(1))))
+        val frame = s.createDataFrame(data.toSeq.asJava, StructType(schema.patch(at, Nil, 1)))
+        write(new Batch(frame, idCol, r.length, hold, Some(Held(data, keys))))
+      case _ =>
+        val cached = hold(rows)
+        val n = Jobs.desc(s, s"$label:batch-count")(cached.count())
+        n > 0 && write(new Batch(cached, idCol, n, hold, None))
     } finally held.foreach(_.unpersist())
   }
 
-  /** A non-empty micro-batch inside [[trigger]]: its cached `rows`,
-    * their count `n`, and `cache`, which caches a frame until the
-    * trigger's sinks have run. */
+  /** A driver-path batch's collected rows and each row's band keys. */
+  private final case class Held(rows: Array[Row], keys: Array[Seq[(Int, Long)]])
+
+  /** A non-empty micro-batch inside [[trigger]]: its `rows` (cached, or
+    * a driver-local frame of the `held` rows), their count `n`, and
+    * `cache`, which caches a frame until the trigger's sinks have run. */
   private final class Batch(val rows: DataFrame, idCol: String, val n: Long,
-      val cache: DataFrame => DataFrame) {
+      val cache: DataFrame => DataFrame, held: Option[Held]) {
     def s: SparkSession = rows.sparkSession
 
     /** Rows of the committed index under `dir` outside this trigger's
       * own partition `own` (the `key=value` dir its sink overwrites);
-      * None before the index's first commit. A `schema` known from the
-      * rows this trigger writes spares the read its schema-inference
-      * job. Cast: an all-numeric shard set would infer a numeric
-      * partition column, and comparing THAT to a string silently nulls
-      * the predicate. */
-    def committed(dir: String, own: String, schema: Option[StructType] = None): Option[DataFrame] = {
+      * None before the index's first commit. The schema comes from one
+      * footer ([[DirCache.parquetSchema]]), so the read runs no
+      * schema-inference job. Cast: an all-numeric shard set would infer
+      * a numeric partition column, and comparing THAT to a string
+      * silently nulls the predicate. */
+    def committed(dir: String, own: String): Option[DataFrame] = {
       val Array(key, value) = own.split("=", 2)
       if (!ShardStore.anyCommitted(s, dir, key + "=")) None
-      else Some(schema.fold(s.read)(s.read.schema).parquet(dir).filter(col(key).cast("string") =!= value))
+      else Some(DirCache.reader(s, dir).parquet(dir).filter(col(key).cast("string") =!= value))
     }
 
-    /** [[committed]] minus index copies of this batch's ids, the id side
-      * broadcast when `idsSmall`. */
-    def index(dir: String, own: String, idsSmall: Boolean,
-        schema: Option[StructType] = None): Option[DataFrame] = {
-      val ids = rows.select(col(idCol).as("id"))
-      committed(dir, own, schema).map(_.join(if (idsSmall) broadcast(ids) else ids, Seq("id"), "left_anti"))
-    }
+    /** [[committed]] minus index copies of this batch's ids: a lookup in
+      * a broadcast set of the held ids on the driver path, else an
+      * anti-join with the id side broadcast when `idsSmall`. */
+    def index(dir: String, own: String, idsSmall: Boolean): Option[DataFrame] =
+      committed(dir, own).map { c =>
+        held match {
+          case Some(h) =>
+            val at = rows.schema.fieldIndex(idCol)
+            val idType = rows.schema(at).dataType
+            val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+            val set = new java.util.HashMap[Any, Any]()
+            h.rows.foreach(r => if (!r.isNullAt(at)) set.put(toCatalyst(r.get(at)), true))
+            c.filter(BroadcastLookup.column(s, col("id").cast(idType), set, BooleanType).isNull)
+          case None =>
+            val ids = rows.select(col(idCol).as("id"))
+            c.join(if (idsSmall) broadcast(ids) else ids, Seq("id"), "left_anti")
+        }
+      }
 
-    /** Matches of `probe` ((id, payload) rows) keyed by `key` into
-      * (id, payload, band, bh): against itself in id order when
-      * `inBatch`, and against `index` in either id direction with the
-      * keyed probe broadcast when `small`; `sim` (over `a.*`/`b.*`) at
-      * least `threshold`, distinct. Columns: (new_id, existing_id,
-      * `simName`). */
-    def matches(probe: DataFrame, index: Option[DataFrame], key: DataFrame => DataFrame,
+    /** Matches of `probe` ((id, `payload`…) rows) under the band keys
+      * `keys` (an array<struct<band int, bh long>> over its columns):
+      * against itself in id order when `inBatch`, and against `index` in
+      * either id direction; `sim` (over `a.*`/`b.*`, `a` the probe side)
+      * at least `threshold`, distinct. Columns: (new_id, existing_id,
+      * `simName`).
+      *
+      * On the driver path the probe is the batch's own rows: they ship
+      * once as a broadcast band table that the batch rows and the index
+      * scan probe ([[BroadcastBandProbe]]), with no join and so no
+      * broadcast or exchange job of their own. Otherwise the keyed probe
+      * joins both sides, broadcast when `small`. */
+    def matches(probe: DataFrame, index: Option[DataFrame], keys: Column, payload: Seq[String],
         simName: String, sim: Column, threshold: Double, small: Boolean,
         inBatch: Boolean = true): DataFrame = {
-      def cand(a: DataFrame, b: DataFrame, idCond: Column): DataFrame =
-        a.as("a").join(b.as("b"),
-          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && idCond)
-          .select(col("a.id").as("new_id"), col("b.id").as("existing_id"), sim.as(simName))
-      val keyed = key(probe)
-      val inBatchPairs = if (inBatch) Seq(cand(keyed, keyed, col("a.id") > col("b.id"))) else Nil
-      val viaIndex = index.map(i =>
-        cand(if (small) broadcast(keyed) else keyed, key(i), col("a.id") =!= col("b.id")))
-      (inBatchPairs ++ viaIndex).reduce(_ unionByName _)
+      val carried = col("id") +: payload.map(col)
+      def out(pairs: DataFrame) =
+        pairs.select(col("a.id").as("new_id"), col("b.id").as("existing_id"), sim.as(simName))
+      val pairs = held match {
+        case Some(h) =>
+          require(probe eq rows, "the driver path probes with the batch's own rows")
+          val at = ("id" +: payload).map(rows.schema.fieldIndex)
+          val probed = BroadcastBandProbe.column(s, keys, h.rows.map(r => Row.fromSeq(at.map(r.get))).toSeq,
+            h.keys.toSeq, StructType(at.map(rows.schema(_))))
+          def viaTable(scan: DataFrame, idCond: Column): DataFrame =
+            out(scan.select(struct(carried: _*).as("b"), explode(probed).as("a")).filter(idCond))
+          (if (inBatch) Seq(viaTable(probe, col("a.id") > col("b.id"))) else Nil) ++
+            index.map(viaTable(_, col("a.id") =!= col("b.id")))
+        case None =>
+          def keyed(d: DataFrame): DataFrame = d.select(carried :+ explode(keys).as("bk"): _*)
+            .select(carried ++ Seq(col("bk.band").as("band"), col("bk.bh").as("bh")): _*)
+          def cand(a: DataFrame, b: DataFrame, idCond: Column): DataFrame =
+            out(a.as("a").join(b.as("b"),
+              col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && idCond))
+          val kp = keyed(probe)
+          (if (inBatch) Seq(cand(kp, kp, col("a.id") > col("b.id"))) else Nil) ++
+            index.map(i => cand(if (small) broadcast(kp) else kp, keyed(i), col("a.id") =!= col("b.id")))
+      }
+      pairs.reduce(_ unionByName _)
         .filter(col(simName) >= threshold)
         .distinct()
     }
@@ -189,39 +252,61 @@ object StreamingDedup {
       checkpoint: String = "/tmp/graft_streaming_dedup_ckpt"
   ): StreamingQuery =
     start(docs, checkpoint) { (batch, batchId) =>
-      val s = batch.sparkSession
-      // Geometry from the index meta when it exists (batch-built
-      // index being extended, or any batch after the stream's first):
-      // signatures banded differently than the index silently match
-      // nothing, so — exactly as in appendToTextIndex — the geometry
-      // is data. The method's numHashes/bands/threshold parameters
-      // only ever CREATE a fresh index's meta, which records the
-      // implied at-threshold miss probability (1 - t^r)^b so it
-      // matches the batch builder's exactly.
-      val existing = Dedup.TextIndexGeometry.find(s, indexPath)
-      val geom = existing.getOrElse(Dedup.TextIndexGeometry(numHashes, bands, shingleSize, threshold,
-        math.pow(1.0 - math.pow(threshold, (numHashes / bands).toDouble), bands.toDouble)))
-      val sigsDir = s"$indexPath/sigs"
-      val own = s"shard=stream_$batchId"
-      val nonEmpty = trigger("streamdedup", batchId, geom.sigs(batch, "doc_id", "text")) { b =>
-        // banded text rows carry the nh-int signature per band
-        val small = b.n <= bcastRowBound(geom.bands, 4L * geom.numHashes)
-        val matches = b.matches(b.rows,
-          b.index(sigsDir, own, small).map(_.select(col("id"), col("sig"))),
-          geom.band(_, Seq("sig")), "est_jaccard", estJaccardExpr(geom.numHashes), geom.threshold, small)
-        Seq(
-          "matches" -> { () =>
-            matches.write.mode("overwrite").parquet(s"$matchesPath/batch_id=$batchId")
-          },
-          "sigs" -> { () =>
-            b.rows.select(col("id"), col("sig")).write.mode("overwrite").parquet(s"$sigsDir/$own")
-          })
-      }
-      // meta LAST, and only when creating the index (first non-empty
-      // batch): its presence certifies a complete, probe-able index —
-      // the same written-last crash marker buildTextIndex uses
-      if (nonEmpty && existing.isEmpty) geom.write(s, indexPath)
+      runBatch(batch, batchId, indexPath, matchesPath, numHashes, bands, threshold, shingleSize)
     }
+
+  /** One [[run]] micro-batch. `localMax` caps the driver path's row
+    * bound: specs pass 0 to force the distributed side. */
+  private[graft] def runBatch(
+      batch: DataFrame,
+      batchId: Long,
+      indexPath: String,
+      matchesPath: String,
+      numHashes: Int = 64,
+      bands: Int = 16,
+      threshold: Double = 0.5,
+      shingleSize: Int = 3,
+      localMax: Long = Long.MaxValue
+  ): Unit = {
+    val s = batch.sparkSession
+    // Geometry from the index meta when it exists (batch-built
+    // index being extended, or any batch after the stream's first):
+    // signatures banded differently than the index silently match
+    // nothing, so — exactly as in appendToTextIndex — the geometry
+    // is data. The method's numHashes/bands/threshold parameters
+    // only ever CREATE a fresh index's meta, which records the
+    // implied at-threshold miss probability (1 - t^r)^b so it
+    // matches the batch builder's exactly.
+    val existing = Dedup.TextIndexGeometry.find(s, indexPath)
+    val geom = existing.getOrElse(Dedup.TextIndexGeometry(numHashes, bands, shingleSize, threshold,
+      math.pow(1.0 - math.pow(threshold, (numHashes / bands).toDouble), bands.toDouble)))
+    val sigsDir = s"$indexPath/sigs"
+    val own = s"shard=stream_$batchId"
+    // banded text rows carry the nh-int signature per band
+    val bound = bcastRowBound(geom.bands, 4L * geom.numHashes)
+    val keys = F.lshBandKeys(col("sig"), geom.bands, geom.rowsPerBand)
+    // the driver path's signatures skip the round-robin spread: a
+    // bounded batch is collected, not shuffled
+    val local = geom.sigs(batch, "doc_id", "text", spread = false).withColumn("__keys", keys)
+    val nonEmpty = trigger("streamdedup", batchId, geom.sigs(batch, "doc_id", "text"),
+        local = Some(local -> math.min(bound, localMax))) { b =>
+      val small = b.n <= bound
+      val matches = b.matches(b.rows,
+        b.index(sigsDir, own, small).map(_.select(col("id"), col("sig"))), keys, Seq("sig"),
+        "est_jaccard", estJaccardExpr(geom.numHashes), geom.threshold, small)
+      Seq(
+        "matches" -> { () =>
+          matches.write.mode("overwrite").parquet(s"$matchesPath/batch_id=$batchId")
+        },
+        "sigs" -> { () =>
+          b.rows.select(col("id"), col("sig")).write.mode("overwrite").parquet(s"$sigsDir/$own")
+        })
+    }
+    // meta LAST, and only when creating the index (first non-empty
+    // batch): its presence certifies a complete, probe-able index —
+    // the same written-last crash marker buildTextIndex uses
+    if (nonEmpty && existing.isEmpty) geom.write(s, indexPath)
+  }
 
   /**
    * Streaming semantic dedup: screen NEW embeddings against the
@@ -267,7 +352,24 @@ object StreamingDedup {
       // re-train when this fraction of a batch quantizes worse than the
       // train-time p95 error (same-distribution batches sit near 0.05)
       driftRetrainFraction: Double = 0.5
-  ): StreamingQuery = {
+  ): StreamingQuery =
+    start(vecs, checkpoint)(embeddingsBatches(indexPath, matchesPath, planes, bands, threshold,
+      ivfCells, ivfProbes, driftRetrainFraction))
+
+  /** [[runEmbeddings]]'s foreachBatch body, one per stream (it keeps the
+    * stream's measured vector width). `localMax` caps the driver path's
+    * row bound: specs pass 0 to force the distributed side. */
+  private[graft] def embeddingsBatches(
+      indexPath: String,
+      matchesPath: String,
+      planes: Int = 0,
+      bands: Int = 0,
+      threshold: Double = 0.97,
+      ivfCells: Int = 64,
+      ivfProbes: Int = 3,
+      driftRetrainFraction: Double = 0.5,
+      localMax: Long = Long.MaxValue
+  ): (DataFrame, Long) => Unit = {
     val (planes1, bands1) =
       if (planes > 0 && bands > 0) (planes, bands) else Dedup.signBanding(threshold)
     val rowsPerBand = planes1 / bands1
@@ -278,27 +380,15 @@ object StreamingDedup {
     val mask = if (rowsPerBand >= 64) -1L else (1L << rowsPerBand) - 1L
     val lowThreshold = rowsPerBand <= 2
 
-    def banded(sigs: DataFrame): DataFrame =
-      sigs.select(
-        col("id"), col("vec"),
-        explode(
-          transform(
-            sequence(lit(0), lit(bands1 - 1)),
-            bnd => struct(bnd.as("band"),
-              call_function("shiftrightunsigned", col("bits"), bnd * rowsPerBand)
-                .bitwiseAND(lit(mask)).as("bh"))
-          )
-        ).as("bk")
-      ).select(col("id"), col("vec"), col("bk.band"), col("bk.bh"))
-
-    // IVF-cell keys in the same (band, bh) column shape, so the join
-    // below is identical for both candidate generators
-    def cellKeyed(d: DataFrame, cents: Array[Array[Float]]): DataFrame =
-      d.select(
-        col("id"), col("vec"),
-        explode(graft.operators.Ann.nearestCentroidsBc(col("vec"),
-          graft.operators.Ann.bcastCentroids(d.sparkSession, cents), ivfProbes)).as("cell"))
-        .select(col("id"), col("vec"), lit(0).as("band"), col("cell").cast("long").as("bh"))
+    // band keys over the sign bits, and IVF-cell keys in the same
+    // (band, bh) shape, so the probe below is identical for both
+    // candidate generators
+    val bitKeys = transform(sequence(lit(0), lit(bands1 - 1)), bnd => struct(bnd.as("band"),
+      call_function("shiftrightunsigned", col("bits"), bnd * rowsPerBand).bitwiseAND(lit(mask)).as("bh")))
+    def cellKeys(s: SparkSession, cents: Array[Array[Float]]): Column =
+      transform(graft.operators.Ann.nearestCentroidsBc(col("vec"),
+        graft.operators.Ann.bcastCentroids(s, cents), ivfProbes),
+        c => struct(lit(0).as("band"), c.cast("long").as("bh")))
 
     def trainAndPersist(s: SparkSession, batch: DataFrame,
         centsPath: org.apache.hadoop.fs.Path): Array[Array[Float]] = {
@@ -363,7 +453,7 @@ object StreamingDedup {
 
     // measured vector width, cached across this stream's triggers
     var dimSeen = -1
-    start(vecs, checkpoint) { (batch, batchId) =>
+    (batch, batchId) => {
       val s = batch.sparkSession
       graft.sql.GraftFunctions.register(s)
       // hyperplane bits are the BAND-mode signature only — the cell
@@ -376,22 +466,25 @@ object StreamingDedup {
         if (lowThreshold) base
         else base.withColumn("bits", call_function("graft_hyperplane_bits", col("vec"), lit(planes1)))
       val own = s"batch_id=$batchId"
-      // the count runs first, so an empty first batch never reaches the
-      // quantizer trainer
-      trigger("vecdedup", batchId, rows) { b =>
-        val cents: Array[Array[Float]] =
-          if (lowThreshold) loadOrTrainCentroids(s, batch) else Array.empty
-        def keyed(d: DataFrame): DataFrame =
-          if (lowThreshold) cellKeyed(d, cents) else banded(d)
-        // the keyed rows carry the FULL vector per band/cell, so the
-        // broadcast bound scales with the measured vector width — a
-        // 1024-dim corpus broadcasts ~16× fewer docs than a 64-dim one
-        // instead of failing at the same row count. Measured ONCE per
-        // stream (constant for a corpus): a per-trigger head() job
-        // bought nothing after the first batch.
-        if (dimSeen < 0) dimSeen = b.rows.select(size(col("vec")).as("d")).head().getInt(0)
-        val small = b.n <= bcastRowBound(if (lowThreshold) ivfProbes else bands1, 4L * dimSeen)
-        val matches = b.matches(b.rows, b.index(indexPath, own, small), keyed, "cos",
+      // the keyed rows carry the FULL vector per band/cell, so the
+      // broadcast bound scales with the measured vector width — a
+      // 1024-dim corpus broadcasts ~16× fewer docs than a 64-dim one
+      // instead of failing at the same row count. Measured ONCE per
+      // stream (constant for a corpus): a per-trigger head() job
+      // bought nothing after the first batch. An empty batch measures
+      // nothing, and its collect below finds it empty at any bound.
+      if (dimSeen < 0)
+        base.select(size(col("vec"))).limit(1).collect().headOption.foreach(r => dimSeen = r.getInt(0))
+      val bound = bcastRowBound(if (lowThreshold) ivfProbes else bands1, 4L * dimSeen)
+      // the batch is non-empty exactly when its width was measured, so
+      // an empty first batch never reaches the quantizer trainer
+      val keys =
+        if (!lowThreshold) bitKeys
+        else cellKeys(s, if (dimSeen < 0) Array.empty else loadOrTrainCentroids(s, batch))
+      trigger("vecdedup", batchId, rows,
+          local = Some(rows.withColumn("__keys", keys) -> math.min(bound, localMax))) { b =>
+        val small = b.n <= bound
+        val matches = b.matches(b.rows, b.index(indexPath, own, small), keys, Seq("vec"), "cos",
           call_function("graft_cosine", col("a.vec"), col("b.vec")), threshold, small)
         Seq(
           "matches" -> { () =>
@@ -464,8 +557,7 @@ object StreamingDedup {
       bands: Int = 16,
       threshold: Double = 0.5
   ): Unit = {
-    def banded(sigs: DataFrame): DataFrame =
-      Dedup.bandedFromSigs(sigs, bands, numHashes / bands, Seq("sig"))
+    val keys = F.lshBandKeys(col("sig"), bands, numHashes / bands)
     val estJaccard = estJaccardExpr(numHashes)
     // tombstone log lives beside the index (sibling dir, same FS)
     val retiredPath = indexPath + "_retired"
@@ -486,7 +578,7 @@ object StreamingDedup {
       // itself, which resolves a bounded pair graph on the driver (one
       // checkpoint of the pairs, at most bound + 1 edges collected) and
       // runs distributed past the bound
-      val batchPairs = b.matches(sigs, None, banded, "ej", estJaccard, threshold, small = false)
+      val batchPairs = b.matches(sigs, None, keys, Seq("sig"), "ej", estJaccard, threshold, small = false)
         .select(col("existing_id").as("id_a"), col("new_id").as("id_b"))
       val local = Jobs.desc(s, "keepbest:local-cc")(Dedup.dedupKeepBest(
         b.rows.select(col("doc_id"), col("__score")), "doc_id", col("__score"), batchPairs))
@@ -498,11 +590,8 @@ object StreamingDedup {
 
       // 2. winners probe the ACTIVE rep index (index minus tombstones),
       // producing each winner's best-matching rep (or nothing); the
-      // batch-ids anti-join is an id-only side. Only this method writes
-      // the index and the tombstone log, so their data schemas are the
-      // schemas of this batch's own sink rows.
-      val repRow = sigs.select(col("id"), col("sig"), col("__score")).schema
-      val matched = b.index(indexPath, own, b.n <= BroadcastIdRows, Some(repRow)) match {
+      // batch-ids anti-join is an id-only side
+      val matched = b.index(indexPath, own, b.n <= BroadcastIdRows) match {
         case None => winners.limit(0)
           .select(col("id"), lit(0L).as("rep_id"), lit(0.0).as("rep_score"))
         case Some(idx) =>
@@ -515,7 +604,7 @@ object StreamingDedup {
           // The log is CUMULATIVE (one id per replaced rep, forever),
           // so its broadcast is bounded too; the durable fix past
           // ~4M ids is folding tombstones into the index (compaction).
-          val active = b.committed(retiredPath, own, Some(StructType(Seq(repRow("id"))))).fold(idx) { retired =>
+          val active = b.committed(retiredPath, own).fold(idx) { retired =>
             // tombstone-log size from parquet FOOTERS (driver-side,
             // no job). It includes this batch's own partition on a
             // replay — a conservative overcount that can only fall
@@ -527,7 +616,7 @@ object StreamingDedup {
           // winner rows carry the nh-int signature per band
           val winSmall = b.n <= bcastRowBound(bands, 4L * numHashes)
           val m = b.matches(winners.select(col("id"), col("sig")), Some(active.select(col("id"), col("sig"))),
-            banded, "ej", estJaccard, threshold, winSmall, inBatch = false)
+            keys, Seq("sig"), "ej", estJaccard, threshold, winSmall, inBatch = false)
           // best-matching rep per winner: max similarity, min-id tie
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("new_id")).orderBy(col("ej").desc, col("existing_id").asc)
@@ -566,6 +655,10 @@ object StreamingDedup {
           when(col("rep_id").isNull, lit("new"))
             .when(beats, lit("replace"))
             .otherwise(lit("lose"))))
+      // loaded ONCE before the overlapped sinks plan: a sink that plans
+      // while the cache is still unloaded submits its own cache-stage
+      // job per `wcat` scan, so the trigger's job count raced
+      Jobs.desc(s, "keepbest:decide")(wcat.count())
 
       // sinks — all batch_id-partitioned overwrites, all filters of wcat
       val newReps = wcat.filter(col("cat") =!= "lose")

@@ -73,19 +73,31 @@ object StreamingVectorAdmit {
 
   /** One micro-batch's admission (the foreachBatch body, callable
     * directly in specs): returns true when the drift trigger rebuilt
-    * the index this batch. */
+    * the index this batch. `localMax` caps the driver path's row bound:
+    * specs pass 0 to force the distributed side. */
   private[graft] def admitBatch(
       batch: DataFrame,
       indexPath: String,
       batchId: Long,
       driftRetrainFraction: Double = 0.5,
-      rebuildCells: Int = 0
+      rebuildCells: Int = 0,
+      localMax: Long = Long.MaxValue
   ): Boolean = {
     val s = batch.sparkSession
-    // ONE count is both the empty-batch guard and resolveNovel's
-    // broadcast-bound row count (the separate isEmpty probe and the
-    // lazy limit-count job inside resolveNovel are gone)
-    val batchN = graft.core.Jobs.desc(s, "vecadmit:batch-count")(batch.count())
+    val vecs = batch.select(col("vec_id"), col("embedding"))
+    // ONE job sizes the batch and is the empty-batch guard. Within the
+    // bound of an (id, vector) broadcast side at the index's vector
+    // width, it is a bounded collect and the batch stays on the driver
+    // (novelty, cell assignment, drift and the shard's id sidecar); a
+    // quantizer-less index (a crashed rebuild's window) or a bigger
+    // batch is counted instead and admitted distributed.
+    val bound = localBound(s, indexPath).map(math.min(_, localMax))
+    val held = bound.map(b => graft.core.Jobs.desc(s, "vecadmit:batch-count") {
+      vecs.limit(math.min(b, Int.MaxValue - 1L).toInt + 1).collect()
+    })
+    if (held.exists(_.isEmpty)) return false
+    val local = held.filter(_.length <= bound.get)
+    val batchN = local.fold(graft.core.Jobs.desc(s, "vecadmit:batch-count")(batch.count()))(_.length.toLong)
     if (batchN == 0L) return false
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -99,22 +111,33 @@ object StreamingVectorAdmit {
     require(Ann.vecDirs(s, indexPath)._2 == "assignments_delta",
       "streaming admission targets the plain IVF family (a PQ index's rows are codes; " +
         "its rebuild needs the raw source and stays a batch-side action)")
-    val (novel, _) = graft.core.Jobs.desc(s, "vecadmit:resolve-novel") {
-      resolveNovel(batch, indexPath, s"shard=stream_$batchId", knownRows = batchN)
-    }
-    // the shard append and the drift probe share no lineage (the probe
-    // reads the batch + cached centroids/p95; the append writes a NEW
-    // shard dir): overlapped driver threads — guide §2.6. The rebuild
-    // branch below runs only after BOTH complete (it folds the delta
-    // the append just committed).
+    val own = s"shard=stream_$batchId"
+    // the rebuild branch below runs only after the append and the drift
+    // probe complete (it folds the delta the append just committed)
     @volatile var driftFrac = 0.0
-    graft.core.Jobs.par(s)(
-      "vecadmit:append" -> { () =>
-        Ann.appendToIvfIndex(novel, indexPath, s"stream_$batchId")
-      },
-      "vecadmit:drift" -> { () =>
-        driftFrac = Ann.ivfDriftFraction(s, indexPath, batch)
-      })
+    local match {
+      case Some(rows) =>
+        val novel = graft.core.Jobs.desc(s, "vecadmit:resolve-novel")(resolveNovelLocal(s, rows, indexPath, own)._1)
+        import scala.jdk.CollectionConverters._
+        Ann.appendToIvfIndex(s.createDataFrame(novel.toSeq.asJava, vecs.schema), indexPath, s"stream_$batchId",
+          Some(novel.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq))
+        driftFrac = Ann.ivfDriftFractionLocal(s, indexPath,
+          rows.toSeq.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray))
+      case None =>
+        val (novel, _) = graft.core.Jobs.desc(s, "vecadmit:resolve-novel") {
+          resolveNovel(batch, indexPath, own, knownRows = batchN)
+        }
+        // the shard append and the drift probe share no lineage (the
+        // probe reads the batch + cached centroids/p95; the append writes
+        // a NEW shard dir): overlapped driver threads — guide §2.6
+        graft.core.Jobs.par(s)(
+          "vecadmit:append" -> { () =>
+            Ann.appendToIvfIndex(novel, indexPath, s"stream_$batchId")
+          },
+          "vecadmit:drift" -> { () =>
+            driftFrac = Ann.ivfDriftFraction(s, indexPath, batch)
+          })
+    }
     val drifted = driftFrac > driftRetrainFraction
     if (drifted) {
       // stage base ∪ committed delta (identity-deduped) outside the
@@ -178,15 +201,8 @@ object StreamingVectorAdmit {
     val baseDir = s"$indexPath/assignments"
     val others = Ann.readableVecShardDirs(s, indexPath).filterNot(_.getName == ownShard)
     def heldAmong(candidates: DataFrame, scanFilter: Option[Column]): DataFrame = {
-      def filtered(d: DataFrame) = scanFilter.fold(d)(d.filter)
-      val base = filtered(s.read.parquet(baseDir).select(col("item_id")))
-      val all =
-        if (others.isEmpty) base
-        else base.unionByName(filtered(
-          s.read.option("basePath", s"$indexPath/assignments_delta")
-            .parquet(others.map(_.toString).toIndexedSeq: _*)
-            .select(col("item_id"))))
-      all.join(maybeBcast(candidates), Seq("item_id"), "left_semi")
+      val all = idColumns(s, indexPath, others)
+      scanFilter.fold(all)(all.filter).join(maybeBcast(candidates), Seq("item_id"), "left_semi")
     }
     // per-ID novelty throughout: a mixed batch admits exactly its new
     // rows (an any-overlap skip would silently drop them)
@@ -231,6 +247,70 @@ object StreamingVectorAdmit {
         (novelExcluding(heldAmong(maybe, None)), "sidecar-verified")
       }
     }
+  }
+
+  /** The driver path's row bound: [[StreamingDedup.bcastRowBound]] of an
+    * (id, vector) side at the stored centroids' width; None while the
+    * index has no quantizer. */
+  private def localBound(s: org.apache.spark.sql.SparkSession, indexPath: String): Option[Long] = {
+    val cents = new org.apache.hadoop.fs.Path(s"$indexPath/centroids/_SUCCESS")
+    if (!cents.getFileSystem(s.sparkContext.hadoopConfiguration).exists(cents)) None
+    else Ann.loadIvfCentroids(s, indexPath).headOption.map(c => StreamingDedup.bcastRowBound(1, 4L * c.length))
+  }
+
+  /**
+   * [[resolveNovel]] for a batch held on the driver ((vec_id,
+   * embedding) rows): the same sidecar test and the same path names,
+   * with the batch's ids tested against the Blooms on the driver. Only
+   * ids a Bloom reports as maybe held (every id when a sidecar is
+   * missing: `full-scan`) are verified, by one bounded scan of the id
+   * columns filtered to them; the held ids it returns are collected.
+   * Returns the novel rows and the path taken.
+   */
+  private[graft] def resolveNovelLocal(
+      s: org.apache.spark.sql.SparkSession,
+      rows: Array[org.apache.spark.sql.Row],
+      indexPath: String,
+      ownShard: String
+  ): (Array[org.apache.spark.sql.Row], String) = {
+    val ids = rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+    val others = Ann.readableVecShardDirs(s, indexPath).filterNot(_.getName == ownShard)
+    val sidecars = (s"$indexPath/assignments" +: others.map(_.toString)).map(d => Ann.readIdBloomBcast(s, d))
+    val (maybe, path) =
+      if (!sidecars.forall(_.isDefined)) (ids, "full-scan")
+      else {
+        val blooms = sidecars.flatten.map(_.value)
+        val m = ids.filter(id => blooms.exists(_.mightContainLong(id)))
+        (m, if (m.isEmpty) "sidecar-clean" else "sidecar-verified")
+      }
+    val held =
+      if (maybe.isEmpty) Set.empty[Long]
+      else {
+        // ≤1024 ids ride as a pushed-down In filter (row-group pruning),
+        // more as a broadcast set
+        val boxed = maybe.toSeq.map(java.lang.Long.valueOf)
+        val isHeld =
+          if (maybe.size <= 1024) col("item_id").isin(boxed: _*)
+          else {
+            val set = new java.util.HashMap[Any, Any]()
+            boxed.foreach(set.put(_, true))
+            graft.functions.expressions.BroadcastLookup.column(s, col("item_id"), set,
+              org.apache.spark.sql.types.BooleanType).isNotNull
+          }
+        idColumns(s, indexPath, others).filter(isHeld).collect().map(_.getLong(0)).toSet
+      }
+    (rows.filter(r => r.isNullAt(0) || !held(r.getLong(0))), path)
+  }
+
+  /** The id column of the base and of the committed shard dirs
+    * `others`, their schemas from one footer each. */
+  private def idColumns(s: org.apache.spark.sql.SparkSession, indexPath: String,
+      others: Array[org.apache.hadoop.fs.Path]): DataFrame = {
+    val (baseDir, deltaDir) = (s"$indexPath/assignments", s"$indexPath/assignments_delta")
+    val base = graft.core.DirCache.reader(s, baseDir).parquet(baseDir).select(col("item_id"))
+    if (others.isEmpty) base
+    else base.unionByName(graft.core.DirCache.reader(s, deltaDir).option("basePath", deltaDir)
+      .parquet(others.map(_.toString).toIndexedSeq: _*).select(col("item_id")))
   }
 
   private def rebuildFromStage(

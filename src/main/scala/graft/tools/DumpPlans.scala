@@ -74,7 +74,7 @@ object DumpPlans {
       "q_nb_classify" -> "NB source classifier: train and test each tokenize ONCE, aggregated map-side to narrow bucket rows before any exchange (text never shuffles); the model (≤ K·B class-bucket counts + K-row class table) broadcasts into the scoring join; the ×K class expansion sits ABOVE the per-(doc, bucket) aggregate so the per-(doc, class) sum combines map-side; argmax is ONE max(struct) aggregate — no per-doc window sort anywhere in the plan",
       "q_dedup_ngram_jaccard" -> "ngram jaccard, probe-dispatched: a sampled dup probe gates the exact-dup collapse (identical texts → one representative, pair set re-expanded through bounded hash(id) chunks — a k-replica cluster costs the self-join one doc, not k², and no buffer is ever cluster-sized), the gram probe gates dense vs FULL PPJoin (asymmetric index/probe prefixes, positional filters in the join condition, suffix-filter + early-terminating-merge verification — preferred when the estimated asymmetric candidate volume beats the dense Σgf² by 2× past 128M rows, i.e. near-dup-dense corpora), and sampled dominator grams (gf² > stage share) salt the dense counting join 16 ways; on this dup-free corpus all probes choose the plain dense plan shown",
       "q_knn_join_split" -> "forced-SPLIT self kNN (occupancy bounding): every vector lands in ONE cell far past the 4x-target threshold, the executor-local re-quantize splits it (salts where unsplittable), and exhaustive sub-cell probing makes split+salt+kernel == brute kNN; the plan's scoring stage is the CoGroup kernel, not a join",
-      "q_zorder" -> "Z-order key: the Morton interleave is ~12 mask/shift/or integer ops per row inside WholeStageCodegen (no UDF, no join); the per-cell aggregate map-side combines to ≤ cells rows before its one exchange; the LAYOUT path (ZOrder.write) pays only the range-partition exchange any sorted write pays — sample-based bounds, then sortWithinPartitions feeds parquet row-group stats"
+      "q_zorder" -> "Z-order key: the Morton interleave is ~12 mask/shift/or integer ops per row inside WholeStageCodegen (no UDF, no join); the per-cell aggregate map-side combines to ≤ cells rows before its one exchange; the LAYOUT path (ZOrder.write) pays only the range-partition exchange any sorted write pays — z-key quantile bounds, then sortWithinPartitions feeds parquet row-group stats"
     )
 
     val sb = new StringBuilder

@@ -84,4 +84,23 @@ class DirCacheSpec extends SparkSpecBase {
     assert(DirCache.parquetRowCount(spark, s"$root/sigs") == 8L)
     assert(spark.read.parquet(s"$root/sigs").count() == 8L)
   }
+
+  test("parquetSchema is the inferred schema of a written dir, read from one footer with no job") {
+    import spark.implicits._
+    val dir = tempDir("dircache_schema") + "/t"
+    Seq((1L, Seq(1, 2), "x", 0.5, "p1"), (2L, Seq(3), null, -0.0, "p2"))
+      .toDF("id", "sig", "s", "d", "part").write.partitionBy("part").parquet(dir)
+    val c = new JobCounter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(c)
+    try {
+      val (jobs, _) = c.jobsAndLabels(assert(DirCache.parquetSchema(spark, dir).isDefined))
+      assert(jobs == 0L, "the footer read is driver-side")
+    } finally spark.sparkContext.removeSparkListener(c)
+    val inferred = spark.read.parquet(dir)
+    val read = DirCache.reader(spark, dir).parquet(dir)
+    assert(read.schema == inferred.schema)
+    assert(read.collect().map(_.toString).sorted.toSeq == inferred.collect().map(_.toString).sorted.toSeq)
+    // no data file yet: the caller lets Spark infer
+    assert(DirCache.parquetSchema(spark, tempDir("dircache_schema_empty")).isEmpty)
+  }
 }

@@ -278,17 +278,14 @@ class StreamingSpec extends SparkSpecBase {
     spark.listenerManager.register(listener)
     val base = tempDir("sdedup_plan")
     try {
-      val stream = MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingDedup.run(
-        spark, stream.toDF().toDF("doc_id", "text"),
-        indexPath = s"$base/index", matchesPath = s"$base/matches",
-        threshold = 0.5, checkpoint = s"$base/ckpt")
-      stream.addData((1L, "the quick brown fox jumps over the lazy dog by the river"))
-      q.processAllAvailable()
+      // a batch within the broadcast bound takes the driver path, which
+      // joins nothing; localMax = 0 forces the distributed path pinned here
+      def trigger(id: Long, text: String): Unit = graft.streaming.StreamingDedup.runBatch(
+        Seq((id, text)).toDF("doc_id", "text"), id, s"$base/index", s"$base/matches",
+        threshold = 0.5, localMax = 0L)
+      trigger(1L, "the quick brown fox jumps over the lazy dog by the river")
       // the SECOND batch is the one that probes an existing index
-      stream.addData((2L, "the quick brown fox jumps over the lazy dog by the creek"))
-      q.processAllAvailable()
-      q.stop()
+      trigger(2L, "the quick brown fox jumps over the lazy dog by the creek")
       import scala.jdk.CollectionConverters._
       def indexScanIn(p: org.apache.spark.sql.execution.SparkPlan): Boolean = p.exists {
         case s: FileSourceScanExec =>
@@ -1261,15 +1258,15 @@ class StreamingSpec extends SparkSpecBase {
 
   // ───────────── Spark jobs per streaming-dedup trigger ─────────────
 
-  // Pins the Spark jobs one streaming-dedup trigger runs: a bounded
-  // keep-best micro-batch (driver-resolved clusters) and one
-  // `StreamingDedup.run` trigger that probes an existing index. The
-  // bounds are the counts measured before keep-best moved into
-  // `Dedup.dedupKeepBest`; a trigger may get cheaper, never dearer.
-  // Keep-best's overlapped sinks read one cached frame, and a sink that
-  // plans before another has loaded it runs its own cache jobs, so that
-  // trigger's count varies by 3 between runs (28 or 31 before the move);
-  // the bound is the lower count.
+  // Pins the Spark jobs of one trigger of each ingest sink: a bounded
+  // keep-best micro-batch (driver-resolved clusters), one
+  // `StreamingDedup.run` trigger that probes an existing index, one
+  // vector-admission trigger with re-sent ids and one UPSERT statement.
+  // A sink may get cheaper, never dearer. The run, vector and UPSERT
+  // bounds are the driver-path counts (11, 15 and 6 jobs before it).
+  // Keep-best loads its cached decision frame before its overlapped
+  // sinks plan, so its count repeats exactly (it raced between 25 and 28
+  // before).
   private val pinText = "the quick brown fox jumps over the lazy dog near the river bank today"
 
   private def jobsIn(body: => Unit): (Long, Seq[String]) = {
@@ -1322,6 +1319,223 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  private val KeepBestTriggerJobs = 28L
-  private val RunTriggerJobs = 11L
+  test("one streaming vector-admission trigger with re-sent ids keeps its job count") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.Ann
+    val base = tempDir("vecadmit_jobs")
+    val idx = s"$base/index"
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").select(col("vec_id"), col("embedding"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    Ann.buildIvfIndex(spark, emb.filter(_._1 % 4 == 0).toSeq.toDF("vec_id", "embedding"), idx, numCells = 16)
+    val stream = MemoryStream[(Long, Array[Float])]
+    val q = graft.streaming.StreamingVectorAdmit.run(stream.toDF().toDF("vec_id", "embedding"), idx,
+      s"$base/ckpt", driftRetrainFraction = 2.0)
+    try {
+      stream.addData(emb.filter(_._1 % 4 == 1).toSeq: _*)
+      q.processAllAvailable()
+      // re-sent ids: three base vectors ride with novel ones, so the
+      // sidecars report maybe-held ids and the bounded verify runs
+      val (jobs, labels) = jobsIn {
+        stream.addData((emb.filter(_._1 % 4 == 0).take(3) ++ emb.filter(_._1 % 4 == 2)).toSeq: _*)
+        q.processAllAvailable()
+      }
+      info(s"vector admission trigger jobs: $jobs, labels: ${tally(labels)}")
+      assert(jobs <= VectorAdmitTriggerJobs, s"vector admission ran $jobs jobs, pinned ≤ $VectorAdmitTriggerJobs")
+    } finally q.stop()
+    val held = spark.read.parquet(s"$idx/assignments_delta").select("item_id").as[Long].collect().sorted.toSeq
+    assert(held == emb.map(_._1).filter(id => id % 4 == 1 || id % 4 == 2).sorted.toSeq,
+      "exactly the novel ids are admitted")
+  }
+
+  test("one UPSERT INTO statement keeps its job count") {
+    spark // force base session init first
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    val s2 = org.apache.spark.sql.SparkSession.builder()
+      .withExtensions(new graft.sql.GraftExtensions().apply(_))
+      .getOrCreate()
+    val gt = graft.schema.GTable("pin_upsert", timeColumn = "ts",
+      dimensions = Seq(graft.schema.GDimension("dim", org.apache.spark.sql.types.StringType)),
+      metrics = Seq(graft.schema.GMetric("m", org.apache.spark.sql.types.DoubleType)))
+    try {
+      graft.sql.UpsertTables.register(s2, gt, tempDir("upsert_jobs") + "/log")
+      def put(day: Int): Unit = s2.sql("UPSERT INTO pin_upsert (ts, dim, m) VALUES " +
+        s"(TIMESTAMP '2024-01-0$day 00:00:00', 'a', 1.0), (TIMESTAMP '2024-01-0$day 00:00:00', 'b', 2.0), " +
+        s"(TIMESTAMP '2024-01-0$day 00:00:00', 'a', 3.0)").collect()
+      put(1)
+      val (jobs, labels) = jobsIn(put(2))
+      info(s"UPSERT jobs: $jobs, labels: ${tally(labels)}")
+      assert(jobs <= UpsertStatementJobs, s"UPSERT ran $jobs jobs, pinned ≤ $UpsertStatementJobs")
+      assert(s2.sql("SELECT dim, m FROM pin_upsert WHERE ts = TIMESTAMP '2024-01-02 00:00:00' ORDER BY dim")
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq == Seq(("a", 3.0), ("b", 2.0)))
+    } finally {
+      graft.sql.UpsertTables.unregister("pin_upsert")
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
+  }
+
+  // ───────────── driver path vs distributed path ─────────────
+
+  // Each bounded sink has a driver path below its broadcast bound and
+  // the distributed path past it; `localMax = 0` forces the latter.
+
+  test("StreamingDedup.run: the driver and distributed paths write identical matches and index rows") {
+    def trigger(base: String, localMax: Long)(id: Long, rows: (Long, String)*): Unit =
+      graft.streaming.StreamingDedup.runBatch(rows.toDF("doc_id", "text"), id, s"$base/index",
+        s"$base/matches", threshold = 0.5, localMax = localMax)
+    val lighthouse = "an unrelated sentence about lighthouses and their keepers at night"
+    def side(localMax: Long): (Seq[String], Seq[String]) = {
+      val base = tempDir(s"sdedup_sides_$localMax")
+      def t(id: Long, rows: (Long, String)*): Unit = trigger(base, localMax)(id, rows: _*)
+      t(0L, (10L, pinText), (11L, "completely different text about gardens and walls and towers"),
+        (12L, pinText + " indeed"))
+      // a smaller id matching the index, an in-batch pair, a re-sent
+      // id (its index copy must not match), a duplicated id
+      val b1 = Seq((5L, pinText + " again"), (20L, lighthouse), (21L, lighthouse + " too"),
+        (10L, pinText), (22L, lighthouse + " again"), (22L, lighthouse + " once more"))
+      t(1L, b1: _*)
+      t(2L, (30L, "a fresh document on tide tables and harbour charts"), (6L, pinText + " truly"))
+      t(1L, b1: _*) // replay
+      val matches = spark.read.parquet(s"$base/matches").collect().map(_.toString).sorted.toSeq
+      val index = spark.read.parquet(s"$base/index/sigs")
+        .select(col("shard"), col("id"), col("sig")).collect().map(_.toString).sorted.toSeq
+      (matches, index)
+    }
+    val (local, distributed) = (side(Long.MaxValue), side(0L))
+    assert(local == distributed)
+    assert(local._1.exists(_.startsWith("[5,12,")) && local._1.exists(_.startsWith("[21,20,")),
+      s"index and in-batch pairs both found: ${local._1}")
+  }
+
+  test("StreamingDedup.runEmbeddings: the driver and distributed paths write identical matches and index rows") {
+    val b0 = Seq((1L, Array(1.0f, 0.05f, 0.0f, 0.0f)), (2L, Array(0.0f, 1.0f, 0.05f, 0.0f)),
+      (3L, Array(0.0f, 0.0f, 1.0f, 0.05f)), (4L, Array(0.05f, 0.0f, 0.0f, 1.0f)),
+      (7L, Array(0.7f, 0.7f, 0.0f, 0.0f)), (8L, Array(0.99f, 0.06f, 0.01f, 0.0f)))
+    val b1 = Seq((0L, Array(0.99f, 0.04f, 0.01f, 0.0f)), (10L, Array(0.0f, 0.0f, 1.0f, 0.06f)),
+      (11L, Array(0.0f, 0.01f, 0.99f, 0.05f)), (2L, Array(0.0f, 1.0f, 0.05f, 0.0f)),
+      (12L, Array(0.69f, 0.71f, 0.01f, 0.0f)))
+    def side(threshold: Double, localMax: Long): (Seq[String], Seq[String]) = {
+      val base = tempDir(s"ssem_sides_$localMax")
+      val batches = graft.streaming.StreamingDedup.embeddingsBatches(s"$base/index", s"$base/matches",
+        threshold = threshold, ivfCells = 4, localMax = localMax)
+      batches(b0.toDF("vec_id", "embedding"), 0L)
+      batches(b1.toDF("vec_id", "embedding"), 1L)
+      def rows(path: String) = spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+      (rows(s"$base/matches"), rows(s"$base/index"))
+    }
+    // 0.9: sign-bit bands; 0.5: IVF cells
+    for (t <- Seq(0.9, 0.5)) {
+      val local = side(t, Long.MaxValue)
+      assert(local == side(t, 0L), s"threshold $t")
+      assert(local._1.nonEmpty, s"threshold $t finds matches")
+    }
+  }
+
+  test("vector admission: the driver and distributed paths admit the same ids with the same Blooms") {
+    import graft.operators.Ann
+    import graft.streaming.StreamingVectorAdmit
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").select(col("vec_id"), col("embedding"))
+    val corpus0 = emb.filter(col("vec_id") % 4 === 0)
+    val b1 = emb.filter(col("vec_id") % 4 === 1)
+    val b2 = corpus0.limit(3).unionByName(emb.filter(col("vec_id") % 4 === 2))
+    def side(localMax: Long): (String, Seq[(String, Seq[Long], Option[org.apache.spark.util.sketch.BloomFilter])]) = {
+      val idx = tempDir(s"svecadmit_sides_$localMax") + "/index"
+      Ann.buildIvfIndex(spark, corpus0, idx, numCells = 16)
+      def admit(b: org.apache.spark.sql.DataFrame, id: Long): Boolean =
+        StreamingVectorAdmit.admitBatch(b, idx, id, driftRetrainFraction = 2.0, localMax = localMax)
+      admit(b1, 0L)
+      admit(b2, 1L)
+      admit(b2, 1L) // replay
+      val shards = Ann.readableVecShardDirs(spark, idx).map { d =>
+        (d.getName, spark.read.parquet(d.toString).select("item_id").as[Long].collect().sorted.toSeq,
+          Ann.readIdBloom(spark, d.toString))
+      }.sortBy(_._1).toSeq
+      (idx, shards)
+    }
+    val (idx, local) = side(Long.MaxValue)
+    assert(local == side(0L)._2)
+    assert(local.map(_._2.size) == Seq(b1.count(), b2.count() - 3L) && local.forall(_._3.isDefined))
+
+    // the novelty resolvers agree on the path taken and the novel rows
+    def bothResolve(b: org.apache.spark.sql.DataFrame, own: String, path: String): Unit = {
+      val (novel, p) = StreamingVectorAdmit.resolveNovel(b, idx, own)
+      val (novelLocal, pLocal) = StreamingVectorAdmit.resolveNovelLocal(spark, b.collect(), idx, own)
+      assert(p == path && pLocal == path, s"$p / $pLocal, expected $path")
+      assert(novelLocal.map(_.getLong(0)).sorted.toSeq == novel.select("vec_id").as[Long].collect().sorted.toSeq)
+    }
+    val blooms = (s"$idx/assignments" +: Ann.readableVecShardDirs(spark, idx).map(_.toString).toSeq)
+      .flatMap(Ann.readIdBloom(spark, _))
+    val miss = emb.filter(col("vec_id") % 4 === 3).select("vec_id").as[Long].collect()
+      .filterNot(id => blooms.exists(_.mightContainLong(id)))
+    bothResolve(emb.filter(col("vec_id").isInCollection(miss.toSeq)), "shard=stream_2", "sidecar-clean")
+    bothResolve(b2, "shard=stream_2", "sidecar-verified")
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/assignments/${Ann.IdBloomFile}"), false)
+    bothResolve(b2, "shard=stream_2", "full-scan")
+    // the driver-side drift fraction is the distributed one
+    val shifted = emb.filter(col("vec_id") % 4 === 3)
+      .select(col("vec_id"), transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
+    for (b <- Seq(b2, shifted))
+      assert(Ann.ivfDriftFractionLocal(spark, idx, b.collect().map(_.getSeq[Float](1).toArray).toSeq) ==
+        Ann.ivfDriftFraction(spark, idx, b))
+  }
+
+  test("UPSERT keeps the last row per key on the driver exactly as the keep-last window did") {
+    spark // force base session init first
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    val s2 = org.apache.spark.sql.SparkSession.builder()
+      .withExtensions(new graft.sql.GraftExtensions().apply(_))
+      .getOrCreate()
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    val gt = graft.schema.GTable("sides_upsert", timeColumn = "ts",
+      dimensions = Seq(graft.schema.GDimension("dim", StringType), graft.schema.GDimension("x", DoubleType)),
+      metrics = Seq(graft.schema.GMetric("m", DoubleType), graft.schema.GMetric("k", LongType)))
+    val log = tempDir("upsert_sides") + "/log"
+    // duplicate keys (the last wins), -0.0/0.0 and NaN in a key and in a
+    // metric, NULL keys and metrics, an omitted metric (k), and column
+    // names in another case than declared
+    val cols = Seq("TS", "Dim", "X", "m")
+    val values = Seq(
+      "(TIMESTAMP '2024-01-01 00:00:00', 'a', 1.0D, 1.0D)",
+      "(TIMESTAMP '2024-01-01 00:00:00', 'a', 1.0D, NULL)",
+      "(TIMESTAMP '2024-01-01 00:00:00', 'b', -0.0D, -0.0D)",
+      "(TIMESTAMP '2024-01-01 00:00:00', 'b', 0.0D, 0.0D)",
+      "(TIMESTAMP '2024-01-01 00:00:00', 'c', 0.0D, -0.0D)",
+      "(TIMESTAMP '2024-01-01 00:00:00', 'd', CAST('NaN' AS DOUBLE), 2.0D)",
+      "(TIMESTAMP '2024-01-01 00:00:00', 'd', CAST('NaN' AS DOUBLE), CAST('NaN' AS DOUBLE))",
+      "(TIMESTAMP '2024-01-01 00:00:00', NULL, 1.0D, 5.0D)",
+      "(TIMESTAMP '2024-01-01 00:00:00', NULL, 1.0D, 6.0D)",
+      "(TIMESTAMP '2024-01-02 00:00:00', 'a', 1.0D, 3.0D)").mkString(", ")
+    def render(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
+      rows.map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    try {
+      graft.sql.UpsertTables.register(s2, gt, log)
+      val r = s2.sql(s"UPSERT INTO sides_upsert (${cols.mkString(", ")}) VALUES $values").head()
+      // the keep-last window the statement ran before, over the same rows
+      val declared = Map("ts" -> org.apache.spark.sql.types.TimestampType, "dim" -> StringType,
+        "x" -> DoubleType, "m" -> DoubleType, "k" -> LongType)
+      val named = s2.sql(s"SELECT * FROM VALUES $values").toDF("ts", "dim", "x", "m")
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("ts"), col("dim"), col("x"))
+        .orderBy(col("__ord").desc)
+      val expected = named.select(gt.columnNames.map(c =>
+          (if (named.columns.contains(c)) col(c) else lit(null)).cast(declared(c)).as(c)): _*)
+        .withColumn("__ord", monotonically_increasing_id())
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__ord", "__rn").collect()
+      val written = s2.read.parquet(s"$log/__seq=0").select(gt.columnNames.map(col): _*).collect()
+      assert(render(written) == render(expected))
+      assert(r.getLong(1) == expected.length.toLong && expected.length == 6)
+    } finally {
+      graft.sql.UpsertTables.unregister("sides_upsert")
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
+  }
+
+  private val KeepBestTriggerJobs = 26L
+  private val RunTriggerJobs = 4L
+  private val VectorAdmitTriggerJobs = 3L
+  private val UpsertStatementJobs = 1L
 }

@@ -99,4 +99,23 @@ class ZOrderSpec extends SparkSpecBase {
     assert(spark.read.parquet(zPath).agg(sum(col("a") + col("b"))).head().getLong(0) ==
       rows.map(t => t._1 + t._2).sum)
   }
+
+  test("z-order file boundaries do not depend on how many RDDs the process created") {
+    import spark.implicits._
+    val df = (for (a <- 0 until 64; b <- 0 until 64; r <- 0 until 2) yield (a.toLong, b.toLong, r))
+      .toDF("a", "b", "r").repartition(8)
+    // range-partition sampling was seeded by the input RDD's id, which
+    // every RDD created before the write moves
+    def boxes(extraRdds: Int): Seq[(Long, Long, Long, Long)] = {
+      (0 until extraRdds).foreach(_ => spark.sparkContext.parallelize(Seq(1)))
+      val p = tempDir("zorder_rdd_ids")
+      ZOrder.write(df, "a", "b", p, numFiles = 16)
+      ZOrder.fileStats(spark, p, Seq("a", "b")).collect()
+        .map(r => (r.getAs[Long]("a_min"), r.getAs[Long]("a_max"), r.getAs[Long]("b_min"), r.getAs[Long]("b_max")))
+        .sorted.toSeq
+    }
+    val first = boxes(0)
+    assert(first.length == 16)
+    for (extra <- Seq(1, 2, 5, 11, 23)) assert(boxes(extra) == first, s"$extra extra RDDs")
+  }
 }
