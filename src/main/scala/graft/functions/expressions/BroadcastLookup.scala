@@ -51,8 +51,9 @@ private[graft] case class BroadcastBandProbe(child: Expression, bc: Broadcast[Ba
     val hit = new java.util.BitSet(table.rows.length)
     var i = 0
     while (i < keys.numElements()) {
-      val k = keys.getStruct(i, 2)
-      val e = table.byBh.get(k.getLong(1))
+      // a null key (a null vector's band hash) hits nothing, as in a join
+      val k = if (keys.isNullAt(i)) null else keys.getStruct(i, 2)
+      val e = if (k == null || k.isNullAt(1)) null else table.byBh.get(k.getLong(1))
       if (e != null) {
         var j = 0
         while (j < e.length) { if (e(j)._1 == k.getInt(0)) hit.set(e(j)._2); j += 1 }

@@ -101,7 +101,8 @@ object ZOrder {
    *
    * The range bounds are z-key quantiles (`approxQuantile`, rank error
    * under 1/64 of a file), and each row goes to the partition of its
-   * range through an identity partitioner, one file per range. So the
+   * range, one file per range: the hash repartition keys range `i` by an
+   * int that hashes to partition `i` ([[hashPartitionKeys]]). So the
    * layout is a function of the data: `repartitionByRange` would sample
    * with a seed taken from the input RDD's id, and the same rows would
    * land in different files depending on how many RDDs the process had
@@ -116,15 +117,25 @@ object ZOrder {
       .distinct.sorted
     // range i holds keys in (bounds(i - 1), bounds(i)]; NULL keys go first
     val range = coalesce(bounds.foldLeft(lit(0))((n, b) => n + (col("__zkey") > b).cast("int")), lit(0))
-    val ranged = keyed.withColumn("__range", range)
-    val at = ranged.schema.fieldIndex("__range")
-    // a HashPartitioner over Int keys 0 until numFiles is the identity
-    val rows = ranged.rdd.keyBy(_.getInt(at))
-      .partitionBy(new org.apache.spark.HashPartitioner(numFiles)).values
-    df.sparkSession.createDataFrame(rows, ranged.schema)
+    keyed.repartition(numFiles, element_at(typedLit(hashPartitionKeys(numFiles)), range + 1))
       .sortWithinPartitions(col("__zkey"))
-      .drop("__zkey", "__range")
+      .drop("__zkey")
       .write.mode("overwrite").parquet(path)
+  }
+
+  /** For each partition `p` of an `n`-way hash repartition, the smallest
+    * int key that Spark's hash partitioning (murmur3 with seed 42, pmod
+    * `n`) sends to `p`. About n·ln n hashes. */
+  private[graft] def hashPartitionKeys(n: Int): Array[Int] = {
+    val keys = Array.fill(n)(-1)
+    var left = n
+    var x = 0
+    while (left > 0) {
+      val p = Math.floorMod(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(x, 42), n)
+      if (keys(p) < 0) { keys(p) = x; left -= 1 }
+      x += 1
+    }
+    keys
   }
 
   /** Per-file (min, max) boxes of the given columns — the skippability

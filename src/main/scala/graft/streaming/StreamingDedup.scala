@@ -25,14 +25,16 @@ import graft.operators.Dedup
  * variant (run, runEmbeddings, and runKeepBest's rep probe):
  *  - ONE job sizes the batch (`<label>:batch-count`) and is the
  *    empty-batch guard (an empty batch writes nothing). For run and
- *    runEmbeddings it is a `limit(bound + 1)` collect at the keyed
- *    probe's broadcast bound: a batch within it takes the DRIVER PATH —
- *    its rows become a driver-local frame, and the keyed rows ship once
- *    as a broadcast bh → rows map that the batch's own rows and the
- *    index scan look up, so a trigger runs the collect, the matches
- *    exchange and write, and the signature write, with no join job.
- *    Past the bound (and always for keep-best) the batch is cached and
- *    counted once, and the joins below run.
+ *    runEmbeddings it is a `limit(bound + 1)` collect of the batch's
+ *    ids at [[DriverPathRows]] (or the keyed probe's broadcast bound,
+ *    if smaller): a batch within it takes the DRIVER PATH — its rows
+ *    are collected (`<label>:batch-collect`) into a driver-local
+ *    frame, and the keyed rows ship once as a broadcast bh → rows map
+ *    that the batch's own rows and the index scan look up, so a
+ *    trigger runs the two collects, the matches exchange and write,
+ *    and the signature write, with no join job. Past the bound (and
+ *    always for keep-best) the batch is cached and counted once, and
+ *    the joins below run; the sizing collect pulled only ids.
  *  - Within-batch pairs pair each batch row with the batch rows sharing
  *    a band key, in id order, so each pair appears once.
  *  - The index probe BROADCASTS the keyed batch and the corpus-sized
@@ -90,6 +92,17 @@ object StreamingDedup {
     * matched winners) is force-broadcast: ~4M ids. */
   private[graft] val BroadcastIdRows: Long = 1L << 22
 
+  /** Row bound of a driver-path micro-batch ([[trigger]], and
+    * [[StreamingVectorAdmit]]'s admission), far under every broadcast
+    * bound: past it `run`'s driver path loses to the distributed one.
+    * One trigger over an index of as many rows, 4 local cores, driver
+    * vs distributed ms: `run` (16 × 64 minhash) 1,528 vs 1,897 at 2,000
+    * docs, 1,921 vs 2,338 at 4,000, 3,356 vs 3,001 at 8,000 and 5,438 vs
+    * 4,358 at 16,000; `runEmbeddings` (64 dims, threshold 0.9) and
+    * vector admission (64 dims) still won at 8,000. At this bound a
+    * batch holds a few MB on the driver (~1.4 KB per collected row). */
+  private[streaming] val DriverPathRows: Long = 1L << 12
+
   /** Micro-batch DOCUMENT bound for a force-broadcast keyed probe side
     * ([[Dedup.bandedBroadcastDocs]]): each document's probe rows carry
     * the full signature/vector once per band plus ~48 B of per-row
@@ -118,15 +131,16 @@ object StreamingDedup {
 
   /** One trigger: a non-empty batch's `sinks` run overlapped under
     * `<label>:<sink>-write` labels; returns whether the batch was
-    * non-empty. With `local` = (frame, bound), ONE `limit(bound + 1)`
-    * collect of that frame — the batch's rows (ids in `idCol`) plus
-    * their band keys in a `__keys` column — is the empty guard, the
-    * count and the path choice: a batch of at most `bound` rows runs its
-    * sinks over a driver-local frame of the collected rows. Otherwise
-    * `rows` is cached and counted once, and every frame cached through
-    * the [[Batch]] is released afterwards. */
+    * non-empty. With a [[Local]] offer, ONE `limit(bound + 1)` collect of
+    * the batch's ids (`<label>:batch-count`) is the empty guard, the
+    * count and the path choice, and pulls no payload: a batch of at most
+    * `bound` rows is then collected with its band keys
+    * (`<label>:batch-collect`) and runs its sinks over a driver-local
+    * frame of those rows. Otherwise `rows` is cached and counted once,
+    * and every frame cached through the [[Batch]] is released
+    * afterwards. */
   private def trigger(label: String, batchId: Long, rows: DataFrame, idCol: String = "id",
-      local: Option[(DataFrame, Long)] = None)(sinks: Batch => Seq[(String, () => Unit)]): Boolean = {
+      local: Option[Local] = None)(sinks: Batch => Seq[(String, () => Unit)]): Boolean = {
     val s = rows.sparkSession
     val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def hold(d: DataFrame): DataFrame = { held += d; d.cache() }
@@ -134,25 +148,34 @@ object StreamingDedup {
       Jobs.par(s)(sinks(b).map { case (sink, w) => s"$label:$sink-write" -> w }: _*)
       true
     }
-    val collected = local.map { case (frame, bound) =>
-      val r = Jobs.desc(s, s"$label:batch-count")(frame.limit(math.min(bound, Int.MaxValue - 1L).toInt + 1).collect())
-      (r, frame.schema, bound)
-    }
-    try collected match {
-      case Some((r, _, _)) if r.isEmpty => false
-      case Some((r, schema, bound)) if r.length <= bound =>
+    val sized = local.map(l => l -> Jobs.desc(s, s"$label:batch-count")(
+      l.rows.select(col(idCol)).limit(math.min(l.bound, Int.MaxValue - 1L).toInt + 1).collect().length))
+    try sized match {
+      case Some((_, 0)) => false
+      case Some((l, n)) if n <= l.bound =>
         import scala.jdk.CollectionConverters._
-        val at = schema.fieldIndex("__keys")
+        val keyed = l.rows.withColumn("__keys", l.keys())
+        val r = Jobs.desc(s, s"$label:batch-collect")(keyed.collect())
+        val at = keyed.schema.fieldIndex("__keys")
         val data = r.map(x => Row.fromSeq(x.toSeq.patch(at, Nil, 1)))
-        val keys = r.map(_.getSeq[Row](at).map(k => (k.getInt(0), k.getLong(1))))
-        val frame = s.createDataFrame(data.toSeq.asJava, StructType(schema.patch(at, Nil, 1)))
-        write(new Batch(frame, idCol, r.length, hold, Some(Held(data, keys))))
+        // a null vector has no key (a null array, or null band hashes):
+        // it probes nothing, as the distributed path's explode and join
+        val keys = r.map(x => if (x.isNullAt(at)) Nil else x.getSeq[Row](at).collect {
+          case k if k != null && !k.isNullAt(1) => (k.getInt(0), k.getLong(1))
+        })
+        val frame = s.createDataFrame(data.toSeq.asJava, StructType(keyed.schema.patch(at, Nil, 1)))
+        r.nonEmpty && write(new Batch(frame, idCol, r.length, hold, Some(Held(data, keys))))
       case _ =>
         val cached = hold(rows)
         val n = Jobs.desc(s, s"$label:batch-count")(cached.count())
         n > 0 && write(new Batch(cached, idCol, n, hold, None))
     } finally held.foreach(_.unpersist())
   }
+
+  /** A driver-path offer for [[trigger]]: the batch's `rows` (unspread),
+    * `keys` (their band-key column, built only once the batch is known
+    * to be non-empty) and the most rows the driver path takes. */
+  private final case class Local(rows: DataFrame, keys: () => Column, bound: Long)
 
   /** A driver-path batch's collected rows and each row's band keys. */
   private final case class Held(rows: Array[Row], keys: Array[Seq[(Int, Long)]])
@@ -287,9 +310,9 @@ object StreamingDedup {
     val keys = F.lshBandKeys(col("sig"), geom.bands, geom.rowsPerBand)
     // the driver path's signatures skip the round-robin spread: a
     // bounded batch is collected, not shuffled
-    val local = geom.sigs(batch, "doc_id", "text", spread = false).withColumn("__keys", keys)
-    val nonEmpty = trigger("streamdedup", batchId, geom.sigs(batch, "doc_id", "text"),
-        local = Some(local -> math.min(bound, localMax))) { b =>
+    val local = Local(geom.sigs(batch, "doc_id", "text", spread = false), () => keys,
+      Seq(bound, DriverPathRows, localMax).min)
+    val nonEmpty = trigger("streamdedup", batchId, geom.sigs(batch, "doc_id", "text"), local = Some(local)) { b =>
       val small = b.n <= bound
       val matches = b.matches(b.rows,
         b.index(sigsDir, own, small).map(_.select(col("id"), col("sig"))), keys, Seq("sig"),
@@ -471,18 +494,17 @@ object StreamingDedup {
       // 1024-dim corpus broadcasts ~16× fewer docs than a 64-dim one
       // instead of failing at the same row count. Measured ONCE per
       // stream (constant for a corpus): a per-trigger head() job
-      // bought nothing after the first batch. An empty batch measures
-      // nothing, and its collect below finds it empty at any bound.
+      // bought nothing after the first batch. Null vectors carry no
+      // width; an empty or all-null batch measures nothing.
       if (dimSeen < 0)
-        base.select(size(col("vec"))).limit(1).collect().headOption.foreach(r => dimSeen = r.getInt(0))
+        base.filter(col("vec").isNotNull).select(size(col("vec"))).limit(1).collect()
+          .headOption.foreach(r => dimSeen = r.getInt(0))
       val bound = bcastRowBound(if (lowThreshold) ivfProbes else bands1, 4L * dimSeen)
-      // the batch is non-empty exactly when its width was measured, so
-      // an empty first batch never reaches the quantizer trainer
-      val keys =
-        if (!lowThreshold) bitKeys
-        else cellKeys(s, if (dimSeen < 0) Array.empty else loadOrTrainCentroids(s, batch))
-      trigger("vecdedup", batchId, rows,
-          local = Some(rows.withColumn("__keys", keys) -> math.min(bound, localMax))) { b =>
+      // built once the trigger has found the batch non-empty, so an
+      // empty batch never reaches the quantizer trainer
+      lazy val keys = if (!lowThreshold) bitKeys else cellKeys(s, loadOrTrainCentroids(s, batch))
+      val local = Local(rows, () => keys, Seq(bound, DriverPathRows, localMax).min)
+      trigger("vecdedup", batchId, rows, local = Some(local)) { b =>
         val small = b.n <= bound
         val matches = b.matches(b.rows, b.index(indexPath, own, small), keys, Seq("vec"), "cos",
           call_function("graft_cosine", col("a.vec"), col("b.vec")), threshold, small)

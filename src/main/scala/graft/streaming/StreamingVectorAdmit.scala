@@ -85,18 +85,20 @@ object StreamingVectorAdmit {
   ): Boolean = {
     val s = batch.sparkSession
     val vecs = batch.select(col("vec_id"), col("embedding"))
-    // ONE job sizes the batch and is the empty-batch guard. Within the
-    // bound of an (id, vector) broadcast side at the index's vector
-    // width, it is a bounded collect and the batch stays on the driver
+    // ONE job sizes the batch and is the empty-batch guard. Under the
+    // driver-path bound it is a bounded collect of the ids alone, and a
+    // batch within the bound is then collected and stays on the driver
     // (novelty, cell assignment, drift and the shard's id sidecar); a
     // quantizer-less index (a crashed rebuild's window) or a bigger
-    // batch is counted instead and admitted distributed.
+    // batch is counted instead, pulls no payload, and is admitted
+    // distributed.
     val bound = localBound(s, indexPath).map(math.min(_, localMax))
-    val held = bound.map(b => graft.core.Jobs.desc(s, "vecadmit:batch-count") {
-      vecs.limit(math.min(b, Int.MaxValue - 1L).toInt + 1).collect()
+    val sized = bound.map(b => graft.core.Jobs.desc(s, "vecadmit:batch-count") {
+      vecs.select(col("vec_id")).limit(math.min(b, Int.MaxValue - 1L).toInt + 1).collect().length
     })
-    if (held.exists(_.isEmpty)) return false
-    val local = held.filter(_.length <= bound.get)
+    if (sized.contains(0)) return false
+    val local = sized.filter(_ <= bound.get)
+      .map(_ => graft.core.Jobs.desc(s, "vecadmit:batch-collect")(vecs.collect()))
     val batchN = local.fold(graft.core.Jobs.desc(s, "vecadmit:batch-count")(batch.count()))(_.length.toLong)
     if (batchN == 0L) return false
     val fs = new org.apache.hadoop.fs.Path(indexPath)
@@ -249,13 +251,15 @@ object StreamingVectorAdmit {
     }
   }
 
-  /** The driver path's row bound: [[StreamingDedup.bcastRowBound]] of an
-    * (id, vector) side at the stored centroids' width; None while the
-    * index has no quantizer. */
+  /** The driver path's row bound: [[StreamingDedup.DriverPathRows]], or
+    * [[StreamingDedup.bcastRowBound]] of an (id, vector) side at the
+    * stored centroids' width if smaller; None while the index has no
+    * quantizer. */
   private def localBound(s: org.apache.spark.sql.SparkSession, indexPath: String): Option[Long] = {
     val cents = new org.apache.hadoop.fs.Path(s"$indexPath/centroids/_SUCCESS")
     if (!cents.getFileSystem(s.sparkContext.hadoopConfiguration).exists(cents)) None
-    else Ann.loadIvfCentroids(s, indexPath).headOption.map(c => StreamingDedup.bcastRowBound(1, 4L * c.length))
+    else Ann.loadIvfCentroids(s, indexPath).headOption
+      .map(c => math.min(StreamingDedup.bcastRowBound(1, 4L * c.length), StreamingDedup.DriverPathRows))
   }
 
   /**

@@ -1314,8 +1314,8 @@ class StreamingSpec extends SparkSpecBase {
       }
       info(s"run trigger jobs: $jobs, labels: ${tally(labels)}")
       assert(jobs <= RunTriggerJobs, s"run trigger ran $jobs jobs, pinned ≤ $RunTriggerJobs")
-      assert(labels.filter(_.startsWith("streamdedup:")).toSet ==
-        Set("streamdedup:batch-count", "streamdedup:matches-write", "streamdedup:sigs-write"))
+      assert(labels.filter(_.startsWith("streamdedup:")).toSet == Set("streamdedup:batch-count",
+        "streamdedup:batch-collect", "streamdedup:matches-write", "streamdedup:sigs-write"))
     } finally q.stop()
   }
 
@@ -1412,14 +1412,17 @@ class StreamingSpec extends SparkSpecBase {
     val b0 = Seq((1L, Array(1.0f, 0.05f, 0.0f, 0.0f)), (2L, Array(0.0f, 1.0f, 0.05f, 0.0f)),
       (3L, Array(0.0f, 0.0f, 1.0f, 0.05f)), (4L, Array(0.05f, 0.0f, 0.0f, 1.0f)),
       (7L, Array(0.7f, 0.7f, 0.0f, 0.0f)), (8L, Array(0.99f, 0.06f, 0.01f, 0.0f)))
+    // a null vector probes nothing on either side; first in the first
+    // batch, it must not hide the stream's vector width
+    val b0n = (9L, null: Array[Float]) +: b0
     val b1 = Seq((0L, Array(0.99f, 0.04f, 0.01f, 0.0f)), (10L, Array(0.0f, 0.0f, 1.0f, 0.06f)),
       (11L, Array(0.0f, 0.01f, 0.99f, 0.05f)), (2L, Array(0.0f, 1.0f, 0.05f, 0.0f)),
-      (12L, Array(0.69f, 0.71f, 0.01f, 0.0f)))
+      (13L, null: Array[Float]), (12L, Array(0.69f, 0.71f, 0.01f, 0.0f)))
     def side(threshold: Double, localMax: Long): (Seq[String], Seq[String]) = {
       val base = tempDir(s"ssem_sides_$localMax")
       val batches = graft.streaming.StreamingDedup.embeddingsBatches(s"$base/index", s"$base/matches",
         threshold = threshold, ivfCells = 4, localMax = localMax)
-      batches(b0.toDF("vec_id", "embedding"), 0L)
+      batches(b0n.toDF("vec_id", "embedding"), 0L)
       batches(b1.toDF("vec_id", "embedding"), 1L)
       def rows(path: String) = spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
       (rows(s"$base/matches"), rows(s"$base/index"))
@@ -1481,6 +1484,58 @@ class StreamingSpec extends SparkSpecBase {
         Ann.ivfDriftFraction(spark, idx, b))
   }
 
+  /** Output columns of every `collect` that `body` runs. */
+  private def collectedColumns(body: => Unit): Seq[Seq[String]] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        if (f == "collect") seen.add(qe.analyzed.output.map(_.name))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive in order: once a marker collect lands,
+      // every collect of `body` has
+      val marker = Seq("__collected_marker")
+      spark.range(1).toDF(marker.head).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(marker), "the query listener did not drain")
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toList.filterNot(_ == marker)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a batch one row past the driver-path bound is sized on its ids and collects no payload") {
+    import graft.operators.Ann
+    import graft.streaming.{StreamingDedup, StreamingVectorAdmit}
+    import scala.jdk.CollectionConverters._
+    val docs = Seq((1L, pinText), (2L, pinText + " again"), (3L, "completely different text about gardens"))
+      .toDF("doc_id", "text")
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").select(col("vec_id"), col("embedding"))
+    val vecs = emb.filter(col("vec_id") % 4 === 1).limit(3).collect().toSeq
+    val vecBatch = spark.createDataFrame(vecs.asJava, emb.schema)
+    // three rows against bounds of 3 (driver path) and 2 (one row past):
+    // both size on the ids, only the driver path collects the payload
+    def sink(label: String, payload: Set[String], run: Long => Unit): Unit =
+      for ((bound, driver) <- Seq(3L -> true, 2L -> false)) {
+        val collected = collectedColumns(run(bound))
+        assert(collected.exists(_.forall(!payload(_))), s"$label sizes on ids: $collected")
+        assert(collected.exists(_.exists(payload)) == driver, s"$label at bound $bound collected $collected")
+      }
+    val base = tempDir("past_bound")
+    sink("streamdedup", Set("sig", "text", "__keys"), bound =>
+      StreamingDedup.runBatch(docs, 1L, s"$base/index_$bound", s"$base/matches_$bound", localMax = bound))
+    sink("vecdedup", Set("vec", "embedding", "bits", "__keys"), bound =>
+      StreamingDedup.embeddingsBatches(s"$base/vindex_$bound", s"$base/vmatches_$bound", threshold = 0.9,
+        localMax = bound)(vecBatch, 1L))
+    val idx = s"$base/ivf"
+    Ann.buildIvfIndex(spark, emb.filter(col("vec_id") % 4 === 0), idx, numCells = 16)
+    sink("vecadmit", Set("embedding"), bound =>
+      StreamingVectorAdmit.admitBatch(vecBatch, idx, bound, driftRetrainFraction = 2.0, localMax = bound))
+  }
+
   test("UPSERT keeps the last row per key on the driver exactly as the keep-last window did") {
     spark // force base session init first
     org.apache.spark.sql.SparkSession.clearActiveSession()
@@ -1535,7 +1590,7 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   private val KeepBestTriggerJobs = 26L
-  private val RunTriggerJobs = 4L
-  private val VectorAdmitTriggerJobs = 3L
+  private val RunTriggerJobs = 5L
+  private val VectorAdmitTriggerJobs = 4L
   private val UpsertStatementJobs = 1L
 }
