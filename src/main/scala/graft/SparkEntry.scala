@@ -772,7 +772,7 @@ object SparkEntry {
     * (bench warm + median reps) measures the QUERY, not Derby DDL.
     * Returns the JDBC url. Exposed through [[setupFixtures]]. */
   private def ensureDeclaredCatalog(s: SparkSession, dir: String): String = {
-    val dbDir = "/tmp/graft_declared_db_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val dbDir = "/tmp/graft_declared_db_" + dirKey(dir)
     val url = s"jdbc:derby:$dbDir"
     SparkEntry.synchronized {
       val keys = ld(s, dir, "supplier").select(col("s_suppkey")).collect().map(_.getLong(0)).sorted
@@ -1038,7 +1038,7 @@ object SparkEntry {
 
   /** Ingest round-trip through the time-bucketed TsLayout. */
   private def qStreamIngest(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_layout/${dir.replaceAll("[^a-zA-Z0-9]", "_")}/events"
+    val path = s"/tmp/graft_layout/${dirKey(dir)}/events"
     TsLayout.write(ld(s, dir, "events"), TestSchema.events, path)
     TsLayout
       .read(s, path)

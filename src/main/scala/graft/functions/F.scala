@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.sql.GraftFunctions
 
 /**
  * graft function surface: the reference's SQL function registry
@@ -14,8 +15,12 @@ import org.apache.spark.sql.functions._
  *  - time trunc/extract (reference Expression.scala:337-410)
  *  - string/array ops: tokens, split, contains_* (Expression.scala:297-335,514-530)
  *  - currency: fixed 2-decimal arithmetic (yupana-api Currency.scala)
- *  - hashing/sketching for the pipeline operators: minhash, simhash,
- *    hamming, cosine, rolling fingerprint (beyond the reference)
+ *  - hashing/sketching for the pipeline operators: LSH band keys,
+ *    hamming, cosine, n-grams, jaccard (beyond the reference)
+ *
+ * The tokenizer helpers build graft's native expressions straight from
+ * the builder table ([[graft.sql.GraftFunctions.call]]), so they work
+ * on any session; only SQL text needs the graft names registered.
  */
 object F {
 
@@ -48,29 +53,25 @@ object F {
    * lowercase, keep letter/digit runs, drop empties. Stemming is
    * locale-specific in the reference (RussianLightStemmer); graft keeps
    * the language-neutral normalization (identity stem).
-   *
-   * Resolves to the native Tokens expression (graft_tokens must be
-   * registered on the session — graft.sql.GraftFunctions.register;
-   * SparkEntry/specs do this automatically).
    */
-  def tokens(c: Column): Column = call_function("graft_tokens", c)
+  def tokens(c: Column): Column = GraftFunctions.call("graft_tokens", c)
 
   /** Reference stemmedTokens: tokens with the locale's registered stemmer
     * applied per token (TokenizerBase.stemmedTokens; 'en' = Harman
     * S-stemmer English light stem). */
   def stemmedTokens(c: Column, locale: String = "en"): Column =
-    call_function("graft_stemmed_tokens", c, lit(locale))
+    GraftFunctions.call("graft_stemmed_tokens", c, lit(locale))
 
   /** Reference RussianTransliterator.transliterate (yupana-utils). */
-  def translit(c: Column): Column = call_function("graft_translit", c)
+  def translit(c: Column): Column = GraftFunctions.call("graft_translit", c)
 
   /** Reference TokenizerBase.transliteratedTokens: tokenize → stem →
     * transliterate → drop emptied tokens (the ItemDimension.hash chain). */
   def transliteratedTokens(c: Column, locale: String = "en"): Column =
-    call_function("graft_transliterated_tokens", c, lit(locale))
+    GraftFunctions.call("graft_transliterated_tokens", c, lit(locale))
 
   /** Reference SplitExpr (Expression.scala:322): split on non-letter/digit, no lowercasing. */
-  def splitWords(c: Column): Column = call_function("graft_split_words", c)
+  def splitWords(c: Column): Column = GraftFunctions.call("graft_split_words", c)
 
   def arrayToString[T](c: Column): Column = array_join(c, ", ")
 
@@ -90,15 +91,6 @@ object F {
   // ---- sketches / hashing (pipeline operators) ------------------------
 
   /**
-   * MinHash signature: k independent permutation-minima over a token
-   * array. Hash family: xxhash64(token, seed=i). Returns array<bigint>
-   * of length k. All per-row, codegen'd; the expensive part stays
-   * data-parallel with no shuffle.
-   */
-  def minhashSignature(tokensCol: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), i => array_min(transform(tokensCol, t => xxhash64(t, i))))
-
-  /**
    * LSH band keys for a minhash signature: split k minima into `bands`
    * rows-per-band groups, hash each band. Near-dup candidates = rows
    * sharing any band key → candidate generation is an equi-join on
@@ -109,32 +101,6 @@ object F {
       sequence(lit(0), lit(bands - 1)),
       b => struct(b.as("band"), xxhash64(concat_ws("_", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))), b).as("bh"))
     )
-
-  /**
-   * 64-bit SimHash of a token array: per-token 64-bit hash votes +1/-1
-   * on each bit position; signature bit i is set when the vote sum is
-   * positive. Pure column algebra → codegen.
-   */
-  def simhash64(tokensCol: Column): Column = {
-    val votes = aggregate(
-      tokensCol,
-      array_repeat(lit(0), 64),
-      (acc, t) =>
-        zip_with(
-          acc,
-          transform(
-            sequence(lit(0), lit(63)),
-            i => when(call_function("shiftrightunsigned", xxhash64(t), i).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)
-          ),
-          (a, b) => a + b
-        )
-    )
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(63)), (v, i) => struct(v.as("v"), i.as("i"))),
-      lit(0L),
-      (acc, s) => when(s.getField("v") > 0, acc.bitwiseOR(call_function("shiftleft", lit(1L), s.getField("i")))).otherwise(acc)
-    )
-  }
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -148,14 +114,6 @@ object F {
 
   /** Cosine similarity of two numeric arrays. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
-
-  /**
-   * Rolling polynomial fingerprint of a token array (Rabin-Karp style):
-   * acc = acc * 31 + xxhash64(token), in token order. A stable
-   * content-defined document id.
-   */
-  def rollingFingerprint(tokensCol: Column): Column =
-    aggregate(tokensCol, lit(0L), (acc, t) => acc * lit(31L) + xxhash64(t))
 
   /** Character n-grams of a string (for n-gram Jaccard). */
   def charNgrams(c: Column, n: Int): Column =

@@ -32,6 +32,15 @@ import org.apache.spark.unsafe.types.UTF8String
  * (soft/hard signs) are dropped — the tokenize → stem → transliterate
  * chain `ItemDimension.hash` feeds on (yupana-schema
  * ItemDimension.scala:54-56).
+ *
+ * The child is a string or an array of strings — the reference registers
+ * the tokenizer for both (yupana-core sql/FunctionRegistry.scala:155,171,
+ * `ArrayTokensExpr`; ConstantCalculator.scala:142 evaluates it as
+ * `a.flatMap(tokenizer.transliteratedTokens)`). An array's elements are
+ * tokenized with the same kernel and the results concatenated in element
+ * order; NULL elements contribute no tokens, a NULL array is NULL. The
+ * branch is picked from the child's type at eval and codegen time, so
+ * the expression can be built over unresolved children.
  */
 case class Tokens(child: Expression, lowercase: Boolean, stemmer: String = "none",
     translit: Boolean = false)
@@ -47,13 +56,17 @@ case class Tokens(child: Expression, lowercase: Boolean, stemmer: String = "none
   // this keeps the interpreted path consistent with it).
   private val stemmerObj: Stemmer = Stemmers.forId(stemmer)
 
+  private lazy val overArray: Boolean = child.dataType.isInstanceOf[ArrayType]
+
   override protected def nullSafeEval(input: Any): Any =
-    Tokens.tokenize(input.asInstanceOf[UTF8String], lowercase, stemmerObj, translit)
+    if (overArray) Tokens.tokenizeAll(input.asInstanceOf[ArrayData], lowercase, stemmerObj, translit)
+    else Tokens.tokenize(input.asInstanceOf[UTF8String], lowercase, stemmerObj, translit)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val stemRef = ctx.addReferenceObj("stemmer", stemmerObj, classOf[Stemmer].getName)
+    val kernel = if (overArray) "tokenizeAll" else "tokenize"
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.Tokens.tokenize($c, $lowercase, $stemRef, $translit);")
+      s"${ev.value} = graft.functions.expressions.Tokens.$kernel($c, $lowercase, $stemRef, $translit);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Tokens = copy(child = newChild)
@@ -98,51 +111,8 @@ object Tokens {
     new GenericArrayData(out.toArray)
   }
 
-  /** Stem-only kernel entry (the graft_tokens/graft_stemmed_tokens shape). */
-  def tokenize(u: UTF8String, lowercase: Boolean, stemmer: Stemmer): ArrayData =
-    tokenize(u, lowercase, stemmer, translit = false)
-
-  /** Back-compat kernel entry (WordShingles and older codegen sites). */
-  def tokenize(u: UTF8String, lowercase: Boolean): ArrayData =
-    tokenize(u, lowercase, IdentityStemmer)
-}
-
-/**
- * `tokens` over an array column — the reference registers the
- * tokenizer for both string and array<string> input (yupana-core
- * sql/FunctionRegistry.scala:171 `uTyped("tokens", ArrayTokensExpr)`;
- * ConstantCalculator.scala:142 evaluates it as
- * `a.flatMap(tokenizer.transliteratedTokens)`): each element is
- * tokenized with the SAME kernel as [[Tokens]] and the results are
- * concatenated in element order. NULL elements contribute no tokens
- * (the flatMap shape); a NULL array is NULL.
- */
-case class ArrayTokens(child: Expression, lowercase: Boolean, stemmer: String = "none",
-    translit: Boolean = false)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_tokens"
-
-  // eager resolve — same executor-registry discipline as Tokens
-  private val stemmerObj: Stemmer = Stemmers.forId(stemmer)
-
-  override protected def nullSafeEval(input: Any): Any =
-    ArrayTokens.tokenizeAll(input.asInstanceOf[ArrayData], lowercase, stemmerObj, translit)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val stemRef = ctx.addReferenceObj("stemmer", stemmerObj, classOf[Stemmer].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.ArrayTokens.tokenizeAll($c, $lowercase, $stemRef, $translit);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ArrayTokens =
-    copy(child = newChild)
-}
-
-object ArrayTokens {
   /** Static kernel, callable from generated Java: flatMap of
-    * [[Tokens.tokenize]] over the elements (reference
+    * [[tokenize]] over the non-NULL elements (reference
     * ConstantCalculator.scala:142 `a.flatMap(transliteratedTokens)`
     * when `translit` is on). */
   def tokenizeAll(arr: ArrayData, lowercase: Boolean, stemmer: Stemmer,
@@ -152,7 +122,7 @@ object ArrayTokens {
     val n = arr.numElements()
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val toks = Tokens.tokenize(arr.getUTF8String(i), lowercase, stemmer, translit)
+        val toks = tokenize(arr.getUTF8String(i), lowercase, stemmer, translit)
         var j = 0
         val m = toks.numElements()
         while (j < m) { out.add(toks.getUTF8String(j)); j += 1 }
@@ -161,10 +131,6 @@ object ArrayTokens {
     }
     new GenericArrayData(out.toArray)
   }
-
-  /** Back-compat kernel entry (pre-translit codegen shape). */
-  def tokenizeAll(arr: ArrayData, lowercase: Boolean, stemmer: Stemmer): ArrayData =
-    tokenizeAll(arr, lowercase, stemmer, translit = false)
 }
 
 /**
@@ -193,7 +159,7 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
 object WordShingles {
   /** Static kernel, callable from generated Java. */
   def shingle(u: UTF8String, n: Int): ArrayData = {
-    val toks = Tokens.tokenize(u, lowercase = true)
+    val toks = Tokens.tokenize(u, lowercase = true, IdentityStemmer, translit = false)
     val cnt = toks.numElements()
     val out = new java.util.LinkedHashSet[AnyRef]()
     val limit = math.max(cnt - n + 1, 1)

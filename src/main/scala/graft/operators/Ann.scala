@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.functions._
+import graft.sql.GraftFunctions
 
 import graft.functions.expressions.{NearestCellsHierBcast, NearestCentroidBcast,
   NearestCentroidDistBcast, NearestCentroidsBcast, PqEncodeBcast, SubCellsBcast}
@@ -48,7 +49,6 @@ object Ann {
   /** Exact cosine top-k: every query vector against the whole corpus.
     * Per-candidate work is one fused codegen'd cosine (graft_cosine). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.sql.GraftFunctions.register(corpus.sparkSession)
     // deliberate physical-plan choice: per-query key cardinality is the
     // (bounded) query set, so the heap operator is strictly better than
     // the sort-based window — and it spills past the configured bound.
@@ -57,7 +57,7 @@ object Ann {
       .select(col("vec_id").as("item_id"), col("embedding").as("item_vec")))
       .crossJoin(broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))))
       .filter(col("query_id") =!= col("item_id"))
-      .withColumn("cos", call_function("graft_cosine", col("query_vec"), col("item_vec")))
+      .withColumn("cos", GraftFunctions.call("graft_cosine", col("query_vec"), col("item_vec")))
       // zero-norm vectors have no defined cosine (graft_cosine → NULL);
       // exclude them so the heap and sort physical paths rank identically
       .filter(col("cos").isNotNull)
@@ -188,7 +188,6 @@ object Ann {
       trainSample: Long = 20000L,
       knownCount: Long = -1L // corpus size if the caller already counted (skips a pass)
   ): Array[Array[Float]] = {
-    graft.sql.GraftFunctions.register(spark)
     // null vectors carry no geometry and never rank (their norms are
     // null) — training on them would NPE the sample collect
     val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
@@ -228,7 +227,6 @@ object Ann {
       trainSample: Long = 20000L,
       knownCount: Long = -1L
   ): (Array[Array[Float]], Array[Array[Array[Float]]]) = {
-    graft.sql.GraftFunctions.register(spark)
     // null vectors: no geometry, never rank — see [[ivfTrain]]
     val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
       .filter(col("item_vec").isNotNull)
@@ -400,7 +398,6 @@ object Ann {
       k: Int,
       probes: Int
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(corpus.sparkSession)
     graft.sql.GraftFunctions.installTopKStrategy(corpus.sparkSession)
     rankTopK(probedCandidates(corpus, queries, cents, probes), k)
   }
@@ -438,7 +435,7 @@ object Ann {
     * FLOPs. Use wherever a candidate join re-meets the same vectors
     * many times. */
   private[graft] def cosFromNorms(qv: org.apache.spark.sql.Column, iv: org.apache.spark.sql.Column, qn: org.apache.spark.sql.Column, in_ : org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val c = try_divide(call_function("graft_dot", qv, iv), qn * in_)
+    val c = try_divide(GraftFunctions.call("graft_dot", qv, iv), qn * in_)
     when(isnan(c), lit(null).cast("double")).otherwise(c)
   }
 
@@ -504,7 +501,6 @@ object Ann {
       splitProbes: Int = 2 // sub-cells probed inside a split cell (≥ split width ⇒ exhaustive)
   ): DataFrame = {
     val spark = df.sparkSession
-    graft.sql.GraftFunctions.register(spark)
     graft.sql.GraftFunctions.installTopKStrategy(spark)
     val vecs = df.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
     // Per-vector norms are computed ONCE at assignment time
@@ -518,7 +514,7 @@ object Ann {
     def withNorms(v: DataFrame, side: String): DataFrame =
       v.select(col("vec_id").as(s"${side}_id"), col("embedding").as(s"${side}_vec"))
         .withColumn(s"${side}_n",
-          sqrt(call_function("graft_dot", col(s"${side}_vec"), col(s"${side}_vec"))))
+          sqrt(GraftFunctions.call("graft_dot", col(s"${side}_vec"), col(s"${side}_vec"))))
     val (items, queries) =
       if (centroids != null) {
         // caller-supplied flat quantizer (shared across probe settings or a
@@ -878,7 +874,6 @@ object Ann {
       trainSample: Long = 20000L
   ): Unit = {
     import spark.implicits._
-    graft.sql.GraftFunctions.register(spark)
     // A REBUILD must wipe the admission state (delta shards + any
     // staged promotion): stale shards carry cells assigned by the OLD
     // quantizer — served under the new centroids they join the wrong
@@ -973,7 +968,6 @@ object Ann {
       trainSample: Long = 20000L
   ): Unit = {
     import spark.implicits._
-    graft.sql.GraftFunctions.register(spark)
     // ONE sample collect trains both quantizers (coarse cells + PQ
     // codebooks): the hash-filtered sample is identical for both, and
     // at index-build scale the count + collect passes are the expensive
@@ -1053,7 +1047,6 @@ object Ann {
       probes: Int = 4,
       rerank: Int = 32
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(spark)
     graft.sql.GraftFunctions.installTopKStrategy(spark)
     import spark.implicits._
     val cents = loadIvfCentroids(spark, path)
@@ -1128,7 +1121,7 @@ object Ann {
     val adcW = Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("item_id").asc)
     val cands = paired
       .filter(col("query_id") =!= col("item_id"))
-      .withColumn("adc", nanvl(call_function("graft_pq_adc_cosine",
+      .withColumn("adc", nanvl(GraftFunctions.call("graft_pq_adc_cosine",
         col("codes"), col("dots"), col("norms2"), col("qnorm"), lit(kk)),
         lit(Double.NegativeInfinity)))
       .withColumn("arank", row_number().over(adcW))
@@ -1140,7 +1133,7 @@ object Ann {
     val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
     val reranked = cands
       .join(base, Seq("item_id"))
-      .withColumn("cos", call_function("graft_cosine", col("query_vec"), col("item_vec")))
+      .withColumn("cos", GraftFunctions.call("graft_cosine", col("query_vec"), col("item_vec")))
       .filter(col("cos").isNotNull)
     rankTopK(reranked, k)
   }
@@ -1179,7 +1172,6 @@ object Ann {
    * it with a rebuild instead of crashing on the missing file.
    */
   def ivfDriftFraction(spark: SparkSession, path: String, newVecs: DataFrame): Double = {
-    graft.sql.GraftFunctions.register(spark)
     driftBasis(spark, path).fold(1.0) { case (cents, p95) =>
       graft.core.Jobs.desc(spark, "ann:drift")(overP95Fraction(newVecs, "embedding", cents, p95))
     }
@@ -1469,7 +1461,6 @@ object Ann {
   ): Unit = {
     require(shard.nonEmpty, "shard name must be non-empty")
     val spark = newVecs.sparkSession
-    graft.sql.GraftFunctions.register(spark)
     // loadIvfCentroids throws on a geometry-less index (no centroids
     // dir): an append must never invent its own quantizer
     val cents = loadIvfCentroids(spark, path)
@@ -1640,7 +1631,6 @@ object Ann {
       k: Int,
       probes: Int = 4
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(spark)
     graft.sql.GraftFunctions.installTopKStrategy(spark)
     val cents = loadIvfCentroids(spark, path)
     val queryProbes = queries
@@ -1666,7 +1656,7 @@ object Ann {
     val cands = stored
       .join(broadcast(queryProbes), Seq("cell"))
       .filter(col("query_id") =!= col("item_id"))
-      .withColumn("cos", call_function("graft_cosine", col("query_vec"), col("item_vec")))
+      .withColumn("cos", GraftFunctions.call("graft_cosine", col("query_vec"), col("item_vec")))
       .filter(col("cos").isNotNull) // undefined cosine (zero-norm) never ranks
     rankTopK(cands, k)
   }
@@ -1687,7 +1677,6 @@ object Ann {
       k: Int,
       probes: Int
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(corpus.sparkSession)
     probedCandidates(corpus, queries, cents, probes)
       .groupBy(col("query_id"))
       .agg(slice(array_sort(collect_list(struct(negate(col("cos")), col("item_id"), col("cos")))), 1, k).as("topk"))
@@ -1723,7 +1712,6 @@ object Ann {
       lloydIters: Int = 5,
       trainSample: Long = 20000L
   ): Array[Array[Array[Float]]] = {
-    graft.sql.GraftFunctions.register(spark)
     val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
     pqTrainOn(collectSample(base, trainSample, -1L), m, codebookSize, lloydIters)
   }
@@ -1802,7 +1790,6 @@ object Ann {
     * persisted artifact of a PQ index: m ints (bytes, at storage) per
     * vector instead of dim floats. */
   def pqEncodeCorpus(corpus: DataFrame, codebooks: Array[Array[Array[Float]]]): DataFrame = {
-    graft.sql.GraftFunctions.register(corpus.sparkSession)
     spread(corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec")))
       .select(col("item_id"),
         pqEncodeBc(col("item_vec"), bcastCentroids3(corpus.sparkSession, codebooks)).as("codes"))
@@ -1837,7 +1824,6 @@ object Ann {
       rerank: Int
   ): DataFrame = {
     val spark = corpus.sparkSession
-    graft.sql.GraftFunctions.register(spark)
     graft.sql.GraftFunctions.installTopKStrategy(spark)
     import spark.implicits._
     val kk = codebooks(0).length
@@ -1866,7 +1852,7 @@ object Ann {
     assigned
       .join(broadcast(queryProbes), Seq("cell"))
       .filter(col("query_id") =!= col("item_id"))
-      .withColumn("cos", call_function("graft_cosine", col("query_vec"), col("item_vec")))
+      .withColumn("cos", GraftFunctions.call("graft_cosine", col("query_vec"), col("item_vec")))
       // zero-norm vectors have no defined cosine (graft_cosine → NULL);
       // drop them here so ivfSearch (heap) and ivfProbedTruth (sort)
       // stay row-identical — a NULL would sort differently in the two

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sql.GraftFunctions
 import graft.functions.F
 
 /**
@@ -192,7 +193,7 @@ object Bpe {
     * the codegen'd expression path ([[graft.functions.expressions.BpeEncode]],
     * SQL: `graft_bpe_encode(tokens, merges_lit, end_marker)`). */
   def encode(tokens: Column, merges: Seq[Merge], endMarker: String = "</w>"): Column =
-    call_function("graft_bpe_encode", tokens,
+    GraftFunctions.call("graft_bpe_encode", tokens,
       lit(merges.sortBy(_.rank).map(m => m.left + " " + m.right).toArray), lit(endMarker))
 
   /** The vocabulary a merge table induces: every merged token (base

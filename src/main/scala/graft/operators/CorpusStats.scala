@@ -59,7 +59,6 @@ object CorpusStats {
       minCount: Long = 5L,
       topK: Int = 20
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession)
     val pairCounts = df
       .select(F.tokens(col(textCol)).as("tk"))
       .select(posexplode(col("tk")).as(Seq("i", "w1")), col("tk"))
@@ -121,7 +120,6 @@ object CorpusStats {
       maxNll: Double,
       train: Option[DataFrame] = None
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession)
     val docTf = df
       .select(col(idCol), explode(F.tokens(col(textCol))).as("w"))
       .groupBy(col(idCol), col("w")).agg(count(lit(1)).as("tf"))
@@ -193,7 +191,6 @@ object CorpusStats {
       textCol: String,
       maxNll: Double
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession)
     val docTf = df
       .select(col(idCol), F.tokens(col(textCol)).as("tk"))
       .select(col(idCol), explode(expr(

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sql.GraftFunctions
 import graft.functions.F
 
 /**
@@ -57,7 +58,7 @@ object Dedup {
     * (array_distinct∘transform∘slice∘concat_ws) is interpreted per
     * element and dominated the exact-verify dedup paths. */
   def shingles(textCol: Column, n: Int): Column =
-    call_function("graft_word_shingles", textCol, lit(n))
+    GraftFunctions.call("graft_word_shingles", textCol, lit(n))
 
   /**
    * MinHash signatures: one narrow per-row pass (plus a one-time
@@ -88,10 +89,9 @@ object Dedup {
     // measured at sf0.1: nested transform 70s+, explode + 64
     // partial-agg mins 11s, HOF shingles + native minhash ~10s cold
     // (interpreter warm-up dominates), fused ~1s.
-    graft.sql.GraftFunctions.register(df.sparkSession)
     (if (spread) Ann.spread(df) else df).select(
       col(idCol).as("id") +:
-        call_function("graft_text_minhash", col(textCol), lit(shingleSize), lit(numHashes)).as("sig") +:
+        GraftFunctions.call("graft_text_minhash", col(textCol), lit(shingleSize), lit(numHashes)).as("sig") +:
         keep.map(col): _*
     )
   }
@@ -137,10 +137,9 @@ object Dedup {
 
   /** SimHash signatures — one narrow pass via the fused TextSimHash expression. */
   def simhashSigs(df: DataFrame, idCol: String, textCol: String, shingleSize: Int): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession)
     df.select(
       col(idCol).as("id"),
-      call_function("graft_text_simhash", col(textCol), lit(shingleSize)).as("sig")
+      GraftFunctions.call("graft_text_simhash", col(textCol), lit(shingleSize)).as("sig")
     )
   }
 
@@ -216,7 +215,6 @@ object Dedup {
     * LSH candidates, never all pairs. */
   def exactJaccardVerify(
       cands: DataFrame, df: DataFrame, idCol: String, textCol: String, shingleSize: Int): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession) // shingles() resolves graft_word_shingles
     val sh = df.select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
     cands
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -354,10 +352,9 @@ object Dedup {
     * jaccard variants and the dispatch probe. */
   private[graft] def gramPostings(
       df: DataFrame, idCol: String, textCol: String, groupCols: Seq[String], n: Int): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession)
     df.select(
         (col(idCol).as("id") +:
-          call_function("graft_char_ngrams", lower(col(textCol)), lit(n)).as("grams") +:
+          GraftFunctions.call("graft_char_ngrams", lower(col(textCol)), lit(n)).as("grams") +:
           groupCols.map(col)): _*
       )
       .select((col("id") +: size(col("grams")).as("sz") +: explode(col("grams")).as("gram") +: groupCols.map(col)): _*)
@@ -992,7 +989,6 @@ object Dedup {
   private def prefixPairs(
       df: DataFrame, idCol: String, textCol: String, groupCols: Seq[String],
       n: Int, threshold: Double, numPartitions: Option[Int] = None): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession)
     val ex = gramPostings(df, idCol, textCol, groupCols, n)
     val freq = ex.groupBy((groupCols.map(col) :+ col("gram")): _*).agg(count(lit(1)).as("gf"))
     // rarity-ordered token arrays (prefix extraction only)
@@ -1035,7 +1031,7 @@ object Dedup {
     // text scan, NOT the rarityArrays subtree (whose freq join + array
     // build would otherwise be recomputed a third time just for this)
     val occ = df
-      .select((size(call_function("graft_char_ngrams", lower(col(textCol)), lit(n))).as("sz") +:
+      .select((size(GraftFunctions.call("graft_char_ngrams", lower(col(textCol)), lit(n))).as("sz") +:
         groupCols.map(col)): _*)
       .filter(col("sz") > 0)
       .select((bandOf(col("sz")).as("band") +: groupCols.map(col)): _*)
@@ -1117,7 +1113,7 @@ object Dedup {
     // then never moves); the -1 seeds tell the kernel the positions
     // are rarity-order, not lexicographic
     val lexToks = df.select(col(idCol).as("id"),
-      array_sort(call_function("graft_char_ngrams", lower(col(textCol)), lit(n))).as("lt"))
+      array_sort(GraftFunctions.call("graft_char_ngrams", lower(col(textCol)), lit(n))).as("lt"))
     // broadcast gate on the ACTUAL payload, not raw text bytes: the
     // broadcast rows are per-doc distinct char-ngram ARRAYS — roughly
     // one n-char UTF8String plus ~16B of array-entry/offset overhead
@@ -1142,7 +1138,7 @@ object Dedup {
       .join(side("id_x", "ta"), "id_x")
       .join(side("id_y", "tb"), "id_y")
       .select(col("id_x"), col("id_y"), col("sz_x"), col("sz_y"),
-        call_function("graft_ppj_verify",
+        GraftFunctions.call("graft_ppj_verify",
           col("ta"), col("tb"), lit(-1), lit(-1), lit(threshold)).as("inter"))
       .filter(col("inter") >= 0)
       .withColumn(
@@ -1301,7 +1297,6 @@ object Dedup {
       centroids: Array[Array[Float]] = null // pre-trained flat quantizer; skips ivfTrain
   ): DataFrame = {
     val spark = df.sparkSession
-    graft.sql.GraftFunctions.register(spark)
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     if (centroids != null) {
       // caller supplies the quantizer (e.g. one trained set shared
@@ -1377,7 +1372,6 @@ object Dedup {
       knownCount: Long = -1L // corpus size if already counted (skips a pass)
   ): DataFrame = {
     val spark = df.sparkSession
-    graft.sql.GraftFunctions.register(spark)
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val (l1, l2) = Ann.ivfTrainHier(
       spark, vecs.select(xxhash64(col("id")).as("vec_id"), col("vec").as("embedding")),
@@ -1414,7 +1408,7 @@ object Dedup {
     // guard, dot/(na·nb) is bit-identical to graft_cosine: null (and
     // null-dot mismatch rows) fail `>=`, survivors are real numbers.
     val withN = assigned.withColumn("n",
-      sqrt(call_function("graft_dot", col("vec"), col("vec"))))
+      sqrt(GraftFunctions.call("graft_dot", col("vec"), col("vec"))))
     def cos = graft.operators.Ann.cosFromNorms(
       col("a.vec"), col("b.vec"), col("a.n"), col("b.n"))
     withN.as("a")
@@ -1428,7 +1422,6 @@ object Dedup {
   /** Exact all-pairs cosine verify — the degenerate-banding path. */
   private def embeddingPairsBrute(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession)
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     // spread the probe side: a one-split corpus would run every cosine
     // on a single core (see Ann.spread)
@@ -1436,7 +1429,7 @@ object Dedup {
       .crossJoin(vecs.as("b"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        call_function("graft_cosine", col("a.vec"), col("b.vec")).as("cos"))
+        GraftFunctions.call("graft_cosine", col("a.vec"), col("b.vec")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -1450,11 +1443,10 @@ object Dedup {
       maxBucket: Option[Int]
   ): DataFrame = {
     val rowsPerBand = planes / bands
-    graft.sql.GraftFunctions.register(df.sparkSession)
     // sign bits against deterministic hyperplanes, packed in a long
     // (native expression — one per-row loop instead of planes×dim lambdas)
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val sigs = vecs.select(col("id"), call_function("graft_hyperplane_bits", col("vec"), lit(planes)).as("bits"))
+    val sigs = vecs.select(col("id"), GraftFunctions.call("graft_hyperplane_bits", col("vec"), lit(planes)).as("bits"))
     // shifts mod 64: one 64-bit band (near-1 thresholds) needs -1L, not
     // (1L << 64) - 1 = 0 — a zero mask hashes every row to bh=0 and the
     // band join degenerates to all-pairs
@@ -1481,7 +1473,7 @@ object Dedup {
       .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a")), "id_a")
       .join(vecs.select(col("id").as("id_b"), col("vec").as("vec_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        call_function("graft_cosine", col("vec_a"), col("vec_b")).as("cos"))
+        GraftFunctions.call("graft_cosine", col("vec_a"), col("vec_b")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -1903,7 +1895,6 @@ object Dedup {
   private def crossExactVerify(
       cands0: DataFrame, probe: DataFrame, ref: DataFrame,
       idCol: String, textCol: String, shingleSize: Int): DataFrame = {
-    graft.sql.GraftFunctions.register(probe.sparkSession)
     // the candidate frame is consumed TWICE (the ref semi-join build
     // below + the final join) and its lineage holds the corpus-index
     // scan — the single most expensive input of every cross path.

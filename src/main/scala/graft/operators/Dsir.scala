@@ -60,7 +60,6 @@ object Dsir {
   def featureCounts(
       docs: DataFrame, idCol: String, textCol: String,
       isTarget: Column, buckets: Int): DataFrame = {
-    graft.sql.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol).as("doc_id"), coalesce(isTarget, lit(false)).as("is_target"),
         explode(F.tokens(col(textCol))).as("w"))
@@ -379,7 +378,6 @@ object Dsir {
   def scoreWithRatios(
       docs: DataFrame, idCol: String, textCol: String,
       ratios: DataFrame, buckets: Int, defaultQ: Long): DataFrame = {
-    graft.sql.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol).as("doc_id"), explode_outer(F.tokens(col(textCol))).as("w"))
       .select(col("doc_id"), when(col("w").isNotNull, bucket(col("w"), buckets)).as("bucket"))

@@ -39,7 +39,7 @@ object InvertedIndex {
     // be index-side tokens or phrases silently return zero docs
     val stem = graft.functions.expressions.Stemmers.forId(stemmer)
     val arr = graft.functions.expressions.Tokens.tokenize(
-      org.apache.spark.unsafe.types.UTF8String.fromString(phrase), lowercase = true, stem)
+      org.apache.spark.unsafe.types.UTF8String.fromString(phrase), lowercase = true, stem, translit = false)
     val words = (0 until arr.numElements()).map(arr.getUTF8String(_).toString).distinct
     index
       .filter(col("token").isin(words.toSeq: _*))

@@ -58,7 +58,6 @@ object NaiveBayes {
       isTrain: Column, buckets: Int = 4096): DataFrame = {
     Dsir.requireBuckets(buckets) // model is broadcast: K·B must stay bounded
     val spark = docs.sparkSession
-    graft.sql.GraftFunctions.register(spark)
     val base = docs.select(
       col(idCol).as("doc_id"), col(labelCol).as("label"),
       coalesce(isTrain, lit(false)).as("is_train"), col(textCol).as("text"))

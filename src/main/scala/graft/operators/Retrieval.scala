@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sql.GraftFunctions
 import graft.functions.F
 
 /**
@@ -67,10 +68,6 @@ object Retrieval {
    * form exists).
    */
   def tokenPostings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // F.tokens resolves via call_function("graft_tokens") at analysis
-    // time — register here so every public entry point (build, append,
-    // ad-hoc) works on a fresh session, not only bm25Scored's path
-    graft.sql.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol).as("doc_id"), F.tokens(col(textCol)).as("tk"))
       // len rides along through the explode (constant per doc) so the
@@ -128,7 +125,6 @@ object Retrieval {
       queries: Seq[(String, Seq[String])],
       k: Int
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(spark)
     graft.sql.GraftFunctions.installTopKStrategy(spark)
     import spark.implicits._
 
@@ -193,7 +189,6 @@ object Retrieval {
       queries: Seq[(String, Seq[String])] = defaultQueries,
       k: Int = 10
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(spark)
     graft.sql.GraftFunctions.installTopKStrategy(spark)
     import spark.implicits._
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sql.GraftFunctions
 import graft.functions.F
 
 /**
@@ -58,7 +59,6 @@ object TextAnalysis {
       n: Int = 5,
       minDf: Long = 2
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession)
     // explode_outer: a document with fewer than n tokens has an EMPTY
     // gram array, and a plain explode would drop it from the output
     // entirely — a caller joining decisions back to the corpus would
@@ -125,7 +125,6 @@ object TextAnalysis {
       n: Int = 5,
       fpp: Double = 0.01
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(corpus.sparkSession)
     val evalGrams = evalDocs
       .select(F.tokens(col(textCol)).as("tk"))
       .select(explode(wordNgrams(col("tk"), n)).as("gram"))
@@ -153,7 +152,7 @@ object TextAnalysis {
       .select(col(idCol), explode(wordNgrams(col("tk"), n)).as("gram"))
     val perDoc = grams.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
     val hits = grams
-      .filter(call_function("graft_might_contain", lit(ser), xxhash64(col("gram"))))
+      .filter(GraftFunctions.call("graft_might_contain", lit(ser), xxhash64(col("gram"))))
       // exact verify: removes Bloom false positives; hash join on the
       // gram — its input is the screened survivors, not the corpus
       .join(evalGrams.hint("shuffle_hash"), Seq("gram"))
@@ -200,7 +199,6 @@ object TextAnalysis {
       textCol: String,
       k: Int = 20
   ): DataFrame = {
-    graft.sql.GraftFunctions.register(df.sparkSession)
     val spans = df
       .select(col(idCol), F.tokens(col(textCol)).as("tk"))
       .select(col(idCol), explode_outer(positionalNgrams(col("tk"), k)).as("gram"))

@@ -103,10 +103,13 @@ object Upsert {
    */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String, keys: Seq[String]): Unit = {
     val log = graft.core.DirCache.reader(spark, path).parquet(path)
-    // partition-column inference reads __seq back as int
-    val maxSeq = graft.core.Jobs.desc(spark, "upsert:compact:max-seq") {
-      log.agg(max(col("__seq"))).head().get(0).asInstanceOf[Number].longValue()
-    }
+    // the newest version that holds a data file, from the relation's own
+    // file listing (no job). A crashed, file-less newer `__seq=` dir never
+    // counts: merged into, a replay of that seq would overwrite the state
+    val maxSeq = log.inputFiles.iterator
+      .map(f => new org.apache.hadoop.fs.Path(f).getParent.getName)
+      .collect { case d if d.startsWith("__seq=") => d.stripPrefix("__seq=").toLong }
+      .max
     val merged = {
       // same deterministic tie-break as readLatest: compaction must
       // materialize exactly the row readLatest would have returned

@@ -1,10 +1,11 @@
 package graft.sql
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import graft.functions.expressions.{CosineSimilarity, HyperplaneBits, MinHashSignature, NearestCentroid, NearestCentroids, SimHash64, TextMinHash, TextSimHash}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import graft.functions.expressions.{CosineSimilarity, HyperplaneBits, MinHashSignature, NearestCentroid, NearestCentroids, SimHash64, TextMinHash, TextSimHash, Tokens}
 
 /**
  * SQL function surface: the reference exposes its engine through a
@@ -12,12 +13,18 @@ import graft.functions.expressions.{CosineSimilarity, HyperplaneBits, MinHashSig
  * (yupana-core/src/main/scala/org/yupana/core/sql/FunctionRegistry.scala).
  * graft's SQL surface IS Spark SQL — `spark.sql(...)` over the
  * registered tables gives the reference's SELECT semantics directly —
- * and this object adds the graft-specific functions (sketches) to the
- * session so they are callable from SQL and `call_function`.
+ * and [[GraftFunctions.builders]] is the one table of graft-specific
+ * functions (sketches, tokenizers, vector ops).
  *
- * Cluster deployments inject [[GraftExtensions]] via
- * `spark.sql.extensions=graft.sql.GraftExtensions`; local code can call
- * [[GraftFunctions.register]] on an existing session.
+ * One contract for reaching that table:
+ *  - SQL text (`spark.sql`, `expr`, `call_function`) resolves graft
+ *    names through the session registry, so it needs the session to
+ *    carry them: cluster deployments inject [[GraftExtensions]] via
+ *    `spark.sql.extensions=graft.sql.GraftExtensions`; local code calls
+ *    [[GraftFunctions.register]] on an existing session.
+ *  - Scala operators and Column helpers build their expressions from
+ *    the table directly ([[GraftFunctions.call]]) and work on any
+ *    session, registered or not.
  */
 object GraftFunctions {
 
@@ -26,18 +33,6 @@ object GraftFunctions {
 
   private def strArg(exprs: Seq[Expression], i: Int, default: String): String =
     if (exprs.length > i) exprs(i).eval().toString else default
-
-  /** tokens/split dispatch on input type — the reference registers the
-    * tokenizer for BOTH string and array<string>
-    * (FunctionRegistry.scala:155,171); safe to inspect dataType here
-    * because UnresolvedFunction only resolves once its children have. */
-  private def tokensFor(e: Expression, lowercase: Boolean, stemmer: String = "none",
-      translit: Boolean = false): Expression =
-    e.dataType match {
-      case org.apache.spark.sql.types.ArrayType(_, _) =>
-        graft.functions.expressions.ArrayTokens(e, lowercase, stemmer, translit)
-      case _ => graft.functions.expressions.Tokens(e, lowercase, stemmer, translit)
-    }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_minhash" -> (exprs => MinHashSignature(exprs.head, 64)),
@@ -77,12 +72,12 @@ object GraftFunctions {
     // xxhash64 values): putLong and mightContainLong share the hash.
     "graft_might_contain" -> (exprs =>
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))),
-    "graft_tokens" -> (exprs => tokensFor(exprs.head, lowercase = true)),
-    "graft_split_words" -> (exprs => tokensFor(exprs.head, lowercase = false)),
+    "graft_tokens" -> (exprs => Tokens(exprs.head, lowercase = true)),
+    "graft_split_words" -> (exprs => Tokens(exprs.head, lowercase = false)),
     // reference stemmedTokens (yupana-utils TokenizerBase.scala:38): (text[, locale]) — locale
     // picks the registered Stemmer ('en' = English light / Harman S-stemmer)
     "graft_stemmed_tokens" -> (exprs =>
-      tokensFor(exprs.head, lowercase = true, stemmer = strArg(exprs, 1, "en"))),
+      Tokens(exprs.head, lowercase = true, stemmer = strArg(exprs, 1, "en"))),
     // reference RussianTransliterator.transliterate (yupana-utils
     // RussianTransliterator.scala:94): table-driven char → latin map
     "graft_translit" -> (exprs => graft.functions.expressions.Transliterate(exprs.head)),
@@ -90,8 +85,7 @@ object GraftFunctions {
     // tokenize → stem → transliterate → drop emptied tokens — the
     // ItemDimension.hash normalization chain (ItemDimension.scala:54-56)
     "graft_transliterated_tokens" -> (exprs =>
-      tokensFor(exprs.head, lowercase = true, stemmer = strArg(exprs, 1, "en"),
-        translit = true)),
+      Tokens(exprs.head, lowercase = true, stemmer = strArg(exprs, 1, "en"), translit = true)),
     // reference hll_count(x, std_err) (FunctionRegistry.scala:276-291):
     // the std-err parameter form, validated to the reference's range,
     // mapped to the TIGHTEST DataSketches lgK meeting the requested
@@ -150,6 +144,14 @@ object GraftFunctions {
     // fold of codegen'd StringReplace, see graft.functions.ItemFixer
     "graft_fix_item" -> (exprs => graft.functions.ItemFixer.fixExpr(exprs.head))
   )
+
+  private val byName: Map[String, Seq[Expression] => Expression] = builders.toMap
+
+  /** The Column of graft function `name` over `args`, built by the same
+    * builder the analyzer calls for SQL text — so the plan is the one a
+    * registered session gets, with no registration needed. */
+  def call(name: String, args: Column*): Column =
+    ColumnBridge.column(byName(name)(args.map(ColumnBridge.expression)))
 
   /** Decode a foldable array<string> literal (the BPE merge table). */
   private def strArrayArg(e: Expression): Array[String] = {

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
+import graft.sql.GraftFunctions
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, StructType}
 import graft.core.{DirCache, Jobs, ShardStore}
@@ -478,7 +479,6 @@ object StreamingDedup {
     var dimSeen = -1
     (batch, batchId) => {
       val s = batch.sparkSession
-      graft.sql.GraftFunctions.register(s)
       // hyperplane bits are the BAND-mode signature only — the cell
       // mode keys by quantizer cell and never reads them, so the
       // low-threshold index stores (id, vec) without paying a
@@ -487,7 +487,7 @@ object StreamingDedup {
       val base = batch.select(col("vec_id").as("id"), col("embedding").as("vec"))
       val rows =
         if (lowThreshold) base
-        else base.withColumn("bits", call_function("graft_hyperplane_bits", col("vec"), lit(planes1)))
+        else base.withColumn("bits", GraftFunctions.call("graft_hyperplane_bits", col("vec"), lit(planes1)))
       val own = s"batch_id=$batchId"
       // the keyed rows carry the FULL vector per band/cell, so the
       // broadcast bound scales with the measured vector width — a
@@ -507,7 +507,7 @@ object StreamingDedup {
       trigger("vecdedup", batchId, rows, local = Some(local)) { b =>
         val small = b.n <= bound
         val matches = b.matches(b.rows, b.index(indexPath, own, small), keys, Seq("vec"), "cos",
-          call_function("graft_cosine", col("a.vec"), col("b.vec")), threshold, small)
+          GraftFunctions.call("graft_cosine", col("a.vec"), col("b.vec")), threshold, small)
         Seq(
           "matches" -> { () =>
             matches.write.mode("overwrite").parquet(s"$matchesPath/batch_id=$batchId")

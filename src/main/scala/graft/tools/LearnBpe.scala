@@ -21,7 +21,6 @@ object LearnBpe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.sql.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val merges = Bpe.learnMerges(docs, "text", numMerges = numMerges)
     merges.foreach { m =>

@@ -47,7 +47,7 @@ class AdminSqlSpec extends SparkSpecBase {
       assert(s2.sql("KILL QUERY 'no-such-group'").head().getString(1) == "CANCELLED")
       assert(s2.sql("KILL QUERY WHERE QUERY_ID = 'no-such-group'").head().getString(1) == "CANCELLED")
 
-      val cl = "/tmp/graft_adminsql_cl"
+      val cl = tempPath("adminsql_cl")
       val fs = org.apache.hadoop.fs.FileSystem.get(s2.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(cl), true)
       graft.sources.Changelog.markDirty(
@@ -221,7 +221,7 @@ class AdminSqlSpec extends SparkSpecBase {
       val btbl = "adminsql_xdelta"
       Seq(btbl, s"${btbl}_meta").foreach { t =>
         s2.sql(s"DROP TABLE IF EXISTS $t")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"/tmp/graft_warehouse/$t"))
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"${SparkSpecBase.warehouseDir}/$t"))
       }
       graft.operators.Dedup.buildTextIndexBucketed(baseDocs, "doc_id", "text", btbl, threshold = 0.5)
       val bDelta = tempDir("adminsql_delta")
@@ -247,7 +247,7 @@ class AdminSqlSpec extends SparkSpecBase {
 
       // UPSERT round-trip: register a log-structured table, put rows,
       // re-put one key with a new value, and read the merged view
-      val upBase = "/tmp/graft_adminsql_upsert_" + System.nanoTime()
+      val upBase = tempPath("adminsql_upsert")
       val gt = graft.schema.GTable(
         "metrics_t", timeColumn = "ts",
         dimensions = Seq(graft.schema.GDimension("dim", org.apache.spark.sql.types.StringType)),
@@ -301,7 +301,7 @@ class AdminSqlSpec extends SparkSpecBase {
       assert(s2.sql("SELECT 1 + 1 AS x").head().getInt(0) == 2)
 
       // ---- DSIR model lifecycle purely through SQL ----
-      val model = "/tmp/graft_adminsql_dsir_" + System.nanoTime()
+      val model = tempPath("adminsql_dsir")
       s2.createDataFrame(Seq(
         (1L, "alpha beta gamma", "tgt"), (2L, "alpha beta delta", "tgt"),
         (3L, "alpha beta", "pool"), (4L, "omega psi chi", "pool"),
@@ -331,14 +331,14 @@ class AdminSqlSpec extends SparkSpecBase {
       assert(s2.sql(s"SHOW DSIR MODEL '$model'").head().getLong(6) == 1L,
         "replayed batch label must not advance the generation")
       // a crashed/absent model refuses to serve
-      val bad = intercept[Exception](s2.sql("SHOW DSIR MODEL '/tmp/graft_no_such_model'").collect())
+      val bad = intercept[Exception](s2.sql(s"SHOW DSIR MODEL '${tempPath("no_such_model")}'").collect())
       assert(bad.getMessage.contains("meta missing"), bad.getMessage)
 
       // TARGET predicates with NESTED parentheses and a quoted ')' parse
       // (balanced-paren scan, not first-')' regex) — and a malformed
       // tail after TARGET raises a TARGETED graft error, not a
       // confusing delegate-parser one
-      val model2 = "/tmp/graft_adminsql_dsir2_" + System.nanoTime()
+      val model2 = tempPath("adminsql_dsir2")
       val fit2 = s2.sql(s"FIT DSIR MODEL '$model2' FROM dsir_docs " +
         "TARGET ((src = 'tgt' OR src = ') weird') AND (doc_id < 10)) BUCKETS 512").head()
       assert(fit2.getLong(2) == 6L, s"nested-paren TARGET must select the target docs: $fit2")
@@ -417,7 +417,7 @@ class AdminSqlSpec extends SparkSpecBase {
       .withExtensions(new graft.sql.GraftExtensions().apply(_))
       .getOrCreate()
     try {
-      val base = "/tmp/graft_adminsql_rescache_" + System.nanoTime()
+      val base = tempPath("adminsql_rescache")
       val tbl = s"$base/log"
       val cache = s"$base/cache"
       val gt = graft.schema.GTable(
@@ -470,7 +470,7 @@ class AdminSqlSpec extends SparkSpecBase {
       s2.sql("CREATE USER 'root' WITH ROLE = 'ADMIN'")
       s2.sql("CREATE USER 'ghost'") // reference CREATE default: DISABLED
 
-      val upBase = "/tmp/graft_adminsql_auth_" + System.nanoTime()
+      val upBase = tempPath("adminsql_auth")
       val gt = graft.schema.GTable(
         "metrics_auth", timeColumn = "ts",
         dimensions = Seq(graft.schema.GDimension("dim", org.apache.spark.sql.types.StringType)),
@@ -512,7 +512,7 @@ class AdminSqlSpec extends SparkSpecBase {
 
       // maintenance verbs are table WRITES: READ_ONLY can't promote
       intercept[SecurityException](
-        as("reader")(s2.sql("PROMOTE VECTOR INDEX DELTA '/tmp/graft_no_such_index'")))
+        as("reader")(s2.sql(s"PROMOTE VECTOR INDEX DELTA '${tempPath("no_such_index")}'")))
       graft.sql.UserRegistry.clear()
     } finally {
       graft.sql.UserRegistry.clear()
@@ -531,7 +531,7 @@ class AdminSqlSpec extends SparkSpecBase {
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.sql.GraftExtensions().apply(_))
       .getOrCreate()
-    val store = "/tmp/graft_userstore_" + System.nanoTime() + "/users.tsv"
+    val store = tempPath("userstore") + "/users.tsv"
     try {
       graft.sql.UserRegistry.clear()
       s2.conf.set(graft.sql.UserRegistry.StorePathKey, store)
@@ -539,7 +539,7 @@ class AdminSqlSpec extends SparkSpecBase {
         s2.conf.set(graft.sql.GraftAuth.UserConfKey, u)
         try f finally s2.conf.unset(graft.sql.GraftAuth.UserConfKey)
       }
-      val base = "/tmp/graft_adminsql_grants_" + System.nanoTime()
+      val base = tempPath("adminsql_grants")
       def gt(name: String) = graft.schema.GTable(
         name, timeColumn = "ts",
         dimensions = Seq(graft.schema.GDimension("dim", org.apache.spark.sql.types.StringType)),
@@ -602,11 +602,11 @@ class AdminSqlSpec extends SparkSpecBase {
       // cover a different-cased (distinct) directory, and no string-
       // shape heuristic decides which is which
       s3.conf.unset(graft.sql.GraftAuth.UserConfKey)
-      s3.sql("GRANT WRITE ON PATH '/tmp/graft_case_path' TO USER 'reader'")
+      s3.sql(s"GRANT WRITE ON PATH '$base/case_path' TO USER 'reader'")
       val gset = graft.sql.UserRegistry.roleAndGrants(s3, "reader").get._2
-      assert(gset.contains(("P", "/tmp/graft_case_path", "WRITE")),
+      assert(gset.contains(("P", s"$base/case_path", "WRITE")),
         s"path subjects store exactly as written: $gset")
-      assert(!gset.exists(g => g._1 == "P" && g._2 != "/tmp/graft_case_path"),
+      assert(!gset.exists(g => g._1 == "P" && g._2 != s"$base/case_path"),
         "path subjects must not case-fold")
       assert(gset.contains(("T", "metrics_gr1", "WRITE")),
         s"identifier subjects store lowercased under kind T: $gset")
@@ -614,7 +614,7 @@ class AdminSqlSpec extends SparkSpecBase {
       // via ON TABLE grammar (even for a same-spelled subject)
       intercept[IllegalArgumentException](
         s3.sql("REVOKE WRITE ON PATH 'metrics_gr1' FROM USER 'reader'"))
-      s3.sql("REVOKE WRITE ON PATH '/tmp/graft_case_path' FROM USER 'reader'")
+      s3.sql(s"REVOKE WRITE ON PATH '$base/case_path' FROM USER 'reader'")
       // TABLE grammar matches case-insensitively end to end
       s3.sql("GRANT WRITE ON TABLE METRICS_GR2 TO USER 'reader'")
       s3.conf.set(graft.sql.GraftAuth.UserConfKey, "reader")
@@ -647,7 +647,7 @@ class AdminSqlSpec extends SparkSpecBase {
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.sql.GraftExtensions().apply(_))
       .getOrCreate()
-    val store = "/tmp/graft_pwstore_" + System.nanoTime() + "/users.tsv"
+    val store = tempPath("pwstore") + "/users.tsv"
     def as[T](u: String, pw: Option[String])(f: => T): T = {
       s2.conf.set(graft.sql.GraftAuth.UserConfKey, u)
       pw.foreach(s2.conf.set(graft.sql.GraftAuth.PasswordConfKey, _))
@@ -746,7 +746,7 @@ class AdminSqlSpec extends SparkSpecBase {
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.sql.GraftExtensions().apply(_))
       .getOrCreate()
-    val store = "/tmp/graft_metricsstore_" + System.nanoTime() + "/metrics.tsv"
+    val store = tempPath("metricsstore") + "/metrics.tsv"
     try {
       s2.conf.set(graft.core.QueryMetrics.StorePathKey, store)
       graft.core.QueryMetrics.forSession(s2).clear()
@@ -801,7 +801,7 @@ class AdminSqlSpec extends SparkSpecBase {
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.sql.GraftExtensions().apply(_))
       .getOrCreate()
-    val store = "/tmp/graft_slotstore_" + System.nanoTime() + "/users.tsv"
+    val store = tempPath("slotstore") + "/users.tsv"
     try {
       graft.sql.UserRegistry.clear()
       // session A: in-memory (no store conf) creates a user
@@ -841,7 +841,7 @@ class AdminSqlSpec extends SparkSpecBase {
       .getOrCreate()
     try {
       import s2.implicits._
-      val base = "/tmp/graft_adminsql_vacuum_" + System.nanoTime()
+      val base = tempPath("adminsql_vacuum")
       val tbl = s"$base/src"
       val cache = s"$base/cache"
       Seq((1, "a", 2.0), (2, "b", 3.0)).toDF("id", "dim", "m").write.parquet(tbl)

@@ -843,7 +843,7 @@ class DedupSpec extends SparkSpecBase {
     val tbl = "xbucketed_idx"
     Seq(tbl, s"${tbl}_meta").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"/tmp/graft_warehouse/$t"))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"${SparkSpecBase.warehouseDir}/$t"))
     }
     // default (≤0) numBuckets = corpus-derived sizing: assert the build
     // recorded its choice in meta, that it is NOT the old flat-64
@@ -1014,7 +1014,7 @@ class DedupSpec extends SparkSpecBase {
     val tbl = s"xdelta_${tag}"
     Seq(tbl, s"${tbl}_meta").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"/tmp/graft_warehouse/$t"))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"${SparkSpecBase.warehouseDir}/$t"))
     }
     Dedup.buildTextIndexBucketed(base, "doc_id", "text", tbl, threshold = 0.5)
     (tbl, tempDir("xdelta_" + tag), base)

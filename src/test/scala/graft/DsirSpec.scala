@@ -74,7 +74,7 @@ class DsirSpec extends SparkSpecBase {
   test("fit + scoreWithModel equals the inline scores; unseen buckets use the stored default") {
     import spark.implicits._
     val b = 4096
-    val path = "/tmp/graft_dsir_model_" + System.nanoTime()
+    val path = tempPath("dsir_model")
     val docs = corpus.toDF("doc_id", "text", "is_t")
     Dsir.fit(docs, "doc_id", "text", col("is_t"), b, path)
     val served = Dsir.scoreWithModel(docs.filter(!col("is_t")), "doc_id", "text", path)
@@ -99,7 +99,7 @@ class DsirSpec extends SparkSpecBase {
   test("refit is zero-downtime: generation advances, old gens pruned only after the commit") {
     import spark.implicits._
     val b = 512
-    val path = "/tmp/graft_dsir_refit_" + System.nanoTime()
+    val path = tempPath("dsir_refit")
     val corpusA = Seq((1L, "alpha beta", true), (2L, "alpha gamma", false)).toDF("doc_id", "text", "is_t")
     val corpusB = Seq((1L, "omega psi", true), (2L, "omega chi", false), (3L, "psi chi", false))
       .toDF("doc_id", "text", "is_t")
@@ -124,7 +124,7 @@ class DsirSpec extends SparkSpecBase {
   test("incremental update equals the from-scratch refit; replay and crash windows converge") {
     import spark.implicits._
     val b = 4096
-    val p1 = "/tmp/graft_dsir_upd_" + System.nanoTime()
+    val p1 = tempPath("dsir_upd")
     val p2 = p1 + "_full"
     val base = corpus.toDF("doc_id", "text", "is_t")
     val batch1 = Seq((20L, "alpha omega", false), (21L, "beta beta gamma", true))
@@ -168,9 +168,9 @@ class DsirSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val b = 4096
-    val path = "/tmp/graft_dsir_smodel_" + System.nanoTime()
-    val report = "/tmp/graft_dsir_sreport_" + System.nanoTime()
-    val ckpt = "/tmp/graft_dsir_sckpt_" + System.nanoTime()
+    val path = tempPath("dsir_smodel")
+    val report = tempPath("dsir_sreport")
+    val ckpt = tempPath("dsir_sckpt")
     Dsir.fit(corpus.toDF("doc_id", "text", "is_t"), "doc_id", "text", col("is_t"), b, path)
 
     implicit val sq = spark.sqlContext
@@ -200,9 +200,9 @@ class DsirSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val b = 4096
-    val path = "/tmp/graft_dsir_live_" + System.nanoTime()
-    val report = "/tmp/graft_dsir_livereport_" + System.nanoTime()
-    val ckpt = "/tmp/graft_dsir_liveckpt_" + System.nanoTime()
+    val path = tempPath("dsir_live")
+    val report = tempPath("dsir_livereport")
+    val ckpt = tempPath("dsir_liveckpt")
     Dsir.fit(corpus.toDF("doc_id", "text", "is_t"), "doc_id", "text", col("is_t"), b, path)
 
     implicit val sq = spark.sqlContext
@@ -234,9 +234,9 @@ class DsirSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val b = 4096
-    val path = "/tmp/graft_dsir_supd_" + System.nanoTime()
+    val path = tempPath("dsir_supd")
     val full = path + "_full"
-    val ckpt = "/tmp/graft_dsir_supd_ckpt_" + System.nanoTime()
+    val ckpt = tempPath("dsir_supd_ckpt")
     val base = corpus.toDF("doc_id", "text", "is_t")
     Dsir.fit(base, "doc_id", "text", col("is_t"), b, path)
 

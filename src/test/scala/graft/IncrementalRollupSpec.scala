@@ -13,7 +13,7 @@ import graft.sources.{Changelog, Rollup}
 class IncrementalRollupSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private val base = "/tmp/graft_incr_rollup"
+  private val base = tempDir("incr_rollup")
   private val factPath = s"$base/fact"
   private val rollPath = s"$base/rollup"
   private val clPath = s"$base/changelog"

@@ -15,7 +15,7 @@ import graft.sources.{DeclaredLinks, JsonCatalogs}
  */
 class JsonCatalogsSpec extends SparkSpecBase {
 
-  private val dbDir = "/tmp/graft_derby/linkdb"
+  private val dbDir = tempPath("linkdb")
   private val dbUrl = s"jdbc:derby:$dbDir"
 
   private def withDerby[T](f: java.sql.Connection => T): T = {

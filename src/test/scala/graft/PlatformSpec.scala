@@ -48,7 +48,7 @@ class PlatformSpec extends SparkSpecBase {
       groupBy = Seq(col("event_type")),
       aggregates = Seq(count(lit(1)).as("c"), sum(col("value").cast("decimal(18,4)")).as("v"))
     )
-    val path = "/tmp/graft_rollup_spec/events_by_day"
+    val path = tempDir("rollup_spec") + "/events_by_day"
     roll.materialize(events, path)
     val fromRollup = spark.read.parquet(path)
       .groupBy("event_type").agg(sum("c").as("n")).as[(String, Long)].collect().toMap
@@ -107,7 +107,7 @@ class PlatformSpec extends SparkSpecBase {
 
       // SHOW UPDATES_INTERVALS over the rollup changelog
       import graft.sources.Changelog
-      val cl = "/tmp/graft_admin_cl"
+      val cl = tempPath("admin_cl")
       val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(cl), true)
       Changelog.markDirty(load("region").limit(1).select(lit("2024-01").as("b")), col("b"), cl)
@@ -129,7 +129,7 @@ class PlatformSpec extends SparkSpecBase {
     spark.sql("DROP TABLE IF EXISTS lineitem_b")
     // clear any orphaned managed-table locations from prior runs
     Seq("orders_b", "lineitem_b").foreach { t =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"/tmp/graft_warehouse/$t"))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"${SparkSpecBase.warehouseDir}/$t"))
     }
     TsLayout.writeBucketed(load("orders"), "orders_b", "o_orderkey", 8)
     TsLayout.writeBucketed(
@@ -152,7 +152,7 @@ class PlatformSpec extends SparkSpecBase {
     import spark.implicits._
     import graft.core.ResultCache
     import graft.sources.Upsert
-    val base = "/tmp/graft_rescache_" + System.nanoTime()
+    val base = tempPath("rescache")
     val tbl = s"$base/tbl"
     val cache = s"$base/cache"
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -228,7 +228,7 @@ class PlatformSpec extends SparkSpecBase {
       .config("hive.server2.thrift.port", port.toString)
       // keep derby's metastore files out of the repo working dir
       .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=/tmp/graft_metastore_${System.nanoTime()};create=true")
+        s"jdbc:derby:;databaseName=${tempPath("metastore")};create=true")
       .withExtensions(new graft.sql.GraftExtensions().apply(_))
       .getOrCreate()
     var server: Option[org.apache.hive.service.server.HiveServer2] = None
@@ -276,7 +276,7 @@ class PlatformSpec extends SparkSpecBase {
           "wire_m", timeColumn = "ts",
           dimensions = Seq(graft.schema.GDimension("dim", org.apache.spark.sql.types.StringType)),
           metrics = Seq(graft.schema.GMetric("m", org.apache.spark.sql.types.DoubleType)))
-        graft.sql.UpsertTables.register(s2, gt, "/tmp/graft_wire_auth_" + System.nanoTime())
+        graft.sql.UpsertTables.register(s2, gt, tempPath("wire_auth"))
         def put = "UPSERT INTO wire_m (ts, dim, m) VALUES (TIMESTAMP '2024-01-01 00:00:00', 'a', 1.0)"
         st.execute("SET graft.sql.user = wire_reader")
         val deniedWire = intercept[java.sql.SQLException](st.executeQuery(put))
@@ -364,7 +364,7 @@ class PlatformSpec extends SparkSpecBase {
   test("changelog: a null bucket key cycles dirty -> clean instead of looping forever") {
     import graft.sources.Changelog
     import spark.implicits._
-    val dir = "/tmp/graft_nullbucket_spec"
+    val dir = tempPath("nullbucket_spec")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     val batch = Seq(

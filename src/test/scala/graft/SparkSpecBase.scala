@@ -14,6 +14,10 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     * spec output never outlives the run. */
   def tempDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(SparkSpecBase.tempRoot, tag + "_").toString
+
+  /** A fresh path under this JVM's temp root that does not exist yet,
+    * for writers and stores that create their own dir. */
+  def tempPath(tag: String): String = s"${tempDir(tag)}/$tag"
 }
 
 object SparkSpecBase {
@@ -22,6 +26,9 @@ object SparkSpecBase {
     sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
     root
   }
+
+  /** The shared session's warehouse (managed-table locations). */
+  lazy val warehouseDir: String = tempRoot.resolve("warehouse").toString
 
   lazy val session: SparkSession = {
     val s = SparkSession
@@ -33,7 +40,7 @@ object SparkSpecBase {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.sql.warehouse.dir", warehouseDir)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.sql.GraftFunctions.register(s)

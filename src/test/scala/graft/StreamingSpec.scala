@@ -845,6 +845,28 @@ class StreamingSpec extends SparkSpecBase {
     assert(latest() === expected)
   }
 
+  test("upsert compaction merges into the newest version with data, not a crashed file-less one") {
+    import graft.sources.Upsert
+    val log = s"${tempDir("upsert_crash")}/log"
+    Upsert.appendVersion(Seq((1L, "new", 10.0), (2L, "new", 20.0)).toDF("key", "status", "amount"), log, 0L)
+    Upsert.appendVersion(Seq((1L, "paid", 11.0)).toDF("key", "status", "amount"), log, 1L)
+    // a write that died before any data file landed
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$log/__seq=2"))
+
+    def latest() = Upsert.readLatest(spark, log, Seq("key"))
+      .as[(Long, String, Double)].collect().toSet
+    val before = latest()
+    assert(before === Set((1L, "paid", 11.0), (2L, "new", 20.0)))
+    Upsert.compact(spark, log, Seq("key"))
+    assert(latest() === before)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$log/__seq=1")).exists(_.getPath.getName.endsWith(".parquet")))
+
+    // replaying the crashed seq adds its batch and keeps the merged state
+    Upsert.appendVersion(Seq((3L, "new", 30.0)).toDF("key", "status", "amount"), log, 2L)
+    assert(latest() === before + ((3L, "new", 30.0)))
+  }
+
   test("DataPoint ingest flattens into the events row shape") {
     val pts = Seq(
       Ingest.DataPoint("events", Timestamp.valueOf("2024-01-01 00:00:01"),

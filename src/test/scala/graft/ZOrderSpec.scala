@@ -62,7 +62,7 @@ class ZOrderSpec extends SparkSpecBase {
     val rows = for (a <- 0 until 64; b <- 0 until 64; r <- 0 until 4)
       yield (a.toLong, b.toLong, r)
     val df = rows.toDF("a", "b", "r").repartition(8)
-    val zPath = "/tmp/graft_zorder_" + System.nanoTime()
+    val zPath = tempPath("zorder")
     val aPath = zPath + "_asorted"
     ZOrder.write(df, "a", "b", zPath, numFiles = 16)
     df.repartitionByRange(16, col("a")).sortWithinPartitions(col("a"), col("b"))
