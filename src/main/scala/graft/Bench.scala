@@ -3,20 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Bench.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // a long full-GC pause must not kill the run: with the default
-      // 120s heartbeat timeout a measured 153s stall got the (local!)
-      // executor "removed" and the whole bench died rpc-less — the
-      // driver round then records no bench at all, which is worse than
-      // a slow one
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.LocalSession.cpus
+    // bench_full.json (and Derby's log) go to the working directory
+    val spark = graft.core.LocalSession("graft-bench", ".")
 
     // machine state BEFORE any work: a single end-of-run load sample
     // missed a ~3x degraded machine for a whole round (the r7 32s
@@ -59,8 +48,8 @@ object Bench {
 
     // machine-stretch anchor at both ends of the run (see calibrate);
     // the first call JITs, the second measures
-    calibrate(spark, cpus.toInt)
-    val cal0 = calibrate(spark, cpus.toInt)
+    calibrate(spark, cpus)
+    val cal0 = calibrate(spark, cpus)
 
     // PER-QUERY STRETCH PROBE (r17, additions-only): C0/C bracket the
     // whole run, but this host's stretch arrives in minutes-scale
@@ -122,7 +111,7 @@ object Bench {
       // stretch probes ride BETWEEN queries (untimed): per-query CPU
       // probe always, full Spark calibration every 16th query
       cqMs(qi) = cpuProbe()
-      if ((qi + 1) % 16 == 0) cMid += calibrate(spark, cpus.toInt)
+      if ((qi + 1) % 16 == 0) cMid += calibrate(spark, cpus)
       name -> t
     }
 
@@ -148,7 +137,7 @@ object Bench {
     } catch { case _: Throwable => Seq.empty }
 
     val total = looped.map(_._2).sum
-    val cal1 = calibrate(spark, cpus.toInt)
+    val cal1 = calibrate(spark, cpus)
     val stretch = stretchField(cqMs, cMid.toSeq)
     val load = java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val sfName = sfDir.split('/').last // basename: the path prefix is line budget
@@ -172,10 +161,6 @@ object Bench {
       Console.err.println(s"[bench] WARNING: JSON line ${line.length} chars — driver tail capture may clip it")
     spark.stop()
   }
-
-  /** Local cores for the bench and the kept `graft.tools` mains:
-    * `SPARK_GRAFT_CPUS`, default 4. */
-  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   /** MACHINE-STRETCH ANCHOR: a fixed pure-compute probe (100M xxhash64
     * + sum, sf-independent, shuffle-free) in ms. The bench times it at

@@ -1,9 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.QueryBuilder
+import graft.core.{LocalSession, QueryBuilder}
 import graft.operators.{Dedup, TextAnalysis}
 import graft.schema.TestSchema
 import graft.sql.GraftFunctions
@@ -18,15 +17,7 @@ import graft.sql.GraftFunctions
 object Example {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-example", System.getProperty("java.io.tmpdir"))
     GraftFunctions.register(spark)
     def load(n: String) = spark.read.parquet(s"$dir/$n.parquet")
 

@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.LocalSession
 import graft.wire.PgWireServer
 
 /**
@@ -26,16 +25,8 @@ object ServePg {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = if (args.length > 1) args(1).toInt else 0
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-serve-pg")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new graft.sql.GraftExtensions().apply(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-serve-pg", System.getProperty("java.io.tmpdir"),
+      "spark.sql.extensions" -> "graft.sql.GraftExtensions")
 
     // catalog tables: visible to every forked wire session (temp views
     // would not be). The nanos-timestamped tables are left out of the

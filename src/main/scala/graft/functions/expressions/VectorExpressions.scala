@@ -1,5 +1,6 @@
 package graft.functions.expressions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -14,9 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
  * row_number over |corpus| × numCells rows (two shuffles and a sort
  * saved per pass at any scale).
  *
- * All three expressions are codegen-capable: generated code calls the
- * static [[VectorOps]] kernels with the centroid table attached as a
- * codegen reference object, so scans stay inside one whole-stage span.
+ * Every expression here is codegen-capable: generated code calls the
+ * static [[VectorOps]] kernels with its table attached through
+ * [[KernelTable.genRef]], so scans stay inside one whole-stage span.
  */
 object VectorOps {
   /** Squared L2 distance between an ArrayData float vector and a centroid. */
@@ -236,17 +237,67 @@ object VectorOps {
   }
 }
 
+/**
+ * A kernel's table (centroids, codebooks, split sub-quantizers): either
+ * a [[KernelTable.Local]] value or a [[KernelTable.Broadcasted]] handle.
+ * Each vector kernel below is one class that takes either, so math and
+ * tie-breaks cannot diverge between the two forms.
+ *
+ * The local form ships the table INSIDE every serialized task binary
+ * (and, on the SQL surface, additionally as a plan literal): fine for
+ * the bounded tables a SQL user writes. The Scala operators broadcast
+ * the trained table instead: a 100-TB-scale quantizer (2M cells × 128
+ * dim ≈ 1 GB of floats) embedded per task breaks plan serialization
+ * long before the table stops being "metadata", while a broadcast
+ * handle is a few bytes per task and executors fetch the blocks once
+ * each through the block manager.
+ */
+sealed trait KernelTable[T <: AnyRef] extends Serializable {
+  /** The table itself: a field read, or the task's one broadcast fetch. */
+  def value: T
+
+  /** A generated-code reference to the table, typed `javaType`. */
+  def genRef(ctx: CodegenContext, name: String, javaType: String): String
+}
+
+// Each holder prints as its bare table or handle, so EXPLAIN shows a
+// kernel's arguments as `[[F@…` or `Broadcast(n)`.
+object KernelTable {
+  /** A table held by value: a codegen reference object. */
+  final case class Local[T <: AnyRef](value: T) extends KernelTable[T] {
+    def genRef(ctx: CodegenContext, name: String, javaType: String): String =
+      ctx.addReferenceObj(name, value, javaType)
+
+    override def toString: String = String.valueOf(value)
+  }
+
+  /** A table held by broadcast handle. Generated code resolves
+    * `bc.value()` once per task into an instance field, so the per-row
+    * path never touches the block manager. */
+  final case class Broadcasted[T <: AnyRef](bc: Broadcast[T]) extends KernelTable[T] {
+    @transient lazy val value: T = bc.value
+
+    def genRef(ctx: CodegenContext, name: String, javaType: String): String = {
+      val bcRef = ctx.addReferenceObj(name, bc, "org.apache.spark.broadcast.Broadcast")
+      ctx.addMutableState(javaType, name + "Val", v => s"$v = ($javaType) $bcRef.value();")
+    }
+
+    override def toString: String = bc.toString
+  }
+}
+
 /** Index of the nearest centroid (ties → lowest index). */
-case class NearestCentroid(child: Expression, centroids: Array[Array[Float]]) extends UnaryExpression {
+case class NearestCentroid(child: Expression, centroids: KernelTable[Array[Array[Float]]])
+    extends UnaryExpression {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_nearest_centroid"
 
   override protected def nullSafeEval(input: Any): Any =
-    VectorOps.nearest(input.asInstanceOf[ArrayData], centroids)
+    VectorOps.nearest(input.asInstanceOf[ArrayData], centroids.value)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "float[][]")
+    val cents = centroids.genRef(ctx, "centroids", "float[][]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.expressions.VectorOps.nearest($c, $cents);")
   }
@@ -256,17 +307,17 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Float]]) ex
 
 /** Squared-L2 distance to the nearest centroid (the quantization
   * error) — what index-drift checks threshold against. */
-case class NearestCentroidDist(child: Expression, centroids: Array[Array[Float]])
+case class NearestCentroidDist(child: Expression, centroids: KernelTable[Array[Array[Float]]])
     extends UnaryExpression {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_nearest_centroid_dist"
 
   override protected def nullSafeEval(input: Any): Any =
-    VectorOps.nearestDist2(input.asInstanceOf[ArrayData], centroids)
+    VectorOps.nearestDist2(input.asInstanceOf[ArrayData], centroids.value)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "float[][]")
+    val cents = centroids.genRef(ctx, "centroids", "float[][]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.expressions.VectorOps.nearestDist2($c, $cents);")
   }
@@ -276,17 +327,17 @@ case class NearestCentroidDist(child: Expression, centroids: Array[Array[Float]]
 }
 
 /** Indices of the `probes` nearest centroids, ascending by distance (ties → lower index). */
-case class NearestCentroids(child: Expression, centroids: Array[Array[Float]], probes: Int)
+case class NearestCentroids(child: Expression, centroids: KernelTable[Array[Array[Float]]], probes: Int)
     extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_nearest_centroids"
 
   override protected def nullSafeEval(input: Any): Any =
-    VectorOps.nearestK(input.asInstanceOf[ArrayData], centroids, probes)
+    VectorOps.nearestK(input.asInstanceOf[ArrayData], centroids.value, probes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "float[][]")
+    val cents = centroids.genRef(ctx, "centroids", "float[][]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.expressions.VectorOps.nearestK($c, $cents, $probes);")
   }
@@ -295,13 +346,12 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Float]], p
 }
 
 /** Global cell ids from a two-level quantizer (see
-  * [[VectorOps.nearestCellsHier]]); both centroid tables ride as codegen
-  * reference objects, so huge-cell-count quantizers never become SQL
-  * literals. */
+  * [[VectorOps.nearestCellsHier]]); both centroid tables ride as kernel
+  * tables, so huge-cell-count quantizers never become SQL literals. */
 case class NearestCellsHier(
     child: Expression,
-    l1: Array[Array[Float]],
-    l2: Array[Array[Array[Float]]],
+    l1: KernelTable[Array[Array[Float]]],
+    l2: KernelTable[Array[Array[Array[Float]]]],
     p1: Int,
     p2: Int
 ) extends UnaryExpression {
@@ -309,26 +359,61 @@ case class NearestCellsHier(
   // global cell arithmetic (c1 * C2 + c2) and output sizing both assume
   // a UNIFORM fine-table width — a ragged l2 would overrun the output
   // buffer or collide cell ids across coarse cells, so reject it at
-  // construction instead of mid-query
-  require(l2.length == l1.length,
-    s"l2 must hold one fine table per coarse cell: ${l2.length} != ${l1.length}")
-  require(l2.isEmpty || l2.forall(_.length == l2(0).length),
-    s"fine tables must be uniform width, got ${l2.map(_.length).distinct.toSeq}")
+  // construction instead of mid-query (a broadcast table was just
+  // created on the driver, so its `.value` is a local read)
+  {
+    val (coarse, fine) = (l1.value, l2.value)
+    require(fine.length == coarse.length,
+      s"l2 must hold one fine table per coarse cell: ${fine.length} != ${coarse.length}")
+    require(fine.isEmpty || fine.forall(_.length == fine(0).length),
+      s"fine tables must be uniform width, got ${fine.map(_.length).distinct.toSeq}")
+  }
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_nearest_cells_hier"
 
   override protected def nullSafeEval(input: Any): Any =
-    VectorOps.nearestCellsHier(input.asInstanceOf[ArrayData], l1, l2, p1, p2)
+    VectorOps.nearestCellsHier(input.asInstanceOf[ArrayData], l1.value, l2.value, p1, p2)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l1r = ctx.addReferenceObj("l1", l1, "float[][]")
-    val l2r = ctx.addReferenceObj("l2", l2, "float[][][]")
+    val l1r = l1.genRef(ctx, "l1", "float[][]")
+    val l2r = l2.genRef(ctx, "l2", "float[][][]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.expressions.VectorOps.nearestCellsHier($c, $l1r, $l2r, $p1, $p2);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCellsHier = copy(child = newChild)
+}
+
+/**
+ * Sub-cell probe list for OCCUPANCY-BOUNDED assignment
+ * ([[VectorOps.subCells]]): `(cell, vec) → probes` nearest sub-cells of
+ * `cell`'s local sub-quantizer, or `[0]` when the cell was never split.
+ * The split-table map holds only the overfull cells, so the per-row
+ * path is one map probe.
+ */
+case class SubCells(
+    left: Expression,  // cell id (int)
+    right: Expression, // vector (array<float>)
+    tables: KernelTable[java.util.HashMap[Integer, Array[Array[Float]]]],
+    probes: Int
+) extends BinaryExpression {
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "graft_sub_cells"
+
+  override protected def nullSafeEval(cell: Any, vec: Any): Any =
+    VectorOps.subCells(cell.asInstanceOf[Int], vec.asInstanceOf[ArrayData], tables.value, probes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tbl = tables.genRef(ctx, "split", "java.util.HashMap")
+    nullSafeCodeGen(ctx, ev, (c, v) =>
+      s"${ev.value} = graft.functions.expressions.VectorOps.subCells($c, $v, $tbl, $probes);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SubCells =
+    copy(left = newLeft, right = newRight)
 }
 
 /**
@@ -355,25 +440,28 @@ case class HyperplaneBits(child: Expression, planes: Int) extends UnaryExpressio
  * Product-quantization codes: the m-th element is the index of the
  * nearest centroid of the m-th subvector in that subspace's codebook
  * ([[VectorOps.pqEncode]]). The codebooks (M × K × subdim floats —
- * bounded metadata, like every quantizer table here) ride as a codegen
- * reference object, so encoding the corpus is one narrow codegen'd
- * pass. Uniform fine-table width is required: the ADC kernel indexes
- * the flattened query tables as m * K + code.
+ * bounded metadata, like every quantizer table here) ride as a kernel
+ * table, so encoding the corpus is one narrow codegen'd pass. Uniform
+ * fine-table width is required: the ADC kernel indexes the flattened
+ * query tables as m * K + code.
  */
-case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
+case class PqEncode(child: Expression, codebooks: KernelTable[Array[Array[Array[Float]]]])
     extends UnaryExpression {
 
-  require(codebooks.nonEmpty && codebooks.forall(_.length == codebooks(0).length),
-    s"codebooks must be non-empty and uniform width, got ${codebooks.map(_.length).distinct.toSeq}")
+  {
+    val cbs = codebooks.value
+    require(cbs.nonEmpty && cbs.forall(_.length == cbs(0).length),
+      s"codebooks must be non-empty and uniform width, got ${cbs.map(_.length).distinct.toSeq}")
+  }
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_pq_encode"
 
   override protected def nullSafeEval(input: Any): Any =
-    VectorOps.pqEncode(input.asInstanceOf[ArrayData], codebooks)
+    VectorOps.pqEncode(input.asInstanceOf[ArrayData], codebooks.value)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
+    val cb = codebooks.genRef(ctx, "codebooks", "float[][][]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.expressions.VectorOps.pqEncode($c, $cb);")
   }
@@ -418,213 +506,4 @@ case class PqAdcCosine(
       newFirst: Expression, newSecond: Expression,
       newThird: Expression, newFourth: Expression): PqAdcCosine =
     copy(codes = newFirst, dots = newSecond, norms2 = newThird, qNorm = newFourth)
-}
-
-/**
- * BROADCAST-backed twins of the centroid-table expressions — the scale
- * form the Scala operators use. The literal/reference-object forms
- * above ship the table INSIDE every serialized task binary (and, on
- * the SQL surface, additionally as a plan literal): fine for the
- * bounded tables a SQL user writes, but a 100-TB-scale quantizer
- * (2M cells × 128 dim ≈ 1 GB of floats) embedded per-task breaks plan
- * serialization long before the table stops being "metadata". Here the
- * expression carries only the Broadcast HANDLE; executors fetch the
- * blocks once each through the block manager, and the generated code
- * resolves `bc.value()` once per task into an instance field. The
- * kernels are the same [[VectorOps]] statics, so math and tie-breaks
- * cannot diverge between the two forms.
- */
-private[graft] trait BcastCentroidCodegen { self: UnaryExpression =>
-  /** Hoist `bc.value()` out of the per-row path: one instance field,
-    * initialized when the generated class is constructed (per task). */
-  protected def bcastField(
-      ctx: CodegenContext, bc: org.apache.spark.broadcast.Broadcast[_], javaType: String): String = {
-    val bcRef = ctx.addReferenceObj("bcTable", bc, "org.apache.spark.broadcast.Broadcast")
-    ctx.addMutableState(javaType, "bcTableVal",
-      v => s"$v = ($javaType) $bcRef.value();")
-  }
-}
-
-/** [[NearestCentroid]] with a broadcast table. */
-case class NearestCentroidBcast(
-    child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]]
-) extends UnaryExpression with BcastCentroidCodegen {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_nearest_centroid_bcast"
-
-  @transient private lazy val table: Array[Array[Float]] = bc.value
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.nearest(input.asInstanceOf[ArrayData], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = bcastField(ctx, bc, "float[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.VectorOps.nearest($c, $cents);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidBcast =
-    copy(child = newChild)
-}
-
-/** [[NearestCentroidDist]] with a broadcast table. */
-case class NearestCentroidDistBcast(
-    child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]]
-) extends UnaryExpression with BcastCentroidCodegen {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_nearest_centroid_dist_bcast"
-
-  @transient private lazy val table: Array[Array[Float]] = bc.value
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.nearestDist2(input.asInstanceOf[ArrayData], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = bcastField(ctx, bc, "float[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.VectorOps.nearestDist2($c, $cents);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidDistBcast =
-    copy(child = newChild)
-}
-
-/** [[NearestCentroids]] with a broadcast table. */
-case class NearestCentroidsBcast(
-    child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-    probes: Int
-) extends UnaryExpression with BcastCentroidCodegen {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_nearest_centroids_bcast"
-
-  @transient private lazy val table: Array[Array[Float]] = bc.value
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.nearestK(input.asInstanceOf[ArrayData], table, probes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = bcastField(ctx, bc, "float[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.VectorOps.nearestK($c, $cents, $probes);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidsBcast =
-    copy(child = newChild)
-}
-
-/** [[NearestCellsHier]] with both levels broadcast. The uniform-width
-  * requirement is validated on the DRIVER at construction (the
-  * broadcasts were just created there — `.value` is a local read). */
-case class NearestCellsHierBcast(
-    child: Expression,
-    bcL1: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-    bcL2: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]],
-    p1: Int,
-    p2: Int
-) extends UnaryExpression {
-
-  {
-    val l1 = bcL1.value
-    val l2 = bcL2.value
-    require(l2.length == l1.length,
-      s"l2 must hold one fine table per coarse cell: ${l2.length} != ${l1.length}")
-    require(l2.isEmpty || l2.forall(_.length == l2(0).length),
-      s"fine tables must be uniform width, got ${l2.map(_.length).distinct.toSeq}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_nearest_cells_hier_bcast"
-
-  @transient private lazy val l1: Array[Array[Float]] = bcL1.value
-  @transient private lazy val l2: Array[Array[Array[Float]]] = bcL2.value
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.nearestCellsHier(input.asInstanceOf[ArrayData], l1, l2, p1, p2)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l1Ref = ctx.addReferenceObj("bcL1", bcL1, "org.apache.spark.broadcast.Broadcast")
-    val l2Ref = ctx.addReferenceObj("bcL2", bcL2, "org.apache.spark.broadcast.Broadcast")
-    val l1v = ctx.addMutableState("float[][]", "bcL1Val",
-      v => s"$v = (float[][]) $l1Ref.value();")
-    val l2v = ctx.addMutableState("float[][][]", "bcL2Val",
-      v => s"$v = (float[][][]) $l2Ref.value();")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.VectorOps.nearestCellsHier($c, $l1v, $l2v, $p1, $p2);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCellsHierBcast =
-    copy(child = newChild)
-}
-
-/**
- * Sub-cell probe list for OCCUPANCY-BOUNDED assignment
- * ([[VectorOps.subCells]]): `(cell, vec) → probes` nearest sub-cells of
- * `cell`'s local sub-quantizer, or `[0]` when the cell was never split.
- * The split-table map (only the overfull cells) rides as a broadcast
- * handle — same discipline as the other Bcast expressions: tasks ship
- * bytes, executors fetch blocks once, codegen resolves `.value()` into
- * an instance field so the per-row path is one map probe.
- */
-case class SubCellsBcast(
-    left: Expression,  // cell id (int)
-    right: Expression, // vector (array<float>)
-    bc: org.apache.spark.broadcast.Broadcast[java.util.HashMap[Integer, Array[Array[Float]]]],
-    probes: Int
-) extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_sub_cells_bcast"
-
-  @transient private lazy val tables: java.util.HashMap[Integer, Array[Array[Float]]] = bc.value
-
-  override protected def nullSafeEval(cell: Any, vec: Any): Any =
-    VectorOps.subCells(cell.asInstanceOf[Int], vec.asInstanceOf[ArrayData], tables, probes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("bcSplit", bc, "org.apache.spark.broadcast.Broadcast")
-    val tbl = ctx.addMutableState("java.util.HashMap", "bcSplitVal",
-      v => s"$v = (java.util.HashMap) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, (c, v) =>
-      s"${ev.value} = graft.functions.expressions.VectorOps.subCells($c, $v, $tbl, $probes);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SubCellsBcast =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[PqEncode]] with broadcast codebooks. */
-case class PqEncodeBcast(
-    child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]]
-) extends UnaryExpression with BcastCentroidCodegen {
-
-  {
-    val codebooks = bc.value
-    require(codebooks.nonEmpty && codebooks.forall(_.length == codebooks(0).length),
-      s"codebooks must be non-empty and uniform width, got ${codebooks.map(_.length).distinct.toSeq}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode_bcast"
-
-  @transient private lazy val table: Array[Array[Array[Float]]] = bc.value
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.pqEncode(input.asInstanceOf[ArrayData], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = bcastField(ctx, bc, "float[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.VectorOps.pqEncode($c, $cb);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncodeBcast =
-    copy(child = newChild)
 }

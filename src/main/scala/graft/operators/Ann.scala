@@ -5,10 +5,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
 import graft.sql.GraftFunctions
-
-import graft.functions.expressions.{NearestCellsHierBcast, NearestCentroidBcast,
-  NearestCentroidDistBcast, NearestCentroidsBcast, PqEncodeBcast, SubCellsBcast}
+import graft.functions.expressions.{KernelTable, NearestCellsHier, NearestCentroid,
+  NearestCentroidDist, NearestCentroids, PqEncode, SubCells}
 
 /**
  * Approximate-nearest-neighbor search over an embedding column
@@ -110,44 +110,43 @@ object Ann {
   private[graft] def centroidsLit(cents: Array[Array[Float]]) =
     typedlit[Seq[Seq[Float]]](cents.map(_.toSeq).toSeq)
 
-  // ---- broadcast-backed centroid columns (the operator-internal form) ----
+  // ---- vector-kernel columns ----
   //
-  // The SQL-surface functions above take the table as a plan literal —
-  // bounded user-written tables. Every Scala operator below instead
-  // broadcasts the trained table ONCE per query and builds these
-  // columns around the handle: a task ships ~bytes instead of the full
-  // table, executors fetch the blocks once each, and a 100-TB-scale
-  // quantizer (2M cells × 128 dim ≈ 1 GB) stops being a plan payload.
-  // One broadcast serves every column built from it (items + queries +
-  // stats share the same handle).
+  // Each kernel is one expression over a KernelTable. SQL text decodes
+  // its table from a plan literal into the local form (bounded
+  // user-written tables); every Scala operator below instead broadcasts
+  // the trained table ONCE per query (`bcastTable`) and builds its
+  // columns around the handle, so a task ships a few bytes instead of
+  // the table. One broadcast serves every column built from it (items +
+  // queries + stats share the same handle).
 
-  private[graft] def bcastCentroids(
-      spark: SparkSession, cents: Array[Array[Float]]): Broadcast[Array[Array[Float]]] =
-    spark.sparkContext.broadcast(cents)
+  private[graft] def bcastTable[T <: AnyRef: ClassTag](spark: SparkSession, t: T): KernelTable[T] =
+    KernelTable.Broadcasted(spark.sparkContext.broadcast(t))
 
-  private[graft] def bcastCentroids3(
-      spark: SparkSession, t: Array[Array[Array[Float]]]): Broadcast[Array[Array[Array[Float]]]] =
-    spark.sparkContext.broadcast(t)
+  private[graft] def nearestCentroid(vec: Column, t: KernelTable[Array[Array[Float]]]): Column =
+    ExpressionUtils.column(NearestCentroid(ExpressionUtils.expression(vec), t))
 
-  private[graft] def nearestCentroidBc(vec: Column, bc: Broadcast[Array[Array[Float]]]): Column =
-    ExpressionUtils.column(NearestCentroidBcast(ExpressionUtils.expression(vec), bc))
+  private[graft] def nearestCentroids(vec: Column, t: KernelTable[Array[Array[Float]]], probes: Int): Column =
+    ExpressionUtils.column(NearestCentroids(ExpressionUtils.expression(vec), t, probes))
 
-  private[graft] def nearestCentroidsBc(
-      vec: Column, bc: Broadcast[Array[Array[Float]]], probes: Int): Column =
-    ExpressionUtils.column(NearestCentroidsBcast(ExpressionUtils.expression(vec), bc, probes))
+  private[graft] def nearestCentroidDist(vec: Column, t: KernelTable[Array[Array[Float]]]): Column =
+    ExpressionUtils.column(NearestCentroidDist(ExpressionUtils.expression(vec), t))
 
-  private[graft] def nearestCentroidDistBc(vec: Column, bc: Broadcast[Array[Array[Float]]]): Column =
-    ExpressionUtils.column(NearestCentroidDistBcast(ExpressionUtils.expression(vec), bc))
-
-  private[graft] def nearestCellsHierBc(
+  private[graft] def nearestCellsHier(
       vec: Column,
-      bcL1: Broadcast[Array[Array[Float]]],
-      bcL2: Broadcast[Array[Array[Array[Float]]]],
+      l1: KernelTable[Array[Array[Float]]],
+      l2: KernelTable[Array[Array[Array[Float]]]],
       p1: Int, p2: Int): Column =
-    ExpressionUtils.column(NearestCellsHierBcast(ExpressionUtils.expression(vec), bcL1, bcL2, p1, p2))
+    ExpressionUtils.column(NearestCellsHier(ExpressionUtils.expression(vec), l1, l2, p1, p2))
 
-  private[graft] def pqEncodeBc(vec: Column, bc: Broadcast[Array[Array[Array[Float]]]]): Column =
-    ExpressionUtils.column(PqEncodeBcast(ExpressionUtils.expression(vec), bc))
+  private[graft] def pqEncode(vec: Column, t: KernelTable[Array[Array[Array[Float]]]]): Column =
+    ExpressionUtils.column(PqEncode(ExpressionUtils.expression(vec), t))
+
+  private[graft] def subCells(
+      cell: Column, vec: Column,
+      t: KernelTable[java.util.HashMap[Integer, Array[Array[Float]]]], probes: Int): Column =
+    ExpressionUtils.column(SubCells(
+      ExpressionUtils.expression(cell), ExpressionUtils.expression(vec), t, probes))
 
   /**
    * IVF-lite: deterministic coarse quantizer (hash-bucket seed means +
@@ -280,10 +279,10 @@ object Ann {
         val permille = math.max(1L, 10000L * targetRows / n)
         base.filter(pmod(xxhash64(col("item_id"), lit(11)), lit(10000L)) < lit(permille))
       }
-    val bcL1 = bcastCentroids(spark, l1)
+    val bcL1 = bcastTable(spark, l1)
     val fine: Array[(Int, Seq[Seq[Float]])] = filtered
       .select(
-        nearestCentroidBc(col("item_vec"), bcL1).as("cell"),
+        nearestCentroid(col("item_vec"), bcL1).as("cell"),
         xxhash64(col("item_id"), lit(13)).as("hk"),
         col("item_id"), col("item_vec"))
       .as[(Int, Long, Long, Seq[Float])]
@@ -519,11 +518,11 @@ object Ann {
       if (centroids != null) {
         // caller-supplied flat quantizer (shared across probe settings or a
         // persisted index): skip counting + training, go straight to assignment
-        val bcC = bcastCentroids(spark, centroids)
+        val bcC = bcastTable(spark, centroids)
         (withNorms(vecs, "item")
-           .withColumn("cell", nearestCentroidBc(col("item_vec"), bcC)),
+           .withColumn("cell", nearestCentroid(col("item_vec"), bcC)),
          withNorms(vecs, "query")
-           .withColumn("cell", explode(nearestCentroidsBc(col("query_vec"), bcC, probes))))
+           .withColumn("cell", explode(nearestCentroids(col("query_vec"), bcC, probes))))
       } else {
         // the null-FILTERED count: it sizes the quantizer (wanted cells)
         // AND feeds the trainers' sampling rate, and both want the count
@@ -543,22 +542,22 @@ object Ann {
           val (l1, l2) = ivfTrainHier(spark,
             vecs.select(xxhash64(col("vec_id")).as("vec_id"), col("embedding")),
             side, side, trainSample = trainSample, knownCount = n)
-          val bcL1 = bcastCentroids(spark, l1)
-          val bcL2 = bcastCentroids3(spark, l2)
+          val bcL1 = bcastTable(spark, l1)
+          val bcL2 = bcastTable(spark, l2)
           (withNorms(vecs, "item")
-             .withColumn("cell", element_at(nearestCellsHierBc(col("item_vec"), bcL1, bcL2, 1, 1), 1)),
+             .withColumn("cell", element_at(nearestCellsHier(col("item_vec"), bcL1, bcL2, 1, 1), 1)),
            withNorms(vecs, "query")
-             .withColumn("cell", explode(nearestCellsHierBc(col("query_vec"), bcL1, bcL2, hierP1, hierP2))))
+             .withColumn("cell", explode(nearestCellsHier(col("query_vec"), bcL1, bcL2, hierP1, hierP2))))
         } else {
           val cells = if (numCells > 0) numCells else math.min(4096L, wanted).toInt
           val cents = ivfTrain(spark,
             vecs.select(xxhash64(col("vec_id")).as("vec_id"), col("embedding")),
             numCells = cells, trainSample = trainSample, knownCount = n)
-          val bcC = bcastCentroids(spark, cents)
+          val bcC = bcastTable(spark, cents)
           (withNorms(vecs, "item")
-             .withColumn("cell", nearestCentroidBc(col("item_vec"), bcC)),
+             .withColumn("cell", nearestCentroid(col("item_vec"), bcC)),
            withNorms(vecs, "query")
-             .withColumn("cell", explode(nearestCentroidsBc(col("query_vec"), bcC, probes))))
+             .withColumn("cell", explode(nearestCentroids(col("query_vec"), bcC, probes))))
         }
       }
     val bounded = boundOccupancy(spark, items, queries, cellTarget, splitProbes)
@@ -682,13 +681,13 @@ object Ann {
       .collect()
     val splitMap = new java.util.HashMap[Integer, Array[Array[Float]]]()
     trained.foreach { case (c, t) => splitMap.put(c, t.map(_.toArray).toArray) }
-    val bcSplit = spark.sparkContext.broadcast(splitMap)
+    val bcSplit = bcastTable(spark, splitMap)
     val itemsSub = mat.withColumn("ckey",
         col("cell").cast("long") * SubWidth +
-          element_at(subCellsBc(col("cell"), col("item_vec"), bcSplit, 1), 1).cast("long"))
+          element_at(subCells(col("cell"), col("item_vec"), bcSplit, 1), 1).cast("long"))
       .drop("cell")
     val queriesSub = queries.withColumn("sub",
-        explode(subCellsBc(col("cell"), col("query_vec"), bcSplit, splitProbes)))
+        explode(subCells(col("cell"), col("query_vec"), bcSplit, splitProbes)))
       .withColumn("ckey", col("cell").cast("long") * SubWidth + col("sub").cast("long"))
       .drop("cell", "sub")
     val salted: Map[Long, Int] = itemsSub.filter(col("ckey").isNotNull)
@@ -716,12 +715,6 @@ object Ann {
       .drop("salt")
     BoundedSides(itemsOut, queriesOut, splitMap.size, salted.size)
   }
-
-  private[graft] def subCellsBc(
-      cell: Column, vec: Column,
-      bc: Broadcast[java.util.HashMap[Integer, Array[Array[Float]]]], probes: Int): Column =
-    ExpressionUtils.column(SubCellsBcast(
-      ExpressionUtils.expression(cell), ExpressionUtils.expression(vec), bc, probes))
 
   /**
    * Per-cell EXACT top-k kernel: cogroup items and queries on the
@@ -917,7 +910,7 @@ object Ann {
       // exchange.
       graft.core.Jobs.observedWrite(corpus
         .select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-        .withColumn("cell", nearestCentroidBc(col("item_vec"), bcastCentroids(spark, cents)))
+        .withColumn("cell", nearestCentroid(col("item_vec"), bcastTable(spark, cents)))
         .hint("rebalance", col("cell"))) {
         _.write.mode("overwrite").partitionBy("cell").parquet(s"$path/assignments")
       }
@@ -999,8 +992,8 @@ object Ann {
     // buildIvfIndex); assign + encode still compute map-side
     val codeRows = graft.core.Jobs.observedWrite(
       corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-        .withColumn("cell", nearestCentroidBc(col("item_vec"), bcastCentroids(spark, cents)))
-        .withColumn("codes", pqEncodeBc(col("item_vec"), bcastCentroids3(spark, codebooks)))
+        .withColumn("cell", nearestCentroid(col("item_vec"), bcastTable(spark, cents)))
+        .withColumn("codes", pqEncode(col("item_vec"), bcastTable(spark, codebooks)))
         .select(col("item_id"), col("codes"), col("cell"))
         .hint("rebalance", col("cell"))) {
       _.write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
@@ -1144,8 +1137,8 @@ object Ann {
   private[graft] def dispersionStats(
       vecs: DataFrame, vecCol: String, cents: Array[Array[Float]]): DataFrame =
     vecs
-      .select(nearestCentroidDistBc(
-        col(vecCol), bcastCentroids(vecs.sparkSession, cents)).as("d"))
+      .select(nearestCentroidDist(
+        col(vecCol), bcastTable(vecs.sparkSession, cents)).as("d"))
       .agg(expr("approx_percentile(d, 0.95)").as("p95_dist"))
       .coalesce(1)
 
@@ -1154,8 +1147,8 @@ object Ann {
   private[graft] def overP95Fraction(
       vecs: DataFrame, vecCol: String, cents: Array[Array[Float]], p95: Double): Double = {
     val r = vecs
-      .select((nearestCentroidDistBc(
-        col(vecCol), bcastCentroids(vecs.sparkSession, cents)) > p95).cast("double").as("over"))
+      .select((nearestCentroidDist(
+        col(vecCol), bcastTable(vecs.sparkSession, cents)) > p95).cast("double").as("over"))
       .agg(avg(col("over"))).head()
     if (r.isNullAt(0)) 0.0 else r.getDouble(0)
   }
@@ -1478,7 +1471,7 @@ object Ann {
     // expression still evaluates map-side (before the exchange), in
     // the source's own parallelism.
     val cells = newVecs.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-      .withColumn("cell", nearestCentroidBc(col("item_vec"), bcastCentroids(spark, cents)))
+      .withColumn("cell", nearestCentroid(col("item_vec"), bcastTable(spark, cents)))
     val assigned =
       if (heldIds.isEmpty) cells.hint("rebalance", col("cell"))
       else {
@@ -1495,7 +1488,7 @@ object Ann {
       if (deltaDir == "codes_delta") {
         val codebooks = loadPqCodebooks(spark, path)
         ("ann:append:encode+write", assigned
-          .withColumn("codes", pqEncodeBc(col("item_vec"), bcastCentroids3(spark, codebooks)))
+          .withColumn("codes", pqEncode(col("item_vec"), bcastTable(spark, codebooks)))
           .select(col("item_id"), col("codes"), col("cell")))
       } else ("ann:append:assign+write", assigned)
     val n = graft.core.Jobs.desc(spark, step) {
@@ -1636,7 +1629,7 @@ object Ann {
     val queryProbes = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
       .withColumn("cell",
-        explode(nearestCentroidsBc(col("query_vec"), bcastCentroids(spark, cents), probes)))
+        explode(nearestCentroids(col("query_vec"), bcastTable(spark, cents), probes)))
     val probeCells = graft.core.Jobs.desc(spark, "ann:search:probe-cells") {
       queryProbes.select(col("cell")).distinct().collect().map(_.getInt(0))
     }
@@ -1792,7 +1785,7 @@ object Ann {
   def pqEncodeCorpus(corpus: DataFrame, codebooks: Array[Array[Array[Float]]]): DataFrame = {
     spread(corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec")))
       .select(col("item_id"),
-        pqEncodeBc(col("item_vec"), bcastCentroids3(corpus.sparkSession, codebooks)).as("codes"))
+        pqEncode(col("item_vec"), bcastTable(corpus.sparkSession, codebooks)).as("codes"))
   }
 
   /**
@@ -1843,12 +1836,12 @@ object Ann {
       cents: Array[Array[Float]],
       probes: Int
   ): DataFrame = {
-    val bcC = bcastCentroids(corpus.sparkSession, cents)
+    val bcC = bcastTable(corpus.sparkSession, cents)
     val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-    val assigned = base.withColumn("cell", nearestCentroidBc(col("item_vec"), bcC))
+    val assigned = base.withColumn("cell", nearestCentroid(col("item_vec"), bcC))
     val queryProbes = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      .withColumn("cell", explode(nearestCentroidsBc(col("query_vec"), bcC, probes)))
+      .withColumn("cell", explode(nearestCentroids(col("query_vec"), bcC, probes)))
     assigned
       .join(broadcast(queryProbes), Seq("cell"))
       .filter(col("query_id") =!= col("item_id"))

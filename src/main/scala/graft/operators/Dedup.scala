@@ -1303,8 +1303,8 @@ object Dedup {
       // across probe settings, or a persisted index) — assignment only
       val assigned = vecs.select(
         col("id"), col("vec"),
-        explode(Ann.nearestCentroidsBc(
-          col("vec"), Ann.bcastCentroids(spark, centroids), probes)).as("cell"))
+        explode(Ann.nearestCentroids(
+          col("vec"), Ann.bcastTable(spark, centroids), probes)).as("cell"))
       return withinCellPairs(assigned, threshold)
     }
     // one narrow counting pass sizes the cells AND feeds the trainer
@@ -1342,8 +1342,8 @@ object Dedup {
     // into the within-cell join — see withinCellPairs
     val assigned = vecs.select(
       col("id"), col("vec"),
-      explode(Ann.nearestCentroidsBc(
-        col("vec"), Ann.bcastCentroids(spark, cents), probes)).as("cell"))
+      explode(Ann.nearestCentroids(
+        col("vec"), Ann.bcastTable(spark, cents), probes)).as("cell"))
     withinCellPairs(assigned, threshold)
   }
 
@@ -1378,8 +1378,8 @@ object Dedup {
       c1, c2, trainSample = trainSample, knownCount = knownCount)
     val assigned = vecs.select(
       col("id"), col("vec"),
-      explode(Ann.nearestCellsHierBc(col("vec"),
-        Ann.bcastCentroids(spark, l1), Ann.bcastCentroids3(spark, l2), p1, p2)).as("cell"))
+      explode(Ann.nearestCellsHier(col("vec"),
+        Ann.bcastTable(spark, l1), Ann.bcastTable(spark, l2), p1, p2)).as("cell"))
     withinCellPairs(assigned, threshold)
   }
 

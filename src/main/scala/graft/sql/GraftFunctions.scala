@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import graft.functions.expressions.{CosineSimilarity, HyperplaneBits, MinHashSignature, NearestCentroid, NearestCentroids, SimHash64, TextMinHash, TextSimHash, Tokens}
+import graft.functions.expressions.{CosineSimilarity, HyperplaneBits, KernelTable, MinHashSignature, NearestCentroid, NearestCentroids, SimHash64, TextMinHash, TextSimHash, Tokens}
 
 /**
  * SQL function surface: the reference exposes its engine through a
@@ -47,7 +47,8 @@ object GraftFunctions {
     "graft_ppj_verify" -> (exprs => graft.functions.expressions.PpjVerify(
       exprs(0), exprs(1), exprs(2), exprs(3),
       exprs(4).eval().asInstanceOf[Number].doubleValue())),
-    // vector-index ops: centroid tables ride as a foldable literal argument
+    // vector-index ops: centroid tables ride as a foldable literal argument,
+    // decoded into the kernel's local table
     "graft_nearest_centroid" -> (exprs => NearestCentroid(exprs.head, centroidsArg(exprs(1)))),
     "graft_nearest_centroid_dist" -> (exprs =>
       graft.functions.expressions.NearestCentroidDist(exprs.head, centroidsArg(exprs(1)))),
@@ -159,27 +160,22 @@ object GraftFunctions {
     Array.tabulate(arr.numElements())(i => arr.getUTF8String(i).toString)
   }
 
-  /** Decode a foldable array<array<float>> literal into the centroid table. */
-  private def centroidsArg(e: Expression): Array[Array[Float]] = {
+  /** Decode a foldable array<array<float>> literal into a local centroid table. */
+  private def centroidsArg(e: Expression): KernelTable[Array[Array[Float]]] =
+    KernelTable.Local(floats2(e.eval().asInstanceOf[ArrayData]))
+
+  /** Decode a foldable array<array<array<float>>> literal (per-L1-cell
+    * L2 centroid tables of the two-level quantizer, or PQ codebooks). */
+  private def centroids3Arg(e: Expression): KernelTable[Array[Array[Array[Float]]]] = {
     val outer = e.eval().asInstanceOf[ArrayData]
+    KernelTable.Local(Array.tabulate(outer.numElements())(i => floats2(outer.getArray(i))))
+  }
+
+  private def floats2(outer: ArrayData): Array[Array[Float]] =
     Array.tabulate(outer.numElements()) { i =>
       val inner = outer.getArray(i)
       Array.tabulate(inner.numElements())(j => inner.getFloat(j))
     }
-  }
-
-  /** Decode a foldable array<array<array<float>>> literal (per-L1-cell
-    * L2 centroid tables of the two-level quantizer). */
-  private def centroids3Arg(e: Expression): Array[Array[Array[Float]]] = {
-    val outer = e.eval().asInstanceOf[ArrayData]
-    Array.tabulate(outer.numElements()) { i =>
-      val mid = outer.getArray(i)
-      Array.tabulate(mid.numElements()) { j =>
-        val inner = mid.getArray(j)
-        Array.tabulate(inner.numElements())(k => inner.getFloat(k))
-      }
-    }
-  }
 
   /** Register the graft function surface, installing only the names the
     * session's registry does not already hold (idempotent: a repeat call,

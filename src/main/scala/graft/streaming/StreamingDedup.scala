@@ -410,8 +410,8 @@ object StreamingDedup {
     val bitKeys = transform(sequence(lit(0), lit(bands1 - 1)), bnd => struct(bnd.as("band"),
       call_function("shiftrightunsigned", col("bits"), bnd * rowsPerBand).bitwiseAND(lit(mask)).as("bh")))
     def cellKeys(s: SparkSession, cents: Array[Array[Float]]): Column =
-      transform(graft.operators.Ann.nearestCentroidsBc(col("vec"),
-        graft.operators.Ann.bcastCentroids(s, cents), ivfProbes),
+      transform(graft.operators.Ann.nearestCentroids(col("vec"),
+        graft.operators.Ann.bcastTable(s, cents), ivfProbes),
         c => struct(lit(0).as("band"), c.cast("long").as("bh")))
 
     def trainAndPersist(s: SparkSession, batch: DataFrame,

@@ -1,8 +1,8 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
+import graft.core.LocalSession
 
 /**
  * Scratch: dump `explain("formatted")` of named SparkEntry queries to
@@ -16,16 +16,9 @@ object DumpPlanFiles {
     val suffix = args(1)
     val sfDir = args(2)
     val names = args.drop(3)
-    val cpus = graft.Bench.cpus
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxMetadataStringLength", "500")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.setupFixtures(spark, sfDir)
     Files.createDirectories(Paths.get(outDir))
+    val spark = LocalSession("graft-dumpplanfiles", outDir, "spark.sql.maxMetadataStringLength" -> "500")
+    SparkEntry.setupFixtures(spark, sfDir)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val plan = df.queryExecution.explainString(

@@ -1,8 +1,8 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
+import graft.core.LocalSession
 
 /**
  * Dump formatted physical plans of the headline queries to PLANS.md —
@@ -13,14 +13,8 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = graft.Bench.cpus
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxMetadataStringLength", "500")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-dumpplans", Paths.get(out).toAbsolutePath.getParent.toString,
+      "spark.sql.maxMetadataStringLength" -> "500")
 
     val headline = Seq(
       "q_filter_range" -> "time-range + dim filter: both reach PushedFilters; ReadSchema pruned",

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.LocalSession
 import graft.operators.Bpe
 
 /** Learn a BPE merge table from a testdata documents table and print
@@ -14,13 +14,7 @@ object LearnBpe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val numMerges = if (args.length > 1) args(1).toInt else 16
-    val cpus = graft.Bench.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-learnbpe", System.getProperty("java.io.tmpdir"))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val merges = Bpe.learnMerges(docs, "text", numMerges = numMerges)
     merges.foreach { m =>

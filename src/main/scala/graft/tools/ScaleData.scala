@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from an existing testdata dir by
@@ -28,12 +28,7 @@ object ScaleData {
     val mult = args.headOption.map(_.toInt).getOrElse(5)
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_sf0.5"
     val srcDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = graft.Bench.cpus
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSession("graft-scaledata", outDir)
 
     val Off = 1000000000L // replica key offset: far above any source key
     def src(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
+import graft.core.LocalSession
 
 /** Time individual SparkEntry queries in isolation: `runMain
   * graft.tools.TimeQuery <sfDir> <name> [name...]` — each query runs
@@ -17,20 +17,13 @@ object TimeQuery {
       if (args.length > 1 && args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 1) args.drop(1).toSeq
       else Seq("q_agg_sum_min_max")
-    val cpus = graft.Bench.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
     // attribution dial: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — e.g. turn
     // AQE off to test whether a bimodal timing is a runtime re-plan
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(';').filter(_.contains('=')))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = LocalSession("graft-timequery", System.getProperty("java.io.tmpdir"), extra: _*)
     // same pre-loop fixture phase as Bench: the first (warm) rep of an
     // index-backed query must time the PROBE path, not fixture DDL —
     // otherwise the idle reference sweep and the driver bench disagree

@@ -72,11 +72,11 @@ class DedupSpec extends SparkSpecBase {
         (size(array_intersect(col("sa"), col("sb"))).cast("double") /
           size(array_union(col("sa"), col("sb"))).cast("double")).as("jac"))
       .filter(col("jac") >= 0.5)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     val viaMinhash = Dedup.minhashJaccardPairs(real, "doc_id", "text", threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     val viaSimhash = Dedup.simhashJaccardPairs(real, "doc_id", "text", maxHamming = 12, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     assert(viaMinhash == brute, s"minhash candidates missed a true pair: ${brute.diff(viaMinhash)}")
     assert(viaSimhash == brute, s"simhash candidates missed a true pair: ${brute.diff(viaSimhash)}")
 
@@ -86,9 +86,9 @@ class DedupSpec extends SparkSpecBase {
       .filter(col("ia") < col("ib"))
       .select(col("ia"), col("ib"), call_function("graft_cosine", col("va"), col("vb")).as("cos"))
       .filter(col("cos") >= 0.5)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     val viaLsh = Dedup.embeddingPairs(emb, "vec_id", "embedding", threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     assert(viaLsh == ve, s"embedding LSH missed a true pair: ${ve.diff(viaLsh)}")
   }
 
@@ -142,10 +142,10 @@ class DedupSpec extends SparkSpecBase {
     val real = spark.read.parquet(s"$sfDir/documents.parquet")
     val full = Dedup
       .ngramJaccardPairsDense(real, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     val prefixed = Dedup
       .ngramJaccardPairsPrefix(real, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     assert(prefixed == full)
     // the volume-sized candidate-join width (the dispatcher engages it
     // past ~8M estimated rows — unreachable at spec scale) must be a
@@ -153,7 +153,7 @@ class DedupSpec extends SparkSpecBase {
     val widened = Dedup
       .ngramJaccardPairsPrefix(real, "doc_id", "text", Seq("lang", "source"), n = 4,
         threshold = 0.35, numPartitions = Some(64))
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     assert(widened == full)
   }
 
@@ -161,16 +161,16 @@ class DedupSpec extends SparkSpecBase {
     val real = spark.read.parquet(s"$sfDir/documents.parquet")
     val dense = Dedup
       .ngramJaccardPairsDense(real, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     // default bound: the tiny dense corpus stays on the direct self-join route
     val auto = Dedup
       .ngramJaccardPairs(real, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     // forced-low bound: any corpus reads as heavy-tailed → prefix route
     val forced = Dedup
       .ngramJaccardPairs(real, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35,
         maxExpansion = 0.0)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     assert(auto == dense)
     assert(forced == dense)
   }
@@ -180,7 +180,7 @@ class DedupSpec extends SparkSpecBase {
     def run(pinned: Option[Dedup.NgramRoute]): Seq[(Long, Long, Double)] = Dedup
       .routedNgramPairs(real, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35,
         maxExpansion = 256.0, probeFraction = 1.0, collapseExact = true, pinned)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     val adaptive = run(None)
     for (route <- Seq(Dedup.NgramRoute.Collapsed, Dedup.NgramRoute.Dense, Dedup.NgramRoute.Prefix))
       assert(run(Some(route)) == adaptive, s"pinned route $route must match the adaptive result")
@@ -210,14 +210,14 @@ class DedupSpec extends SparkSpecBase {
     val raw = Dedup
       .ngramJaccardPairs(docs, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35,
         collapseExact = false)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     // probeFraction = 1: the dup probe sees the full corpus (44% exact
     // dups ≫ the 5% bound), so this run provably takes the collapse
     // route rather than sampling its way back to raw
     val collapsed = Dedup
       .ngramJaccardPairs(docs, "doc_id", "text", Seq("lang", "source"), n = 4, threshold = 0.35,
         probeFraction = 1.0)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     assert(collapsed == raw)
     // sanity on the shape itself: the 26-member cluster (1-25 plus the
     // case-folded 68) emits all intra pairs, the cross-cluster near-dup
@@ -281,11 +281,11 @@ class DedupSpec extends SparkSpecBase {
     )).toDF("doc_id", "text", "lang", "source")
     val ex = Dedup.gramPostings(docs, "doc_id", "text", Seq("lang", "source"), 4)
     val unsalted = Dedup.denseFromPostings(ex, Seq("lang", "source"), 0.35)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     // force-salt the hot prefix grams (plus one absent key — harmless)
     val hot = Seq("zzzz", "zzz ", "zz c", "comm").map(g => s"en\u0000s0\u0000$g") :+ "en\u0000s0\u0000nope"
     val salted = Dedup.denseFromPostings(ex, Seq("lang", "source"), 0.35, heavyKeys = hot)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
     assert(salted == unsalted)
     assert(salted.exists(p => p._1 == 900L && p._2 == 901L))
   }
@@ -1259,6 +1259,42 @@ class DedupSpec extends SparkSpecBase {
     // are the same on every run
     val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(25).withWorkers(1)
       .withInitialSeed(org.scalacheck.rng.Seed(20261018L)), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+
+  // exactJaccardVerify against a brute-force Jaccard over the shingle
+  // kernel's sets, for every candidate shape the verify may be handed.
+  test("exactJaccardVerify equals brute-force shingle-set Jaccard on every candidate") {
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.expressions.WordShingles
+    // small vocabulary so docs share shingles; empty docs and docs
+    // shorter than the shingle size included
+    val doc = Gen.choose(0, 7).flatMap(Gen.listOfN(_, Gen.oneOf("a", "b", "c", "d")).map(_.mkString(" ")))
+    val cases = for {
+      shingle <- Gen.choose(1, 3)
+      texts <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, doc))
+      // ids 0..5 may be absent from the docs, 9 always is; duplicate and
+      // reversed pairs included
+      pairs <- Gen.listOf(Gen.zip(Gen.oneOf((0 to 5) :+ 9), Gen.oneOf((0 to 5) :+ 9))).map(_.take(10))
+    } yield (shingle, texts, pairs)
+    val prop = Prop.forAllNoShrink(cases) { case (shingle, texts, pairs) =>
+      val cands = (pairs ++ pairs.take(2)).map { case (a, b) => (a.toLong, b.toLong) }
+      val byId = texts.zipWithIndex.map { case (t, i) => i.toLong -> t }.toMap
+      def sh(t: String): Set[String] = {
+        val arr = WordShingles.shingle(UTF8String.fromString(t), shingle)
+        (0 until arr.numElements()).map(arr.getUTF8String(_).toString).toSet
+      }
+      val want = cands.collect { case (a, b) if byId.contains(a) && byId.contains(b) =>
+        val (sa, sb) = (sh(byId(a)), sh(byId(b)))
+        (a, b, (sa intersect sb).size.toDouble / (sa union sb).size.toDouble)
+      }.sortBy(_.toString)
+      val got = Dedup.exactJaccardVerify(cands.toDF("id_a", "id_b"),
+          byId.toSeq.toDF("doc_id", "text"), "doc_id", "text", shingle)
+        .as[(Long, Long, Double)].collect().toSeq.sortBy(_.toString)
+      (got == want) :| s"texts $texts, shingle $shingle, candidates $cands: got $got, want $want"
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(20).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261019L)), prop)
     assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 }

@@ -23,22 +23,25 @@ class JsonCatalogsSpec extends SparkSpecBase {
     try f(conn) finally conn.close()
   }
 
-  private lazy val derbyReady: Unit = withDerby { conn =>
-    val st = conn.createStatement()
-    try st.execute("DROP TABLE supplier_cat") catch { case _: java.sql.SQLException => () }
-    st.execute(
-      "CREATE TABLE supplier_cat (s_suppkey BIGINT, supplier_name VARCHAR(64), tier VARCHAR(8))")
-    val ins = conn.prepareStatement("INSERT INTO supplier_cat VALUES (?, ?, ?)")
+  // the session first: building it points Derby's log at the temp root
+  private lazy val derbyReady: Unit = {
     val suppliers = spark.read.parquet(s"$sfDir/supplier.parquet")
       .select("s_suppkey").collect().map(_.getLong(0)).sorted
-    suppliers.foreach { k =>
-      ins.setLong(1, k)
-      ins.setString(2, s"declared-supplier-$k")
-      ins.setString(3, if (k % 3 == 0) "gold" else "std")
-      ins.addBatch()
+    withDerby { conn =>
+      val st = conn.createStatement()
+      try st.execute("DROP TABLE supplier_cat") catch { case _: java.sql.SQLException => () }
+      st.execute(
+        "CREATE TABLE supplier_cat (s_suppkey BIGINT, supplier_name VARCHAR(64), tier VARCHAR(8))")
+      val ins = conn.prepareStatement("INSERT INTO supplier_cat VALUES (?, ?, ?)")
+      suppliers.foreach { k =>
+        ins.setLong(1, k)
+        ins.setString(2, s"declared-supplier-$k")
+        ins.setString(3, if (k % 3 == 0) "gold" else "std")
+        ins.addBatch()
+      }
+      ins.executeBatch()
+      st.close(); ins.close()
     }
-    ins.executeBatch()
-    st.close(); ins.close()
   }
 
   private val configJson =

@@ -889,35 +889,78 @@ class OperatorSpec extends SparkSpecBase {
     }
   }
 
+  // One class per vector kernel, two table holders: the literal SQL form
+  // (a local table) and the operators' broadcast form must agree, on the
+  // whole-stage codegen path and on the interpreted one.
   test("broadcast-backed centroid columns equal the literal SQL forms bit-for-bit") {
+    import graft.functions.expressions.{KernelTable, VectorOps}
     val cents = Array(Array(1f, 0f, 0f), Array(0f, 1f, 0f), Array(0f, 0f, 1f), Array(0.5f, 0.5f, 0f))
     val l2 = Array.tabulate(4)(c => Array(Array(c * 1f, 0f, 1f), Array(0f, c * 1f, -1f)))
     val cb = Array(Array(Array(1f, 0f), Array(0f, 1f)), Array(Array(0.5f, 0.5f), Array(-1f, 0f)))
+    // cell 0 has a sub-quantizer, cell 1 was never split
+    val split = new java.util.HashMap[Integer, Array[Array[Float]]]()
+    split.put(0, Array(Array(1f, 1f, 0f, 0f), Array(0f, 0f, 1f, 1f), Array(2f, 0f, 2f, 0f)))
     val vecs = (0L until 200L).map { i =>
-      (i, Array.tabulate(4)(d => ((org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashLong(i * 4 + d, 3L) % 2000L) / 700.0f)))
+      (i, if (i % 40 == 7) None else Some(Array.tabulate(4)(d => ((org.apache.spark.sql.catalyst.expressions.XXH64
+        .hashLong(i * 4 + d, 3L) % 2000L) / 700.0f))))
     }
-    val df = spark.createDataset(vecs).toDF("vec_id", "v")
-    val bcC = Ann.bcastCentroids(spark, cents)
-    val bcL1 = Ann.bcastCentroids(spark, cents)
-    val bcL2 = Ann.bcastCentroids3(spark, l2)
-    val bcCb = Ann.bcastCentroids3(spark, cb)
-    val both = df.select(
-      call_function("graft_nearest_centroid", col("v"), Ann.centroidsLit(cents)).as("lit_cell"),
-      Ann.nearestCentroidBc(col("v"), bcC).as("bc_cell"),
-      call_function("graft_nearest_centroids", col("v"), Ann.centroidsLit(cents), lit(3)).as("lit_cells"),
-      Ann.nearestCentroidsBc(col("v"), bcC, 3).as("bc_cells"),
-      call_function("graft_nearest_centroid_dist", col("v"), Ann.centroidsLit(cents)).as("lit_d"),
-      Ann.nearestCentroidDistBc(col("v"), bcC).as("bc_d"),
+    // the repartition keeps the projection out of ConvertToLocalRelation,
+    // so it runs in the executed plan
+    val df = spark.createDataset(vecs).toDF("vec_id", "v").repartition(3)
+      .withColumn("cell", (col("vec_id") % 2).cast("int"))
+    val bcC = Ann.bcastTable(spark, cents)
+    val bcSplit = Ann.bcastTable(spark, split)
+    val pairs = Seq(
+      call_function("graft_nearest_centroid", col("v"), Ann.centroidsLit(cents)) ->
+        Ann.nearestCentroid(col("v"), bcC),
+      call_function("graft_nearest_centroids", col("v"), Ann.centroidsLit(cents), lit(3)) ->
+        Ann.nearestCentroids(col("v"), bcC, 3),
+      call_function("graft_nearest_centroid_dist", col("v"), Ann.centroidsLit(cents)) ->
+        Ann.nearestCentroidDist(col("v"), bcC),
       call_function("graft_nearest_cells_hier", col("v"),
-        Ann.centroidsLit(cents), Ann.centroidsLit3(l2), lit(2), lit(2)).as("lit_hier"),
-      Ann.nearestCellsHierBc(col("v"), bcL1, bcL2, 2, 2).as("bc_hier"),
-      call_function("graft_pq_encode", col("v"), Ann.centroidsLit3(cb)).as("lit_pq"),
-      Ann.pqEncodeBc(col("v"), bcCb).as("bc_pq"))
-    val bad = both.filter(
-      col("lit_cell") =!= col("bc_cell") || col("lit_cells") =!= col("bc_cells") ||
-        col("lit_d") =!= col("bc_d") || col("lit_hier") =!= col("bc_hier") ||
-        col("lit_pq") =!= col("bc_pq")).count()
-    assert(bad == 0, "broadcast and literal centroid forms diverged")
+        Ann.centroidsLit(cents), Ann.centroidsLit3(l2), lit(2), lit(2)) ->
+        Ann.nearestCellsHier(col("v"), bcC, Ann.bcastTable(spark, l2), 2, 2),
+      call_function("graft_pq_encode", col("v"), Ann.centroidsLit3(cb)) ->
+        Ann.pqEncode(col("v"), Ann.bcastTable(spark, cb)),
+      Ann.subCells(col("cell"), col("v"), KernelTable.Local(split), 2) ->
+        Ann.subCells(col("cell"), col("v"), bcSplit, 2))
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) =>
+        java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+      case _ => a == b
+    }
+    def check(codegen: Boolean): Unit = {
+      val both = df.select(col("cell") +: col("v") +:
+        pairs.zipWithIndex.flatMap { case ((l, b), i) => Seq(l.as(s"lit_$i"), b.as(s"bc_$i")) }: _*)
+      val rows = both.collect()
+      val plan = both.queryExecution.executedPlan
+      val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      assert(stages.find(plan)(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+        .isDefined == codegen, s"codegen = $codegen, plan:\n$plan")
+      assert(rows.length == vecs.length && rows.count(_.isNullAt(1)) == 5)
+      rows.foreach { r =>
+        pairs.indices.foreach { i =>
+          val (l, b) = (r.get(2 + 2 * i), r.get(3 + 2 * i))
+          assert(same(l, b), s"kernel $i diverged (codegen = $codegen): literal $l, broadcast $b")
+          assert((l == null) == r.isNullAt(1), s"kernel $i: a NULL vector must give NULL, got $l")
+        }
+        // the sub-cell kernel against VectorOps.subCells on the driver
+        if (!r.isNullAt(1)) {
+          val v = new org.apache.spark.sql.catalyst.util.GenericArrayData(r.getSeq[Float](1).toArray)
+          val want = VectorOps.subCells(r.getInt(0), v, split, 2).toIntArray().toSeq
+          assert(r.getSeq[Int](2 + 2 * (pairs.length - 1)) == want)
+          assert(want.length == (if (r.getInt(0) == 0) 2 else 1))
+        }
+      }
+    }
+    check(codegen = true)
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      check(codegen = false)
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one JVM-wide session, 4 threads). */
+/** Shared local SparkSession for specs (one JVM-wide [[graft.core.LocalSession]]). */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sfDir = "/root/testdata/sf0.001"
@@ -31,18 +31,9 @@ object SparkSpecBase {
   lazy val warehouseDir: String = tempRoot.resolve("warehouse").toString
 
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.sql.warehouse.dir", warehouseDir)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.core.LocalSession("graft-spec", tempRoot.toString,
+      "spark.sql.maxMetadataStringLength" -> "2000",
+      "spark.sql.warehouse.dir" -> warehouseDir)
     graft.sql.GraftFunctions.register(s)
     s
   }
