@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.sql.GraftFunctions
 
@@ -101,6 +101,35 @@ object F {
       sequence(lit(0), lit(bands - 1)),
       b => struct(b.as("band"), xxhash64(concat_ws("_", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))), b).as("bh"))
     )
+
+  /**
+   * Sign-LSH band keys over 64 packed sign bits: band b keys on the
+   * `rowsPerBand` bits from offset b * rowsPerBand, in the same
+   * (band, bh) shape as [[lshBandKeys]]. Java shifts are mod 64, so one
+   * 64-bit band (near-1 thresholds) masks with -1L: (1L << 64) - 1 is 0,
+   * which would key every row to bh = 0 and make the band join all-pairs.
+   */
+  def signBandKeys(bits: Column, bands: Int, rowsPerBand: Int): Column = {
+    val mask = if (rowsPerBand >= 64) -1L else (1L << rowsPerBand) - 1L
+    transform(sequence(lit(0), lit(bands - 1)), b => struct(b.as("band"),
+      call_function("shiftrightunsigned", bits, b * rowsPerBand).bitwiseAND(lit(mask)).as("bh")))
+  }
+
+  /**
+   * `df` plus a 1-based int `rankCol` in ascending `keys` order (negate
+   * a numeric key to rank it descending): row_number() over a global
+   * window, without the window's move of every row to one partition
+   * under a warning. The rows fold into one sorted array that
+   * posexplode unrolls, so `df` must already be bounded to a few rows
+   * (a limit, one row per label).
+   */
+  def rankBy(df: DataFrame, rankCol: String, keys: Column*): DataFrame = {
+    val sortKeys = keys.zipWithIndex.map { case (k, i) => k.as(s"k$i") }
+    val row = struct(sortKeys :+ struct(df.columns.map(df(_)): _*).as("row"): _*)
+    df.agg(sort_array(collect_list(row)).as("rows"))
+      .select(posexplode(col("rows")).as(Seq("pos", "r")))
+      .select(col("r.row.*"), (col("pos") + 1).as(rankCol))
+  }
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

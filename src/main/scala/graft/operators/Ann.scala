@@ -1068,19 +1068,9 @@ object Ann {
     val qdf = pqQueryTables(qRows, codebooks).toSeq
       .toDF("query_id", "query_vec", "dots", "norms2", "qnorm")
     val cellFilter = col("cell").isin(probeCells.map(Integer.valueOf): _*)
-    val base = spark.read.parquet(s"$path/codes").filter(cellFilter)
     // admitted delta shards (appendToIvfIndex on a PQ index) serve
-    // under the SAME probed-cell partition filter; committed dirs only
-    // + crash-marker-gated identity collapse (same contract as
-    // searchIvfIndex — see deltaSide)
-    val codes = deltaSide(spark, path, "codes_delta",
-      Seq("item_id", "codes", "cell")) match {
-      case None => base
-      case Some(delta) =>
-        val unioned = base.unionByName(delta.filter(cellFilter))
-        if (graft.core.ShardStore.folding(spark, path)) unioned.dropDuplicates(Seq("item_id"))
-        else unioned
-    }
+    // under the SAME probed-cell partition filter
+    val codes = probedStore(spark, path, "codes", Seq("item_id", "codes", "cell"), cellFilter)
     adcRerank(codes, qdf, kk, rerank, corpus, k,
       perQueryCells = Some(queryProbePairs.toDF("query_id", "cell")))
   }
@@ -1250,6 +1240,23 @@ object Ann {
       graft.core.DirCache.reader(spark, s"$path/$deltaDir").option("basePath", s"$path/$deltaDir")
         .parquet(dirs.map(_.toString).toIndexedSeq: _*)
         .select(cols.map(col): _*))
+  }
+
+  /** The probed cells of a stored index's `<store>` (`assignments` or
+    * `codes`) ∪ its committed `<store>_delta` shards, both under
+    * `cellFilter`. Identity collapses only while a crashed promotion's
+    * staged state survives (see [[deltaSide]]): the steady delta state
+    * pays no extra shuffle. */
+  private def probedStore(spark: SparkSession, path: String, store: String, cols: Seq[String],
+      cellFilter: Column): DataFrame = {
+    val base = spark.read.parquet(s"$path/$store").filter(cellFilter)
+    deltaSide(spark, path, s"${store}_delta", cols) match {
+      case None => base
+      case Some(delta) =>
+        val unioned = base.unionByName(delta.filter(cellFilter))
+        if (graft.core.ShardStore.folding(spark, path)) unioned.dropDuplicates(Seq("item_id"))
+        else unioned
+    }
   }
 
   /** Rebuild preamble shared by [[buildIvfIndex]] / [[buildIvfPqIndex]]:
@@ -1634,18 +1641,7 @@ object Ann {
       queryProbes.select(col("cell")).distinct().collect().map(_.getInt(0))
     }
     val cellFilter = col("cell").isin(probeCells.toIndexedSeq.map(Integer.valueOf): _*)
-    val base = spark.read.parquet(s"$path/assignments").filter(cellFilter)
-    val stored = deltaSide(spark, path, "assignments_delta",
-      Seq("item_id", "item_vec", "cell")) match {
-      case None => base
-      case Some(delta) =>
-        val unioned = base.unionByName(delta.filter(cellFilter))
-        // identity collapse only while a crashed promotion's staged
-        // state survives (see deltaSide) — the steady delta state
-        // pays no extra shuffle
-        if (graft.core.ShardStore.folding(spark, path)) unioned.dropDuplicates(Seq("item_id"))
-        else unioned
-    }
+    val stored = probedStore(spark, path, "assignments", Seq("item_id", "item_vec", "cell"), cellFilter)
     val cands = stored
       .join(broadcast(queryProbes), Seq("cell"))
       .filter(col("query_id") =!= col("item_id"))

@@ -1447,23 +1447,12 @@ object Dedup {
     // (native expression — one per-row loop instead of planes×dim lambdas)
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val sigs = vecs.select(col("id"), GraftFunctions.call("graft_hyperplane_bits", col("vec"), lit(planes)).as("bits"))
-    // shifts mod 64: one 64-bit band (near-1 thresholds) needs -1L, not
-    // (1L << 64) - 1 = 0 — a zero mask hashes every row to bh=0 and the
-    // band join degenerates to all-pairs
-    val mask = if (rowsPerBand >= 64) -1L else (1L << rowsPerBand) - 1L
     // candidate generation ships (id, band, bandhash) only; vectors
     // re-attach to the (far smaller) distinct candidate set for the
     // exact cosine verification.
-    val banded = sigs.select(
-      col("id"),
-      explode(
-        transform(
-          sequence(lit(0), lit(bands - 1)),
-          bnd => struct(bnd.as("band"),
-            call_function("shiftrightunsigned", col("bits"), bnd * rowsPerBand).bitwiseAND(lit(mask)).as("bh"))
-        )
-      ).as("bk")
-    ).select(col("id"), col("bk.band"), col("bk.bh"))
+    val banded = sigs
+      .select(col("id"), explode(F.signBandKeys(col("bits"), bands, rowsPerBand)).as("bk"))
+      .select(col("id"), col("bk.band"), col("bk.bh"))
     val capped = capBuckets(banded, maxBucket)
     val a = capped.as("a")
     val b = capped.as("b").hint("shuffle_hash")

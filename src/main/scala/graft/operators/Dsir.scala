@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.F
 
@@ -128,9 +127,8 @@ object Dsir {
     requireBuckets(buckets)
     val feat = featureCounts(docs, idCol, textCol, isTarget, buckets)
     val sc = scores(feat, ratioTable(feat, buckets))
-    sc.orderBy(col("logw_q").desc, col("doc_id").asc).limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("logw_q").desc, col("doc_id").asc)))
+    F.rankBy(sc.orderBy(col("logw_q").desc, col("doc_id").asc).limit(k), "rank",
+        -col("logw_q"), col("doc_id"))
       .withColumn("logw", col("logw_q").cast("double") / lit(1000000.0))
       .select(col("doc_id"), col("doc_tokens"), col("logw_q"), col("logw"), col("rank"))
   }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.F
 
@@ -77,14 +76,15 @@ object NaiveBayes {
     val classDocs = base.filter(col("is_train") && col("label").isNotNull)
       .groupBy(col("label")).agg(count(lit(1)).as("dk"))
     val totalDocs = classDocs.agg(sum(col("dk")).as("d"))
-    val classTable = classDocs
+    val classes = classDocs
       .join(classCounts.groupBy(col("label")).agg(sum(col("c")).as("nk")), Seq("label"), "left")
       .na.fill(0L, Seq("nk"))
       .crossJoin(broadcast(totalDocs))
       .select(col("label"), col("nk"),
         floor(log(col("dk").cast("double") / col("d").cast("double")) * lit(1000000.0))
-          .cast("long").as("prior_q"),
-        (-row_number().over(Window.orderBy(col("label"))).cast("long")).as("neg_rank"))
+          .cast("long").as("prior_q"))
+    val classTable = F.rankBy(classes, "rank", col("label"))
+      .select(col("label"), col("nk"), col("prior_q"), (-col("rank").cast("long")).as("neg_rank"))
 
     // test features: (doc, bucket, tf) — map-side combined, text never
     // shuffles. A doc whose tokenizer returns nothing (empty/null text)

@@ -37,7 +37,7 @@ object StreamingContamination {
       evalGrams: DataFrame, // static: (gram string), benchmark-sized
       reportPath: String,
       n: Int = 5,
-      checkpoint: String = "/tmp/graft_streaming_contamination_ckpt"
+      checkpoint: String
   ): StreamingQuery = {
     val hits = broadcast(evalGrams.withColumn("hit", lit(1)))
     docs.writeStream

@@ -273,7 +273,7 @@ object StreamingDedup {
       bands: Int = 16,
       threshold: Double = 0.5,
       shingleSize: Int = 3,
-      checkpoint: String = "/tmp/graft_streaming_dedup_ckpt"
+      checkpoint: String
   ): StreamingQuery =
     start(docs, checkpoint) { (batch, batchId) =>
       runBatch(batch, batchId, indexPath, matchesPath, numHashes, bands, threshold, shingleSize)
@@ -370,7 +370,7 @@ object StreamingDedup {
       planes: Int = 0, // ≤0 = sized from the threshold (Dedup.signBanding)
       bands: Int = 0,
       threshold: Double = 0.97,
-      checkpoint: String = "/tmp/graft_streaming_semdedup_ckpt",
+      checkpoint: String,
       ivfCells: Int = 64,
       ivfProbes: Int = 3,
       // re-train when this fraction of a batch quantizes worse than the
@@ -397,18 +397,12 @@ object StreamingDedup {
     val (planes1, bands1) =
       if (planes > 0 && bands > 0) (planes, bands) else Dedup.signBanding(threshold)
     val rowsPerBand = planes1 / bands1
-    // Java shifts mod 64: (1L << 64) - 1 is 0, so a single 64-bit band
-    // (legal at near-1 thresholds) would hash every row to bh=0 and the
-    // band join would degenerate to all-pairs — exactly what banding
-    // exists to prevent (simhashBanded guards the same way)
-    val mask = if (rowsPerBand >= 64) -1L else (1L << rowsPerBand) - 1L
     val lowThreshold = rowsPerBand <= 2
 
     // band keys over the sign bits, and IVF-cell keys in the same
     // (band, bh) shape, so the probe below is identical for both
     // candidate generators
-    val bitKeys = transform(sequence(lit(0), lit(bands1 - 1)), bnd => struct(bnd.as("band"),
-      call_function("shiftrightunsigned", col("bits"), bnd * rowsPerBand).bitwiseAND(lit(mask)).as("bh")))
+    val bitKeys = graft.functions.F.signBandKeys(col("bits"), bands1, rowsPerBand)
     def cellKeys(s: SparkSession, cents: Array[Array[Float]]): Column =
       transform(graft.operators.Ann.nearestCentroids(col("vec"),
         graft.operators.Ann.bcastTable(s, cents), ivfProbes),
@@ -560,7 +554,7 @@ object StreamingDedup {
       numHashes: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.5,
-      checkpoint: String = "/tmp/graft_streaming_keepbest_ckpt"
+      checkpoint: String
   ): StreamingQuery =
     start(docs, checkpoint) { (batch, batchId) =>
       keepBestBatch(batch, batchId, score, indexPath, decisionsPath, numHashes, bands, threshold)

@@ -34,7 +34,7 @@ object StreamingDsir {
       modelPath: String,
       reportPath: String,
       minLogw: Double,
-      checkpoint: String = "/tmp/graft_streaming_dsir_ckpt"
+      checkpoint: String
   ): StreamingQuery = {
     // fail fast if no servable model exists — but resolve the actual
     // generation PER BATCH below, so live runUpdate refreshes are
@@ -76,7 +76,7 @@ object StreamingDsir {
       docs: DataFrame, // streaming: (doc_id long, text string, + target evidence)
       isTarget: org.apache.spark.sql.Column,
       modelPath: String,
-      checkpoint: String = "/tmp/graft_streaming_dsir_upd_ckpt"
+      checkpoint: String
   ): StreamingQuery = {
     docs.writeStream
       .outputMode("append")
