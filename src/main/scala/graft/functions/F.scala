@@ -131,6 +131,12 @@ object F {
       .select(col("r.row.*"), (col("pos") + 1).as(rankCol))
   }
 
+  /** Estimated Jaccard of two `numHashes`-long minhash signatures: the
+    * fraction of positions whose minima are equal. */
+  def estJaccard(a: Column, b: Column, numHashes: Int): Column =
+    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)), lit(0), _ + _)
+      .cast("double") / lit(numHashes.toDouble)
+
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 

@@ -46,6 +46,10 @@ object Ann {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
+  /** A (vec_id, embedding) frame as the (item_id, item_vec) item side. */
+  private def items(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
+
   /** Exact cosine top-k: every query vector against the whole corpus.
     * Per-candidate work is one fused codegen'd cosine (graft_cosine). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
@@ -53,19 +57,14 @@ object Ann {
     // (bounded) query set, so the heap operator is strictly better than
     // the sort-based window — and it spills past the configured bound.
     graft.sql.GraftFunctions.installTopKStrategy(corpus.sparkSession)
-    val joined = spread(corpus
-      .select(col("vec_id").as("item_id"), col("embedding").as("item_vec")))
+    val joined = spread(items(corpus))
       .crossJoin(broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))))
       .filter(col("query_id") =!= col("item_id"))
       .withColumn("cos", GraftFunctions.call("graft_cosine", col("query_vec"), col("item_vec")))
       // zero-norm vectors have no defined cosine (graft_cosine → NULL);
       // exclude them so the heap and sort physical paths rank identically
       .filter(col("cos").isNotNull)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("item_id").asc)
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("item_id"), col("cos"), col("rank"))
+    rankTopK(joined, k)
   }
 
   /**
@@ -187,11 +186,8 @@ object Ann {
       trainSample: Long = 20000L,
       knownCount: Long = -1L // corpus size if the caller already counted (skips a pass)
   ): Array[Array[Float]] = {
-    // null vectors carry no geometry and never rank (their norms are
-    // null) — training on them would NPE the sample collect
-    val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-      .filter(col("item_vec").isNotNull)
-    lloydOn(collectSample(base, scaledTrainSample(trainSample, numCells), knownCount),
+    // null vectors carry no geometry: collectSample drops them
+    lloydOn(collectSample(items(corpus), scaledTrainSample(trainSample, numCells), knownCount),
       numCells, lloydIters)
   }
 
@@ -227,8 +223,7 @@ object Ann {
       knownCount: Long = -1L
   ): (Array[Array[Float]], Array[Array[Array[Float]]]) = {
     // null vectors: no geometry, never rank — see [[ivfTrain]]
-    val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-      .filter(col("item_vec").isNotNull)
+    val base = items(corpus).filter(col("item_vec").isNotNull)
     val n = if (knownCount >= 0L) knownCount else base.count()
     // coarse level: driver-sample Lloyd, sample floored at 32·c1 — the
     // coarse table is small (≤ ~1500 cells even at 10^9 vectors), so the
@@ -315,7 +310,7 @@ object Ann {
   private def collectSample(
       base: DataFrame, trainSample: Long, knownCount: Long): Array[(Long, Array[Float])] = {
     // the null-vector guard lives HERE, covering every trainer
-    // (ivfTrain, ivfTrainHier, pqTrain, buildIvfPqIndex) — a null
+    // (ivfTrain, ivfTrainHier, pqTrain, buildIvf) — a null
     // embedding would NPE the row decode below. `knownCount` is by
     // contract the null-FILTERED count (every internal caller —
     // knnJoinIvf, embeddingPairsIvf — counts the filtered side);
@@ -409,20 +404,6 @@ object Ann {
       .select(col("query_id"), col("item_id"), col("cos"), col("rank"))
   }
 
-  /**
-   * Self k-NN join: every vector's k nearest neighbors (cosine) within
-   * the SAME table — the all-to-all sibling of [[bruteForceTopK]]
-   * (whose query side is bounded and broadcast). Used for building
-   * similarity graphs over a whole corpus: semantic clustering,
-   * diversity sampling, graph-based curation.
-   *
-   * Dispatch mirrors [[Dedup.embeddingPairs]]: up to `bruteBound`
-   * vectors the exact all-pairs plan runs (bit-exact, affordable —
-   * the size probe scans at most bruteBound+1 ids, never the corpus);
-   * past it the IVF-cell-partitioned variant ([[knnJoinIvf]]) runs
-   * instead — sub-quadratic, recall measured in OperatorSpec, never a
-   * corpus-sized broadcast.
-   */
   /** Exact cosine from a fresh dot product and PRE-COMPUTED per-vector
     * norms: bit-identical to `graft_cosine` (same per-element double
     * accumulation via graft_dot, same `sqrt(na)·sqrt(nb)` denominator,
@@ -438,6 +419,20 @@ object Ann {
     when(isnan(c), lit(null).cast("double")).otherwise(c)
   }
 
+  /**
+   * Self k-NN join: every vector's k nearest neighbors (cosine) within
+   * the SAME table — the all-to-all sibling of [[bruteForceTopK]]
+   * (whose query side is bounded and broadcast). Used for building
+   * similarity graphs over a whole corpus: semantic clustering,
+   * diversity sampling, graph-based curation.
+   *
+   * Dispatch mirrors [[Dedup.embeddingPairs]]: up to `bruteBound`
+   * vectors the exact all-pairs plan runs (bit-exact, affordable —
+   * the size probe scans at most bruteBound+1 ids, never the corpus);
+   * past it the IVF-cell-partitioned variant ([[knnJoinIvf]]) runs
+   * instead — sub-quadratic, recall measured in OperatorSpec, never a
+   * corpus-sized broadcast.
+   */
   def knnJoin(
       df: DataFrame,
       idCol: String,
@@ -514,15 +509,13 @@ object Ann {
       v.select(col("vec_id").as(s"${side}_id"), col("embedding").as(s"${side}_vec"))
         .withColumn(s"${side}_n",
           sqrt(GraftFunctions.call("graft_dot", col(s"${side}_vec"), col(s"${side}_vec"))))
-    val (items, queries) =
+    // each branch yields the item's cell and the query's probed cells
+    val (itemCell, queryCells) =
       if (centroids != null) {
         // caller-supplied flat quantizer (shared across probe settings or a
         // persisted index): skip counting + training, go straight to assignment
         val bcC = bcastTable(spark, centroids)
-        (withNorms(vecs, "item")
-           .withColumn("cell", nearestCentroid(col("item_vec"), bcC)),
-         withNorms(vecs, "query")
-           .withColumn("cell", explode(nearestCentroids(col("query_vec"), bcC, probes))))
+        (nearestCentroid(col("item_vec"), bcC), nearestCentroids(col("query_vec"), bcC, probes))
       } else {
         // the null-FILTERED count: it sizes the quantizer (wanted cells)
         // AND feeds the trainers' sampling rate, and both want the count
@@ -544,22 +537,19 @@ object Ann {
             side, side, trainSample = trainSample, knownCount = n)
           val bcL1 = bcastTable(spark, l1)
           val bcL2 = bcastTable(spark, l2)
-          (withNorms(vecs, "item")
-             .withColumn("cell", element_at(nearestCellsHier(col("item_vec"), bcL1, bcL2, 1, 1), 1)),
-           withNorms(vecs, "query")
-             .withColumn("cell", explode(nearestCellsHier(col("query_vec"), bcL1, bcL2, hierP1, hierP2))))
+          (element_at(nearestCellsHier(col("item_vec"), bcL1, bcL2, 1, 1), 1),
+            nearestCellsHier(col("query_vec"), bcL1, bcL2, hierP1, hierP2))
         } else {
           val cells = if (numCells > 0) numCells else math.min(4096L, wanted).toInt
           val cents = ivfTrain(spark,
             vecs.select(xxhash64(col("vec_id")).as("vec_id"), col("embedding")),
             numCells = cells, trainSample = trainSample, knownCount = n)
           val bcC = bcastTable(spark, cents)
-          (withNorms(vecs, "item")
-             .withColumn("cell", nearestCentroid(col("item_vec"), bcC)),
-           withNorms(vecs, "query")
-             .withColumn("cell", explode(nearestCentroids(col("query_vec"), bcC, probes))))
+          (nearestCentroid(col("item_vec"), bcC), nearestCentroids(col("query_vec"), bcC, probes))
         }
       }
+    val items = withNorms(vecs, "item").withColumn("cell", itemCell)
+    val queries = withNorms(vecs, "query").withColumn("cell", explode(queryCells))
     val bounded = boundOccupancy(spark, items, queries, cellTarget, splitProbes)
     // the cogroup kernel's typed encoders want bigint ids; any other id
     // type keeps the (equivalent, id-type-agnostic) join + window tail
@@ -865,69 +855,7 @@ object Ann {
       numCells: Int = 16,
       lloydIters: Int = 5,
       trainSample: Long = 20000L
-  ): Unit = {
-    import spark.implicits._
-    // A REBUILD must wipe the admission state (delta shards + any
-    // staged promotion): stale shards carry cells assigned by the OLD
-    // quantizer — served under the new centroids they join the wrong
-    // probe cells, and a later promotion would fold them in for good.
-    // Centroids are deleted FIRST (the quantizer is the index's
-    // identity — loadIvfCentroids refuses without it), so a crash
-    // inside the wipe leaves a probe-refusing index, never a
-    // half-wiped readable one. Mirrors buildTextIndex's meta-first
-    // rebuild discipline.
-    wipeAdmissionState(spark, path)
-    val cents = graft.core.Jobs.desc(spark, "ann:build:train") {
-      ivfTrain(spark, corpus, numCells, lloydIters, trainSample)
-    }
-    graft.core.Jobs.desc(spark, "ann:build:centroids") {
-      cents.zipWithIndex.toSeq
-        .map { case (v, i) => (i, v) }
-        .toDF("cell", "centroid")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/centroids")
-    }
-    // the in-memory table IS what loadIvfCentroids would read back
-    // (cell order = array index): seed the cache so the first append/
-    // search after a build never pays the read job
-    graft.core.DirCache.put(spark, s"$path/centroids", cents)
-    val assignedRows = graft.core.Jobs.desc(spark, "ann:build:assign") {
-      // cell-keyed REBALANCE before the partitioned write (the Iceberg
-      // hash write-distribution discipline): a scan-partitioned write
-      // fans every task across every cell it holds — at corpus scale
-      // O(splits × cells) near-empty files (a 10⁹-row corpus at
-      // n/2048 cells would write ~100k files PER TASK); clustered, the
-      // base holds ~1 file per cell. Rebalance instead of a plain
-      // repartition(cell) (r17, guide §2.5): hash-by-cell routes each
-      // cell to exactly ONE task, so a hot cell of a skewed corpus
-      // becomes one straggler task writing one giant file — AQE's
-      // rebalance splits an oversized cell at the advisory partition
-      // size (bounded files per hot cell, bounded task times) and
-      // coalesces tiny cells into shared tasks (still one file per
-      // cell dir — partitionBy splits them on write). Without AQE it
-      // degrades to exactly the old hash exchange. Assignment still
-      // computes map-side, in the scan's parallelism, before the
-      // exchange.
-      graft.core.Jobs.observedWrite(corpus
-        .select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-        .withColumn("cell", nearestCentroid(col("item_vec"), bcastTable(spark, cents)))
-        .hint("rebalance", col("cell"))) {
-        _.write.mode("overwrite").partitionBy("cell").parquet(s"$path/assignments")
-      }
-    }
-    graft.core.Jobs.desc(spark, "ann:build:bloom") {
-      writeIdBloom(spark, s"$path/assignments", assignedRows)
-    }
-    // train-time dispersion: the p95 quantization error over the corpus
-    // (approx_percentile — one mergeable pass; a heuristic threshold,
-    // not a gated value). New vectors landing mostly beyond it mean the
-    // quantizer no longer describes the data — the re-train trigger
-    // ivfDriftFraction thresholds against.
-    graft.core.Jobs.desc(spark, "ann:build:stats") {
-      dispersionStats(corpus, "embedding", cents)
-        .write.mode("overwrite").parquet(s"$path/stats")
-    }
-  }
+  ): Unit = buildIvf(spark, corpus, path, numCells, lloydIters, trainSample, None)
 
   /**
    * Persisted IVF-PQ index — the 100 TB serving layout for vectors:
@@ -944,6 +872,8 @@ object Ann {
    * tables; the rerank stage already restores exactness where it
    * matters.
    *
+   * The one IVF build ([[buildIvf]]) with codes as its extra step: the
+   * coarse quantizer's training sample also trains the codebooks.
    * Layout: `path/centroids` (coarse table), `path/codebooks`
    * (sub, code, vec — m·codebookSize rows), `path/codes`
    * (cell-partitioned (item_id, codes)), `path/stats` (drift frame,
@@ -959,55 +889,96 @@ object Ann {
       codebookSize: Int = 16,
       lloydIters: Int = 5,
       trainSample: Long = 20000L
+  ): Unit = buildIvf(spark, corpus, path, numCells, lloydIters, trainSample, Some((m, codebookSize)))
+
+  /**
+   * The one build of both index families; `pq` = (m, codebookSize)
+   * makes the cells hold codes. It wipes the old index first
+   * ([[wipeAdmissionState]]: shards the OLD quantizer assigned must not
+   * be served under new centroids or folded by a later promotion), and
+   * ONE sample collect ([[scaledTrainSample]] rows) trains the coarse
+   * quantizer and the codebooks. Writes, in order: `centroids` (+
+   * `codebooks`), seeded into [[graft.core.DirCache]] so the first
+   * append/search pays no read job; the cell-rebalanced `assignments`
+   * or `codes`; the id Bloom; `stats`; and, for IVF-PQ, `meta` last.
+   */
+  private def buildIvf(
+      spark: SparkSession,
+      corpus: DataFrame,
+      path: String,
+      numCells: Int,
+      lloydIters: Int,
+      trainSample: Long,
+      pq: Option[(Int, Int)]
   ): Unit = {
     import spark.implicits._
-    // ONE sample collect trains both quantizers (coarse cells + PQ
-    // codebooks): the hash-filtered sample is identical for both, and
-    // at index-build scale the count + collect passes are the expensive
-    // driver-side work — paying them twice bought nothing
-    // rebuild wipes admission state first — see buildIvfIndex
     wipeAdmissionState(spark, path)
-    val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-    val sample = collectSample(base, trainSample, -1L)
-    val cents = lloydOn(sample, numCells, lloydIters)
-    val codebooks = pqTrainOn(sample, m, codebookSize, lloydIters)
-    cents.zipWithIndex.toSeq
-      .map { case (v, i) => (i, v) }
-      .toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    codebooks.zipWithIndex.toSeq
-      .flatMap { case (cb, sub) => cb.zipWithIndex.map { case (v, c) => (sub, c, v) } }
-      .toDF("sub", "code", "vec")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    // seed the metadata cache with the in-memory tables (exactly the
-    // loaders' (cell)/(sub, code)-ordered shapes) — the first append/
-    // search after a build pays no read-back jobs
-    graft.core.DirCache.put(spark, s"$path/centroids", cents)
-    graft.core.DirCache.put(spark, s"$path/codebooks", codebooks)
-    // cell-keyed rebalance replaces spread()'s round-robin exchange
-    // (same single-shuffle cost, ~1 file per cell instead of
-    // tasks × cells, hot cells split at the advisory size — see
-    // buildIvfIndex); assign + encode still compute map-side
-    val codeRows = graft.core.Jobs.observedWrite(
-      corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-        .withColumn("cell", nearestCentroid(col("item_vec"), bcastTable(spark, cents)))
-        .withColumn("codes", pqEncode(col("item_vec"), bcastTable(spark, codebooks)))
-        .select(col("item_id"), col("codes"), col("cell"))
-        .hint("rebalance", col("cell"))) {
-      _.write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+    val base = items(corpus)
+    val (cents, codebooks) = graft.core.Jobs.desc(spark, "ann:build:train") {
+      val sample = collectSample(base, scaledTrainSample(trainSample, numCells), -1L)
+      (lloydOn(sample, numCells, lloydIters),
+        pq.map { case (m, size) => pqTrainOn(sample, m, size, lloydIters) })
     }
-    // sidecar on the codes base too: one lifecycle across both index
-    // families (promotion refreshes it family-agnostically)
-    writeIdBloom(spark, s"$path/codes", codeRows)
-    dispersionStats(corpus, "embedding", cents)
-      .write.mode("overwrite").parquet(s"$path/stats")
-    Seq((m, codebookSize, numCells))
-      .toDF("m", "codebook_size", "num_cells")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
+    def writeTable(df: DataFrame, dir: String): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(s"$path/$dir")
+    graft.core.Jobs.desc(spark, "ann:build:centroids") {
+      writeTable(cents.zipWithIndex.toSeq.map { case (v, i) => (i, v) }.toDF("cell", "centroid"), "centroids")
+      codebooks.foreach(cb => writeTable(cb.zipWithIndex.toSeq
+        .flatMap { case (t, sub) => t.zipWithIndex.map { case (v, c) => (sub, c, v) } }
+        .toDF("sub", "code", "vec"), "codebooks"))
+    }
+    // the in-memory tables ARE what the loaders read back
+    graft.core.DirCache.put(spark, s"$path/centroids", cents)
+    codebooks.foreach(graft.core.DirCache.put(spark, s"$path/codebooks", _))
+    val store = if (codebooks.isEmpty) "assignments" else "codes"
+    val rows = graft.core.Jobs.desc(spark, "ann:build:assign") {
+      // cell-keyed REBALANCE before the partitioned write (the Iceberg
+      // hash write-distribution discipline): a scan-partitioned write
+      // fans every task across every cell it holds — at corpus scale
+      // O(splits × cells) near-empty files (a 10⁹-row corpus at
+      // n/2048 cells would write ~100k files PER TASK); clustered, the
+      // base holds ~1 file per cell. Rebalance instead of a plain
+      // repartition(cell) (r17, guide §2.5): hash-by-cell routes each
+      // cell to exactly ONE task, so a hot cell of a skewed corpus
+      // becomes one straggler task writing one giant file — AQE's
+      // rebalance splits an oversized cell at the advisory partition
+      // size (bounded files per hot cell, bounded task times) and
+      // coalesces tiny cells into shared tasks (still one file per
+      // cell dir — partitionBy splits them on write). Without AQE it
+      // degrades to exactly the old hash exchange. Assignment (and
+      // encoding) still computes map-side, in the scan's parallelism,
+      // before the exchange.
+      val assigned = base.withColumn("cell", nearestCentroid(col("item_vec"), bcastTable(spark, cents)))
+      graft.core.Jobs.observedWrite(
+          codebooks.fold(assigned)(asCodes(assigned, _)).hint("rebalance", col("cell"))) {
+        _.write.mode("overwrite").partitionBy("cell").parquet(s"$path/$store")
+      }
+    }
+    // the codes base gets the sidecar too: promotion refreshes it
+    // family-agnostically
+    graft.core.Jobs.desc(spark, "ann:build:bloom") {
+      writeIdBloom(spark, s"$path/$store", rows)
+    }
+    // train-time dispersion: the p95 quantization error over the corpus
+    // (approx_percentile — one mergeable pass; a heuristic threshold,
+    // not a gated value). New vectors landing mostly beyond it mean the
+    // quantizer no longer describes the data — the re-train trigger
+    // ivfDriftFraction thresholds against.
+    graft.core.Jobs.desc(spark, "ann:build:stats") {
+      dispersionStats(corpus, "embedding", cents)
+        .write.mode("overwrite").parquet(s"$path/stats")
+      pq.foreach { case (m, size) =>
+        writeTable(Seq((m, size, numCells)).toDF("m", "codebook_size", "num_cells"), "meta")
+      }
+    }
   }
+
+  /** Assigned rows (item_id, item_vec, cell) as the code rows of an
+    * IVF-PQ index: (item_id, codes, cell), encoded against `codebooks`. */
+  private def asCodes(assigned: DataFrame, codebooks: Array[Array[Array[Float]]]): DataFrame =
+    assigned
+      .withColumn("codes", pqEncode(col("item_vec"), bcastTable(assigned.sparkSession, codebooks)))
+      .select(col("item_id"), col("codes"), col("cell"))
 
   /** Load persisted PQ codebooks in (sub, code) order. Cached per dir
     * fingerprint (see [[loadIvfCentroids]] — same per-trigger re-read
@@ -1046,23 +1017,18 @@ object Ann {
     val codebooks = loadPqCodebooks(spark, path)
     val kk = codebooks(0).length
 
-    val qRows = queries.select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val qRows = queryRows(queries)
     // per-QUERY probed cells from driver-side distances to the (bounded)
-    // coarse table: the union prunes the scan (static partition filter),
-    // the per-query pairs restrict SCORING to each query's own cells —
-    // without the pairing, a batch of queries would near-exhaustively
-    // score the union of everyone's cells (the searchIvfIndex join
-    // semantics, mirrored here)
+    // coarse table, by the kernel searchIvfIndex's nearestCentroids runs
+    // (same squared-L2, same (distance, cell) tie order): the union
+    // prunes the scan (static partition filter), the per-query pairs
+    // restrict SCORING to each query's own cells — without the pairing,
+    // a batch of queries would near-exhaustively score the union of
+    // everyone's cells (the searchIvfIndex join semantics, mirrored here)
     val queryProbePairs = qRows.flatMap { case (qid, qv) =>
-      val dists = cents.zipWithIndex.map { case (c, i) =>
-        var d = 0.0; var j = 0
-        val n = math.min(qv.length, c.length)
-        while (j < n) { val t = qv(j).toDouble - c(j).toDouble; d += t * t; j += 1 }
-        (d, i)
-      }
-      dists.sortBy(t => (t._1, t._2)).take(math.min(probes, dists.length)).map(t => (qid, t._2))
+      graft.functions.expressions.VectorOps.nearestK(
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(qv), cents, probes)
+        .toIntArray().map(c => (qid, c))
     }.toSeq
     val probeCells = queryProbePairs.map(_._2).distinct
     val qdf = pqQueryTables(qRows, codebooks).toSeq
@@ -1113,9 +1079,8 @@ object Ann {
     // exact re-rank: the inner join reads raw vectors ONLY for candidate
     // rows (candidates are queries × rerank — AQE broadcasts them), so
     // the corpus-sized vector column is never shuffled
-    val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
     val reranked = cands
-      .join(base, Seq("item_id"))
+      .join(items(corpus), Seq("item_id"))
       .withColumn("cos", GraftFunctions.call("graft_cosine", col("query_vec"), col("item_vec")))
       .filter(col("cos").isNotNull)
     rankTopK(reranked, k)
@@ -1195,11 +1160,14 @@ object Ann {
    * The re-train condition, as an operation: if the combined corpus's
    * NEW portion has drifted past `driftFraction` (see
    * [[ivfDriftFraction]]), re-quantize — rebuild the whole index from
-   * `corpus` (train + assign + stats, one corpus pass exactly like the
-   * original build) and return true; otherwise leave the index
-   * untouched (false). Streaming ingest calls this at its natural
-   * maintenance point (compaction / every N batches) so probe recall
-   * cannot silently degrade as the distribution moves.
+   * `corpus` through the one build ([[buildIvf]]: train + assign +
+   * stats, one corpus pass exactly like the original build) and return
+   * true; otherwise leave the index untouched (false). The rebuild
+   * keeps the index's family: an IVF-PQ index is rebuilt as IVF-PQ,
+   * with m and the codebook size of its stored codebooks, so its codes
+   * carry the new quantizer's cells. Streaming ingest calls this at its
+   * natural maintenance point (compaction / every N batches) so probe
+   * recall cannot silently degrade as the distribution moves.
    */
   def refreshIvfIndexIfDrifted(
       spark: SparkSession,
@@ -1212,7 +1180,11 @@ object Ann {
       trainSample: Long = 20000L
   ): Boolean = {
     val drifted = ivfDriftFraction(spark, path, newVecs) > driftFraction
-    if (drifted) buildIvfIndex(spark, corpus, path, numCells, lloydIters, trainSample)
+    if (drifted) {
+      val pq = Option.when(vecDirs(spark, path)._1 == "codes")(loadPqCodebooks(spark, path))
+        .map(cb => (cb.length, cb(0).length))
+      buildIvf(spark, corpus, path, numCells, lloydIters, trainSample, pq)
+    }
     drifted
   }
 
@@ -1259,18 +1231,22 @@ object Ann {
     }
   }
 
-  /** Rebuild preamble shared by [[buildIvfIndex]] / [[buildIvfPqIndex]]:
-    * delete the completion marker FIRST (`stats` is the plain build's
-    * LAST write, so stats-present ⇔ a complete plain-IVF index — the
-    * predicate [[graft.streaming.StreamingVectorAdmit]]'s crash
-    * recovery keys on; the PQ build's own marker is `meta`, written
-    * after stats), then the quantizer (probes refuse until the rebuild
-    * completes), then every admission artifact the old quantizer
-    * assigned — both families' delta trees and any staged promotion. */
+  /** Rebuild preamble of the one build ([[buildIvf]]), for either
+    * family over an index of either family: delete the completion
+    * markers FIRST (`stats` is the plain build's LAST write, so
+    * stats-present ⇔ a complete plain-IVF index — the predicate
+    * [[graft.streaming.StreamingVectorAdmit]]'s crash recovery keys on;
+    * the PQ build's own marker is `meta`, written after stats), then
+    * the quantizer (probes refuse until the rebuild completes) and the
+    * codebooks (whose presence names the PQ family, [[vecDirs]]), then
+    * both families' base dirs, so no row of the other family survives,
+    * and every admission artifact the old quantizer assigned — both
+    * delta trees and any staged promotion. */
   private def wipeAdmissionState(spark: SparkSession, path: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("stats", "centroids", "assignments_delta", "codes_delta", graft.core.ShardStore.Marker)
+    Seq("stats", "meta", "centroids", "codebooks", "assignments", "codes",
+      "assignments_delta", "codes_delta", graft.core.ShardStore.Marker)
       .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(root, d), true))
   }
 
@@ -1378,9 +1354,7 @@ object Ann {
       if (cur != null && cur._1 == appId && cur._2 == st.getLen && cur._3 == nonce)
         Some(cur._4)
       else {
-        val in = fs.open(p)
-        val bf = try org.apache.spark.util.sketch.BloomFilter.readFrom(in) finally in.close()
-        val bc = spark.sparkContext.broadcast(bf)
+        val bc = spark.sparkContext.broadcast(readIdBloom(spark, dir).get)
         bloomBcastCache.put(dir, (appId, st.getLen, nonce, bc))
         Some(bc)
       }
@@ -1473,11 +1447,11 @@ object Ann {
     // layout writes ~1 file per populated cell, the whole shard stays
     // list-cheap, and the read-back (bloom sidecar, probes) scans a
     // bounded file count. Rebalance (not repartition — see
-    // buildIvfIndex) additionally splits a hot cell of a skewed batch
+    // buildIvf) additionally splits a hot cell of a skewed batch
     // instead of handing it to one straggler task. The assignment
     // expression still evaluates map-side (before the exchange), in
     // the source's own parallelism.
-    val cells = newVecs.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
+    val cells = items(newVecs)
       .withColumn("cell", nearestCentroid(col("item_vec"), bcastTable(spark, cents)))
     val assigned =
       if (heldIds.isEmpty) cells.hint("rebalance", col("cell"))
@@ -1492,12 +1466,9 @@ object Ann {
     // degrades ADC ordering only, and the exact re-rank stage is what
     // rules accuracy — the drift probe still owns the rebuild decision)
     val (step, rows) =
-      if (deltaDir == "codes_delta") {
-        val codebooks = loadPqCodebooks(spark, path)
-        ("ann:append:encode+write", assigned
-          .withColumn("codes", pqEncode(col("item_vec"), bcastTable(spark, codebooks)))
-          .select(col("item_id"), col("codes"), col("cell")))
-      } else ("ann:append:assign+write", assigned)
+      if (deltaDir == "codes_delta")
+        ("ann:append:encode+write", asCodes(assigned, loadPqCodebooks(spark, path)))
+      else ("ann:append:assign+write", assigned)
     val n = graft.core.Jobs.desc(spark, step) {
       graft.core.Jobs.observedWrite(rows)(_.write.mode("overwrite").partitionBy("cell").parquet(dir))
     }
@@ -1594,7 +1565,7 @@ object Ann {
       val baseRows = graft.core.Jobs.desc(spark, "ann:promote:base-rewrite") {
         // the rewrite IS the compaction opportunity: cell-cluster the
         // lasting base layout (~1 file per cell, hot cells split at the
-        // advisory size — see buildIvfIndex)
+        // advisory size — see buildIvf)
         graft.core.Jobs.observedWrite(
             graft.core.DirCache.reader(spark, stage).parquet(stage).hint("rebalance", col("cell"))) {
           _.write.mode("overwrite").partitionBy("cell").parquet(s"$path/$baseDir")
@@ -1632,22 +1603,13 @@ object Ann {
       probes: Int = 4
   ): DataFrame = {
     graft.sql.GraftFunctions.installTopKStrategy(spark)
-    val cents = loadIvfCentroids(spark, path)
-    val queryProbes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      .withColumn("cell",
-        explode(nearestCentroids(col("query_vec"), bcastTable(spark, cents), probes)))
+    val queryProbes = probeCellsOf(queries, bcastTable(spark, loadIvfCentroids(spark, path)), probes)
     val probeCells = graft.core.Jobs.desc(spark, "ann:search:probe-cells") {
       queryProbes.select(col("cell")).distinct().collect().map(_.getInt(0))
     }
     val cellFilter = col("cell").isin(probeCells.toIndexedSeq.map(Integer.valueOf): _*)
     val stored = probedStore(spark, path, "assignments", Seq("item_id", "item_vec", "cell"), cellFilter)
-    val cands = stored
-      .join(broadcast(queryProbes), Seq("cell"))
-      .filter(col("query_id") =!= col("item_id"))
-      .withColumn("cos", GraftFunctions.call("graft_cosine", col("query_vec"), col("item_vec")))
-      .filter(col("cos").isNotNull) // undefined cosine (zero-norm) never ranks
-    rankTopK(cands, k)
+    rankTopK(scoreProbed(stored, queryProbes), k)
   }
 
   /**
@@ -1677,8 +1639,6 @@ object Ann {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
-  /** Shared candidate generation: assign corpus cells, broadcast the
-    * per-query probe list, score candidates with the fused cosine. */
   /**
    * Train product-quantization codebooks: the vector space splits into
    * `m` equal-width subspaces, each with its own `codebookSize`-entry
@@ -1701,12 +1661,11 @@ object Ann {
       lloydIters: Int = 5,
       trainSample: Long = 20000L
   ): Array[Array[Array[Float]]] = {
-    val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-    pqTrainOn(collectSample(base, trainSample, -1L), m, codebookSize, lloydIters)
+    pqTrainOn(collectSample(items(corpus), trainSample, -1L), m, codebookSize, lloydIters)
   }
 
   /** [[pqTrain]]'s Lloyd loop over an already-collected sample — shared
-    * with [[buildIvfPqIndex]] so one sample collect trains BOTH the
+    * with [[buildIvf]] so one sample collect trains BOTH the
     * coarse quantizer and the codebooks. Subvectors zero-pad past a
     * short vector's end (arraycopy into a zeroed buffer — the same
     * convention [[VectorOps.pqEncode]] applies at encode time), so a
@@ -1732,6 +1691,11 @@ object Ann {
     }
   }
 
+  /** The (bounded) query batch collected to the driver. */
+  private def queryRows(queries: DataFrame): Array[(Long, Array[Float])] =
+    queries.select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+
   /** Per-query flattened ADC tables, driver-computed (queries are a
     * bounded batch): dots[m·K + c] = dot(q_m, cb_m[c]), norms2[m·K + c]
     * = |cb_m[c]|² (reconstruction-norm table), plus the query norm —
@@ -1746,30 +1710,20 @@ object Ann {
     val kk = codebooks(0).length
     val sub = if (codebooks(0).isEmpty) 0 else codebooks(0)(0).length
     qRows.map { case (qid, qv) =>
-      val dots = new Array[Double](m * kk)
-      val norms2 = new Array[Double](m * kk)
-      var mi = 0
-      while (mi < m) {
-        var c = 0
-        while (c < kk) {
-          val cent = codebooks(mi)(c)
-          var d = 0.0
-          var n2 = 0.0
-          var i = 0
-          while (i < sub) {
-            val qc = if (mi * sub + i < qv.length) qv(mi * sub + i).toDouble else 0.0
-            d += qc * cent(i).toDouble
-            n2 += cent(i).toDouble * cent(i).toDouble
-            i += 1
-          }
-          dots(mi * kk + c) = d
-          norms2(mi * kk + c) = n2
-          c += 1
+      // entry mi·K + c: (dot, |codeword|²) of subspace mi's codeword c
+      val entries = for (mi <- 0 until m; c <- 0 until kk) yield {
+        val cent = codebooks(mi)(c)
+        var d = 0.0
+        var n2 = 0.0
+        for (i <- 0 until sub) {
+          val qc = if (mi * sub + i < qv.length) qv(mi * sub + i).toDouble else 0.0
+          d += qc * cent(i).toDouble
+          n2 += cent(i).toDouble * cent(i).toDouble
         }
-        mi += 1
+        (d, n2)
       }
       val qNorm = math.sqrt(qv.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-      (qid, qv.toSeq, dots.toSeq, norms2.toSeq, qNorm)
+      (qid, qv.toSeq, entries.map(_._1), entries.map(_._2), qNorm)
     }
   }
 
@@ -1778,11 +1732,9 @@ object Ann {
     * reference object) → (item_id, codes array<int>). This is the
     * persisted artifact of a PQ index: m ints (bytes, at storage) per
     * vector instead of dim floats. */
-  def pqEncodeCorpus(corpus: DataFrame, codebooks: Array[Array[Array[Float]]]): DataFrame = {
-    spread(corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec")))
-      .select(col("item_id"),
-        pqEncode(col("item_vec"), bcastTable(corpus.sparkSession, codebooks)).as("codes"))
-  }
+  def pqEncodeCorpus(corpus: DataFrame, codebooks: Array[Array[Array[Float]]]): DataFrame =
+    spread(items(corpus)).select(col("item_id"),
+      pqEncode(col("item_vec"), bcastTable(corpus.sparkSession, codebooks)).as("codes"))
 
   /**
    * PQ top-k search with asymmetric-distance scoring and exact
@@ -1818,14 +1770,13 @@ object Ann {
     val kk = codebooks(0).length
 
     val codes = pqEncodeCorpus(corpus, codebooks)
-    val qRows = queries.select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qdf = pqQueryTables(qRows, codebooks).toSeq
+    val qdf = pqQueryTables(queryRows(queries), codebooks).toSeq
       .toDF("query_id", "query_vec", "dots", "norms2", "qnorm")
     adcRerank(codes, qdf, kk, rerank, corpus, k)
   }
 
+  /** Shared candidate generation: assign corpus cells, broadcast the
+    * per-query probe list, score candidates with the fused cosine. */
   private def probedCandidates(
       corpus: DataFrame,
       queries: DataFrame,
@@ -1833,19 +1784,27 @@ object Ann {
       probes: Int
   ): DataFrame = {
     val bcC = bcastTable(corpus.sparkSession, cents)
-    val base = corpus.select(col("vec_id").as("item_id"), col("embedding").as("item_vec"))
-    val assigned = base.withColumn("cell", nearestCentroid(col("item_vec"), bcC))
-    val queryProbes = queries
+    scoreProbed(items(corpus).withColumn("cell", nearestCentroid(col("item_vec"), bcC)),
+      probeCellsOf(queries, bcC, probes))
+  }
+
+  /** Each query (query_id, query_vec) once per probed cell. */
+  private def probeCellsOf(
+      queries: DataFrame, bcC: KernelTable[Array[Array[Float]]], probes: Int): DataFrame =
+    queries
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
       .withColumn("cell", explode(nearestCentroids(col("query_vec"), bcC, probes)))
-    assigned
+
+  /** Cell-assigned items against the broadcast per-query probe list,
+    * scored with the fused cosine. Zero-norm vectors have no defined
+    * cosine (graft_cosine → NULL) and are dropped, so ivfSearch (heap)
+    * and ivfProbedTruth (sort) stay row-identical — a NULL would sort
+    * differently in the two physical paths (nulls-last window vs
+    * nulls-first struct sort). */
+  private def scoreProbed(items: DataFrame, queryProbes: DataFrame): DataFrame =
+    items
       .join(broadcast(queryProbes), Seq("cell"))
       .filter(col("query_id") =!= col("item_id"))
       .withColumn("cos", GraftFunctions.call("graft_cosine", col("query_vec"), col("item_vec")))
-      // zero-norm vectors have no defined cosine (graft_cosine → NULL);
-      // drop them here so ivfSearch (heap) and ivfProbedTruth (sort)
-      // stay row-identical — a NULL would sort differently in the two
-      // physical paths (nulls-last window vs nulls-first struct sort)
       .filter(col("cos").isNotNull)
-  }
 }

@@ -116,22 +116,11 @@ object Dedup {
     // candidate generation joins (id, band, bandhash) ONLY — the band
     // join and pair dedup never ship the 64-long signatures; signatures
     // re-attach to the (far smaller) distinct candidate set afterwards.
-    val banded = bandedFromSigs(sigs, bands, rowsPerBand)
-    val a = banded.as("a")
-    val b = banded.as("b").hint("shuffle_hash")
-    val cand = a
-      .join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cand
+    bandPairs(bandedFromSigs(sigs, bands, rowsPerBand))
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .select(
-        col("id_a"),
-        col("id_b"),
-        (aggregate(zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)), lit(0), _ + _)
-          .cast("double") / lit(numHashes.toDouble)).as("est_jaccard")
-      )
+      .select(col("id_a"), col("id_b"),
+        F.estJaccard(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 
@@ -163,6 +152,18 @@ object Dedup {
         banded.join(sizes.filter(col("bsz") <= n).hint("shuffle_hash"), Seq("band", "bh"))
           .drop("bsz")
     }
+
+  /** Distinct candidate pairs (id_a < id_b) of banded rows (id, band,
+    * bh) that share a band key: the band self-join, shuffle-hashed on
+    * the b side, over buckets capped by [[capBuckets]]. */
+  private def bandPairs(banded: DataFrame, maxBucket: Option[Int] = None): DataFrame = {
+    val capped = capBuckets(banded, maxBucket)
+    capped.as("a")
+      .join(capped.as("b").hint("shuffle_hash"),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+  }
 
   /** Block decomposition of the 64-bit simhash: maxHamming+1 contiguous
     * blocks. By pigeonhole, any pair within hamming <= maxHamming agrees
@@ -239,12 +240,7 @@ object Dedup {
       numHashes: Int, bands: Int, shingleSize: Int,
       maxBucket: Option[Int] = None): DataFrame = {
     val sigs = minhashSigs(df, idCol, textCol, numHashes, shingleSize)
-    val banded = capBuckets(bandedFromSigs(sigs, bands, numHashes / bands), maxBucket)
-    banded.as("a")
-      .join(banded.as("b").hint("shuffle_hash"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    bandPairs(bandedFromSigs(sigs, bands, numHashes / bands), maxBucket)
   }
 
   /**
@@ -1453,12 +1449,7 @@ object Dedup {
     val banded = sigs
       .select(col("id"), explode(F.signBandKeys(col("bits"), bands, rowsPerBand)).as("bk"))
       .select(col("id"), col("bk.band"), col("bk.bh"))
-    val capped = capBuckets(banded, maxBucket)
-    val a = capped.as("a")
-    val b = capped.as("b").hint("shuffle_hash")
-    a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    bandPairs(banded, maxBucket)
       .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a")), "id_a")
       .join(vecs.select(col("id").as("id_b"), col("vec").as("vec_b")), "id_b")
       .select(col("id_a"), col("id_b"),
@@ -2473,10 +2464,10 @@ object Dedup {
     val dirs = shardsPath.fold(Array.empty[org.apache.hadoop.fs.Path])(readableShardDirs(spark, _))
       .filterNot(d => excludeShard.exists(sh => d.getName == graft.core.ShardStore.dirName(sh)))
     // pruning (and the probe-key collect + extra probe materialization
-    // that feed it) pays only where a sidecar exists to consult — a
-    // freshly-compacted index is one sidecar-less shard dir, and
-    // charging it the whole pruning pass was a measured ~0.5 s/probe
-    // at sf0.1 for zero dirs skipped
+    // that feed it) pays only where a sidecar exists to consult. Build
+    // and compaction give `__base` a sidecar under BandsBloomKeyCap, so
+    // a freshly compacted index under the cap still pays the pass; only
+    // over-cap or pre-sidecar layouts skip it
     val willPrune = anySidecar(spark, dirs)
     // materialized only when the banded probe has several consumers
     // (base join, shard join, driver key collect) — one probe
@@ -2649,9 +2640,10 @@ object Dedup {
   }
 
   /** Cheap presence test: does ANY of `dirs` carry a band-key sidecar?
-    * When none does (freshly-compacted or pre-sidecar layouts), callers
-    * skip the probe-key collect and its probe materialization entirely —
-    * the pruning pass must never cost more than it can possibly save.
+    * When none does (dirs over [[BandsBloomKeyCap]] keys, or pre-sidecar
+    * layouts), callers skip the probe-key collect and its probe
+    * materialization entirely — the pruning pass must never cost more
+    * than it can possibly save.
     * Stats run in parallel on the driver; an unreadable dir counts as
     * sidecar-less (it will simply be read). */
   private[graft] def anySidecar(

@@ -77,7 +77,12 @@ object Upsert {
   def readLatest(spark: org.apache.spark.sql.SparkSession, path: String, keys: Seq[String]): DataFrame = {
     // schema from one footer: only this store writes the log, so the
     // (re)created view runs no schema-inference job
-    val log = graft.core.DirCache.reader(spark, path).parquet(path)
+    latest(graft.core.DirCache.reader(spark, path).parquet(path), keys)
+  }
+
+  /** The latest version of each key in `log`: `__seq` descending, then
+    * the content-hash tie-break. */
+  private def latest(log: DataFrame, keys: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__seq").desc, rowTieBreak(log, Set("__seq")).asc)
     log
@@ -110,16 +115,9 @@ object Upsert {
       .map(f => new org.apache.hadoop.fs.Path(f).getParent.getName)
       .collect { case d if d.startsWith("__seq=") => d.stripPrefix("__seq=").toLong }
       .max
-    val merged = {
-      // same deterministic tie-break as readLatest: compaction must
-      // materialize exactly the row readLatest would have returned
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(col("__seq").desc, rowTieBreak(log, Set("__seq")).asc)
-      log.filter(col("__seq") <= maxSeq)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .drop("__seq", "__rn")
-    }
+    // readLatest's window: compaction must materialize exactly the row
+    // readLatest would have returned
+    val merged = latest(log.filter(col("__seq") <= maxSeq), keys)
     // materialize before overwriting a path we read from
     val staged = graft.core.Jobs.desc(spark, "upsert:compact:merge")(merged.localCheckpoint(true))
     graft.core.Jobs.desc(spark, "upsert:compact:write") {
@@ -148,11 +146,5 @@ object Upsert {
       path: String,
       checkpoint: String
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendVersion(batch, path, batchId)
-        ()
-      }
-      .start()
+    graft.streaming.ForeachBatch.start(updates, checkpoint)(appendVersion(_, path, _))
 }

@@ -87,31 +87,27 @@ object Ingest {
       changelogDir: String,
       checkpoint: String
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-        // only a layout this stream started may be marked for pruning
-        val wasEmpty = !fs.exists(root) ||
-          fs.listStatus(root).forall(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
-        val bucketed = batch
-          .withColumn(TsLayout.BucketColumn, TsLayout.bucketExpr(table))
-          .withColumn("batch_id", lit(batchId))
-        bucketed
-          .repartition(col(TsLayout.BucketColumn))
-          .sortWithinPartitions(table.dimensionNames.map(col): _*)
-          .write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(TsLayout.BucketColumn, "batch_id")
-          .parquet(path)
-        TsLayout.markAppend(batch.sparkSession, path, table.timeColumn, wasEmpty)
-        graft.sources.Changelog.markDirty(
-          batch, TsLayout.bucketExpr(table), changelogDir)
-        ()
-      }
-      .start()
+    ForeachBatch.start(events, checkpoint) { (batch, batchId) =>
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+      // only a layout this stream started may be marked for pruning
+      val wasEmpty = !fs.exists(root) ||
+        fs.listStatus(root).forall(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+      val bucketed = batch
+        .withColumn(TsLayout.BucketColumn, TsLayout.bucketExpr(table))
+        .withColumn("batch_id", lit(batchId))
+      bucketed
+        .repartition(col(TsLayout.BucketColumn))
+        .sortWithinPartitions(table.dimensionNames.map(col): _*)
+        .write
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(TsLayout.BucketColumn, "batch_id")
+        .parquet(path)
+      TsLayout.markAppend(batch.sparkSession, path, table.timeColumn, wasEmpty)
+      graft.sources.Changelog.markDirty(
+        batch, TsLayout.bucketExpr(table), changelogDir)
+    }
 
   /**
    * The standing streaming aggregation: tumbling event-time windows per

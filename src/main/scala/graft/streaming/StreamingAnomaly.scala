@@ -64,14 +64,9 @@ object StreamingAnomaly {
       checkpoint: String,
       watermark: String = "1 day"
   ): StreamingQuery =
-    dailyCounts(events, tsCol, typeCol, watermark).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .start()
+    ForeachBatch.start(dailyCounts(events, tsCol, typeCol, watermark), checkpoint) { (batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
+    }
 
   /** Stage 2: score the sink with the exact batch operator. */
   def score(

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.F
 import graft.operators.TextAnalysis
 
@@ -40,30 +40,24 @@ object StreamingContamination {
       checkpoint: String
   ): StreamingQuery = {
     val hits = broadcast(evalGrams.withColumn("hit", lit(1)))
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // explode_outer: a sub-n-token doc has an empty gram array and
-          // a plain explode would drop its report row entirely — the doc
-          // would enter the corpus unscreened (the boilerplate /
-          // substring-dup operators guard the same way). Null-gram rows
-          // count in no frequency: count(gram) skips nulls, and a null
-          // gram never joins a hit.
-          val report = batch
-            .select(col("doc_id"), F.tokens(col("text")).as("tk"))
-            .select(col("doc_id"), explode_outer(TextAnalysis.wordNgrams(col("tk"), n)).as("gram"))
-            .join(hits, Seq("gram"), "left")
-            .groupBy(col("doc_id"))
-            .agg(count(col("gram")).as("n_grams"), sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-            .withColumn("contamination_frac",
-              when(col("n_grams") > 0, col("n_hit").cast("double") / col("n_grams").cast("double")))
-          report.write.mode("overwrite").parquet(s"$reportPath/batch_id=$batchId")
-        }
-        ()
+    ForeachBatch.start(docs, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        // explode_outer: a sub-n-token doc has an empty gram array and
+        // a plain explode would drop its report row entirely — the doc
+        // would enter the corpus unscreened (the boilerplate /
+        // substring-dup operators guard the same way). Null-gram rows
+        // count in no frequency: count(gram) skips nulls, and a null
+        // gram never joins a hit.
+        val report = batch
+          .select(col("doc_id"), F.tokens(col("text")).as("tk"))
+          .select(col("doc_id"), explode_outer(TextAnalysis.wordNgrams(col("tk"), n)).as("gram"))
+          .join(hits, Seq("gram"), "left")
+          .groupBy(col("doc_id"))
+          .agg(count(col("gram")).as("n_grams"), sum(coalesce(col("hit"), lit(0))).as("n_hit"))
+          .withColumn("contamination_frac",
+            when(col("n_grams") > 0, col("n_hit").cast("double") / col("n_grams").cast("double")))
+        report.write.mode("overwrite").parquet(s"$reportPath/batch_id=$batchId")
       }
-      .start()
+    }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 import graft.sql.GraftFunctions
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{BooleanType, StructType}
 import graft.core.{DirCache, Jobs, ShardStore}
 import graft.functions.F
@@ -112,23 +112,6 @@ object StreamingDedup {
     * embeddings with many bands. */
   private[streaming] def bcastRowBound(fanOut: Int, payloadBytes: Long): Long =
     Dedup.bandedBroadcastDocs(math.max(1, fanOut).toLong * math.max(64L, payloadBytes + 48L))
-
-  /** Estimated jaccard between the joined `a.sig`/`b.sig` columns. */
-  private def estJaccardExpr(numHashes: Int) =
-    aggregate(
-      zip_with(col("a.sig"), col("b.sig"), (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), _ + _
-    ).cast("double") / lit(numHashes.toDouble)
-
-  /** `onBatch` on every micro-batch of `input`. */
-  private def start(input: DataFrame, checkpoint: String)(
-      onBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    input.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => onBatch(batch, batchId) }
-      .start()
 
   /** One trigger: a non-empty batch's `sinks` run overlapped under
     * `<label>:<sink>-write` labels; returns whether the batch was
@@ -275,7 +258,7 @@ object StreamingDedup {
       shingleSize: Int = 3,
       checkpoint: String
   ): StreamingQuery =
-    start(docs, checkpoint) { (batch, batchId) =>
+    ForeachBatch.start(docs, checkpoint) { (batch, batchId) =>
       runBatch(batch, batchId, indexPath, matchesPath, numHashes, bands, threshold, shingleSize)
     }
 
@@ -316,8 +299,8 @@ object StreamingDedup {
     val nonEmpty = trigger("streamdedup", batchId, geom.sigs(batch, "doc_id", "text"), local = Some(local)) { b =>
       val small = b.n <= bound
       val matches = b.matches(b.rows,
-        b.index(sigsDir, own, small).map(_.select(col("id"), col("sig"))), keys, Seq("sig"),
-        "est_jaccard", estJaccardExpr(geom.numHashes), geom.threshold, small)
+        b.index(sigsDir, own, small).map(_.select(col("id"), col("sig"))), keys, Seq("sig"), "est_jaccard",
+        F.estJaccard(col("a.sig"), col("b.sig"), geom.numHashes), geom.threshold, small)
       Seq(
         "matches" -> { () =>
           matches.write.mode("overwrite").parquet(s"$matchesPath/batch_id=$batchId")
@@ -377,8 +360,8 @@ object StreamingDedup {
       // train-time p95 error (same-distribution batches sit near 0.05)
       driftRetrainFraction: Double = 0.5
   ): StreamingQuery =
-    start(vecs, checkpoint)(embeddingsBatches(indexPath, matchesPath, planes, bands, threshold,
-      ivfCells, ivfProbes, driftRetrainFraction))
+    ForeachBatch.start(vecs, checkpoint)(embeddingsBatches(indexPath, matchesPath, planes, bands,
+      threshold, ivfCells, ivfProbes, driftRetrainFraction))
 
   /** [[runEmbeddings]]'s foreachBatch body, one per stream (it keeps the
     * stream's measured vector width). `localMax` caps the driver path's
@@ -556,7 +539,7 @@ object StreamingDedup {
       threshold: Double = 0.5,
       checkpoint: String
   ): StreamingQuery =
-    start(docs, checkpoint) { (batch, batchId) =>
+    ForeachBatch.start(docs, checkpoint) { (batch, batchId) =>
       keepBestBatch(batch, batchId, score, indexPath, decisionsPath, numHashes, bands, threshold)
     }
 
@@ -574,7 +557,7 @@ object StreamingDedup {
       threshold: Double = 0.5
   ): Unit = {
     val keys = F.lshBandKeys(col("sig"), bands, numHashes / bands)
-    val estJaccard = estJaccardExpr(numHashes)
+    val estJaccard = F.estJaccard(col("a.sig"), col("b.sig"), numHashes)
     // tombstone log lives beside the index (sibling dir, same FS)
     val retiredPath = indexPath + "_retired"
     val own = s"batch_id=$batchId"

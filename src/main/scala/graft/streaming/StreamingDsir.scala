@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * DSIR quality screening over a document stream — the admission-time
@@ -40,20 +40,14 @@ object StreamingDsir {
     // generation PER BATCH below, so live runUpdate refreshes are
     // served without a restart and pruned generations are never pinned
     graft.operators.Dsir.readMeta(spark, modelPath)
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Dsir
-            .scoreWithModel(batch, "doc_id", "text", modelPath)
-            .withColumn("keep", col("logw") >= lit(minLogw))
-            .write.mode("overwrite").parquet(s"$reportPath/batch_id=$batchId")
-        }
-        ()
+    ForeachBatch.start(docs, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        graft.operators.Dsir
+          .scoreWithModel(batch, "doc_id", "text", modelPath)
+          .withColumn("keep", col("logw") >= lit(minLogw))
+          .write.mode("overwrite").parquet(s"$reportPath/batch_id=$batchId")
       }
-      .start()
+    }
   }
 
   /**
@@ -77,18 +71,11 @@ object StreamingDsir {
       isTarget: org.apache.spark.sql.Column,
       modelPath: String,
       checkpoint: String
-  ): StreamingQuery = {
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Dsir.update(
-            batch, "doc_id", "text", isTarget, modelPath, s"epoch=$batchId")
-        }
-        ()
+  ): StreamingQuery =
+    ForeachBatch.start(docs, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        graft.operators.Dsir.update(
+          batch, "doc_id", "text", isTarget, modelPath, s"epoch=$batchId")
       }
-      .start()
-  }
+    }
 }

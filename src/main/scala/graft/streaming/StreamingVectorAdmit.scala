@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Ann
 
 /**
@@ -61,15 +61,9 @@ object StreamingVectorAdmit {
       driftRetrainFraction: Double = 0.5,
       rebuildCells: Int = 0 // ≤0 = corpus-derived (~n/2048, floor 16)
   ): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(batch, indexPath, batchId, driftRetrainFraction, rebuildCells)
-        ()
-      }
-      .start()
+    ForeachBatch.start(vecs, checkpoint) { (batch, batchId) =>
+      admitBatch(batch, indexPath, batchId, driftRetrainFraction, rebuildCells)
+    }
 
   /** One micro-batch's admission (the foreachBatch body, callable
     * directly in specs): returns true when the drift trigger rebuilt

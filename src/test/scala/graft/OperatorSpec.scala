@@ -567,6 +567,67 @@ class OperatorSpec extends SparkSpecBase {
     assert(after <= 0.2, s"post-re-train drift of the new region should be low, got $after")
   }
 
+  test("a rebuild in the other index family leaves no file of the old family") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val path = tempPath("graft_ivf_family_switch_spec")
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def left(dirs: String*) = dirs.filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$path/$d")))
+
+    Ann.buildIvfPqIndex(spark, emb, path, numCells = 16, m = 16, codebookSize = 16)
+    Ann.buildIvfIndex(spark, emb, path, numCells = 16)
+    assert(left("codebooks", "codes", "meta").isEmpty, "a plain rebuild must remove every IVF-PQ file")
+    assert(Ann.vecDirs(spark, path) == (("assignments", "assignments_delta")))
+    // streaming admission accepts the plain index: the batch lands as a
+    // raw-vector shard
+    val batch = emb.filter(col("vec_id") < 20).withColumn("vec_id", col("vec_id") + 1000000L)
+    graft.streaming.StreamingVectorAdmit.admitBatch(batch, path, 0L)
+    assert(Ann.readableVecShardDirs(spark, path).map(_.getName).toSeq == Seq("shard=stream_0"))
+    assert(spark.read.parquet(s"$path/assignments_delta/shard=stream_0").count() == 20L)
+
+    Ann.buildIvfPqIndex(spark, emb, path, numCells = 16, m = 16, codebookSize = 16)
+    assert(left("assignments", "assignments_delta").isEmpty, "an IVF-PQ rebuild must remove every plain file")
+    assert(Ann.vecDirs(spark, path) == (("codes", "codes_delta")))
+  }
+
+  test("a drifted IVF-PQ index re-trains as IVF-PQ: its codes carry the new quantizer's cells") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val path = tempPath("graft_ivfpq_drift_spec")
+    Ann.buildIvfPqIndex(spark, emb, path, numCells = 16, m = 16, codebookSize = 8)
+    // the shifted batch of the plain drift spec above
+    val shifted = emb.select(col("vec_id"),
+      transform(col("embedding"), x => x + lit(50.0f)).as("embedding"))
+    val combined = emb.select(col("vec_id"), col("embedding"))
+      .unionByName(shifted.withColumn("vec_id", col("vec_id") + 100000L))
+    assert(Ann.refreshIvfIndexIfDrifted(spark, combined, shifted, path),
+      "drifted batch must trigger the re-train")
+    assert(Ann.vecDirs(spark, path) == (("codes", "codes_delta")), "the rebuild keeps the PQ family")
+    val cb = Ann.loadPqCodebooks(spark, path)
+    assert(cb.length == 16 && cb.forall(_.length == 8), "m and the codebook size come from the stored codebooks")
+    val cents = Ann.loadIvfCentroids(spark, path)
+    val nearest = combined.select(col("vec_id").as("item_id"),
+      Ann.nearestCentroid(col("embedding"), Ann.bcastTable(spark, cents)).as("nearest"))
+    val codes = spark.read.parquet(s"$path/codes").select(col("item_id"), col("cell"))
+    assert(codes.count() == combined.count(), "the codes cover the rebuilt corpus")
+    assert(codes.join(nearest, "item_id").filter(col("cell") =!= col("nearest")).count() == 0L,
+      "every code row's cell is its vector's nearest cell under the new centroids")
+  }
+
+  test("the plain IVF build runs its pinned labeled jobs") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val path = tempPath("graft_ivf_build_jobs_spec")
+    val c = new JobCounter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(c)
+    val (_, labels) =
+      try c.jobsAndLabels(Ann.buildIvfIndex(spark, emb, path, numCells = 16))
+      finally spark.sparkContext.removeSparkListener(c)
+    val perLabel = labels.groupBy(identity).map { case (l, n) => l -> n.size }
+    info(s"plain IVF build jobs per label: $perLabel")
+    // the training sample, the centroids write, the assignment write, the
+    // id Bloom and the stats; the IVF-PQ steps of the shared build add none
+    assert(perLabel == Map("ann:build:train" -> 3, "ann:build:centroids" -> 1,
+      "ann:build:assign" -> 2, "ann:bloom:agg" -> 2, "ann:build:stats" -> 2))
+  }
+
   test("IVF output is deterministic across runs (exact-decimal centroids)") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val q = emb.filter(col("vec_id") < 4)
