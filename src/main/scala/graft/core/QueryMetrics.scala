@@ -106,7 +106,7 @@ object QueryMetrics {
 /**
  * The metrics snapshot file behind [[QueryMetrics.StorePathKey]] —
  * the [[graft.sql.UserRegistry]] control-plane discipline applied to
- * query metrics: one tab-separated line per record, full-snapshot
+ * query metrics: one [[TsvStore]] `M` line per record, full-snapshot
  * writes staged to a private temp file and published with an atomic
  * overwrite rename, read-modify-write under the JVM lock (concurrent
  * processes are last-snapshot-wins, like the user store — the
@@ -120,73 +120,18 @@ object MetricsStore {
   /** Newest records kept per snapshot write (drop-oldest beyond it). */
   val MaxRows = 100000
 
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def esc(s: String): String = s.flatMap {
-    case '\\' => "\\\\"; case '\t' => "\\t"; case '\n' => "\\n"; case '\r' => "\\r"
-    case c => c.toString
-  }
-  private def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '\\' => b += '\\'; case 't' => b += '\t'; case 'n' => b += '\n'; case 'r' => b += '\r'
-          case o => b += o
-        }
-        i += 2
-      } else { b += c; i += 1 }
+  private def readAll(spark: SparkSession, path: String): Seq[Record] =
+    TsvStore.read(spark, path).flatMap {
+      case Array("M", fn, dur, rows, failed) =>
+        try Some(Record(fn, dur.toLong, rows.toLong, failed == "1"))
+        catch { case _: NumberFormatException => None } // corrupt row: skip
+      case _ => None // unknown row kind: forward-compat skip
     }
-    b.toString
-  }
 
-  private def readAll(spark: SparkSession, path: String): Seq[Record] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, p)
-    if (!f.exists(p)) Seq.empty
-    else {
-      val in = new java.io.BufferedReader(
-        new java.io.InputStreamReader(f.open(p), java.nio.charset.StandardCharsets.UTF_8))
-      try {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Record]
-        var line = in.readLine()
-        while (line != null) {
-          line.split('\t') match {
-            case Array("M", fn, dur, rows, failed) =>
-              try buf += Record(unesc(fn), dur.toLong, rows.toLong, failed == "1")
-              catch { case _: NumberFormatException => () } // corrupt row: skip
-            case _ => () // unknown row kind: forward-compat skip
-          }
-          line = in.readLine()
-        }
-        buf.toSeq
-      } finally in.close()
-    }
-  }
-
-  private def writeAll(spark: SparkSession, path: String, rows: Seq[Record]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, p)
-    val stage = new org.apache.hadoop.fs.Path(
-      path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    val out = f.create(stage, true)
-    try {
-      val sb = new StringBuilder
-      rows.takeRight(MaxRows).foreach { r =>
-        sb.append("M\t").append(esc(r.funcName)).append('\t').append(r.durationNs)
-          .append('\t').append(r.outputRows).append('\t').append(if (r.failed) "1" else "0")
-          .append('\n')
-      }
-      out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      p.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(stage, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    ()
-  }
+  private def writeAll(spark: SparkSession, path: String, rows: Seq[Record]): Unit =
+    TsvStore.write(spark, path, rows.takeRight(MaxRows).map { r =>
+      Seq("M", r.funcName, r.durationNs.toString, r.outputRows.toString, if (r.failed) "1" else "0")
+    })
 
   /** Append `fresh` to the snapshot and return the full record list
     * (store order = arrival order, oldest first). One locked

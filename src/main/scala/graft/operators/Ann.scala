@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
@@ -1264,13 +1263,13 @@ object Ann {
    * corpus-length base id column on every trigger — a Bloom has NO
    * false negatives, so "not held" verdicts are exact with zero base
    * reads, and the fp-rate-sized "maybe held" remainder verifies
-   * against the real id column. 3% fpp ≈ 7.3 bits/id: a 10⁹-row base's
+   * against the real id column. 3% fpp ≈ 7.3 bits/id at any size
+   * ([[graft.core.BloomSidecar.build]] is unclamped): a 10⁹-row base's
    * sidecar is ~0.9 GB read once per trigger vs. decoding the full id
    * column every trigger, and per-shard sidecars stay batch-sized.
-   * Crash-safe by placement: the sidecar lives INSIDE the data dir, so
-   * every `mode("overwrite")` data rewrite deletes it with the old
-   * data — a crash between data and sidecar writes leaves a
-   * sidecar-less dir, and the probe falls back to the exact full scan.
+   * Crash-safe by placement (see [[graft.core.BloomSidecar]]): a crash
+   * between data and sidecar writes leaves a sidecar-less dir, and the
+   * probe falls back to the exact full scan.
    */
   private[graft] def writeIdBloom(
       spark: SparkSession, dir: String, knownRows: Long = -1L): Unit = {
@@ -1288,78 +1287,17 @@ object Ann {
             else graft.core.DirCache.parquetRowCount(spark, dir)
     val ids = graft.core.DirCache.reader(spark, dir).parquet(dir).select(col("item_id"))
     val bf = graft.core.Jobs.desc(spark, "ann:bloom:agg") {
-      ids.stat.bloomFilter("item_id", math.max(1L, n), IdBloomFpp)
+      graft.core.BloomSidecar.build(ids, math.max(1L, n), IdBloomFpp)
     }
-    // tear-safe, nonce-fingerprinted write — readIdBloomBcast's cache
-    // keys on the nonce, so a rebuilt sidecar of identical length can
-    // never serve a STALE bloom (whose false negatives would re-admit
-    // held ids as duplicates)
     graft.core.BloomSidecar.write(spark, dir, IdBloomFile, bf)
   }
 
-  /** The sidecar of `dir`, if present (absent on pre-sidecar indexes
-    * or after a crash between the data and sidecar writes — callers
-    * fall back to the exact id-column scan). */
+  /** The sidecar of `dir`, if present and readable (absent on
+    * pre-sidecar indexes or after a crash between the data and sidecar
+    * writes — callers fall back to the exact id-column scan). */
   private[graft] def readIdBloom(
       spark: SparkSession, dir: String): Option[org.apache.spark.util.sketch.BloomFilter] =
     graft.core.BloomSidecar.read(spark, dir, IdBloomFile)
-
-  // (appId, sidecar length, content nonce, broadcast handle) per dir —
-  // see readIdBloomBcast
-  private val bloomBcastCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Long, Long, Broadcast[org.apache.spark.util.sketch.BloomFilter])]()
-
-  /** The sidecar's last 8 bytes as its content fingerprint: the write
-    * nonce for files [[writeIdBloom]] wrote, and for a legacy
-    * nonce-less sidecar simply its trailing bloom bits — equally
-    * usable (different id sets make different bits with overwhelming
-    * probability). One 8-byte ranged read; the len < 8 guard is for a
-    * corrupt/truncated file, not a reachable legacy shape (a
-    * serialized bloom is always longer). */
-  private def sidecarNonce(
-      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path, len: Long): Long = {
-    if (len < 8L) return 0L
-    val in = fs.open(p)
-    try {
-      in.seek(len - 8L)
-      val b = new Array[Byte](8)
-      in.readFully(b)
-      java.nio.ByteBuffer.wrap(b).getLong
-    } finally in.close()
-  }
-
-  /** [[readIdBloom]] as a CACHED BROADCAST, keyed by the sidecar
-    * file's (length, write nonce): a steady-state stream probes the
-    * same base sidecar every trigger, and re-reading + re-broadcasting
-    * a base-sized filter (~0.9 GB at 10⁹ ids) per batch would partially
-    * reintroduce the per-trigger cost the sidecars exist to remove.
-    * The per-trigger cost of a HIT is one file status + one 8-byte
-    * ranged read. A rewritten sidecar carries a fresh nonce (see
-    * [[writeIdBloom]] — length/mtime alone could tie across a rebuild)
-    * and replaces the entry; the stale broadcast is simply dropped
-    * (never destroy()'d: another in-flight trigger may still hold it;
-    * the ContextCleaner reclaims unreferenced broadcasts). The appId
-    * guards against a cached handle outliving its SparkContext. */
-  private[graft] def readIdBloomBcast(
-      spark: SparkSession, dir: String
-  ): Option[Broadcast[org.apache.spark.util.sketch.BloomFilter]] = {
-    val p = new org.apache.hadoop.fs.Path(dir, IdBloomFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) { bloomBcastCache.remove(dir); None }
-    else {
-      val st = fs.getFileStatus(p)
-      val nonce = sidecarNonce(fs, p, st.getLen)
-      val appId = spark.sparkContext.applicationId
-      val cur = bloomBcastCache.get(dir)
-      if (cur != null && cur._1 == appId && cur._2 == st.getLen && cur._3 == nonce)
-        Some(cur._4)
-      else {
-        val bc = spark.sparkContext.broadcast(readIdBloom(spark, dir).get)
-        bloomBcastCache.put(dir, (appId, st.getLen, nonce, bc))
-        Some(bc)
-      }
-    }
-  }
 
   /** The stored centroid table of [[buildIvfIndex]], cell-ordered.
     * Cached per dir fingerprint: admission/drift/search re-load it per
@@ -1424,9 +1362,10 @@ object Ann {
     * holds: the assignment folds into it on the driver, its rows are
     * sorted by cell so that each of the local scan's contiguous slices
     * writes a few cells (about one file per cell, as the rebalance
-    * gives), and the id sidecar is built from `heldIds` with the
-    * read-back aggregation's own `BloomFilter.create(n, fpp)` and
-    * `putLong`. The shard's only job is its write. */
+    * gives), and the id sidecar is built from `heldIds` by
+    * [[graft.core.BloomSidecar.build]]'s driver form, whose filter is
+    * byte-identical to the read-back's. The shard's only job is its
+    * write. */
   private[graft] def appendToIvfIndex(
       newVecs: DataFrame,
       path: String,
@@ -1474,11 +1413,9 @@ object Ann {
     }
     graft.core.Jobs.desc(spark, "ann:append:bloom")(heldIds match {
       // no row, no data file: no sidecar (writeIdBloom's committed check)
-      case Some(ids) => if (n > 0L) {
-        val bf = org.apache.spark.util.sketch.BloomFilter.create(n, IdBloomFpp)
-        ids.foreach(bf.putLong)
-        graft.core.BloomSidecar.write(spark, dir, IdBloomFile, bf)
-      }
+      case Some(ids) => if (n > 0L)
+        graft.core.BloomSidecar.write(spark, dir, IdBloomFile,
+          graft.core.BloomSidecar.build(ids, n, IdBloomFpp))
       case None => writeIdBloom(spark, dir, n)
     })
   }

@@ -2569,8 +2569,9 @@ object Dedup {
   // probe's ~10^5-10^6 keys: fpp 1e-6 ≈ 29 bits/key ≈ 0.9 MB per 250k-key
   // daily shard
   private val BandsBloomFpp = 1e-6
-  /** Dirs with more banded keys than this get no sidecar (the bloom would
-    * be ≥ ~30 MB and its any-hit test fires ~never at that key count). */
+  /** Dirs with more banded keys than this get no sidecar: the unclamped
+    * bloom holds 1e-6 at ~29 bits/key, so it would pass ~29 MB, and its
+    * any-hit test fires ~never at that key count. */
   private[graft] val BandsBloomKeyCap = 8L * 1000 * 1000
   /** Probes with more distinct band keys than this skip the driver-side
     * pruning pass entirely (cap bounds the collect at ~32 MB). */
@@ -2595,7 +2596,7 @@ object Dedup {
     val keys = geom.band(graft.core.DirCache.reader(spark, dir).parquet(dir).select(col("id"), col("sig")))
       .select(bandKeyCol.as("k"))
     graft.core.BloomSidecar.write(spark, dir, BandsBloomFile,
-      keys.stat.bloomFilter("k", n, BandsBloomFpp))
+      graft.core.BloomSidecar.build(keys, n, BandsBloomFpp))
   }
 
   /** The probe's distinct band keys, driver-collected — or None when the
@@ -2629,7 +2630,7 @@ object Dedup {
     case Some(ks) =>
       val mustRead = new Array[Boolean](dirs.length)
       java.util.stream.IntStream.range(0, dirs.length).parallel().forEach { i =>
-        mustRead(i) = readBandsBloom(spark, dirs(i)) match {
+        mustRead(i) = graft.core.BloomSidecar.read(spark, dirs(i).toString, BandsBloomFile) match {
           case None => true // no sidecar: must read
           case Some(bf) => ks.exists(bf.mightContainLong)
         }
@@ -2659,15 +2660,6 @@ object Dedup {
     }
     hit.exists(identity)
   }
-
-  /** The sidecar of one shard dir, if present and readable. A missing,
-    * corrupt, or concurrently-deleted sidecar (a compaction racing the
-    * probe) reads as None — the dir is then read fully, never skipped. */
-  private def readBandsBloom(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: org.apache.hadoop.fs.Path): Option[org.apache.spark.util.sketch.BloomFilter] =
-    try graft.core.BloomSidecar.read(spark, dir.toString, BandsBloomFile)
-    catch { case _: java.io.IOException => None }
 
   /** The committed shard dirs under a parquet text index's `sigs/`
     * (see [[graft.core.ShardStore]]): probes and maintenance read, and

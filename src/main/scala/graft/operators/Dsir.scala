@@ -332,11 +332,6 @@ object Dsir {
     pruneGensBelow(spark, path, g + 1L)
   }
 
-  /** Whether a servable model exists at the path (some generation's
-    * meta committed — meta written LAST certifies it). */
-  def modelExists(spark: SparkSession, modelPath: String): Boolean =
-    latestGen(spark, modelPath).isDefined
-
   /** The servable generation's geometry (buckets, nt, nr, default_q) —
     * the ONE meta reader every consumer (serving, streaming twin, SQL
     * SHOW/FIT) shares; refuses a meta-less crashed fit. */

@@ -134,9 +134,7 @@ object TextAnalysis {
     // count over the cached benchmark grams, never the corpus); floor
     // of 1 keeps an empty benchmark from failing the sketch constructor
     val expected = math.max(evalGrams.count(), 1L)
-    val bloom = evalGrams
-      .select(xxhash64(col("gram")).as("h"))
-      .stat.bloomFilter("h", expected, fpp)
+    val bloom = graft.core.BloomSidecar.build(evalGrams.select(xxhash64(col("gram"))), expected, fpp)
     val ser = {
       val bos = new java.io.ByteArrayOutputStream()
       bloom.writeTo(bos)

@@ -69,7 +69,7 @@ object GraftFunctions {
     // long_value) — Spark's own runtime-filter expression (codegen'd,
     // deserializes the foldable filter once per task), surfaced as a
     // callable function for the contamination prefilter. The filter
-    // bytes MUST come from a long-typed build (stat.bloomFilter over
+    // bytes MUST come from a long-typed build (BloomSidecar.build over
     // xxhash64 values): putLong and mightContainLong share the hash.
     "graft_might_contain" -> (exprs =>
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))),

@@ -1165,27 +1165,6 @@ object UserRegistry {
   private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  // names can in principle carry the field separator — escape it
-  private def esc(s: String): String = s.flatMap {
-    case '\\' => "\\\\"; case '\t' => "\\t"; case '\n' => "\\n"; case '\r' => "\\r"
-    case c => c.toString
-  }
-  private def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '\\' => b += '\\'; case 't' => b += '\t'; case 'n' => b += '\n'; case 'r' => b += '\r'
-          case o => b += o
-        }
-        i += 2
-      } else { b += c; i += 1 }
-    }
-    b.toString
-  }
-
   private val MaxStalenessMs = 2000L
 
   /** Reload this session's slot from its bound store when the
@@ -1208,29 +1187,17 @@ object UserRegistry {
       if (!st0.loadedSig.contains(sig) ||
           System.currentTimeMillis() - st0.loadedAtMs > MaxStalenessMs) {
         st0.users.clear(); st0.grants.clear()
-        if (sig._1 >= 0L) {
-          val in = new java.io.BufferedReader(
-            new java.io.InputStreamReader(f.open(p), java.nio.charset.StandardCharsets.UTF_8))
-          try {
-            var line = in.readLine()
-            while (line != null) {
-              line.split('\t') match {
-                case Array("U", n, r) => // pre-r16: no password hash
-                  st0.users.put(unesc(n), UserRec(r, None))
-                case Array("U", n, r, h) =>
-                  st0.users.put(unesc(n), UserRec(r, Some(unesc(h))))
-                case Array("G", n, t, a) =>
-                  // pre-r16 heuristic-normalized grant: classify once
-                  val subj = unesc(t)
-                  st0.grants.merge(unesc(n), Set((legacyKind(subj), subj, a)),
-                    (a0, b0) => a0 ++ b0)
-                case Array("G2", n, k, t, a) if k == "T" || k == "P" =>
-                  st0.grants.merge(unesc(n), Set((k, unesc(t), a)), (a0, b0) => a0 ++ b0)
-                case _ => () // unknown row kind: forward-compat skip
-              }
-              line = in.readLine()
-            }
-          } finally in.close()
+        graft.core.TsvStore.read(spark, path).foreach {
+          case Array("U", n, r) => // pre-r16: no password hash
+            st0.users.put(n, UserRec(r, None))
+          case Array("U", n, r, h) =>
+            st0.users.put(n, UserRec(r, Some(h)))
+          case Array("G", n, t, a) =>
+            // pre-r16 heuristic-normalized grant: classify once
+            st0.grants.merge(n, Set((legacyKind(t), t, a)), (a0, b0) => a0 ++ b0)
+          case Array("G2", n, k, t, a) if k == "T" || k == "P" =>
+            st0.grants.merge(n, Set((k, t, a)), (a0, b0) => a0 ++ b0)
+          case _ => () // unknown row kind: forward-compat skip
         }
         st0.loadedSig = Some(sig)
         st0.loadedAtMs = System.currentTimeMillis()
@@ -1244,28 +1211,13 @@ object UserRegistry {
     this.synchronized {
       import scala.jdk.CollectionConverters._
       val st0 = states.computeIfAbsent(path, _ => new RegState)
+      val users = st0.users.asScala.toSeq.sortBy(_._1).iterator.map { case (n, rec) =>
+        Seq("U", n, rec.role) ++ rec.pwHash }
+      val grants = st0.grants.asScala.toSeq.sortBy(_._1).iterator.flatMap { case (n, gs) =>
+        gs.toSeq.sorted.map { case (k, t, a) => Seq("G2", n, k, t, a) } }
+      graft.core.TsvStore.write(spark, path, users ++ grants)
       val p = new org.apache.hadoop.fs.Path(path)
-      val f = fs(spark, p)
-      val stage = new org.apache.hadoop.fs.Path(
-        path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-      val out = f.create(stage, true)
-      try {
-        val sb = new StringBuilder
-        st0.users.asScala.toSeq.sortBy(_._1).foreach { case (n, rec) =>
-          sb.append("U\t").append(esc(n)).append('\t').append(rec.role)
-          rec.pwHash.foreach(h => sb.append('\t').append(esc(h)))
-          sb.append('\n')
-        }
-        st0.grants.asScala.toSeq.sortBy(_._1).foreach { case (n, gs) =>
-          gs.toSeq.sorted.foreach { case (k, t, a) =>
-            sb.append("G2\t").append(esc(n)).append('\t').append(k)
-              .append('\t').append(esc(t)).append('\t').append(a).append('\n') } }
-        out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        p.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(stage, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      val st = f.getFileStatus(p)
+      val st = fs(spark, p).getFileStatus(p)
       st0.loadedSig = Some((st.getModificationTime, st.getLen))
       st0.loadedAtMs = System.currentTimeMillis()
     }
@@ -1307,11 +1259,6 @@ object UserRegistry {
     sync(spark)
     import scala.jdk.CollectionConverters._
     stateFor(spark).users.asScala.toSeq.map { case (n, rec) => (n, rec.role) }.sortBy(_._1)
-  }
-  /** The role of a registered user. */
-  def roleOf(spark: SparkSession, name: String): Option[String] = this.synchronized {
-    sync(spark)
-    Option(stateFor(spark).users.get(name)).map(_.role)
   }
 
   /** Add a grant (idempotent). The grantee must exist. `isPath` comes

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventBuffer.{micros, timestamp}
 
 /**
  * Sessionization: gap-based user sessions, in both execution modes.
@@ -25,7 +25,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object Sessionize extends Serializable {
 
   case class Ev(user_id: Long, ts: Timestamp, value: Double, event_id: Long)
-  case class SessionAcc(events: List[(Long, Double, Long)]) // (epochMicros, value, event_id)
   case class Session(
       user_id: Long,
       session_start: Timestamp,
@@ -56,15 +55,6 @@ object Sessionize extends Serializable {
       .select(col("user_id"), col("session_start"), col("session_end"), col("n_events"), col("sum_value"))
   }
 
-  /** Exact micros↔Timestamp conversions (Spark's own): `getTime` /
-    * `new Timestamp(ms)` truncate to milliseconds, which both shifts
-    * gap decisions at sub-ms boundaries and degrades emitted
-    * session_start/end vs batch's min(ts)/max(ts). */
-  private def micros(ts: Timestamp): Long =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(ts)
-  private def timestamp(us: Long): Timestamp =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(us)
-
   /** Split a user's accumulated events into gap-separated sessions. */
   private def toSessions(userId: Long, evs: Seq[(Long, Double, Long)], gapMicros: Long): List[Session] = {
     val sorted = evs.sortBy(e => (e._1, e._3))
@@ -89,26 +79,9 @@ object Sessionize extends Serializable {
   def streaming(spark: SparkSession, events: Dataset[Ev], gapMinutes: Int, watermark: String = "10 minutes"): Dataset[Session] = {
     import spark.implicits._
     val gapMicros = gapMinutes * 60L * 1000000L
-
-    def update(userId: Long, in: Iterator[Ev], state: GroupState[SessionAcc]): Iterator[Session] = {
-      if (state.hasTimedOut) {
-        val acc = state.getOption.getOrElse(SessionAcc(Nil))
-        state.remove()
-        toSessions(userId, acc.events, gapMicros).iterator
-      } else {
-        val existing = state.getOption.getOrElse(SessionAcc(Nil)).events
-        val added = in.map(e => (micros(e.ts), e.value, e.event_id)).toList
-        val all = existing ++ added
-        state.update(SessionAcc(all))
-        val lastUs = all.map(_._1).max
-        state.setTimeoutTimestamp(lastUs / 1000L + gapMinutes * 60L * 1000L)
-        Iterator.empty
-      }
-    }
-
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    // buffered as (epochMicros, value, event_id)
+    EventBuffer.stage(events, watermark, gapMinutes, (e: Ev) => e.user_id)(
+      e => (micros(e.ts), e.value, e.event_id))(
+      _._1, (user, evs) => toSessions(user, evs, gapMicros).iterator)
   }
 }

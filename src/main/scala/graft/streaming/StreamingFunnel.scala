@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventBuffer.{micros, timestamp}
 
 /**
  * Streaming twin of [[graft.operators.Funnel.funnel]] — the per-user
@@ -27,7 +27,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamingFunnel extends Serializable {
 
   case class FEv(user_id: Long, ts: Timestamp, event_type: String, event_id: Long)
-  case class FunnelAcc(events: List[(Long, String, Long)]) // (epochMicros, type, event_id)
   case class FunnelRow(
       user_id: Long,
       ts_step1: Option[Timestamp],
@@ -35,11 +34,6 @@ object StreamingFunnel extends Serializable {
       ts_step3: Option[Timestamp],
       steps_completed: Int
   )
-
-  private def micros(ts: Timestamp): Long =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(ts)
-  private def timestamp(us: Long): Timestamp =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(us)
 
   /** The batch cascade over a sorted buffer: first event of step i
     * strictly after the then-known step i−1 anchor wins (ascending
@@ -76,24 +70,9 @@ object StreamingFunnel extends Serializable {
     import spark.implicits._
     require(steps.length == 3, "the streaming twin emits the 3-step row shape")
 
-    def update(userId: Long, in: Iterator[FEv], state: GroupState[FunnelAcc]): Iterator[FunnelRow] = {
-      if (state.hasTimedOut) {
-        val acc = state.getOption.getOrElse(FunnelAcc(Nil))
-        state.remove()
-        Iterator.single(toFunnelRow(userId, acc.events, steps))
-      } else {
-        val all = state.getOption.getOrElse(FunnelAcc(Nil)).events ++
-          in.map(e => (micros(e.ts), e.event_type, e.event_id)).toList
-        state.update(FunnelAcc(all))
-        val lastUs = all.map(_._1).max
-        state.setTimeoutTimestamp(lastUs / 1000L + inactivityMinutes * 60L * 1000L)
-        Iterator.empty
-      }
-    }
-
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    // buffered as (epochMicros, type, event_id)
+    EventBuffer.stage(events, watermark, inactivityMinutes, (e: FEv) => e.user_id)(
+      e => (micros(e.ts), e.event_type, e.event_id))(
+      _._1, (user, evs) => Iterator.single(toFunnelRow(user, evs, steps)))
   }
 }

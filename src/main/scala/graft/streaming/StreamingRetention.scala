@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventBuffer.{micros, timestamp}
 
 /**
  * Streaming twin of [[graft.operators.Funnel.retention]] — cohort
@@ -49,13 +49,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamingRetention extends Serializable {
 
   case class REv(user_id: Long, ts: Timestamp, event_type: String)
-  case class RetAcc(events: List[(Long, Boolean)]) // (epochMicros, isAnchor)
   case class UserPeriod(user_id: Long, t0: Timestamp, period_n: Int)
-
-  private def micros(ts: Timestamp): Long =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(ts)
-  private def timestamp(us: Long): Timestamp =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(us)
 
   /** The batch operator's arithmetic over a buffer: t0 = the user's
     * MIN anchor; every event at/after t0 lands in period
@@ -88,25 +82,10 @@ object StreamingRetention extends Serializable {
     import spark.implicits._
     require(periodSeconds > 0, "periodSeconds must be positive")
 
-    def update(userId: Long, in: Iterator[REv], state: GroupState[RetAcc]): Iterator[UserPeriod] = {
-      if (state.hasTimedOut) {
-        val acc = state.getOption.getOrElse(RetAcc(Nil))
-        state.remove()
-        toRows(userId, acc.events, periodSeconds).iterator
-      } else {
-        val all = state.getOption.getOrElse(RetAcc(Nil)).events ++
-          in.map(e => (micros(e.ts), e.event_type == anchorType)).toList
-        state.update(RetAcc(all))
-        val lastUs = all.map(_._1).max
-        state.setTimeoutTimestamp(lastUs / 1000L + inactivityMinutes * 60L * 1000L)
-        Iterator.empty
-      }
-    }
-
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    // buffered as (epochMicros, isAnchor)
+    EventBuffer.stage(events, watermark, inactivityMinutes, (e: REv) => e.user_id)(
+      e => (micros(e.ts), e.event_type == anchorType))(
+      _._1, (user, evs) => toRows(user, evs, periodSeconds).iterator)
   }
 
   /** Roll emitted [[UserPeriod]] rows into the batch operator's output

@@ -207,8 +207,9 @@ object StreamingVectorAdmit {
         maybeBcast(held.withColumnRenamed("item_id", "vec_id")), Seq("vec_id"), "left_anti")
     // cached broadcasts: the base sidecar is re-used across triggers
     // (re-read + re-broadcast only when its file fingerprint moves) —
-    // see Ann.readIdBloomBcast
-    val sidecars = (baseDir +: others.map(_.toString)).map(d => Ann.readIdBloomBcast(s, d))
+    // see BloomSidecar.readBcast
+    val sidecars = (baseDir +: others.map(_.toString))
+      .map(d => graft.core.BloomSidecar.readBcast(s, d, Ann.IdBloomFile))
     if (!sidecars.forall(_.isDefined))
       (novelExcluding(heldAmong(batchIds, None)), "full-scan")
     else {
@@ -273,7 +274,8 @@ object StreamingVectorAdmit {
   ): (Array[org.apache.spark.sql.Row], String) = {
     val ids = rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
     val others = Ann.readableVecShardDirs(s, indexPath).filterNot(_.getName == ownShard)
-    val sidecars = (s"$indexPath/assignments" +: others.map(_.toString)).map(d => Ann.readIdBloomBcast(s, d))
+    val sidecars = (s"$indexPath/assignments" +: others.map(_.toString))
+      .map(d => graft.core.BloomSidecar.readBcast(s, d, Ann.IdBloomFile))
     val (maybe, path) =
       if (!sidecars.forall(_.isDefined)) (ids, "full-scan")
       else {

@@ -736,6 +736,18 @@ class AdminSqlSpec extends SparkSpecBase {
     }
   }
 
+  test("the TSV snapshot store escapes every field and reads it back") {
+    val store = tempPath("tsvstore") + ".tsv"
+    val rows = Seq(Seq("U", "a\tb\\c", "READ_ONLY", "pbkdf2$x"), Seq("G2", "n", "P", "/p\nq\r", "READ"),
+      Seq("M", "f", "12", "3", "0"))
+    graft.core.TsvStore.write(spark, store, rows)
+    val txt = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(store)),
+      java.nio.charset.StandardCharsets.UTF_8)
+    assert(txt == "U\ta\\tb\\\\c\tREAD_ONLY\tpbkdf2$x\nG2\tn\tP\t/p\\nq\\r\tREAD\nM\tf\t12\t3\t0\n")
+    assert(graft.core.TsvStore.read(spark, store).map(_.toSeq) == rows)
+    assert(graft.core.TsvStore.read(spark, store + ".missing").isEmpty)
+  }
+
   test("query metrics persist: a bound store serves SHOW QUERY METRICS across sessions") {
     spark
     SparkSession.clearActiveSession()

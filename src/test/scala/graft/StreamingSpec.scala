@@ -138,6 +138,15 @@ class StreamingSpec extends SparkSpecBase {
       "emitted session bounds must keep sub-ms precision")
   }
 
+  test("the streaming twins' shared event buffer keeps each twin's state schema") {
+    import graft.streaming.EventBuffer.Buf
+    import org.apache.spark.sql.Encoders.product
+    // checkpoints written by the twins' own state classes restart against it
+    assert(product[Buf[(Long, Double, Long)]].schema == product[StreamingSpec.SessionAcc].schema)
+    assert(product[Buf[(Long, String, Long)]].schema == product[StreamingSpec.FunnelAcc].schema)
+    assert(product[Buf[(Long, Boolean)]].schema == product[StreamingSpec.RetAcc].schema)
+  }
+
   test("streaming exact dedup drops re-delivered events; sketches run stateless on streams") {
     implicit val sqlCtx = spark.sqlContext
     val rows = Seq(
@@ -1464,7 +1473,14 @@ class StreamingSpec extends SparkSpecBase {
     val corpus0 = emb.filter(col("vec_id") % 4 === 0)
     val b1 = emb.filter(col("vec_id") % 4 === 1)
     val b2 = corpus0.limit(3).unionByName(emb.filter(col("vec_id") % 4 === 2))
-    def side(localMax: Long): (String, Seq[(String, Seq[Long], Option[org.apache.spark.util.sketch.BloomFilter])]) = {
+    // a shard's sidecar bytes: the driver path builds them from driver-held
+    // ids, the distributed path from the shard's id column
+    def bloomBytes(dir: String): Option[Seq[Byte]] = Ann.readIdBloom(spark, dir).map { bf =>
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos)
+      bos.toByteArray.toSeq
+    }
+    def side(localMax: Long): (String, Seq[(String, Seq[Long], Option[Seq[Byte]])]) = {
       val idx = tempDir(s"svecadmit_sides_$localMax") + "/index"
       Ann.buildIvfIndex(spark, corpus0, idx, numCells = 16)
       def admit(b: org.apache.spark.sql.DataFrame, id: Long): Boolean =
@@ -1474,7 +1490,7 @@ class StreamingSpec extends SparkSpecBase {
       admit(b2, 1L) // replay
       val shards = Ann.readableVecShardDirs(spark, idx).map { d =>
         (d.getName, spark.read.parquet(d.toString).select("item_id").as[Long].collect().sorted.toSeq,
-          Ann.readIdBloom(spark, d.toString))
+          bloomBytes(d.toString))
       }.sortBy(_._1).toSeq
       (idx, shards)
     }
@@ -1615,4 +1631,11 @@ class StreamingSpec extends SparkSpecBase {
   private val RunTriggerJobs = 5L
   private val VectorAdmitTriggerJobs = 4L
   private val UpsertStatementJobs = 1L
+}
+
+object StreamingSpec {
+  // the twins' state classes before they shared EventBuffer.Buf
+  case class SessionAcc(events: List[(Long, Double, Long)])
+  case class FunnelAcc(events: List[(Long, String, Long)])
+  case class RetAcc(events: List[(Long, Boolean)])
 }
